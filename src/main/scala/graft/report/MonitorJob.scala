@@ -26,6 +26,13 @@ import graft.operators.{MonitorOps, ReconOps, RelationalOps}
   * no new dataflow semantics live here. All heavy work stays distributed;
   * only report-sized final frames are collected (HtmlReport's contract).
   *
+  * Concurrency: the section frames of all four pages are built and
+  * collected at the same time ([[HtmlReport.collectAll]]) — each is a
+  * small query bound by per-job fixed cost, so back to back they left the
+  * cores mostly idle. The pages are then assembled in the fixed page and
+  * section order, and the shared exposure-states cache is released only
+  * after every section task has finished, on success and on failure.
+  *
   * Determinism: each frame gets an explicit total ORDER BY before render,
   * and the caller passes the timestamp/took values — so a fixed-input run
   * is byte-stable (golden-file tested in MonitorJobSpec).
@@ -60,81 +67,98 @@ object MonitorJob {
     pages
   }
 
-  /** Pure render (no filesystem writes) — the testable core. */
+  /** Pure render (no filesystem writes) — the testable core. Every
+    * section frame of the four pages is built and collected concurrently
+    * ([[HtmlReport.collectAll]]); the pages are then assembled in the fixed
+    * page and section order, so they are byte-identical to a sequential
+    * run. The shared `states` frame is released only after every section
+    * task has finished, whether the render succeeded or failed. */
   def render(spark: SparkSession, dataDir: String, generatedAt: String,
       tookSecs: Double): Map[String, String] = {
-
-    // ---- summary page (print_summary_html): per-nite counts A2/A4/A10,
-    // the "lasts" block (S11/W2 log tails), and the T3 top-20 failures
-    val niteSummary = ReconOps.niteRollup(spark, dataDir)
-      .join(ReconOps.errorsPerNite(spark, dataDir), Seq("nite"), "left_outer")
-      .join(MonitorOps.unionAccumulate(spark, dataDir), Seq("nite"), "left_outer")
-      .select(col("nite"), col("n_events"),
-        coalesce(col("n_errors"), lit(0L)).as("n_errors"),
-        coalesce(col("n_flagged_users"), lit(0L)).as("n_flagged_users"),
-        round(col("sum_value"), 4).as("sum_value"))
-      .orderBy(col("nite"))
-    val lasts = MonitorOps.logTail(spark, dataDir)
-      .orderBy(col("event_type"))
-    val topFailures = RelationalOps.topkErrors(spark, dataDir)
-      .orderBy(col("ts_sec").desc, col("event_id").desc)
-    val summary = HtmlReport.render(
-      s"DTS monitor summary — generated $generatedAt",
-      Seq("Per-nite summary" -> niteSummary,
-        "Last lines per log" -> lasts,
-        "Top-20 failing users" -> topFailures),
-      tookSecs)
 
     // ---- exposure pages (print_exposure_html): J12 state per exposure;
     // reptype=short keeps only differences (monitor:344 "only report
     // exposures which have a problem"), reptype=full lists everything.
     // One shared states frame — ReconOps.exposureStates, the SAME
     // row-level classifier the oracled q_expstate aggregates — persisted
-    // for the scope of this render: both pages (x2 sections each)
-    // collect inside render, so the orders⋈lineitem pipeline runs once,
-    // and the unpersist below fires after the terminal actions — no
-    // cache entry outlives the job.
-    val states = ReconOps.exposureStates(spark, dataDir).persist()
-    def exposurePage(reptype: String): String = {
-      val selected =
-        if (reptype == "short") states.where(col("expstate") =!= "ok")
-        else states
-      // detail rows are capped (TakeOrderedAndProject — bounded driver
-      // memory at ANY corpus size; the full frame is one row per order,
-      // which at 100 TB would otherwise be a driver-OOM collect). The
-      // States section always carries the complete counts.
-      val rows = selected.orderBy(col("o_orderkey")).limit(DetailRowCap)
-      val perState = selected.groupBy(col("expstate"))
-        .agg(count(lit(1)).as("n_orders")).orderBy(col("expstate"))
-      HtmlReport.render(
+    // for the scope of this render and built by the first section task
+    // that needs it: the orders⋈lineitem pipeline runs once for all three
+    // exposure sections, and the unpersist below fires after the last
+    // task — no cache entry outlives the job.
+    var persisted = Option.empty[DataFrame]
+    lazy val states = {
+      val s = ReconOps.exposureStates(spark, dataDir).persist()
+      persisted = Some(s)
+      s
+    }
+    // detail rows are capped (TakeOrderedAndProject — bounded driver
+    // memory at ANY corpus size; the full frame is one row per order,
+    // which at 100 TB would otherwise be a driver-OOM collect). The
+    // States section always carries the complete counts.
+    def detailRows(selected: DataFrame): DataFrame =
+      selected.orderBy(col("o_orderkey")).limit(DetailRowCap)
+
+    val sections: Seq[() => DataFrame] = Seq(
+      // ---- summary page (print_summary_html): per-nite counts
+      // A2/A4/A10, the "lasts" block (S11/W2 log tails), and the T3
+      // top-20 failures
+      () => ReconOps.niteRollup(spark, dataDir)
+        .join(ReconOps.errorsPerNite(spark, dataDir), Seq("nite"), "left_outer")
+        .join(MonitorOps.unionAccumulate(spark, dataDir), Seq("nite"), "left_outer")
+        .select(col("nite"), col("n_events"),
+          coalesce(col("n_errors"), lit(0L)).as("n_errors"),
+          coalesce(col("n_flagged_users"), lit(0L)).as("n_flagged_users"),
+          round(col("sum_value"), 4).as("sum_value"))
+        .orderBy(col("nite")),
+      () => MonitorOps.logTail(spark, dataDir).orderBy(col("event_type")),
+      () => RelationalOps.topkErrors(spark, dataDir)
+        .orderBy(col("ts_sec").desc, col("event_id").desc),
+      // the per-state counts of the full page; the short page's counts
+      // are the same rows without `ok`, derived below without a job
+      () => states.groupBy(col("expstate"))
+        .agg(count(lit(1)).as("n_orders")).orderBy(col("expstate")),
+      () => detailRows(states.where(col("expstate") =!= "ok")),
+      () => detailRows(states),
+      // ---- SNe page (print_sne_html): J5→J7 multi-key reconciliation
+      // plus the W1 duplicate-skip marking summary (mark_sne_skip,
+      // monitor:922-942 — skipped rows are counted, not listed)
+      () => MonitorOps.multikeyRecon(spark, dataDir).orderBy(col("nite")),
+      () => ReconOps.skipDuplicates(spark, dataDir)
+        .groupBy(col("event_type"))
+        .agg(count(lit(1)).as("n_rows"),
+          sum(when(col("skip"), 1L).otherwise(0L)).as("n_skipped"))
+        .orderBy(col("event_type")))
+
+    val Seq(niteSummary, lasts, topFailures, fullStates, shortRows, fullRows,
+        sneRecon, skipSummary) =
+      try HtmlReport.collectAll(spark, sections)
+      finally persisted.foreach(_.unpersist(false))
+    // `where(expstate =!= "ok")` drops `ok` and null states alike
+    val shortStates = fullStates.copy(rows = fullStates.rows.filter(r =>
+      Option(r.getAs[String]("expstate")).exists(_ != "ok")))
+
+    def exposurePage(reptype: String, perState: HtmlReport.Frame,
+        rows: HtmlReport.Frame): String =
+      HtmlReport.page(
         s"DTS exposure report ($reptype) — generated $generatedAt",
         Seq("States" -> perState,
           s"Exposures ($reptype, first $DetailRowCap by orderkey; " +
             "complete counts above)" -> rows),
         tookSecs)
-    }
 
-    // ---- SNe page (print_sne_html): J5→J7 multi-key reconciliation
-    // plus the W1 duplicate-skip marking summary (mark_sne_skip,
-    // monitor:922-942 — skipped rows are counted, not listed)
-    val sneRecon = MonitorOps.multikeyRecon(spark, dataDir)
-      .orderBy(col("nite"))
-    val skipSummary = ReconOps.skipDuplicates(spark, dataDir)
-      .groupBy(col("event_type"))
-      .agg(count(lit(1)).as("n_rows"),
-        sum(when(col("skip"), 1L).otherwise(0L)).as("n_skipped"))
-      .orderBy(col("event_type"))
-    val sne = HtmlReport.render(
-      s"DTS SNe report — generated $generatedAt",
-      Seq("Per-nite reconciliation" -> sneRecon,
-        "Duplicate-skip summary" -> skipSummary),
-      tookSecs)
-
-    try Map(
-      "dtsmonitor.html" -> summary,
-      "dtsmonitor_exp_short.html" -> exposurePage("short"),
-      "dtsmonitor_exp_full.html" -> exposurePage("full"),
-      "dtsmonitor_sne.html" -> sne)
-    finally { states.unpersist(false); () }
+    Map(
+      "dtsmonitor.html" -> HtmlReport.page(
+        s"DTS monitor summary — generated $generatedAt",
+        Seq("Per-nite summary" -> niteSummary,
+          "Last lines per log" -> lasts,
+          "Top-20 failing users" -> topFailures),
+        tookSecs),
+      "dtsmonitor_exp_short.html" -> exposurePage("short", shortStates, shortRows),
+      "dtsmonitor_exp_full.html" -> exposurePage("full", fullStates, fullRows),
+      "dtsmonitor_sne.html" -> HtmlReport.page(
+        s"DTS SNe report — generated $generatedAt",
+        Seq("Per-nite reconciliation" -> sneRecon,
+          "Duplicate-skip summary" -> skipSummary),
+        tookSecs))
   }
 }
