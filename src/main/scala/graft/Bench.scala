@@ -1,5 +1,5 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
 /** Benchmark main — runs every catalog query on SPARK_GRAFT_SF_DIR and
   * prints one JSON line. Queries are fully materialized through the
@@ -26,28 +26,31 @@ import org.apache.spark.sql.SparkSession
   * LSH queries. Conclusion stands: compare per-query MINs across runs,
   * never one run's totals. */
 object Bench {
-  /** Drop EVERYTHING a finished rep can have pinned in executor memory.
-    *
-    * `catalog.clearCache()` alone is not enough (VERDICT r16 item 2):
-    * the LSH/CC chain queries `localCheckpoint(true)` their iteration
-    * state, and checkpoint blocks live as persisted RDDs OUTSIDE the
-    * catalog cache — they are only freed when the JVM happens to GC the
-    * RDD reference and the ContextCleaner notices. Late in a 271-query
-    * suite those orphaned MEMORY_AND_DISK blocks accumulate against the
-    * 16 g heap and G1 starts stalling whole reps (q_merge_groups
-    * recorded min 5.7 / max 123.7 s in r16 on an unchanged plan).
-    * Between reps every Dataset from the previous rep is dead — the
-    * next rep rebuilds from the query function — so unpersisting every
-    * persistent RDD is safe and makes block release deterministic
-    * instead of GC-timed. Blocking=true so the release can't overlap
-    * (and contaminate) the next timed rep. */
-  private def releaseIntermediates(spark: SparkSession): Unit = {
-    spark.catalog.clearCache()
-    spark.sparkContext.getPersistentRDDs.values
-      .foreach(_.unpersist(blocking = true))
+  /** One timed run: `Right(seconds)`, or `Left(error)` when it throws —
+    * a broken query must never read as a fast one. Everything the run
+    * pinned is released afterwards, outside the timing. */
+  private[graft] def timedRep(spark: SparkSession)(run: => Unit)
+      : Either[String, Double] = {
+    val t0 = System.nanoTime()
+    val out =
+      try { run; Right((System.nanoTime() - t0) / 1e9) }
+      catch { case e: Throwable => Left(s"${e.getClass.getName}: ${e.getMessage}") }
+    LocalSession.release(spark)
+    out
   }
 
-  private def median(xs: Seq[Double]): Double = {
+  /** Full materialization through the `noop` sink. */
+  private[graft] def sink(df: DataFrame): Unit =
+    df.write.format("noop").mode("overwrite").save()
+
+  /** `n` timed runs of one thing, stopping at the first failure. */
+  private def timedReps(spark: SparkSession, n: Int)(run: => Unit)
+      : Either[String, Vector[Double]] =
+    (1 to n).foldLeft[Either[String, Vector[Double]]](Right(Vector.empty)) {
+      (acc, _) => acc.flatMap(ts => timedRep(spark)(run).map(ts :+ _))
+    }
+
+  private[graft] def median(xs: Seq[Double]): Double = {
     val s = xs.sorted
     if (s.size % 2 == 1) s(s.size / 2) else (s(s.size / 2 - 1) + s(s.size / 2)) / 2
   }
@@ -112,11 +115,17 @@ object Bench {
           b.result()
         }
       }
-    } catch { case _: Throwable => Map.empty }
+    } catch { case e: Throwable =>
+      // unreadable is not "no record": say so, or the contamination
+      // check is off for the whole run without a word
+      System.err.println("[bench] committed record BENCH_FULL.json " +
+        s"unreadable, contamination check off: $e")
+      Map.empty
+    }
 
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
+    val cpus = LocalSession.cpus
     val reps = sys.env.getOrElse("SPARK_GRAFT_BENCH_REPS", "3").toInt.max(1)
     // optional trailing names: bench only that subset (iteration aid; the
     // driver passes no args and gets the full suite). Subset runs write
@@ -125,15 +134,8 @@ object Bench {
     val unknown = only.diff(SparkEntry.queries.keySet)
     require(unknown.isEmpty,
       s"unknown query name(s): ${unknown.mkString(", ")}")
-    val refMins = committedMins(sfDir, cpus)
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val refMins = committedMins(sfDir, cpus.toString)
+    val spark = LocalSession(cpus)
     // untimed warmup: JVM/codegen/FS/parquet-reader init — touch every
     // table once so the first timed query doesn't absorb it
     graft.sources.Tables.names.foreach { t =>
@@ -143,132 +145,155 @@ object Bench {
       } catch { case _: Throwable => () }
     }
     spark.range(1000).selectExpr("sum(id)").collect()
-    // pinned DEMONSTRATION twins (VERDICT r12 item 7): these queries pin
-    // parameters (cells=8, per-query Lloyd retrain) to demonstrate a
-    // shape whose production form is the oracled `_auto`/`_search`
-    // sibling. They stay in CORRECTNESS (every declared query does) and
-    // are still measured, but they report under a separate `demo` group
-    // so the headline total measures only plans someone would run at
-    // 100× scale.
-    val demoNames = Set("q_hubness", "q_semdedup", "q_ann_pq",
-      "q_ann_pq_refine", "q_chunk_semdedup")
-    val measured = SparkEntry.queries.toSeq.sortBy(_._1)
-      .filter { case (name, _) => only.isEmpty || only(name) }
-      .map { case (name, fn) =>
-      def rep(): Double = {
-        val t0 = System.nanoTime()
-        try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] $name failed: ${e.getMessage}")
-        }
-        val dt = (System.nanoTime() - t0) / 1e9
-        releaseIntermediates(spark) // untimed: dt is already taken
-        dt
+    val measured = measure(spark, sfDir, SparkEntry.queries.toSeq.sortBy(_._1)
+      .filter { case (name, _) => only.isEmpty || only(name) }, reps, refMins)
+    // the production-path group is only meaningful as a whole: skipped
+    // on subset runs
+    val prod = if (only.nonEmpty) Nil else prodGroup(spark, sfDir, reps)
+    val fullPath =
+      if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
+    val rec = record(measured, prod, refMins, reps, cpus, sfDir, fullPath)
+    println(rec.stdoutFull)
+    try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
+      (rec.full + "\n").getBytes("UTF-8"))
+    catch { case e: Throwable =>
+      System.err.println(s"[bench] $fullPath write failed: ${e.getMessage}") }
+    println(rec.tail)
+    spark.stop()
+  }
+
+  /** JSON string literal: backslash, quote, and ALL control chars (<0x20)
+    * escaped — a tab or CR in a value would otherwise make a consumer's
+    * json.load fail. */
+  private[graft] def jsonString(s: String): String = "\"" + s.flatMap {
+    case '"'  => "\\\""
+    case '\\' => "\\\\"
+    case '\n' => "\\n"
+    case '\r' => "\\r"
+    case '\t' => "\\t"
+    case c if c < ' ' => f"\\u${c.toInt}%04x"
+    case c => c.toString
+  } + "\""
+
+  /** Pinned DEMONSTRATION twins (VERDICT r12 item 7): these queries pin
+    * parameters (cells=8, per-query Lloyd retrain) to demonstrate a
+    * shape whose production form is the oracled `_auto`/`_search`
+    * sibling. They stay in CORRECTNESS (every declared query does) and
+    * are still measured, but they report under a separate `demo` group
+    * so the headline total measures only plans someone would run at
+    * 100× scale. */
+  private val DemoNames = Set("q_hubness", "q_semdedup", "q_ann_pq",
+    "q_ann_pq_refine", "q_chunk_semdedup")
+
+  /** Times every query: `Right(rep times)`, or `Left(error)` for a query
+    * that threw (its remaining reps are skipped).
+    *
+    * Stall hygiene (VERDICT r9 item 7): this host's multi-second stalls
+    * land on sub-2 s queries often enough that a 3-rep median absorbed
+    * three >6 s outliers in r9; and (VERDICT r11 item 1) a SLOW query hit
+    * by one stall skews a 3-rep median by tens of seconds
+    * (q_text_dedup_groups recorded 27.5 s median over a 4.48 s min on an
+    * unchanged plan). r12 exposed the remaining blind spot (VERDICT r12
+    * items 1-2): a sustained slow window inflates ALL reps together, so a
+    * spread trigger (max/min > 3) never fires — q_span_scrub sat at
+    * spread 2.97 and recorded a 4.7× min on unchanged code. The only rule
+    * with no blind spot is unconditional: every query gets ≥5 reps.
+    *
+    * Self-adjudication re-reps (VERDICT r17 item 4): when even the best
+    * of 5 reps sits ContamRatio above the committed record's min, the
+    * host gets up to 3 bounded extra chances to produce an honest figure
+    * before recording — a transient stall clears, a sustained
+    * contamination window stays flagged. The re-rep is one-sided by
+    * design (slow readings get extra chances, fast ones never do —
+    * ADVICE r18); the triples block records every rep (n > 5 marks a
+    * re-repped query), and the contamination block names the re-rep
+    * counts explicitly. */
+  private[graft] def measure(spark: SparkSession, sfDir: String,
+      queries: Seq[(String, (SparkSession, String) => DataFrame)],
+      reps: Int, refMins: Map[String, Double])
+      : Seq[(String, Either[String, Seq[Double]])] =
+    queries.map { case (name, fn) =>
+      def slow(ts: Seq[Double]) = refMins.get(name).exists(rm =>
+        rm > ContamFloorSec && ts.min > ContamRatio * rm)
+      val first = timedReps(spark, reps.max(5))(sink(fn(spark, sfDir)))
+      val times = (1 to 3).foldLeft(first) { (acc, _) =>
+        acc.flatMap(ts =>
+          if (slow(ts)) timedRep(spark)(sink(fn(spark, sfDir))).map(ts :+ _)
+          else Right(ts))
       }
-      val first = (1 to reps).map(_ => rep())
-      // stall hygiene (VERDICT r9 item 7): this host's multi-second
-      // stalls land on sub-2 s queries often enough that a 3-rep median
-      // absorbed three >6 s outliers in r9. Two extra reps cost almost
-      // nothing exactly where they're needed (the query is fast) and
-      // make the median immune to any single stall.
-      // ... and (VERDICT r11 item 1) a SLOW query hit by one stall
-      // skews a 3-rep median by tens of seconds (q_text_dedup_groups
-      // recorded 27.5 s median over a 4.48 s min on an unchanged
-      // plan). r12 exposed the remaining blind spot (VERDICT r12 items
-      // 1-2): a sustained slow window inflates ALL reps together, so a
-      // spread trigger (max/min > 3) never fires — q_span_scrub sat at
-      // spread 2.97 and recorded a 4.7× min on unchanged code. The only
-      // rule with no blind spot is unconditional: every query gets ≥5
-      // reps. The extra cost lands where reps are cheap (fast queries)
-      // or where adjudication rounds are costlier than the ~4 minutes
-      // of reps (slow queries) — this is the third such round (r9, r11,
-      // r12).
-      val times0 =
-        if (first.size < 5) first ++ (first.size until 5).map(_ => rep())
-        else first
-      // self-adjudication re-reps (VERDICT r17 item 4): when even the
-      // best of 5 reps sits ContamRatio above the committed record's
-      // min, give the host up to 3 bounded extra chances to produce an
-      // honest figure before recording — a transient stall clears, a
-      // sustained contamination window stays flagged
-      val times = refMins.get(name) match {
-        case Some(rm) if rm > ContamFloorSec &&
-            times0.min > ContamRatio * rm =>
-          var ts = times0
-          var extra = 0
-          while (extra < 3 && ts.min > ContamRatio * rm) {
-            ts = ts :+ rep(); extra += 1
-          }
-          // the re-rep is one-sided by design (slow readings get extra
-          // chances, fast ones never do — ADVICE r18); the triples block
-          // records every rep (n > 5 marks a re-repped query), and the
-          // contamination block names the re-rep counts explicitly
-          ts
-        case _ => times0
-      }
+      times.left.foreach(e => System.err.println(s"[bench] $name failed: $e"))
       name -> times
     }
-    // headline excludes the demo twins; they report in their own group
-    val (demoResults, results) = measured.partition(r => demoNames(r._1))
-    // --- production-path group (VERDICT r10 item 3): the declared
-    // dedup-derivative queries re-derive the LSH chain per query
-    // because the oracle gate requires self-contained SQL; a 100 TB run
-    // pays the chain ONCE (curationRun materializes the group table +
-    // canonical picks + chunk grid) and derives everything else from
-    // the stored tables via the *From entry points. This group measures
-    // exactly that execution: one timed materialize, then each *From
-    // form over the parquet tables it wrote. Skipped on subset runs
-    // (the group is only meaningful as a whole).
-    val prodResults: Seq[(String, Seq[Double])] = if (only.nonEmpty) Nil else {
-      import org.apache.spark.sql.functions.col
-      import graft.operators.{CurationOps, DedupOps, TextOps}
-      import graft.sources.Tables
-      val outDir = java.nio.file.Files
-        .createTempDirectory("graft_prod_bench").toString
-      val t0 = System.nanoTime()
-      try CurationOps.curationRun(spark, sfDir, outDir)
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] curationRun failed: ${e.getMessage}") }
-      val matSec = (System.nanoTime() - t0) / 1e9
-      releaseIntermediates(spark)
-      def groups = spark.read.parquet(s"$outDir/groups")
-      def keep = spark.read.parquet(s"$outDir/canonical")
-      def chunks = spark.read.parquet(s"$outDir/chunks")
-      def quality = TextOps.qualityScore(spark, sfDir)
-        .select(col("doc_id"), col("quality"))
-      def prov = Tables.documents(spark, sfDir)
-        .select(col("doc_id"), col("source"))
-      val prods: Seq[(String, () => org.apache.spark.sql.DataFrame)] = Seq(
-        "prod_canonical_docs" ->
-          (() => DedupOps.canonicalDocsFrom(groups, quality)),
-        "prod_dup_rate_by_source" ->
-          (() => DedupOps.dupRateBySourceFrom(groups, keep, prov)),
-        "prod_dup_token_share" ->
-          (() => DedupOps.dupTokenShareFromGroups(spark, sfDir, groups)),
-        "prod_source_overlap" ->
-          (() => DedupOps.sourceOverlapFrom(groups, prov)),
-        "prod_group_purity" ->
-          (() => DedupOps.groupPurityFrom(groups,
-            Tables.documents(spark, sfDir))),
-        "prod_leakfree_split" ->
-          (() => DedupOps.leakFreeSplitFrom(
-            Tables.documents(spark, sfDir)
-              .select(col("doc_id"), col("lang")), groups)),
-        "prod_curation_funnel" ->
-          (() => CurationOps.curationFunnelFrom(spark, sfDir,
-            DedupOps.dropList(groups, keep), Some(chunks))))
-      ("prod_materialize" -> Seq(matSec)) +: prods.map { case (name, mk) =>
-        name -> (1 to reps).map { _ =>
-          val t = System.nanoTime()
-          try mk().write.format("noop").mode("overwrite").save()
-          catch { case e: Throwable =>
-            System.err.println(s"[bench] $name failed: ${e.getMessage}") }
-          val dt = (System.nanoTime() - t) / 1e9
-          releaseIntermediates(spark)
-          dt
-        }
-      }
+
+  /** The production-path group (VERDICT r10 item 3): the declared
+    * dedup-derivative queries re-derive the LSH chain per query because
+    * the oracle gate requires self-contained SQL; a 100 TB run pays the
+    * chain ONCE (curationRun materializes the group table + canonical
+    * picks + chunk grid) and derives everything else from the stored
+    * tables via the *From entry points. This group measures exactly that
+    * execution: one timed materialize, then each *From form over the
+    * parquet tables it wrote. */
+  private def prodGroup(spark: SparkSession, sfDir: String, reps: Int)
+      : Seq[(String, Either[String, Seq[Double]])] = {
+    import org.apache.spark.sql.functions.col
+    import graft.operators.{CurationOps, DedupOps, TextOps}
+    import graft.sources.Tables
+    val outDir = java.nio.file.Files
+      .createTempDirectory("graft_prod_bench").toString
+    val mat = timedReps(spark, 1)(CurationOps.curationRun(spark, sfDir, outDir))
+    def groups = spark.read.parquet(s"$outDir/groups")
+    def keep = spark.read.parquet(s"$outDir/canonical")
+    def chunks = spark.read.parquet(s"$outDir/chunks")
+    def quality = TextOps.qualityScore(spark, sfDir)
+      .select(col("doc_id"), col("quality"))
+    def prov = Tables.documents(spark, sfDir)
+      .select(col("doc_id"), col("source"))
+    val prods: Seq[(String, () => DataFrame)] = Seq(
+      "prod_canonical_docs" ->
+        (() => DedupOps.canonicalDocsFrom(groups, quality)),
+      "prod_dup_rate_by_source" ->
+        (() => DedupOps.dupRateBySourceFrom(groups, keep, prov)),
+      "prod_dup_token_share" ->
+        (() => DedupOps.dupTokenShareFromGroups(spark, sfDir, groups)),
+      "prod_source_overlap" ->
+        (() => DedupOps.sourceOverlapFrom(groups, prov)),
+      "prod_group_purity" ->
+        (() => DedupOps.groupPurityFrom(groups,
+          Tables.documents(spark, sfDir))),
+      "prod_leakfree_split" ->
+        (() => DedupOps.leakFreeSplitFrom(
+          Tables.documents(spark, sfDir)
+            .select(col("doc_id"), col("lang")), groups)),
+      "prod_curation_funnel" ->
+        (() => CurationOps.curationFunnelFrom(spark, sfDir,
+          DedupOps.dropList(groups, keep), Some(chunks))))
+    val out = ("prod_materialize" -> mat) +: prods.map { case (name, mk) =>
+      name -> timedReps(spark, reps)(sink(mk()))
     }
+    out.foreach { case (name, r) =>
+      r.left.foreach(e => System.err.println(s"[bench] $name failed: $e")) }
+    out
+  }
+
+  /** One bench run rendered three ways: the stdout `total_full` line, the
+    * complete record (BENCH_FULL.json) and the budgeted tail line. */
+  private[graft] case class Record(stdoutFull: String, full: String,
+      tail: String)
+
+  /** Renders a run. A query that threw lands in the `failed` block (name
+    * → error) and nowhere else: not in `queries`, `mins`, `triples`,
+    * `contamination` or any total. */
+  private[graft] def record(
+      measured: Seq[(String, Either[String, Seq[Double]])],
+      prod: Seq[(String, Either[String, Seq[Double]])],
+      refMins: Map[String, Double], reps: Int, cpus: Int, sfDir: String,
+      fullPath: String): Record = {
+    val failed = (measured ++ prod).collect { case (k, Left(e)) => k -> e }
+    // headline excludes the demo twins; they report in their own group
+    val (demoResults, results) = measured
+      .collect { case (k, Right(ts)) => k -> ts }
+      .partition(r => DemoNames(r._1))
+    val prodResults = prod.collect { case (k, Right(ts)) => k -> ts }
     val prodJson = prodResults
       .map { case (k, ts) => "\"" + k + "\":" + median(ts) }
       .mkString("{", ",", "}")
@@ -280,7 +305,9 @@ object Bench {
     // the recurring per-report cost the group exists to measure
     val prodTotal = prodResults
       .collect { case (k, ts) if k != "prod_materialize" => median(ts) }.sum
-
+    val failedJson = failed
+      .map { case (k, e) => jsonString(k) + ":" + jsonString(e) }
+      .mkString("{", ",", "}")
     // "queries" stays name→median (the stable cross-round metric);
     // "triples" adds per-query min/median/max so a host-variance
     // regression is attributable from one round's record alone
@@ -327,7 +354,7 @@ object Bench {
     // the FULL record (with triples) carries a distinct metric name so a
     // consumer aggregating by metric never double-counts the total
     // (ADVICE r6); metric=total appears exactly once — on the tail line
-    println(s"""{"metric":"total_full","value":$total,"total_min":$totalMin,"unit":"sec","queries":$qs,"triples":$triples,"reps":$reps,"sf":"$sfDir"}""")
+    val stdoutFull = s"""{"metric":"total_full","value":$total,"total_min":$totalMin,"unit":"sec","queries":$qs,"triples":$triples,"reps":$reps,"sf":"$sfDir"}"""
     // The driver records only the last TAIL_BUDGET chars of stdout
     // (BENCH_r08 shows a 2000-char window), and sbt appends its own
     // "[success] Total time: ..." line (~80 chars) AFTER us. At 87
@@ -342,13 +369,7 @@ object Bench {
     // Values are rounded to 2 decimals (the host's rep-to-rep variance
     // is far above 10 ms, so nothing real is lost).
     val fullRec =
-      s"""{"metric":"total_full","value":$total,"total_min":$totalMin,"total_with_demo":$totalWithDemo,"total_min_with_demo":$totalMinWithDemo,"unit":"sec","queries":$qs,"mins":$mins,"triples":$triples,"prod":$prodJson,"prod_total":$prodTotal,"demo":$demoJson,"demo_total":$demoTotal,"contamination":$contamJson,"reps":$reps,"cpus":$cpus,"sf":"$sfDir"}"""
-    val fullPath =
-      if (only.isEmpty) "BENCH_FULL.json" else "BENCH_SUBSET.json"
-    try java.nio.file.Files.write(java.nio.file.Paths.get(fullPath),
-      (fullRec + "\n").getBytes("UTF-8"))
-    catch { case e: Throwable =>
-      System.err.println(s"[bench] $fullPath write failed: ${e.getMessage}") }
+      s"""{"metric":"total_full","value":$total,"total_min":$totalMin,"total_with_demo":$totalWithDemo,"total_min_with_demo":$totalMinWithDemo,"unit":"sec","queries":$qs,"mins":$mins,"triples":$triples,"prod":$prodJson,"prod_total":$prodTotal,"demo":$demoJson,"demo_total":$demoTotal,"contamination":$contamJson,"failed":$failedJson,"reps":$reps,"cpus":$cpus,"sf":"$sfDir"}"""
     val tailBudget = 1840 // 2000-char window - sbt success line - margin
     def r2(x: Double): String = f"$x%.2f"
     val byCost = results.map { case (k, ts) => k -> median(ts) }
@@ -360,7 +381,7 @@ object Bench {
     // digits plus a 4-digit-second total could otherwise overrun the
     // capture window the budget exists to fit
     val suffix0 =
-      s"""},"rest_n":${results.size},"rest_sum":${r2(total)},"total_min":${r2(totalMin)},"total_with_demo":${r2(totalWithDemo)},"prod_total":${r2(prodTotal)},"contam_n":${flagged.size},"full":"$fullPath","reps":$reps,"sf":"$sfName"}"""
+      s"""},"rest_n":${results.size},"rest_sum":${r2(total)},"total_min":${r2(totalMin)},"total_with_demo":${r2(totalWithDemo)},"prod_total":${r2(prodTotal)},"contam_n":${flagged.size},"failed_n":${failed.size},"full":"$fullPath","reps":$reps,"sf":"$sfName"}"""
     val prefix = s"""{"metric":"total","value":${r2(total)},"unit":"sec","queries":{"""
     var used = prefix.length + suffix0.length
     val kept = scala.collection.mutable.ArrayBuffer.empty[(String, Double)]
@@ -374,8 +395,8 @@ object Bench {
     val restSum = byCost.filterNot(e => keptSet(e._1)).map(_._2).sum
     val keptJson = kept.sortBy(_._1)
       .map { case (k, m) => "\"" + k + "\":" + r2(m) }.mkString(",")
-    println(prefix + keptJson +
-      s"""},"rest_n":$restN,"rest_sum":${r2(restSum)},"total_min":${r2(totalMin)},"total_with_demo":${r2(totalWithDemo)},"prod_total":${r2(prodTotal)},"contam_n":${flagged.size},"full":"$fullPath","reps":$reps,"sf":"$sfName"}""")
-    spark.stop()
+    val tail = prefix + keptJson +
+      s"""},"rest_n":$restN,"rest_sum":${r2(restSum)},"total_min":${r2(totalMin)},"total_with_demo":${r2(totalWithDemo)},"prod_total":${r2(prodTotal)},"contam_n":${flagged.size},"failed_n":${failed.size},"full":"$fullPath","reps":$reps,"sf":"$sfName"}"""
+    Record(stdoutFull, fullRec, tail)
   }
 }

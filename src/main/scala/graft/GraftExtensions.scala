@@ -10,7 +10,7 @@ import graft.plans.DotProductLong
   *
   * {{{
   *   spark-submit --conf spark.sql.extensions=graft.GraftExtensions ...
-  *   // or: SparkSession.builder().withExtensions(new GraftExtensions) ...
+  *   // or, on a session builder: .withExtensions(new GraftExtensions)
   *   spark.sql("SELECT graft_dot_long(a, b) FROM vectors")
   * }}}
   *

@@ -1132,11 +1132,6 @@ object CurationOps {
     * DuckDB oracle rebuilds the canonical from the planted fields
     * directly (never by normalizing the messy string), so the green row
     * grades [[canonicalizeUrl]] end-to-end. */
-  /** Probe seam: [[urlDocs]] for graft.tools (the synthesis is
-    * private[operators]; the A/B probes live in tools). */
-  private[graft] def urlDocsForProbe(docs: DataFrame): DataFrame =
-    urlDocs(docs)
-
   private[operators] def urlDocs(docs: DataFrame): DataFrame =
     // fan-out before the URL synthesis + downstream canonicalization
     // regexes — identity at scale
@@ -1176,7 +1171,7 @@ object CurationOps {
     * (6 regexes + an interpreted HOF filter per row) on BOTH join
     * sides; the partition-only window runs it once and pays one
     * exchange instead of two join legs. Interleaved A/B/C
-    * (tools/UrlDropAbProbe, 9 reps): double-projection join med
+    * (OPTIMIZATION_r19.md §11, 9 reps): double-projection join med
     * 1.067 s, shared-exchange join 1.379, window min 0.665. Scale
     * posture: the window partitions on the HIGH-cardinality canonical
     * URL (no low-cardinality funnel) with an unbounded frame, and at

@@ -111,7 +111,7 @@ object DedupOps {
     // Deliberately NO trailing repartition on the self-join key (r18,
     // measured): forcing both self-join sides through one
     // repartition(band, band_key) exchange does let the signature pass
-    // run once, but the interleaved A/B (tools/BandJoinAbProbe) read
+    // run once, but the interleaved A/B (OPTIMIZATION_r18.md §4) read
     // 0.81 s for the shared-exchange form vs 0.54 s for the planner's
     // broadcast choice at sf0.1 — the exchange's materialization barrier
     // + per-side sort costs more than the (explode_outer-cheapened)
@@ -909,7 +909,7 @@ object DedupOps {
     // + final assign) and the verdict join — materialize it ONCE (r19):
     // without the checkpoint each consumer re-derives the quantization
     // and, on the chunk path, the whole chunk+hash-embed chain under it
-    // (3-4 passes measured in tools/FunnelProbe-style splits). Values
+    // (3-4 passes measured; OPTIMIZATION_r19.md §6). Values
     // are integer-exact, so materialization cannot change results;
     // blocks are released by the harness clearCache/unpersist contract.
     val all = quantizedAll(spark, embSrc).localCheckpoint(true)
@@ -1084,7 +1084,7 @@ object DedupOps {
     * label into the neighbor aggregation as a tagged union row (one
     * grouped pass per iteration instead of join+agg+join) computes the
     * identical fixpoint but measured SLOWER on the interleaved A/B
-    * (tools/CcAbProbe: min 2.95 vs 2.35 s over the dup-edge graph) —
+    * (OPTIMIZATION_r18.md §4: min 2.95 vs 2.35 s over the dup-edge graph) —
     * the planner broadcasts the tiny label/nbrMin sides here, so the
     * "extra" join is exchange-free while the union form pays a second
     * shuffle leg into the aggregation. */
@@ -1158,7 +1158,7 @@ object DedupOps {
       // union-find locally — the distributed loop pays ~2 jobs per
       // diameter step plus a checkpoint materialization each, which
       // dominates CC cost whenever the graph is small (interleaved A/B
-      // in tools/CcDriverAbProbe). The limit probe reads the LOCAL
+      // in OPTIMIZATION_r19.md §4). The limit probe reads the LOCAL
       // checkpoint blocks (first wave almost always decides), never the
       // upstream chain.
       if (driverMaxEdges > 0 && e.schema.fields.forall(
@@ -1188,7 +1188,7 @@ object DedupOps {
         // 1-partition wave on every NON-converged iteration (nearly
         // free), and only the terminal pass pays the limit scale-up
         // waves — while the aggregate pays a full 2-stage job every
-        // iteration. Interleaved A/B (tools/CcConvAbProbe, 9 reps over
+        // iteration. Interleaved A/B (OPTIMIZATION_r19.md §3, 9 reps over
         // the same checkpointed dup edges): isEmpty min 0.781 / med
         // 0.995 s vs max-agg 0.937 / 1.092 s.
         converged = stepped.where(col("comp") =!= col("old_comp")).isEmpty
@@ -1231,7 +1231,8 @@ object DedupOps {
     * 10%-of-edges star and randomized graphs). Cost: the label relation
     * shuffles saltFactor× per iteration — 16-byte rows, the right trade
     * whenever any component's degree distribution is heavy-tailed.
-    * `tools/CcStarProbe` measures the hot-star behavior at 8×. */
+    * The hot-star behavior at 8× is recorded in README ("Connected-
+    * components hub hardening probed at 8×"). */
   def connectedComponentsSalted(edges: DataFrame, maxIters: Int = 50,
       saltFactor: Int = CcSaltFactor): DataFrame = {
     def checkpointed(df: DataFrame)

@@ -237,7 +237,7 @@ object GraphOps {
     // caller passes), collect them and run the identical integer
     // recurrence locally — the bounded limit probes read the LOCAL
     // checkpoint blocks, never the upstream chain. Interleaved A/B in
-    // tools/RankAbProbe; the checkpoints are freed here since the
+    // OPTIMIZATION_r19.md §5; the checkpoints are freed here since the
     // returned local frame no longer reads them.
     val allLong = (ew.select(col("s"), col("t"), col("w"), col("ow"))
         .schema.fields ++ nodes.schema.fields)

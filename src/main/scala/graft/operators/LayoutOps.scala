@@ -223,7 +223,7 @@ object LayoutOps {
     // keyed is eagerly checkpointed HERE (r19, measured): this query
     // consumes it ~10 times (4 boxes calls, their fileOf histograms,
     // the matched census) and each re-derivation pays the events scan
-    // + min/max census. Interleaved A/B (tools/ZorderAbProbe, 9 reps):
+    // + min/max census. Interleaved A/B (OPTIMIZATION_r19.md §12, 9 reps):
     // re-derive med 2.462 s vs checkpoint-once 1.811. zorderLayout (2
     // consumers) keeps the measured recompute decision in its comment.
     zorderIncrementalOf(keyedEvents(spark, dir).localCheckpoint(true))

@@ -267,9 +267,9 @@ object TextOps {
     * contract, BpeBatchedSpec whole-corpus equality, and the
     * q_bpe_merges oracle still pins the sequential SQL unroll), with
     * the final vocabulary state definitionally identical (same
-    * replaces, same rank order). Measured (tools/BpeStrictAbProbe,
+    * replaces, same rank order). Measured (OPTIMIZATION_r19.md §8,
     * interleaved, sf0.1): 4 rounds vs 8 jobs, loop med 1.275 → 0.558 s;
-    * table equality asserted in the same probe run. */
+    * table equality asserted in the same run. */
   private def bpeLoop(spark: SparkSession, dir: String)
       : (Seq[(Long, String, Long)], DataFrame) =
     bpeLoopOver(spark, Tables.documents(spark, dir))
@@ -567,8 +567,8 @@ object TextOps {
 
   /** [[bpeFertility]] over any trained vocabulary state (the loop's
     * `words` frame) — split out so the batched big-vocab trainer
-    * (tools.BpeTrainProbe, 16k+ merges) publishes the SAME card off
-    * its trained table. */
+    * (16k+ merges; README "Production-size BPE vocabulary trained")
+    * publishes the SAME card off its trained table. */
   private[graft] def bpeFertilityOf(docs: DataFrame, words: DataFrame)
       : DataFrame = {
     val seg = words.select(col("tok"),

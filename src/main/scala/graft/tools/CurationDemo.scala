@@ -1,6 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.functions._
 import graft.operators.{CurationOps, DedupOps, TextOps, VectorOps}
 
@@ -14,12 +13,7 @@ import graft.operators.{CurationOps, DedupOps, TextOps, VectorOps}
 object CurationDemo {
   def main(args: Array[String]): Unit = {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.001")
-    val spark = SparkSession.builder().master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
 
     // 1. the composed run: dup groups materialized once, everything
     //    downstream derives from the tables

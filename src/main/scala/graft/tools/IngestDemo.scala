@@ -5,7 +5,6 @@ import java.security.MessageDigest
 import graft.functions.FitsHeader
 import graft.streaming.IngestPipeline
 import graft.streaming.IngestPipeline.Config
-import org.apache.spark.sql.SparkSession
 
 /** Usage example / smoke driver for the ingest pipeline: stages a few
   * notify+payload pairs in a temp dir (one of each routing class), runs a
@@ -18,13 +17,7 @@ object IngestDemo {
     MessageDigest.getInstance("MD5").digest(b).map("%02x".format(_)).mkString
 
   def main(args: Array[String]): Unit = {
-    val spark = SparkSession.builder()
-      .master("local[4]")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.LocalSession()
 
     val root = Files.createTempDirectory("ingest_demo")
     val stage = Files.createDirectory(root.resolve("stage"))

@@ -1,7 +1,6 @@
 package graft.tools
 
 import java.nio.file.{Files, Paths}
-import org.apache.spark.sql.SparkSession
 
 /** Writes `.explain("formatted")` output for named queries to
   * `<outDir>/<query>_<tag>.txt` — the r18 optimization round's
@@ -18,14 +17,7 @@ object PlanDump {
     val tag = args(2)
     val names = args.drop(3)
     Files.createDirectories(Paths.get(outDir))
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = graft.LocalSession()
     names.foreach { name =>
       val df = graft.SparkEntry.queries(name)(spark, sfDir)
       val formatted = df.queryExecution.explainString(
