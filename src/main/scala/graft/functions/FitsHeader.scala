@@ -125,20 +125,6 @@ object FitsHeader {
     }
   }
 
-  /** Render a multi-HDU FITS byte stream (for tests and fixtures): the
-    * first HDU gets a leading SIMPLE card, the rest a leading XTENSION
-    * card, unless the caller already supplied one. No data blocks
-    * (NAXIS defaults absent → 0). */
-  def renderMulti(hdus: Seq[Seq[(String, String)]]): Array[Byte] =
-    hdus.zipWithIndex.map { case (kv, i) =>
-      val lead =
-        if (i == 0 && !kv.exists(_._1 == "SIMPLE")) Seq("SIMPLE" -> "T")
-        else if (i > 0 && !kv.exists(_._1 == "XTENSION"))
-          Seq("XTENSION" -> "IMAGE")
-        else Seq.empty
-      render(lead ++ kv)
-    }.reduce(_ ++ _)
-
   /** Render a keyword→value map as a FITS header byte block (for tests and
     * fixtures): 80-byte cards + END, padded to a 2880-byte block. */
   def render(kv: Seq[(String, String)]): Array[Byte] = {

@@ -201,59 +201,4 @@ object RobotsTxt {
     while (p < pn && pat.charAt(p) == '*') p += 1
     p == pn
   }
-
-  /** The host a URL's robots rules live on — lowercased, port and
-    * `www.` stripped (the UrlOps canonical-host convention, as a plain
-    * string function so record-level kernels can call it without a
-    * Column context). Total — junk in, best-effort host out. */
-  def urlHost(url: String): String = {
-    if (url == null) return ""
-    val at = url.indexOf("://")
-    val rest = if (at >= 0) url.substring(at + 3) else url
-    var end = 0
-    while (end < rest.length && rest.charAt(end) != '/' &&
-        rest.charAt(end) != '?' && rest.charAt(end) != '#') end += 1
-    var h = rest.substring(0, end).toLowerCase
-    val colon = h.indexOf(':')
-    if (colon >= 0) h = h.substring(0, colon)
-    if (h.startsWith("www.")) h.substring(4) else h
-  }
-
-  /** The path-and-query a robots rule matches against (RFC 9309
-    * matches include the query; the fragment never reaches the
-    * server). Empty path → `/`. Total. */
-  def urlPath(url: String): String = {
-    if (url == null) return "/"
-    val at = url.indexOf("://")
-    val rest = if (at >= 0) url.substring(at + 3) else url
-    var i = 0
-    while (i < rest.length && rest.charAt(i) != '/' &&
-        rest.charAt(i) != '?' && rest.charAt(i) != '#') i += 1
-    val frag = rest.indexOf('#', i)
-    val tail = if (i >= rest.length) ""
-      else if (frag >= 0) rest.substring(i, frag)
-      else rest.substring(i)
-    if (tail.isEmpty) "/"
-    else if (tail.charAt(0) == '/') tail
-    else "/" + tail
-  }
-
-  /** The SQL LIKE twin of a pattern (`*`→`%`, LIKE metachars escaped
-    * with `\`, a trailing `%` unless `$`-anchored); None for the
-    * empty pattern (matches nothing). Lets a relational consumer
-    * evaluate robots verdicts with the built-in LIKE instead of this
-    * kernel — the equivalence is property-pinned in RobotsTxtSpec. */
-  def likePattern(pattern: String): Option[String] = {
-    if (pattern == null || pattern.isEmpty) return None
-    val anchored = pattern.charAt(pattern.length - 1) == '$'
-    val pat = if (anchored) pattern.substring(0, pattern.length - 1) else pattern
-    val sb = new java.lang.StringBuilder(pat.length + 8)
-    pat.foreach {
-      case '*' => sb.append('%')
-      case c @ ('%' | '_' | '\\') => sb.append('\\').append(c)
-      case c => sb.append(c)
-    }
-    if (!anchored) sb.append('%')
-    Some(sb.toString)
-  }
 }

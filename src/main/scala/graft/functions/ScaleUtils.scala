@@ -257,18 +257,4 @@ object ScaleUtils {
     if (df.rdd.getNumPartitions >= target) df
     else df.repartition(target, key)
   }
-
-  /** Repartition a fact table by its dominant join/group key with a
-    * partition count sized from data volume (bytes per partition target),
-    * so downstream joins/aggs on that key reuse the partitioning without
-    * a second shuffle. */
-  def repartitionForKey(df: DataFrame, key: String,
-      targetPartitionBytes: Long = 128L * 1024 * 1024,
-      estimatedBytes: Option[Long] = None): DataFrame = {
-    val bytes = estimatedBytes.getOrElse(
-      df.sparkSession.sessionState.executePlan(df.queryExecution.logical)
-        .optimizedPlan.stats.sizeInBytes.toLong)
-    val parts = math.max(1, (bytes / targetPartitionBytes).toInt)
-    df.repartition(parts, col(key))
-  }
 }

@@ -137,18 +137,6 @@ object CurationOps {
       .drop("rk", "bkt", "lrn")
   }
 
-  /** Single-window reference form of [[fixedKSample]] — the spec's
-    * equality baseline; never the production path. */
-  private[graft] def fixedKSamplePlain(df: DataFrame, idCol: String,
-      stratumCol: String, k: Int): DataFrame = {
-    val rk = md5(col(idCol).cast("string").cast("binary"))
-    val w = Window.partitionBy(col(stratumCol)).orderBy(col("rk"), col(idCol))
-    df.withColumn("rk", rk)
-      .withColumn("rn", row_number().over(w))
-      .where(col("rn") <= k)
-      .drop("rk")
-  }
-
   def fixedKSampleQuery(spark: SparkSession, dir: String): DataFrame =
     fixedKSample(Tables.documents(spark, dir)
         .select(col("doc_id"), col("lang")),
@@ -963,21 +951,18 @@ object CurationOps {
     * BENCHMARK's shingles) never fires because the benchmark is long. */
   val ChunkContainBar10k = 3000L
 
-  /** CHUNK-level benchmark containment — catches the sub-document
-    * contamination [[graft.operators.DedupOps.contamination]] misses:
-    * doc-level containment is |shared|/|benchmark| and goes quiet when
-    * a LONG benchmark is only partially quoted; here a corpus doc is
-    * flagged when ≥ [[ChunkContainBar10k]] of ITS chunks carry a
-    * benchmark chunk fingerprint (copies are chunk-aligned when they
-    * start at the doc head — the verbatim-prefix quote case; spec-pinned
-    * with a doc-level-miss fixture). Benchmark side = the same
+  /** CHUNK-level benchmark containment over a [[chunkDocs]] frame —
+    * catches the sub-document contamination
+    * [[graft.operators.DedupOps.contamination]] misses: doc-level
+    * containment is |shared|/|benchmark| and goes quiet when a LONG
+    * benchmark is only partially quoted; here a corpus doc is flagged
+    * when ≥ [[ChunkContainBar10k]] of ITS chunks carry a benchmark chunk
+    * fingerprint (copies are chunk-aligned when they start at the doc
+    * head — the verbatim-prefix quote case; spec-pinned with a
+    * doc-level-miss fixture). Benchmark side = the same
     * [[DedupOps.BenchmarkMaxId]] split as the declared contamination
     * query; benchmark fps are DISTINCT and broadcast (benchmarks are
     * small), the corpus scans once — no shuffle of the big side. */
-  def chunkContamination(spark: SparkSession, dir: String): DataFrame =
-    chunkContaminationOf(chunkDocs(spark, dir))
-
-  /** [[chunkContamination]] over a precomputed [[chunkDocs]] frame. */
   def chunkContaminationOf(chunks: DataFrame): DataFrame = {
     val benchFps = chunks.where(col("doc_id") < DedupOps.BenchmarkMaxId)
       .select(col("chunk_fp")).distinct().withColumn("hit", lit(1L))
@@ -1203,7 +1188,7 @@ object CurationOps {
     * pass) → near-dup dropped (non-canonical
     * member of a text dup group, best-quality-keeps) → benchmark-
     * contaminated (doc-level containment OR chunk-level
-    * [[chunkContamination]] OR exact 13-gram overlap
+    * [[chunkContaminationOf]] OR exact 13-gram overlap
     * [[DedupOps.ngramContamination]] — one drop reason, three
     * detectors) →
     * chunk-dup ([[chunkDedup]]'s flag: half the doc's chunks already

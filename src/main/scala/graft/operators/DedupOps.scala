@@ -793,35 +793,6 @@ object DedupOps {
       trainIters: Int = 2): DataFrame = {
     val emb = quantizedGuarded(spark, embSrc)
     val (_, cents) = VectorOps.kmeansCoreOf(spark, emb, cells, trainIters)
-    cosineNearDupWithCents(spark, emb, cents, nprobe, threshold)
-  }
-
-  /** Near-dup pairs against a PERSISTED coarse quantizer
-    * ([[VectorOps.writeAnnIndex]]'s `coarse_centroids` table) — the
-    * build-once/search-many posture for the dedup path: the Lloyd
-    * training that dominates [[cosineNearDupIvfCore]] is paid at index
-    * build time, and a dedup run is just posting + candidate join +
-    * verify against the loaded centroids. On an index full-trained on
-    * the same corpus the output is BIT-IDENTICAL to the train-in-plan
-    * form (same deterministic training — spec-pinned); a sampled-trained
-    * index shifts cell boundaries only (every emitted pair still clears
-    * the exact verify; only candidate recall can move). */
-  def cosineNearDupFromIndex(spark: SparkSession, dir: String,
-      indexDir: String, nprobe: Int = NearDupNProbe,
-      threshold: Double = CosineDupThreshold): DataFrame = {
-    val (coarse, _, _, _) = VectorOps.loadAnnIndex(spark, indexDir)
-    cosineNearDupWithCents(spark,
-      quantizedGuarded(spark, Tables.embeddings(spark, dir)),
-      coarse, nprobe, threshold)
-  }
-
-  /** Shared tail of the IVF near-dup family: multi-probe posting against
-    * the given coarse centroids, cell-co-residence candidates, exact
-    * verify. Centroids may come from in-plan training
-    * ([[cosineNearDupIvfCore]]) or a persisted index
-    * ([[cosineNearDupFromIndex]]). */
-  private def cosineNearDupWithCents(spark: SparkSession, emb: DataFrame,
-      cents: DataFrame, nprobe: Int, threshold: Double): DataFrame = {
     val dot = graft.plans.DotProductLong.dotLong(spark) _
     // multi-probe posting: nprobe nearest cells per vector by the SAME
     // integer L2² the training minimized; window key is vec_id (high
@@ -1211,95 +1182,6 @@ object DedupOps {
     } finally eRdds.foreach(_.unpersist(false))
   }
 
-  /** Salt spread for [[connectedComponentsSalted]] — how many reducers
-    * a hub's adjacency rows fan across per iteration. */
-  val CcSaltFactor = 8
-
-  /** HUB-HARDENED [[connectedComponents]] (VERDICT r12 item 5): the
-    * min-label loop's per-iteration skew point is the adj ⋈ labels
-    * equi-join on `src` — a boilerplate mega-group at 100 TB is a star
-    * whose hub contributes its ENTIRE degree to one reducer (the min
-    * AGGREGATION is safe either way: partial aggregation pre-combines
-    * per map task). This variant salts that join the
-    * [[graft.operators.ReconOps]] `sessionizeSalted` /
-    * [[graft.functions.ScaleUtils.saltedJoin]] way: each adjacency row
-    * takes a deterministic row-hash salt, the label side is exploded
-    * across [[CcSaltFactor]] salt values, and the join key becomes
-    * (src, salt) — a degree-d hub spreads over `saltFactor` reducers.
-    * Inner-join + exactly-one-salt-per-big-row makes the result
-    * IDENTICAL to [[connectedComponents]] (spec-pinned on a planted
-    * 10%-of-edges star and randomized graphs). Cost: the label relation
-    * shuffles saltFactor× per iteration — 16-byte rows, the right trade
-    * whenever any component's degree distribution is heavy-tailed.
-    * The hot-star behavior at 8× is recorded in README ("Connected-
-    * components hub hardening probed at 8×"). */
-  def connectedComponentsSalted(edges: DataFrame, maxIters: Int = 50,
-      saltFactor: Int = CcSaltFactor): DataFrame = {
-    def checkpointed(df: DataFrame)
-        : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out = df.localCheckpoint(true)
-      (out, out.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd })
-    }
-    val (e, eRdds) = checkpointed(edges.select(col("id_a"), col("id_b")))
-    try {
-      val adj = e.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
-      var labels = adj.select(col("src").as("id")).distinct()
-        .withColumn("comp", col("id"))
-      var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-      var converged = false
-      var it = 0
-      while (!converged && it < maxIters) {
-        val nbrMin = graft.functions.ScaleUtils.saltedJoin(
-            adj,
-            labels.select(col("id").as("src"), col("comp").as("src_comp")),
-            "src", saltFactor)
-          .groupBy(col("dst").as("id"))
-          .agg(min(col("src_comp")).as("nbr_min"))
-        val (stepped, newRdds) = checkpointed(labels
-          .join(nbrMin, Seq("id"), "left_outer")
-          .select(col("id"), col("comp").as("old_comp"),
-            least(col("comp"), coalesce(col("nbr_min"), col("comp")))
-              .as("comp")))
-        converged = stepped.where(col("comp") =!= col("old_comp")).isEmpty
-        labels = stepped.select(col("id"), col("comp"))
-        prevRdds.foreach(_.unpersist(false))
-        prevRdds = newRdds
-        it += 1
-      }
-      if (!converged) {
-        prevRdds.foreach(_.unpersist(false))
-        throw new IllegalStateException(
-          s"connectedComponentsSalted did not converge in $maxIters " +
-            "iterations (diameter exceeds the bound — raise maxIters)")
-      }
-      labels
-    } finally eRdds.foreach(_.unpersist(false))
-  }
-
-  /** AUTO CC (r17) — the skew-census dispatch
-    * ([[graft.operators.ReconOps.sessionizeAuto]]'s discipline) applied
-    * to the min-label loop's per-iteration join key: the DEGREE
-    * distribution of the undirected adjacency. A hub at ≥ 8× the
-    * average degree ([[graft.operators.ReconOps.SkewAutoCutoverX100]])
-    * serializes its whole adjacency into one reducer every iteration —
-    * dispatch to [[connectedComponentsSalted]]; below it the plain
-    * loop avoids the saltFactor× label re-shuffle. Result-identical on
-    * both branches (spec-pinned above), so the dispatch can only
-    * change the plan. One census pass over the edge endpoints, far
-    * below one CC iteration. */
-  def connectedComponentsAuto(edges: DataFrame, maxIters: Int = 50,
-      cutoverX100: Long =
-        graft.operators.ReconOps.SkewAutoCutoverX100): DataFrame = {
-    val degreeKeys = edges.select(col("id_a").as("k"))
-      .unionAll(edges.select(col("id_b").as("k")))
-    if (graft.operators.ReconOps.keySkewX100(degreeKeys, "k")
-        >= cutoverX100)
-      connectedComponentsSalted(edges, maxIters)
-    else connectedComponents(edges, maxIters)
-  }
-
   /** Incremental dup-group maintenance — the batch chain
     * ([[textDedupGroups]]) recomputes components from scratch, but a
     * streaming ingest already knows exactly which edges are NEW (the
@@ -1425,16 +1307,6 @@ object DedupOps {
     connectedComponents(cosineNearDupAuto(spark, dir, maxBuckets = maxBuckets))
       .select(col("id").as("vec_id"), col("comp").as("rep_id"))
 
-  /** [[dedupGroups]] against a persisted index
-    * ([[cosineNearDupFromIndex]]) — the production pairing: a corpus
-    * with a maintained [[VectorOps.writeAnnIndex]] directory runs its
-    * embedding dedup without retraining the coarse quantizer it already
-    * serves searches from. */
-  def dedupGroupsFromIndex(spark: SparkSession, dir: String,
-      indexDir: String): DataFrame =
-    connectedComponents(cosineNearDupFromIndex(spark, dir, indexDir))
-      .select(col("id").as("vec_id"), col("comp").as("rep_id"))
-
   /** Previous [[dupTriangles]] checkpoint blocks (the
     * [[demoCheckpointRdds]] superseded-blocks discipline). */
   private val triCheckpointRdds =
@@ -1457,7 +1329,7 @@ object DedupOps {
     * the four consumers, sealed by an eager 1-row checkpoint, blocks
     * freed by the superseded-registry discipline); the joins key on
     * vertex ids — a mega-hub's fanout is the [[skewProfile]]-guarded
-    * case, same as [[connectedComponentsSalted]]'s motivation. */
+    * case. */
   def dupTriangles(spark: SparkSession, dir: String): DataFrame = {
     val e = textDupPairs(spark, dir).select(col("id_a"), col("id_b"))
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
@@ -2027,7 +1899,7 @@ object DedupOps {
     * methodology). Complements the other two detectors' blind spots:
     * doc-level containment ([[contamination]]) needs ≥80% of a
     * benchmark's shingles, chunk-level matching
-    * ([[CurationOps.chunkContamination]]) needs chunk-aligned copies —
+    * ([[CurationOps.chunkContaminationOf]]) needs chunk-aligned copies —
     * a single verbatim benchmark sentence deep inside a long document
     * trips only this one. Emits (doc_id, n_hits = distinct benchmark
     * n-grams present).

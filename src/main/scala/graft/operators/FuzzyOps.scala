@@ -155,38 +155,6 @@ object FuzzyOps {
       .select(col("id_new"), col("id_old"), col("dist"))
   }
 
-  /** Deletion keys of a (id, name) relation — the shape the stored
-    * key table holds and batch probes generate. */
-  private[graft] def keysOf(recs: DataFrame): DataFrame =
-    recs.withColumn("k", explode(delKeys(col("name"))))
-      .select(col("id"), col("name"), col("k"))
-
-  /** Probe a batch's records against an existing (id, name, k) key
-    * relation — the [[fuzzyIncremental]] join with the existing side
-    * supplied (a stored table in production). Returns
-    * (id_new, id_old, dist) at dist ≤ 1: dist 0 IS a store hit (the
-    * arriving record already exists under another id), but a replayed
-    * record matching ITSELF is not. */
-  def matchKeyed(batch: DataFrame, existingKeys: DataFrame): DataFrame =
-    keysOf(batch)
-      .select(col("id").as("id_new"), col("name").as("name_new"),
-        col("k"))
-      .join(existingKeys.select(col("id").as("id_old"),
-        col("name").as("name_old"), col("k")), Seq("k"))
-      .select(col("id_new"), col("id_old"), col("name_new"),
-        col("name_old"))
-      .distinct()
-      .withColumn("dist", levenshtein(col("name_new"), col("name_old")))
-      .where(col("dist") <= 1 && col("id_new") =!= col("id_old"))
-      .select(col("id_new"), col("id_old"), col("dist"))
-
-  /** [[matchKeyed]] against a STORED key table directory. */
-  def matchAgainstStore(batch: DataFrame, storeDir: String): DataFrame =
-    matchKeyed(batch, batch.sparkSession.read
-      .option("basePath", s"$storeDir/fuzzy_keys")
-      .parquet(s"$storeDir/fuzzy_keys")
-      .select(col("id"), col("name"), col("k")))
-
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     "q_fuzzy_pairs"  -> fuzzyPairs _,
     "q_fuzzy_census" -> fuzzyCensus _,

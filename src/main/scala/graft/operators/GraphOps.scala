@@ -159,10 +159,7 @@ object GraphOps {
   }
 
   /** The iteration core over ANY (s, t, w) edge relation and node
-    * registry — shared by the one-shot queries and the streaming
-    * maintained-graph serving path
-    * ([[graft.streaming.StreamingAnalytics.authorityFromLinkGraph]]).
-    * The edge+outdegree relation and node list are localCheckpointed
+    * registry — shared by the one-shot queries. The edge+outdegree relation and node list are localCheckpointed
     * ONCE so the iteration plan never re-derives its inputs, and each
     * of the [[Iters]] rounds is a join + partial agg over the tiny
     * graph. r'(v) = (3·S) div (20·n) +

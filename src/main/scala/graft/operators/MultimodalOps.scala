@@ -479,7 +479,7 @@ object MultimodalOps {
       * overflowing the JVM stack. Stream order is preserved: a container
       * pushes a resume frame for its own remainder beneath the child
       * range, so children emit before following siblings. */
-    private def frameChunks(b: Array[Byte]): Vector[Array[Byte]] = {
+    private[graft] def frameChunks(b: Array[Byte]): Vector[Array[Byte]] = {
       val out = Vector.newBuilder[Array[Byte]]
       // frames of (cursor, end, depth); mutable cursor via re-push
       var stack: List[(Long, Long, Int)] = List((0L, b.length.toLong, 0))
@@ -530,10 +530,6 @@ object MultimodalOps {
         if (decoded.isEmpty) None else Some(decoded)
       } catch { case _: Exception => None }
     }
-
-    /** Stored-frame count (container walk only, no pixel decode). */
-    private[graft] def storedFrames(content: Array[Byte]): Int =
-      frameChunks(content).length
 
     def decode(m: MediaFile): MediaFeatures =
       decodedFrames(m.content, 1) match {
@@ -671,29 +667,6 @@ object MultimodalOps {
       codec.frameSigs(m, everyK)
         .map { case (i, sig) => FrameSample(m.media_id, i, sig) }
     }
-  }
-
-  /** Byte-budget repartitioning before decode: media rows vary by orders
-    * of magnitude; partition count follows total payload bytes so a few
-    * giant files cannot skew one task. */
-  def repartitionByBytes(media: Dataset[MediaFile], targetBytesPerPartition: Long,
-      estimatedBytes: Option[Long] = None): Dataset[MediaFile] = {
-    // sizing signal from optimizer statistics (for file-backed media,
-    // total scan bytes — exactly right) or a caller estimate — partition
-    // COUNT needs an estimate, not an exact byte sum. Plans without real
-    // stats (RDD-backed, post-mapPartitions) report defaultSizeInBytes
-    // (~Long.MaxValue); trusting that would launch a pathological
-    // million-partition shuffle, so fall back to the exact aggregate —
-    // the one case where a sizing job is the honest signal.
-    val statBytes = media.queryExecution.optimizedPlan.stats.sizeInBytes
-    val totalBytes = estimatedBytes.map(BigInt(_)).getOrElse {
-      if (statBytes < (BigInt(1L) << 50)) statBytes
-      else BigInt(media.select(coalesce(sum(length(col("content"))), lit(0L)))
-        .head().getLong(0))
-    }
-    val parts = math.max(1L,
-      (totalBytes / targetBytesPerPartition).min(BigInt(1 << 20)).toLong)
-    media.repartition(parts.toInt)
   }
 
   /** Documents-as-media adapter: the testdata has no binary media table, so

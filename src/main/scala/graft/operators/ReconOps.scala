@@ -816,8 +816,7 @@ object ReconOps {
       .agg(countDistinct(col("user_id")).as("n_users"))
   }
 
-  /** Path length and result cap for [[topPaths]]. */
-  val PathLen = 3
+  /** Result cap for [[topPaths]]. */
   val PathTopK = 20
 
   /** TOP-K COMMON EVENT PATHS — the [[eventTransitions]] matrix
@@ -953,9 +952,7 @@ object ReconOps {
 
   /** PRODUCTION sliding WAU — estimates served from a STORED
     * daily-sketch parquet table (materialized once per corpus content —
-    * [[graft.functions.MaterializeCache]] — the posture
-    * [[graft.streaming.StreamingAnalytics.updateDaySketches]]
-    * maintains incrementally): the plan a long-lived dashboard
+    * [[graft.functions.MaterializeCache]]): the plan a long-lived dashboard
     * executes — |days| stored rows in, no event re-scan for the
     * estimate arm. Shares [[slidingWau]]'s oracle (the exact contract
     * arm grades the stored-sketch estimates). */

@@ -227,8 +227,7 @@ object RelationalOps {
 
   /** KEY-SKEW PROFILER — the diagnosis that TRIGGERS the salted
     * operators ([[graft.operators.ReconOps]] `sessionizeSalted` /
-    * `asofSalted`, [[graft.operators.DedupOps.connectedComponentsSalted]]
-    * all exist for hot keys; this is the census that says WHICH join
+    * `asofSalted` exist for hot keys; this is the census that says WHICH join
     * keys are hot before a 100 TB run commits to a plan): per
     * (relation, key) — row/key counts, the hottest key and its
     * frequency, the max/avg ratio (`skew_x100`, integer-exact), and a

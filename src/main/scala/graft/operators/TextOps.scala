@@ -213,7 +213,7 @@ object TextOps {
     * merge application a literal string replace). The shared entry
     * relation of both the TRAIN path ([[bpeLoop]]) and the APPLY path
     * ([[bpeEncode]]). */
-  private def sentinelVocab(docs: DataFrame): DataFrame =
+  private[graft] def sentinelVocab(docs: DataFrame): DataFrame =
     explodeNN(docs, toks(col("text")), "tok")
       .groupBy(col("tok")).agg(count(lit(1)).as("cnt"))
       .select(col("tok"),
@@ -279,38 +279,6 @@ object TextOps {
   private def bpeLoopOver(spark: SparkSession, docs: DataFrame)
       : (Seq[(Long, String, Long)], DataFrame) =
     bpeLoopBatchedState(docs, BpeMergeIters, BpeBatchCap, strict = true)
-
-  /** [[bpeLoopOver]] with a caller-chosen merge budget — the sequential
-    * reference the batched trainer's spec pins against. */
-  private[graft] def bpeLoopOverN(spark: SparkSession, docs: DataFrame,
-      iters: Int): (Seq[(Long, String, Long)], DataFrame, DataFrame) = {
-    val base = sentinelVocab(docs).persist()
-    val merges = Seq.newBuilder[(Long, String, Long)]
-    var words = base
-    var rank = 1
-    var exhausted = false
-    while (rank <= iters && !exhausted) {
-      val syms = split(trim(col("w")), "  ")
-      val top = explodeNN(words, filter(
-          zip_with(syms, slice(syms, 2, Int.MaxValue - 8),
-            (a, b) => concat(a, lit(" "), b)),
-          p => p.isNotNull), "pair", col("cnt"))
-        .groupBy(col("pair")).agg(sum(col("cnt")).as("n_occ"))
-        .orderBy(col("n_occ").desc, col("pair"))
-        .limit(1)
-        .collect()
-      if (top.isEmpty) exhausted = true // every word is one symbol
-      else {
-        val pair = top(0).getString(0)
-        merges += ((rank.toLong, pair, top(0).getLong(1)))
-        words = words.withColumn("w", replace(col("w"),
-          lit(" " + pair.replace(" ", "  ") + " "),
-          lit(" " + pair.replace(" ", "") + " ")))
-        rank += 1
-      }
-    }
-    (merges.result(), words, base)
-  }
 
   /** Batch cap per round of [[bpeMergesBatched]] — the most merges one
     * pair-count job may admit. Bounds both the driver collect
@@ -935,36 +903,6 @@ object TextOps {
         size(col("pieces")).as("n_pieces"))
   }
 
-  /** FERTILITY CENSUS of any documents relation under a FROZEN cost
-    * table — one row: word occurrences, pieces emitted, single-char
-    * (byte-fallback-analogue) pieces. The per-batch statistic the
-    * streaming tokenizer-drift monitor folds
-    * ([[graft.streaming.StreamingAnalytics.updateTokenizerFertility]]):
-    * corpus-weighted via the distinct-word relation (sum of cnt·pieces
-    * — the corpus never re-explodes), so the batch pays one
-    * vocabulary-sized Viterbi pass exactly like the production encode. */
-  private[graft] def uniFertilityOf(docs: DataFrame,
-      cost: Map[String, Long]): DataFrame =
-    uniSegments(uniWords(docs), cost)
-      // coalesce(…, 0): an EMPTY batch's ungrouped sums are null, which
-      // would make the drift monitor's fertility/alarm columns null —
-      // a zero census row keeps the gate row well-typed (ADVICE r17)
-      .agg(coalesce(sum(col("cnt")), lit(0L)).as("n_words"),
-        coalesce(sum(col("cnt") * size(col("pieces"))), lit(0L))
-          .as("n_pieces"),
-        coalesce(sum(col("cnt") *
-          size(filter(col("pieces"), p => length(p) === 1))), lit(0L))
-          .as("n_char_pieces"))
-
-  /** TRAINING-CORPUS TOKENIZER CARD served from the stored artifact —
-    * the baseline the streaming drift monitor alarms against: the
-    * corpus the tokenizer was trained on, scored under its own frozen
-    * costs. Ships beside the vocabulary; refreshed only when the
-    * tokenizer retrains (the benchmark-gram-set discipline). */
-  def unigramTrainingCard(spark: SparkSession, dir: String): DataFrame =
-    uniFertilityOf(Tables.documents(spark, dir),
-      prodUnigramCosts(spark, dir))
-
   /** TOKENIZER COMPARISON CARD — [[bpeFertility]]'s per-language
     * fertility for BOTH trained families side by side: BPE merges vs
     * the unigram-LM vocabulary over the same corpus. The signal a
@@ -1057,7 +995,7 @@ object TextOps {
     * the curation pass decides mixtures.
     *
     * Calibration (measured on the planted fixtures in CurationPackSpec
-    * via [[qualityCalibration]]): the garbage classes this floor exists
+    * with [[quality10k]]): the garbage classes this floor exists
     * to screen — token spam, thin repeats, punctuation soup,
     * low-diversity junk — top out at 2740 (2740/2700/700/1950), while
     * clean prose bottoms at 6464, so 3000 sits in the measured empty
@@ -1098,26 +1036,6 @@ object TextOps {
       lit(100L) * least(lit(2L) * nStop.cast("long"), tok)
     divPos(numer * 10L, tok)
   }
-
-  /** Per-bin calibration report for [[quality10k]] over a LABELED
-    * (label, text) corpus — the measured justification for
-    * [[QualityFloor10k]] (VERDICT r5 #8): rows are `binWidth`-wide
-    * score bins with clean/garbage counts, the bin's observed score
-    * range, and the verdict the floor gives the bin — so the floor can
-    * be read off the empty band between the garbage and clean masses
-    * instead of trusted as a constant. One hash aggregation over per-row
-    * expressions; linear at any corpus size. */
-  def qualityCalibration(labeled: DataFrame, binWidth: Long = 1000L)
-      : DataFrame =
-    labeled
-      .select(col("label"), quality10k(col("text")).as("q10k"))
-      .withColumn("bin", expr(s"q10k div ${binWidth}L") * binWidth)
-      .groupBy(col("bin"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(when(col("label") === "clean", 1L).otherwise(0L)).as("n_clean"),
-        sum(when(col("label") =!= "clean", 1L).otherwise(0L)).as("n_garbage"),
-        min(col("q10k")).as("min_q10k"), max(col("q10k")).as("max_q10k"))
-      .withColumn("admitted", col("bin") >= QualityFloor10k)
 
   /** Quality score: length saturation, lexical diversity, punctuation and
     * stopword ratios folded into one [0,1]-ish score with buckets. */
@@ -2939,33 +2857,6 @@ object TextOps {
       .select(substring(md5(col("tok").cast("binary")), 1, 2).as("bucket"))
       .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
 
-  /** [[tokenBuckets]] grouped by a key column — (key, bucket, cnt),
-    * each key's counts its own distribution. */
-  private[graft] def tokenBucketsBy(docs: DataFrame, key: String): DataFrame =
-    explodeNN(docs, toks(col("text")), "tok", col(key))
-      .select(col(key),
-        substring(md5(col("tok").cast("binary")), 1, 2).as("bucket"))
-      .groupBy(col(key), col("bucket")).agg(count(lit(1)).as("cnt"))
-
-  /** Per-key TV distance of grouped bucket counts against ONE global
-    * reference distribution — the per-source drift breakdown: every key
-    * compares its own distribution to the same corpus reference, so a
-    * single drifted feed stands out while the aggregate stays calm.
-    * The reference replicates onto the (small) key set by a broadcast
-    * cross join — 256 rows × |keys|, trivially bounded. */
-  private[graft] def tvDistanceByOf(p: DataFrame, qByKey: DataFrame,
-      key: String): DataFrame = {
-    val keys = qByKey.select(col(key)).distinct()
-    val pk = broadcast(keys)
-      .crossJoin(p.select(col("bucket"), col("cnt").as("p_cnt")))
-    val per = pk
-      .join(qByKey.select(col(key), col("bucket"), col("cnt").as("q_cnt")),
-        Seq(key, "bucket"), "full_outer")
-      .select(col(key), coalesce(col("p_cnt"), lit(0L)).as("p_cnt"),
-        coalesce(col("q_cnt"), lit(0L)).as("q_cnt"))
-    tvOfBucketCountsBy(per, key)
-  }
-
   /** TV distance over two PRECOMPUTED bucket-count tables — the
     * streaming entry ([[graft.streaming.StreamingAnalytics]] compares
     * each micro-batch against the maintained corpus distribution);
@@ -2979,46 +2870,22 @@ object TextOps {
         .select(col("bucket"), coalesce(col("p_cnt"), lit(0L)).as("p_cnt"),
           coalesce(col("q_cnt"), lit(0L)).as("q_cnt")))
 
-  /** The single ppm-projection both TV shapes share (the grouped form
-    * prepends its key column). */
-  private def tvPpm: Seq[Column] = Seq(
-    expr(s"p_cnt * $LmPpmUnit div greatest(p_total, 1)").as("p_ppm"),
-    expr(s"q_cnt * $LmPpmUnit div greatest(q_total, 1)").as("q_ppm"),
-    col("p_total"), col("q_total"))
-
-  /** The single aggregate definition both TV shapes share. */
-  private def tvAgg: Seq[Column] = Seq(
-    count(lit(1)).as("n_buckets"),
-    max(col("p_total")).as("p_total"), max(col("q_total")).as("q_total"),
-    expr("sum(abs(p_ppm - q_ppm)) div 2").as("tv_ppm"))
-
   /** Shared TV tail: (bucket, p_cnt, q_cnt) → one row (n_buckets,
     * p_total, q_total, tv_ppm), integer-exact half-L1 over bucket
     * ppms. A GLOBAL aggregate, so an empty corpus yields the one
     * (0, null, null, null) envelope row — matching its SQL oracle's
-    * aggregate-without-GROUP-BY shape (the grouped sibling below
-    * yields ZERO rows on empty input, as ITS keyed oracle does). */
+    * aggregate-without-GROUP-BY shape. */
   private def tvOfBucketCounts(per: DataFrame): DataFrame = {
     val tot = per.agg(sum(col("p_cnt")).as("p_total"),
       sum(col("q_cnt")).as("q_total"))
     per.crossJoin(broadcast(tot))
-      .select(tvPpm: _*)
-      .agg(tvAgg.head, tvAgg.tail: _*)
-  }
-
-  /** [[tvOfBucketCounts]] GROUPED by a key column — one TV row per key
-    * (per-source drift); the ppm/aggregate definitions are shared with
-    * the global form, so the global alarm and the per-source breakdown
-    * can never disagree. Totals are per-key (each key's q side is its
-    * own distribution). */
-  private[graft] def tvOfBucketCountsBy(per: DataFrame,
-      key: String): DataFrame = {
-    val tot = per.groupBy(col(key)).agg(sum(col("p_cnt")).as("p_total"),
-      sum(col("q_cnt")).as("q_total"))
-    per.join(broadcast(tot), Seq(key))
-      .select(col(key) +: tvPpm: _*)
-      .groupBy(col(key))
-      .agg(tvAgg.head, tvAgg.tail: _*)
+      .select(
+        expr(s"p_cnt * $LmPpmUnit div greatest(p_total, 1)").as("p_ppm"),
+        expr(s"q_cnt * $LmPpmUnit div greatest(q_total, 1)").as("q_ppm"),
+        col("p_total"), col("q_total"))
+      .agg(count(lit(1)).as("n_buckets"),
+        max(col("p_total")).as("p_total"), max(col("q_total")).as("q_total"),
+        expr("sum(abs(p_ppm - q_ppm)) div 2").as("tv_ppm"))
   }
 
   /** PII surface patterns — deliberately simple, lookaround-free
@@ -4203,41 +4070,6 @@ object TextOps {
     cur.select(col("start_uri"), col("cur").as("final_uri"),
       col("n_hops"), col("status").as("final_status"),
       (col("status") === 200).as("resolved"))
-  }
-
-  /** DIRECTORY-LEVEL WARC INGEST — the production plumbing upstream of
-    * [[warcExtract]]'s per-file kernel: a `binaryFile` scan over a
-    * directory of `.warc` / `.warc.gz` files (one task per file — the
-    * crawl convention of ~1 GB files keeps tasks balanced; at 100 TB
-    * the scan parallelizes by file like every binaryFile source),
-    * flat-mapped through [[graft.functions.WarcRecords.split]] to one
-    * row per record with its container path and stream offset — the
-    * relation the extract/census funnel starts from. Spec-pinned
-    * (multi-record gzip-member files round-trip; no DuckDB rendering
-    * for a binary directory scan — the S1 binaryFile posture). */
-  def warcRecordsFromDir(spark: SparkSession,
-      warcDir: String): DataFrame = {
-    import spark.implicits._
-    spark.read.format("binaryFile")
-      .option("pathGlobFilter", "*.warc*")
-      .load(warcDir)
-      .select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        // splitCapped: a file that hits the record cap marks every
-        // surfaced row cap_hit so directory-scale counts (dedup
-        // classes, pairs) can detect — and quarantine — the loss
-        val (recs, capped) =
-          graft.functions.WarcRecords.splitCapped(bytes)
-        recs.map { r =>
-          (path, r.offset, r.warcType, r.targetUri, r.contentType,
-            r.payloadDigest, r.declaredLength, r.payload, r.truncated,
-            capped)
-        }
-      }
-      .toDF("path", "offset", "warc_type", "target_uri",
-        "content_type", "payload_digest", "declared_length", "payload",
-        "truncated", "cap_hit")
   }
 
   val queries: Map[String, (SparkSession, String) => DataFrame] = Map(

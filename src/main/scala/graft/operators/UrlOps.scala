@@ -765,7 +765,7 @@ object UrlOps {
     * group where planted, else the `*` group — RFC 9309 group
     * selection re-expressed as arithmetic), patterns already in their
     * LIKE form (`*`→`%`, trailing `%` unless `$`-anchored — the
-    * [[graft.functions.RobotsTxt.likePattern]] translation, derived
+    * translation RobotsTxtSpec pins against the matcher, derived
     * independently here). The empty planted rule matches nothing and
     * is omitted. */
   private val robotsEffArms = Seq(

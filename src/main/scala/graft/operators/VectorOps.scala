@@ -20,7 +20,7 @@ import graft.sources.Tables
 object VectorOps {
 
   /** Elementwise quantization to integer milli-units (exact cross-engine). */
-  private def quantize(v: Column): Column =
+  private[graft] def quantize(v: Column): Column =
     transform(v, x => round(x.cast("double") * 1000).cast("long"))
 
   /** Cosine over quantized vectors: exact integer dot / double norms. */
@@ -33,14 +33,6 @@ object VectorOps {
     val dot = DotProductLong.dotLong(spark) _
     Tables.embeddings(spark, dir)
       .select(col("vec_id"), col("label"), quantize(col("embedding")).as("qe"))
-      .withColumn("nrm", dot(col("qe"), col("qe")))
-  }
-
-  /** [[quantized]] over an arbitrary (vec_id, embedding) frame — the
-    * form [[appendAnnIndex]] needs for vectors not yet in any table. */
-  private[graft] def quantizedOf(spark: SparkSession, vecs: DataFrame): DataFrame = {
-    val dot = DotProductLong.dotLong(spark) _
-    vecs.select(col("vec_id"), quantize(col("embedding")).as("qe"))
       .withColumn("nrm", dot(col("qe"), col("qe")))
   }
 
@@ -423,8 +415,7 @@ object VectorOps {
       annPqScored(spark, dir, nQueries, nprobe, cells), nQueries, k,
       shortlist)
 
-  /** Exact re-rank tail shared by [[annPqRefine]] and
-    * [[annPqRefineFrom]]: top-`shortlist` of the ADC scores per query,
+  /** Exact re-rank tail of [[annPqRefine]]: top-`shortlist` of the ADC scores per query,
     * re-scored with the exact quantized cosine, final top-k. */
   private def refineShortlist(spark: SparkSession, emb: DataFrame,
       scored: DataFrame, nQueries: Int, k: Int, shortlist: Int): DataFrame = {
@@ -494,82 +485,14 @@ object VectorOps {
     val cents = pqCodebooks(spark, slicedOf(spark, trainEmb), trainIters)
     val codes = pqEncode(spark, slicedOf(spark, emb), cents)
     coarse.write.mode("overwrite").parquet(s"$indexDir/coarse_centroids")
-    // the per-vector relations are batch-partitioned (rebuild = batch 0)
-    // so steady-state appends ([[appendAnnIndex]]) never produce a mixed
-    // layout — the corpus-index convention
+    // the per-vector relations are batch-partitioned (a build is batch 0)
+    // — the corpus-index layout convention
     assignments.withColumn("batch", lit(0L)).write.mode("overwrite")
       .partitionBy("batch").parquet(s"$indexDir/assignments")
     cents.write.mode("overwrite").parquet(s"$indexDir/pq_codebooks")
     codes.withColumn("batch", lit(0L)).write.mode("overwrite")
       .partitionBy("batch").parquet(s"$indexDir/pq_codes")
   }
-
-  /** RETRAIN-AND-SWAP rebuild of a LIVE index — the action the
-    * staleness report ([[annIndexStaleness]]) exists to trigger:
-    * [[writeAnnIndexFrom]] builds the fresh index (retrained coarse
-    * centroids + codebooks over the CURRENT corpus, full re-assign and
-    * re-encode) into a `_rebuilding` sibling while the live directory
-    * keeps serving every search, then the handover is the
-    * [[graft.functions.ScaleUtils.compactParquet]] rename-swap: live →
-    * `_preswap`, fresh → live, delete old. A crash between renames
-    * leaves either the old or the new index plus a leftover dir —
-    * never a half-written index at the live path. Single-writer
-    * discipline (the compaction cadence's caller), like every swap in
-    * this repo. */
-  def rebuildAnnIndex(spark: SparkSession, emb: DataFrame,
-      indexDir: String, cells: Int = 8, trainFrac: Double = 1.0,
-      trainIters: Int = PqTrainIters): Unit = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(indexDir)
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val fresh = new Path(indexDir + "_rebuilding")
-    if (fs.exists(fresh)) fs.delete(fresh, true)
-    writeAnnIndexFrom(spark, emb, fresh.toString, cells, trainFrac,
-      trainIters)
-    val old = new Path(indexDir + "_preswap")
-    if (fs.exists(old)) fs.delete(old, true)
-    if (!fs.rename(live, old))
-      throw new java.io.IOException(
-        s"rebuildAnnIndex: rename $live -> $old refused; live index untouched")
-    if (!fs.rename(fresh, live)) {
-      fs.rename(old, live) // restore before failing — never leave no index
-      throw new java.io.IOException(
-        s"rebuildAnnIndex: rename $fresh -> $live refused; live index restored")
-    }
-    fs.delete(old, true)
-    spark.catalog.refreshByPath(indexDir)
-  }
-
-  /** STEADY-STATE index append — the vector twin of the corpus-index
-    * batch append: new vectors are assigned and PQ-encoded against the
-    * STORED quantizers (deterministic given centroids — no retraining)
-    * and land as `batch=<id>` partitions of `assignments` and
-    * `pq_codes`, visible to the next [[annPqFrom]] search immediately.
-    * Centroids and codebooks are IMMUTABLE between rebuilds: appended
-    * vectors far from the trained distribution quantize coarsely (the
-    * standard IVF drift trade) — the retrain cadence is a periodic
-    * [[writeAnnIndex]] rebuild, exactly the gate index's
-    * rebuild-vs-append split. Appends grow file counts with batch
-    * count; [[compactAnnIndex]] on the usual cadence. */
-  def appendAnnIndex(spark: SparkSession, newVecs: DataFrame,
-      indexDir: String, batchId: Long): Unit = {
-    val (coarse, _, cents, _) = loadAnnIndex(spark, indexDir)
-    val emb = quantizedOf(spark, newVecs)
-    assignToCents(spark, emb, coarse)
-      .select(col("vec_id"), col("cluster"))
-      .withColumn("batch", lit(batchId)).write.mode("append")
-      .partitionBy("batch").parquet(s"$indexDir/assignments")
-    pqEncode(spark, slicedOf(spark, emb), cents)
-      .withColumn("batch", lit(batchId)).write.mode("append")
-      .partitionBy("batch").parquet(s"$indexDir/pq_codes")
-  }
-
-  /** Compaction for the appendable index relations (same discipline as
-    * the corpus index). Returns per-table (before, after) file counts. */
-  def compactAnnIndex(spark: SparkSession, indexDir: String)
-      : ((Int, Int), (Int, Int)) = (
-    graft.functions.ScaleUtils.compactParquet(spark, s"$indexDir/assignments"),
-    graft.functions.ScaleUtils.compactParquet(spark, s"$indexDir/pq_codes"))
 
   // explicit index schemas: reads never infer (footer scan per search,
   // and inference cannot read a zero-row table) — the corpus-index
@@ -590,8 +513,7 @@ object VectorOps {
 
   /** Read-back side of [[writeAnnIndex]]:
     * (coarse, assignments, codebooks, codes). The batch partition column
-    * ([[appendAnnIndex]]'s append unit) is dropped at load — searches
-    * are batch-agnostic. */
+    * is dropped at load — searches are batch-agnostic. */
   def loadAnnIndex(spark: SparkSession, indexDir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = (
     spark.read.schema(CoarseSchema).parquet(s"$indexDir/coarse_centroids"),
@@ -600,42 +522,6 @@ object VectorOps {
     spark.read.schema(CodebookSchema).parquet(s"$indexDir/pq_codebooks"),
     spark.read.schema(CodesSchema).parquet(s"$indexDir/pq_codes")
       .select(col("vec_id"), col("s"), col("cl")))
-
-  /** INDEX STALENESS report — the rebuild-cadence statistic the
-    * append/compact split needs before anyone trusts a search: one row
-    * with the corpus size, how many corpus vectors the stored index
-    * actually serves (indexed), how many the corpus gained that were
-    * never [[appendAnnIndex]]'d (missing — these are silently invisible
-    * to every search until appended), how many index entries have no
-    * surviving corpus row (orphaned — deleted vectors still surfacing
-    * as neighbors), and coverage in exact ppm. Read it on the compaction
-    * cadence: growing `missing` says append more often, growing
-    * `orphaned` says rebuild.
-    *
-    * Scale shape: two distinct-id relations full-outer-joined on vec_id
-    * + one global aggregate — linear in corpus + index, no payload
-    * columns move. */
-  def annIndexStaleness(spark: SparkSession, corpus: DataFrame,
-      indexDir: String): DataFrame = {
-    val (_, assignments, _, _) = loadAnnIndex(spark, indexDir)
-    val idx = assignments.select(col("vec_id")).distinct()
-      .withColumn("in_index", lit(true))
-    val cor = corpus.select(col("vec_id")).distinct()
-      .withColumn("in_corpus", lit(true))
-    cor.join(idx, Seq("vec_id"), "full_outer")
-      .select(coalesce(col("in_corpus"), lit(false)).as("in_corpus"),
-        coalesce(col("in_index"), lit(false)).as("in_index"))
-      .agg(
-        sum(when(col("in_corpus"), 1L).otherwise(0L)).as("n_corpus"),
-        sum(when(col("in_corpus") && col("in_index"), 1L).otherwise(0L))
-          .as("n_indexed"),
-        sum(when(col("in_corpus") && !col("in_index"), 1L).otherwise(0L))
-          .as("n_missing"),
-        sum(when(!col("in_corpus") && col("in_index"), 1L).otherwise(0L))
-          .as("n_orphaned"))
-      .withColumn("coverage_ppm",
-        expr("n_indexed * 1000000 div greatest(n_corpus, 1)"))
-  }
 
   /** SEARCH half of the build/search split: [[annPq]]'s ADC scoring
     * against a [[writeAnnIndex]] directory — no training in the plan,
@@ -647,18 +533,6 @@ object VectorOps {
     val (coarse, assignments, cents, codes) = loadAnnIndex(spark, indexDir)
     topKPerQuery(adcScore(spark, quantized(spark, dir), coarse, assignments,
       cents, codes, nQueries, nprobe), k)
-  }
-
-  /** [[annPqRefine]] against a persisted index — ADC shortlist from the
-    * loaded codes, exact re-rank from the corpus table. */
-  def annPqRefineFrom(spark: SparkSession, dir: String, indexDir: String,
-      k: Int = 5, nQueries: Int = 5, nprobe: Int = 3,
-      shortlist: Int = PqRefineShortlist): DataFrame = {
-    val (coarse, assignments, cents, codes) = loadAnnIndex(spark, indexDir)
-    val emb = quantized(spark, dir)
-    refineShortlist(spark, emb,
-      adcScore(spark, emb, coarse, assignments, cents, codes, nQueries,
-        nprobe), nQueries, k, shortlist)
   }
 
   /** Search-only PQ entry for the declared-query/bench surface: builds
@@ -1229,8 +1103,7 @@ object VectorOps {
     * target corpus ([[knnBruteForce]]'s shape) with the two-phase top-k
     * tail — here the declared exact baseline over a sampled probe set;
     * the full-corpus production pass serves candidates from the
-    * persisted ANN index ([[annPqSearchFrom]] / [[DedupOps
-    * .cosineNearDupFromIndex]]) and scores margins on the refined
+    * persisted ANN index ([[annPqSearchFrom]]) and scores margins on the refined
     * top-2, the same build-once/search-many split as q_ann_pq_search. */
   def bitextMine(spark: SparkSession, dir: String, srcLang: String = "en",
       tgtLang: String = "fr"): DataFrame =

@@ -93,10 +93,4 @@ object KeywordContract {
     entries.map(e => (e.keyword, e.primary, e.extension))
       .toDF("keyword", "primary_flag", "extension_flag")
   }
-
-  /** The contract as a DuckDB VALUES clause (for oracle SQL) — same rows,
-    * same order, single source of truth with [[entries]]. */
-  lazy val valuesSql: String =
-    entries.map(e => s"('${e.keyword}','${e.primary}','${e.extension}')")
-      .grouped(6).map(_.mkString(",")).mkString(",\n    ")
 }

@@ -88,15 +88,19 @@ object IngestPipeline {
     * quarantine, `dts_task_id` → task id); engine-specific dirs the
     * reference kept in its DB (`archive_dir`, `registry_dir`,
     * `bad_file_table_dir`) are plain keys here. Driver-side file read,
-    * like the reference — config is not data. */
+    * like the reference — config is not data. A missing key or a
+    * non-integer `dts_task_id` fails with an IllegalArgumentException
+    * naming the file and the key. */
   def configFromFile(path: String): Config = {
-    val kv = scala.io.Source.fromFile(path).getLines()
-      .map(_.trim)
-      .filter(l => l.nonEmpty && !l.startsWith("#") && l.contains("="))
-      .map { l =>
-        val Array(k, v) = l.split("=", 2)
-        k.trim -> v.trim
-      }.toMap
+    val kv = scala.util.Using.resource(scala.io.Source.fromFile(path)) {
+      _.getLines()
+        .map(_.trim)
+        .filter(l => l.nonEmpty && !l.startsWith("#") && l.contains("="))
+        .map { l =>
+          val Array(k, v) = l.split("=", 2)
+          k.trim -> v.trim
+        }.toMap
+    }
     def req(k: String): String = kv.getOrElse(k,
       throw new IllegalArgumentException(s"config $path: missing key $k"))
     Config(
@@ -105,7 +109,10 @@ object IngestPipeline {
       quarantineDir = req("bad_file_dir"),
       registryDir = req("registry_dir"),
       badFileDir = req("bad_file_table_dir"),
-      taskId = kv.get("dts_task_id").map(_.toLong).getOrElse(1L),
+      taskId = kv.get("dts_task_id").map(v => v.toLongOption.getOrElse(
+        throw new IllegalArgumentException(
+          s"config $path: key dts_task_id is not an integer: '$v'")))
+        .getOrElse(1L),
       archiveName = kv.getOrElse("archive_name", "graft_archive"),
       locationDir = kv.get("location_dir"))
   }

@@ -112,9 +112,4 @@ object Provenance {
         .withColumn("created_at", current_timestamp())
     }
   }
-
-  /** Lineage join: attach task metadata to any stamped table. */
-  def withTaskInfo(stamped: DataFrame, tasks: DataFrame): DataFrame =
-    stamped.join(broadcast(tasks.select(col("task_id"), col("name").as("task_name"),
-      col("prov_msg"))), Seq("task_id"), "left_outer")
 }

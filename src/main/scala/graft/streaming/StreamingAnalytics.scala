@@ -33,41 +33,8 @@ object StreamingAnalytics {
         col("window.end").as("win_end"), col("event_type"),
         col("n_events"), col("sum_value"))
 
-  /** Exact streaming dedup with BOUNDED state — the streaming analog of
-    * the batch hash-dedup family (TextOps.dedupExact) for at-least-once
-    * upstreams: the first arrival of each key passes, replays within the
-    * watermark horizon are dropped, and the key's state expires with the
-    * watermark instead of accumulating forever (the failure mode of plain
-    * `dropDuplicates` on an unbounded stream). A replay arriving LATER
-    * than the horizon is by definition indistinguishable from new data
-    * inside the engine — that tail belongs to the registry anti-join
-    * (IngestPipeline stage 4), which is exactly how the two layers split
-    * the work at scale. */
-  def dedupStream(events: DataFrame, keys: Seq[String],
-      tsCol: String = "ts", watermark: String = "2 hours"): DataFrame =
-    events.withWatermark(tsCol, watermark)
-      .dropDuplicatesWithinWatermark(keys.head, keys.tail: _*)
-
-  /** Static-side index for [[gateAgainstCorpus]]: (band keys, shingle
-    * sets) of the existing corpus, PERSISTED here so the per-batch joins
-    * reuse materialized blocks instead of re-running the corpus
-    * signature pass (shingles + 3 md5 families — the dominant cost)
-    * every micro-batch. Ownership: the caller unpersists both frames
-    * after the gate query stops (the pin is intentional for the query's
-    * lifetime — the MonitorJob persist/finally pattern stretched over a
-    * streaming run). Returns (corpusBandKeys, corpusShingles).
-    *
-    * This is the SMALL-CORPUS/test form: the pin is a corpus-sized
-    * relation in executor memory. A production deployment materializes
-    * the index as a table instead — [[writeCorpusIndex]] /
-    * [[loadCorpusIndex]] (VERDICT r5 #3). */
-  def corpusIndex(corpus: DataFrame): (DataFrame, DataFrame) = (
-    graft.operators.DedupOps.bandKeysPerRow(corpus).persist(),
-    corpus.select(col("doc_id").as("dup_of"),
-      graft.operators.TextOps.shingles3(col("text")).as("ts_c")).persist())
-
   /** Materialize the gate's corpus index as PARQUET TABLES — the
-    * 100 TB posture [[corpusIndex]]'s in-memory pin cannot offer: the
+    * 100 TB posture an in-memory pinned index cannot offer: the
     * signature pass (shingles + 3 md5 families, the dominant cost) is
     * paid once at WRITE time, and every micro-batch's stream-static
     * join scans a columnar table instead of holding the corpus in
@@ -256,102 +223,6 @@ object StreamingAnalytics {
     }
   }
 
-  private val DaySketchSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("day",
-      org.apache.spark.sql.types.DateType),
-    org.apache.spark.sql.types.StructField("sk",
-      org.apache.spark.sql.types.BinaryType),
-    org.apache.spark.sql.types.StructField("last_batch",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Fold one micro-batch's events into the MAINTAINED daily
-    * user-sketch table at `dir/day_sketches` — the streaming half of
-    * [[graft.operators.ReconOps.slidingWau]]'s scale story: the batch
-    * pays one per-day `hll_sketch_agg` pass over ITS OWN rows, the
-    * stored table merges by per-day `hll_union_agg`, and because HLL
-    * union is register-wise MAX (idempotent, unlike the count-min
-    * ADD), a replayed batch cannot corrupt the table even without the
-    * watermark — `last_batch` still skips the wasted work (and keeps
-    * the [[updateTokenSketch]] single-writer posture). Crash-safety is
-    * the same rename-swap. The maintained table equals the one-shot
-    * daily sketches over everything ever folded (max-merge is
-    * associative+commutative+idempotent; spec-pinned), so
-    * [[wauFromDaySketches]] serves trailing-window distinct estimates
-    * from |days| tiny rows without ever re-reading past events. */
-  def updateDaySketches(batch: DataFrame, dir: String, batchId: Long): Unit = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val live = new Path(s"$dir/day_sketches")
-    val tmp = new Path(s"$dir/day_sketches_tmp")
-    val old = new Path(s"$dir/day_sketches_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(old))
-      require(fs.rename(old, live), s"restore of orphaned $old failed")
-    val stored = parquetOrEmpty(spark, live.toString, DaySketchSchema)
-    val maxBatch = stored.agg(max(col("last_batch"))).collect()
-      .headOption.flatMap(r => Option(r.get(0)).map(_.asInstanceOf[Long]))
-    if (maxBatch.forall(_ < batchId)) {
-      val batchDaily = batch
-        .select(col("user_id"), to_date(col("ts")).as("day"))
-        .groupBy(col("day"))
-        .agg(hll_sketch_agg(col("user_id"),
-          graft.operators.DedupOps.SketchLgK).as("sk"))
-      val merged = stored.select(col("day"), col("sk"))
-        .unionByName(batchDaily)
-        .groupBy(col("day"))
-        .agg(hll_union_agg(col("sk")).as("sk"))
-        .withColumn("last_batch", lit(batchId))
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(old, true)
-      if (fs.exists(live))
-        require(fs.rename(live, old), s"swap-out of $live failed")
-      require(fs.rename(tmp, live), s"swap-in of $tmp failed")
-      fs.delete(old, true)
-    }
-  }
-
-  /** Streaming wrapper for [[updateDaySketches]] — the event-rollup
-    * loop: each micro-batch of (user_id, ts) events folds its per-day
-    * sketches into the maintained table ([[runPerBatch]] contract,
-    * AvailableNow, at-least-once safe by max-merge idempotence +
-    * watermark), and [[wauFromDaySketches]] serves the dashboard
-    * between and during batches. */
-  def runEventRollup(stream: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runPerBatch(stream, checkpoint) { (batch, id) =>
-      updateDaySketches(batch, dir, id)
-    }
-
-  /** Read-back of the maintained daily sketches (empty-safe). */
-  def loadDaySketches(spark: SparkSession, dir: String): DataFrame = {
-    import org.apache.hadoop.fs.Path
-    val live = new Path(s"$dir/day_sketches")
-    val old = new Path(s"$dir/day_sketches_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val path = if (!fs.exists(live) && fs.exists(old)) old else live
-    parquetOrEmpty(spark, path.toString, DaySketchSchema)
-  }
-
-  /** Serve trailing-[[graft.operators.ReconOps.WauWindowDays]]-day
-    * active-user estimates from the MAINTAINED table — the same
-    * explode-to-window-ends + `hll_union_agg` plan as the batch
-    * [[graft.operators.ReconOps.slidingWau]], but its input is |days|
-    * stored 4-KiB rows, not the event history: the dashboard query
-    * costs the same tonight as after a year of stream. */
-  def wauFromDaySketches(spark: SparkSession, dir: String): DataFrame = {
-    val daily = loadDaySketches(spark, dir)
-    val days = daily.select(col("day").as("win_end"))
-    daily.select(col("sk"), explode(sequence(lit(0),
-        lit(graft.operators.ReconOps.WauWindowDays - 1))).as("o"),
-        col("day"))
-      .withColumn("win_end", date_add(col("day"), col("o")))
-      .groupBy(col("win_end"))
-      .agg(hll_sketch_estimate(hll_union_agg(col("sk"))).as("est_wau"))
-      .join(days, Seq("win_end"))
-      .select(date_format(col("win_end"), "yyyy-MM-dd").as("win_end"),
-        col("est_wau"))
-  }
-
   /** Read-back of the maintained sketch (empty-safe, declared schema). */
   def loadTokenSketch(spark: SparkSession, dir: String): DataFrame = {
     import org.apache.hadoop.fs.Path
@@ -516,8 +387,8 @@ object StreamingAnalytics {
     *
     * Identity contract: a row whose doc_id ALREADY EXISTS in the corpus
     * is a REPLAY, not a duplicate admission — id-based replay belongs to
-    * the layers built for it ([[dedupStream]] inside the horizon, the
-    * registry anti-join beyond); this gate judges content novelty across
+    * the layer built for it (the registry anti-join); this gate judges
+    * content novelty across
     * DISTINCT identities, hence the self-id exclusion on the corpus join.
     *
     * Duplicates of docs ADMITTED IN EARLIER BATCHES are visible only
@@ -526,8 +397,9 @@ object StreamingAnalytics {
     * gate-plus-periodic-compaction split the ingest registry uses.
     *
     * Batch-callable by design (this is also the backfill path); the
-    * streaming wrapper is [[runGate]], whose foreachBatch scope bounds
-    * the distinct/groupBy state to one micro-batch. */
+    * streaming wrappers ([[runAdmission]], [[runCuratedIngest]]) run it
+    * per micro-batch, whose foreachBatch scope bounds the
+    * distinct/groupBy state to one micro-batch. */
   def gateAgainstCorpus(batch: DataFrame, corpusBandKeys: DataFrame,
       corpusShingles: DataFrame,
       bar: Double = graft.operators.DedupOps.TextDupJaccard): DataFrame = {
@@ -605,192 +477,6 @@ object StreamingAnalytics {
         (col("q10k").cast("double") / 10000.0).as("quality"))
   }
 
-  // ===== semantic (embedding-side) admission gate =====
-
-  private val SemCellsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("cluster",
-      org.apache.spark.sql.types.IntegerType),
-    org.apache.spark.sql.types.StructField("batch",
-      org.apache.spark.sql.types.LongType)))
-  private val SemVecsSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("doc_id",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("qe",
-      org.apache.spark.sql.types.ArrayType(
-        org.apache.spark.sql.types.LongType)),
-    org.apache.spark.sql.types.StructField("nrm",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("batch",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Quantize a (doc_id, embedding) frame to the integer form the
-    * vector chain scores in ([[graft.operators.VectorOps]] quantization
-    * — same scale, so gate verdicts agree with the batch SemDeDup/
-    * near-dup passes by construction). */
-  private def quantizedDocVecs(spark: SparkSession, vecs: DataFrame)
-      : DataFrame =
-    graft.operators.VectorOps.quantizedOf(spark,
-        vecs.select(col("doc_id").as("vec_id"), col("embedding")))
-      .select(col("vec_id").as("doc_id"), col("qe"), col("nrm"))
-
-  /** Post each vector to its `nprobe` nearest coarse cells — the
-    * multi-probe posting both the batch side and the stored side of the
-    * semantic gate use (a pair split by a cell boundary still
-    * co-resides in a runner-up cell). Centroids broadcast; the window
-    * keys on doc_id (full cardinality — no funnel). */
-  private def postedCells(spark: SparkSession, emb: DataFrame,
-      coarse: DataFrame, nprobe: Int): DataFrame = {
-    val dot = graft.plans.DotProductLong.dotLong(spark) _
-    val w = org.apache.spark.sql.expressions.Window
-      .partitionBy(col("doc_id"))
-      .orderBy(col("dist2").asc, col("cluster").asc)
-    emb.crossJoin(broadcast(coarse))
-      .withColumn("dist2",
-        col("nrm") + col("c_nrm") - lit(2L) * dot(col("qe"), col("centroid")))
-      .withColumn("rk", row_number().over(w))
-      .where(col("rk") <= nprobe)
-      .select(col("doc_id"), col("cluster"))
-  }
-
-  /** Append one micro-batch's ADMITTED embeddings to the semantic gate's
-    * corpus state — probed-cell postings (`sem_cells`) and the exact
-    * integer vectors (`sem_vectors`), each as a `batch=<id>` partition
-    * under the curated-ingest dir: the vector twin of
-    * [[writeCorpusIndex]]'s band_keys/shingles split, giving the
-    * semantic gate the same later-batches-see-earlier-admissions
-    * contract. Cells come from the PERSISTED ANN index's coarse
-    * quantizer (`annIndexDir`, [[graft.operators.VectorOps
-    * .writeAnnIndex]]) — immutable between rebuilds, so stored postings
-    * stay comparable across batches without retraining. */
-  def writeSemIndex(spark: SparkSession, admittedVecs: DataFrame,
-      annIndexDir: String, dir: String, batchId: Long,
-      nprobe: Int = graft.operators.DedupOps.NearDupNProbe): Unit = {
-    val (coarse, _, _, _) =
-      graft.operators.VectorOps.loadAnnIndex(spark, annIndexDir)
-    val emb = quantizedDocVecs(spark, admittedVecs).persist()
-    try {
-      postedCells(spark, emb, coarse, nprobe)
-        .withColumn("batch", lit(batchId)).write.mode("append")
-        .partitionBy("batch").parquet(s"$dir/sem_cells")
-      emb.withColumn("batch", lit(batchId)).write.mode("append")
-        .partitionBy("batch").parquet(s"$dir/sem_vectors")
-    } finally emb.unpersist(false)
-  }
-
-  /** Read-back of [[writeSemIndex]], tolerant of a never-seeded dir
-    * (bootstrap contract of [[loadCorpusIndexOrEmpty]]): (cells,
-    * vectors). */
-  def loadSemIndexOrEmpty(spark: SparkSession, dir: String)
-      : (DataFrame, DataFrame) = {
-    val p = new org.apache.hadoop.fs.Path(s"$dir/sem_cells")
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(p)) (
-      spark.read.schema(SemCellsSchema).parquet(s"$dir/sem_cells")
-        .select(col("doc_id"), col("cluster")),
-      spark.read.schema(SemVecsSchema).parquet(s"$dir/sem_vectors")
-        .select(col("doc_id"), col("qe"), col("nrm")))
-    else (
-      spark.range(0).select(col("id").as("doc_id"), lit(0).as("cluster")),
-      spark.range(0).select(col("id").as("doc_id"),
-        array().cast("array<bigint>").as("qe"), lit(0L).as("nrm")))
-  }
-
-  /** Semantic dedup-on-ingest — the embedding-side twin of
-    * [[gateAgainstCorpus]]: each incoming vector posts to its probed
-    * cells of the persisted ANN index's coarse quantizer, candidates are
-    * cell co-residents (stored corpus postings PLUS the batch against
-    * itself — two copies of a novel embedding in one delivery must not
-    * both pass), and only candidates get the EXACT integer-cosine
-    * verify ([[graft.operators.DedupOps]]'s near-dup scoring — same
-    * quantization, same threshold semantics, so gate verdicts agree
-    * with the batch `cosineNearDupFromIndex` pass). Returns flagged
-    * rows only: (doc_id, sem_dup_of = best match (ties → smallest id),
-    * cos). Intra-batch pairs flag the LARGER id (first wins). Zero-norm
-    * vectors never flag (cosine undefined — the batch chain's guard).
-    *
-    * Same identity/visibility contract as the text gate: self-id
-    * excluded on the corpus join; duplicates of docs admitted in
-    * EARLIER batches are visible once [[writeSemIndex]] appended them. */
-  def semGateAgainstIndex(spark: SparkSession, batchVecs: DataFrame,
-      annIndexDir: String, semCells: DataFrame, semVecs: DataFrame,
-      nprobe: Int = graft.operators.DedupOps.NearDupNProbe,
-      threshold: Double = graft.operators.DedupOps.CosineDupThreshold)
-      : DataFrame = {
-    val (coarse, _, _, _) =
-      graft.operators.VectorOps.loadAnnIndex(spark, annIndexDir)
-    val emb = quantizedDocVecs(spark, batchVecs).where(col("nrm") > 0)
-    val posted = postedCells(spark, emb, coarse, nprobe)
-    val corpusCand = posted
-      .join(semCells.select(col("doc_id").as("sem_dup_of"), col("cluster")),
-        Seq("cluster"))
-      .where(col("doc_id") =!= col("sem_dup_of"))
-      .select(col("doc_id"), col("sem_dup_of"))
-    val selfCand = posted.as("a").join(posted.as("b"),
-        col("a.cluster") === col("b.cluster")
-          && col("a.doc_id") > col("b.doc_id"))
-      .select(col("a.doc_id").as("doc_id"),
-        col("b.doc_id").as("sem_dup_of"))
-    val cand = corpusCand.union(selfCand).distinct()
-    val refVecs = semVecs
-      .select(col("doc_id").as("sem_dup_of"), col("qe").as("qe_c"),
-        col("nrm").as("nrm_c"))
-      .union(emb.select(col("doc_id").as("sem_dup_of"),
-        col("qe").as("qe_c"), col("nrm").as("nrm_c")))
-      .where(col("nrm_c") > 0)
-    val dot = graft.plans.DotProductLong.dotLong(spark) _
-    cand
-      .join(emb, Seq("doc_id"))
-      .join(refVecs, Seq("sem_dup_of"))
-      .withColumn("cos", dot(col("qe"), col("qe_c")).cast("double")
-        / (sqrt(col("nrm").cast("double"))
-          * sqrt(col("nrm_c").cast("double"))))
-      .where(col("cos") >= threshold)
-      .groupBy(col("doc_id"))
-      .agg(max_by(col("sem_dup_of"), struct(col("cos"), -col("sem_dup_of")))
-          .as("sem_dup_of"),
-        round(max(col("cos")), 4).as("cos"))
-  }
-
-  /** [[admitBatch]] with the semantic verdict composed in — the full
-    * admission policy of a curation ingest whose corpus also carries an
-    * embedding per document, in precedence order: textual near-dup →
-    * SEMANTIC near-dup ([[semGateAgainstIndex]]) → repetitive → below
-    * the quality floor → admit. `batch` must carry (doc_id, text,
-    * embedding). Returns every batch row with (verdict, dup_of, jac,
-    * sem_dup_of, cos, quality); `verdict = 'sem_dup'` rows carry their
-    * best semantic match. */
-  def admitBatchSem(batch: DataFrame, corpusBandKeys: DataFrame,
-      corpusShingles: DataFrame, semCells: DataFrame, semVecs: DataFrame,
-      annIndexDir: String,
-      bar: Double = graft.operators.DedupOps.TextDupJaccard,
-      minQuality10k: Long = AdmitMinQuality10k,
-      nprobe: Int = graft.operators.DedupOps.NearDupNProbe,
-      cosBar: Double = graft.operators.DedupOps.CosineDupThreshold)
-      : DataFrame = {
-    val spark = batch.sparkSession
-    val textFlagged =
-      gateAgainstCorpus(batch, corpusBandKeys, corpusShingles, bar)
-    val semFlagged = semGateAgainstIndex(spark,
-      batch.select(col("doc_id"), col("embedding")), annIndexDir,
-      semCells, semVecs, nprobe, cosBar)
-    batch.select(col("doc_id"),
-        graft.operators.TextOps.quality10k(col("text")).as("q10k"),
-        graft.operators.TextOps.repetitiveFlag(col("text")).as("repetitive"))
-      .join(textFlagged, Seq("doc_id"), "left")
-      .join(semFlagged, Seq("doc_id"), "left")
-      .withColumn("verdict",
-        when(col("dup_of").isNotNull, lit("dup"))
-          .when(col("sem_dup_of").isNotNull, lit("sem_dup"))
-          .when(col("repetitive"), lit("repetitive"))
-          .when(col("q10k") < minQuality10k, lit("low_quality"))
-          .otherwise(lit("admit")))
-      .select(col("doc_id"), col("verdict"), col("dup_of"), col("jac"),
-        col("sem_dup_of"), col("cos"),
-        (col("q10k").cast("double") / 10000.0).as("quality"))
-  }
-
   /** Decontamination-on-ingest — the gate-side twin of
     * [[graft.operators.DedupOps.ngramContamination]]: flag every batch
     * document containing ANY benchmark n-gram (the exact 13-gram
@@ -845,197 +531,6 @@ object StreamingAnalytics {
       .select(col("doc_id"), (col("w_sum") + col("prior_w")).as("nb_score"))
       .where(col("nb_score") <= minScore)
 
-  /** The FULL admission policy — [[admitBatchSem]] with the
-    * decontamination verdict composed in, in precedence order:
-    * CONTAMINATED (a leaked benchmark item must never enter the corpus,
-    * even when the same document would also be rejected as a duplicate —
-    * eval hygiene outranks dedup bookkeeping) → textual near-dup →
-    * semantic near-dup → repetitive → below the quality floor → admit.
-    * Returns every batch row with (verdict, n_bench_hits, dup_of, jac,
-    * sem_dup_of, cos, quality). */
-  def admitBatchFull(batch: DataFrame, corpusBandKeys: DataFrame,
-      corpusShingles: DataFrame, semCells: DataFrame, semVecs: DataFrame,
-      annIndexDir: String, benchGrams: DataFrame,
-      bar: Double = graft.operators.DedupOps.TextDupJaccard,
-      minQuality10k: Long = AdmitMinQuality10k,
-      nprobe: Int = graft.operators.DedupOps.NearDupNProbe,
-      cosBar: Double = graft.operators.DedupOps.CosineDupThreshold)
-      : DataFrame = {
-    val contam = contamGate(batch, benchGrams)
-    admitBatchSem(batch, corpusBandKeys, corpusShingles, semCells,
-        semVecs, annIndexDir, bar, minQuality10k, nprobe, cosBar)
-      .join(contam, Seq("doc_id"), "left")
-      .withColumn("verdict",
-        when(col("n_bench_hits").isNotNull, lit("contaminated"))
-          .otherwise(col("verdict")))
-      .select(col("doc_id"), col("verdict"),
-        coalesce(col("n_bench_hits"), lit(0L)).as("n_bench_hits"),
-        col("dup_of"), col("jac"), col("sem_dup_of"), col("cos"),
-        col("quality"))
-  }
-
-  /** [[admitBatchFull]] with the LEARNED filter composed in — the
-    * complete admission policy once a curation run has stored an NB
-    * model ([[graft.operators.TextOps.nbTrain]] via `curationRun`'s
-    * nb_weights/nb_prior tables). Precedence: contaminated → textual
-    * near-dup → semantic near-dup → repetitive → below the quality
-    * floor → NB-REJECTED ([[nbGate]] at `nbMinScore`) → admit. The
-    * learned verdict ranks LAST on purpose: it is the broadest and
-    * least explainable signal, so every explainable rejection keeps its
-    * specific reason and the model only vetoes documents the rules
-    * would have admitted — which is also exactly the population the
-    * distillation audit (q_nb_eval's FP cell) says the model disagrees
-    * on. Adds one broadcastable weight join per batch, no state. */
-  def admitBatchLearned(batch: DataFrame, corpusBandKeys: DataFrame,
-      corpusShingles: DataFrame, semCells: DataFrame, semVecs: DataFrame,
-      annIndexDir: String, benchGrams: DataFrame,
-      nbWeights: DataFrame, nbPrior: DataFrame,
-      nbMinScore: Long = 0L,
-      bar: Double = graft.operators.DedupOps.TextDupJaccard,
-      minQuality10k: Long = AdmitMinQuality10k,
-      nprobe: Int = graft.operators.DedupOps.NearDupNProbe,
-      cosBar: Double = graft.operators.DedupOps.CosineDupThreshold)
-      : DataFrame = {
-    val low = nbGate(batch, nbWeights, nbPrior, nbMinScore)
-      .withColumnRenamed("nb_score", "nb_low_score")
-    admitBatchFull(batch, corpusBandKeys, corpusShingles, semCells,
-        semVecs, annIndexDir, benchGrams, bar, minQuality10k, nprobe,
-        cosBar)
-      .join(low, Seq("doc_id"), "left")
-      .withColumn("verdict",
-        when(col("verdict") === "admit" && col("nb_low_score").isNotNull,
-          lit("nb_rejected")).otherwise(col("verdict")))
-      .drop("nb_low_score")
-  }
-
-  /** Coverage floor (ppm) for the ANN-index retrain trigger: when the
-    * persisted index's coarse training state serves fewer than this
-    * share of the CURRENT semantic corpus ([[graft.operators.VectorOps
-    * .annIndexStaleness]]'s coverage_ppm over `sem_vectors`), the IVF
-    * drift trade has gone from "appended vectors quantize coarsely" to
-    * "most of the corpus was never seen by the quantizer" — rebuild.
-    * 80%: at that point 1-in-5 stored vectors is assigned/encoded by
-    * centroids trained before it existed, which is where probed-cell
-    * recall measurably sags on drifting corpora. */
-  val AnnRebuildCoveragePpm = 800000L
-
-  /** The RETRAIN TRIGGER (VERDICT r11 item 7) — checks the ANN index's
-    * staleness against the maintained semantic corpus and, below
-    * [[AnnRebuildCoveragePpm]], runs the retrain-and-swap rebuild
-    * ([[graft.operators.VectorOps.rebuildAnnIndex]] over the full
-    * current `sem_vectors`) — searches are served by the OLD index all
-    * the way to the rename swap. The stored `sem_cells` postings were
-    * computed against the RETIRED centroids, so the rebuild re-posts
-    * the whole semantic corpus against the new quantizer and swaps
-    * that table too — cell ids from two quantizer generations must
-    * never meet in one gate join. Called on the compaction cadence by
-    * [[runCuratedIngestSem]] (never per batch: the staleness probe is
-    * two distinct scans, the rebuild a full retrain). Returns the
-    * measured coverage and whether a rebuild ran. */
-  def maybeRebuildAnnIndex(spark: SparkSession, idxDir: String,
-      annIndexDir: String,
-      coverageFloorPpm: Long = AnnRebuildCoveragePpm,
-      nprobe: Int = graft.operators.DedupOps.NearDupNProbe)
-      : (Long, Boolean) = {
-    val (_, semVecs) = loadSemIndexOrEmpty(spark, idxDir)
-    val corpus = semVecs.select(col("doc_id").as("vec_id"))
-    val coverage = graft.operators.VectorOps
-      .annIndexStaleness(spark, corpus, annIndexDir)
-      .select(col("coverage_ppm")).collect().head.getLong(0)
-    val stale = coverage < coverageFloorPpm
-    if (stale) {
-      graft.operators.VectorOps.rebuildAnnIndex(spark,
-        semVecs.select(col("doc_id").as("vec_id"), col("qe"), col("nrm")),
-        annIndexDir)
-      val (coarse, _, _, _) =
-        graft.operators.VectorOps.loadAnnIndex(spark, annIndexDir)
-      import org.apache.hadoop.fs.Path
-      val live = new Path(s"$idxDir/sem_cells")
-      val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val fresh = new Path(s"$idxDir/sem_cells_rebuilding")
-      if (fs.exists(fresh)) fs.delete(fresh, true)
-      postedCells(spark, semVecs.select(col("doc_id"), col("qe"),
-          col("nrm")), coarse, nprobe)
-        .withColumn("batch", lit(0L)).write.mode("overwrite")
-        .partitionBy("batch").parquet(fresh.toString)
-      val old = new Path(s"$idxDir/sem_cells_preswap")
-      if (fs.exists(old)) fs.delete(old, true)
-      if (fs.exists(live) && !fs.rename(live, old))
-        throw new java.io.IOException(
-          s"maybeRebuildAnnIndex: rename $live -> $old refused")
-      if (!fs.rename(fresh, live)) {
-        if (fs.exists(old)) fs.rename(old, live)
-        throw new java.io.IOException(
-          s"maybeRebuildAnnIndex: rename $fresh -> $live refused; restored")
-      }
-      fs.delete(old, true)
-      spark.catalog.refreshByPath(live.toString)
-    }
-    (coverage, stale)
-  }
-
-  /** [[runCuratedIngest]] with the semantic gate composed in: the
-    * per-batch loop for a stream carrying (doc_id, text, embedding).
-    * Admitted docs land in BOTH corpus indexes — minhash bands/shingles
-    * ([[writeCorpusIndex]]) and probed cells/vectors
-    * ([[writeSemIndex]]) — so batch N+1's gate sees batch N's
-    * admissions on both axes; textual AND semantic dup verdicts feed
-    * the maintained group table. The ANN index (`annIndexDir`) must
-    * exist ([[graft.operators.VectorOps.writeAnnIndex]] — the
-    * train-once/serve-many split); its centroids are read per batch but
-    * never retrained here. */
-  def runCuratedIngestSem(stream: DataFrame, idxDir: String,
-      annIndexDir: String, checkpoint: String,
-      bar: Double = graft.operators.DedupOps.TextDupJaccard,
-      minQuality10k: Long = AdmitMinQuality10k,
-      compactEveryBatches: Int = 0)(
-      onVerdicts: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runPerBatch(stream, checkpoint) { (batch, id) =>
-      val spark = batch.sparkSession
-      val (bk, sh) = loadCorpusIndexOrEmpty(spark, idxDir)
-      val (sc, sv) = loadSemIndexOrEmpty(spark, idxDir)
-      val verdicts = admitBatchSem(batch, bk, sh, sc, sv, annIndexDir,
-        bar, minQuality10k).localCheckpoint(true)
-      val ckptRdds = verdicts.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      val admitted = batch.join(
-        verdicts.where(col("verdict") === "admit").select(col("doc_id")),
-        Seq("doc_id")).persist()
-      try {
-        writeCorpusIndex(admitted, idxDir, batchId = Some(id))
-        writeSemIndex(spark,
-          admitted.select(col("doc_id"), col("embedding")),
-          annIndexDir, idxDir, id)
-        appendGroupEdges(
-          verdicts.where(col("verdict") === "dup")
-            .select(col("doc_id").as("id_a"), col("dup_of").as("id_b"))
-            .union(verdicts.where(col("verdict") === "sem_dup")
-              .select(col("doc_id").as("id_a"),
-                col("sem_dup_of").as("id_b"))),
-          idxDir, id)
-        appendIngestMetrics(verdicts, idxDir, id)
-        updateTokenSketch(admitted, idxDir, id)
-        if (compactEveryBatches > 0 && (id + 1) % compactEveryBatches == 0) {
-          compactCorpusIndex(spark, idxDir)
-          graft.functions.ScaleUtils.compactParquet(spark, s"$idxDir/sem_cells")
-          graft.functions.ScaleUtils.compactParquet(spark, s"$idxDir/sem_vectors")
-          foldGroupTable(spark, idxDir)
-          graft.functions.ScaleUtils.compactParquet(
-            spark, s"$idxDir/ingest_metrics")
-          // the retrain trigger rides the same cadence: measure index
-          // coverage of the (just-compacted) semantic corpus, rebuild +
-          // re-post on the swap discipline when it sags below the floor
-          maybeRebuildAnnIndex(spark, idxDir, annIndexDir)
-        }
-        onVerdicts(verdicts, id)
-      } finally {
-        admitted.unpersist(false)
-        ckptRdds.foreach(_.unpersist(false))
-      }
-    }
-
   /** Shared streaming-wrapper contract for the per-batch operators:
     * AvailableNow foreachBatch, checkpoint REQUIRED (without it a
     * restart replays the whole source and re-emits every historical
@@ -1051,89 +546,6 @@ object StreamingAnalytics {
       .foreachBatch(perBatch)
       .start()
   }
-
-  /** STREAMING JSON ADMISSION GATE — the semi-structured front door
-    * ([[graft.operators.JsonOps]]'s parse layer run as a stream): each
-    * micro-batch of raw payloads `(doc_id, j)` parses once with the
-    * declared schema; valid rows land TYPED (flattened columns) under
-    * `dir/json_clean/batch=<id>`, malformed payloads land RAW under
-    * `dir/json_quarantine/batch=<id>` with their bytes intact (the
-    * quarantine exists to be re-parsed after a producer fix — never
-    * store a lossy rendering of a broken payload).
-    *
-    * Exactly-once shape: output paths are KEYED BY BATCH ID and written
-    * `overwrite` — a replayed batch rewrites its own directory
-    * byte-identically instead of appending duplicates, so at-least-once
-    * delivery composes to exactly-once content (the rename-swap
-    * maintainers' idempotence discipline, directory-granular). Readers
-    * see `batch` as a hive partition column under a basePath read. */
-  def runJsonIngest(stream: DataFrame, dir: String, checkpoint: String)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runPerBatch(stream, checkpoint) { (batch, id) =>
-      val parsed = batch.withColumn("p",
-        org.apache.spark.sql.functions.from_json(col("j"),
-          graft.operators.JsonOps.JsonSchema,
-          new java.util.HashMap[String, String]()))
-      parsed.where(col("p.id").isNotNull)
-        .select(col("doc_id"), col("p.id").as("id"),
-          org.apache.spark.sql.functions.size(col("p.tags")).as("n_tags"),
-          col("p.meta.lang").as("lang"), col("p.meta.n").as("n"),
-          col("p.score").as("score"))
-        .write.mode("overwrite").parquet(s"$dir/json_clean/batch=$id")
-      parsed.where(col("p.id").isNull)
-        .select(col("doc_id"), col("j"))
-        .write.mode("overwrite").parquet(s"$dir/json_quarantine/batch=$id")
-    }
-
-  /** STREAMING ENTITY-RESOLUTION LOOP — the maintained deletion-key
-    * store [[graft.operators.FuzzyOps.fuzzyIncremental]]'s production
-    * posture names, as a stream: each micro-batch of (id, name)
-    * records first PROBES the current store (dist ≤ 1 matches against
-    * everything that arrived in EARLIER batches — the batch-sized
-    * asymmetric join, never a corpus re-pair) and hands the verdicts
-    * to `onMatches`, then folds its own deletion keys in under
-    * `dir/fuzzy_keys/batch=<id>` — the batch-keyed overwrite
-    * discipline ([[runJsonIngest]]). The probe reads STRICTLY EARLIER
-    * batch ids only: batch ids are monotone, so "ids < mine" IS the
-    * store as it stood at first delivery — a replayed batch (crash
-    * recovery or a full fresh-checkpoint re-run over the populated
-    * store) probes the identical prefix, rewrites its own key
-    * directory byte-identically, and re-emits the same verdicts.
-    * Within-batch duplicates are the batch's own pairing pass
-    * ([[graft.operators.FuzzyOps.fuzzyPairs]] semantics) — a store
-    * probe answers "seen BEFORE this batch". */
-  def runFuzzyStore(stream: DataFrame, dir: String, checkpoint: String)(
-      onMatches: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runPerBatch(stream, checkpoint) { (batch, id) =>
-      import org.apache.hadoop.fs.Path
-      val spark = batch.sparkSession
-      val store = new Path(s"$dir/fuzzy_keys")
-      val fs = store.getFileSystem(spark.sparkContext.hadoopConfiguration)
-      val priorBatches =
-        if (!fs.exists(store)) Nil
-        else fs.listStatus(store).toSeq.map(_.getPath.getName)
-          .filter(n => n.startsWith("batch=") &&
-            n.stripPrefix("batch=").toLong < id)
-      val matches =
-        if (priorBatches.isEmpty)
-          spark.createDataFrame(
-            spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-            org.apache.spark.sql.types.StructType(Seq(
-              org.apache.spark.sql.types.StructField("id_new",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("id_old",
-                org.apache.spark.sql.types.LongType),
-              org.apache.spark.sql.types.StructField("dist",
-                org.apache.spark.sql.types.IntegerType))))
-        else graft.operators.FuzzyOps.matchKeyed(batch, spark.read
-          .option("basePath", s"$dir/fuzzy_keys")
-          .parquet(priorBatches.map(b => s"$dir/fuzzy_keys/$b"): _*)
-          .select(col("id"), col("name"), col("k")))
-      onMatches(matches, id)
-      graft.operators.FuzzyOps.keysOf(batch)
-        .write.mode("overwrite").parquet(s"$dir/fuzzy_keys/batch=$id")
-    }
 
   /** Streaming wrapper for [[admitBatch]] — [[runPerBatch]] contract;
     * per-batch verdicts go to `onVerdicts`. */
@@ -1200,20 +612,6 @@ object StreamingAnalytics {
       onVerdicts: (DataFrame, Long) => Unit)
       : org.apache.spark.sql.streaming.StreamingQuery =
     runPerBatch(stream, checkpoint) { (batch, id) =>
-      curatedIngestStep(batch, idxDir, id, bar, minQuality10k,
-        compactEveryBatches)(onVerdicts)
-    }
-
-  /** One curated-ingest micro-batch, factored out of [[runCuratedIngest]]
-    * so compositions that PRODUCE the document batch differently (the
-    * WARC container drive, a backfill loop) run the identical gate,
-    * index append, group-edge delta, metrics, sketch and compaction —
-    * byte-for-byte the same maintained state as the JSON-shaped loop. */
-  private[graft] def curatedIngestStep(batch: DataFrame, idxDir: String,
-      id: Long, bar: Double = graft.operators.DedupOps.TextDupJaccard,
-      minQuality10k: Long = AdmitMinQuality10k,
-      compactEveryBatches: Int = 0)(
-      onVerdicts: (DataFrame, Long) => Unit): Unit = {
       val spark = batch.sparkSession
       // OrEmpty: a fresh pipeline has no seeded index yet — the first
       // batch bootstraps it (its own append creates the tables)
@@ -1260,146 +658,6 @@ object StreamingAnalytics {
         admitted.unpersist(false)
         ckptRdds.foreach(_.unpersist(false))
       }
-    }
-
-  /** One micro-batch of WARC container files → document rows: split
-    * every file with the real [[graft.functions.WarcRecords]] kernel
-    * (cap-flagged), keep HTTP 200 `response` records, decode under the
-    * DECLARED Content-Type charset, extract text with
-    * [[graft.functions.HtmlText]] — the q_warc_extract chain shaped
-    * for the admission gate. `doc_id` is the xxhash64 of the record's
-    * identity (WARC-Record-ID when present, else target URI + stream
-    * offset) — deterministic across replays, so the batch-keyed
-    * overwrite discipline composes to exactly-once content. Map-only:
-    * the whole derivation rides the binaryFile scan. */
-  private[graft] def warcBatchDocs(batch: DataFrame,
-      robots: Option[org.apache.spark.broadcast.Broadcast[
-        Map[String, Seq[(Boolean, String)]]]] = None): DataFrame = {
-    import batch.sparkSession.implicits._
-    batch.select(col("path"), col("content"))
-      .as[(String, Array[Byte])]
-      .flatMap { case (path, bytes) =>
-        val (recs, capped) =
-          graft.functions.WarcRecords.splitCapped(bytes)
-        recs.iterator
-          .filter(r => r.warcType == "response" && !r.truncated)
-          .flatMap { r =>
-            val (status, body) =
-              graft.functions.WarcRecords.httpBody(r.payload)
-            if (status != 200) None
-            else {
-              val cs = graft.functions.WarcRecords.httpCharset(r.payload)
-              val text = graft.functions.HtmlText.extract(
-                graft.functions.WarcRecords.decode(body, cs))
-              val ident =
-                if (r.recordId.nonEmpty) r.recordId
-                else s"${r.targetUri}#${r.offset}"
-              // robots verdict rides the same kernel pass: registry-
-              // sized rule map broadcast, compile-free matcher per
-              // record — no join, no extra scan. A host with no rules
-              // (or no robots relation at all) is allowed.
-              val allowed = robots.forall { bc =>
-                val host = graft.functions.RobotsTxt.urlHost(r.targetUri)
-                bc.value.get(host).forall(rs =>
-                  graft.functions.RobotsTxt.isAllowed(
-                    rs.map(t => graft.functions.RobotsTxt.Rule(t._1, t._2)),
-                    graft.functions.RobotsTxt.urlPath(r.targetUri)))
-              }
-              Some((ident, path, r.targetUri, status, capped, allowed,
-                text))
-            }
-          }
-      }
-      .toDF("ident", "warc_path", "uri", "http_status", "cap_hit",
-        "robots_allowed", "text")
-      .select(xxhash64(col("ident")).as("doc_id"), col("warc_path"),
-        col("uri"), col("http_status"), col("cap_hit"),
-        col("robots_allowed"), col("text"))
-  }
-
-  /** STREAMING WARC COMPOSITION (VERDICT r17 item 3) — the crawl drive
-    * end-to-end as ONE stream: a binaryFile stream of `.warc`/`.warc.gz`
-    * files → [[warcBatchDocs]] (split → HTTP unwrap → charset decode →
-    * extract) → a WET-style extracted-text materialization per batch
-    * (`dir/wet/batch=<id>`, the CommonCrawl convention of shipping the
-    * extraction beside the crawl — batch-keyed `overwrite`, the
-    * [[runJsonIngest]] exactly-once shape) → the FULL curated-ingest
-    * step ([[curatedIngestStep]]: dedup/quality/repetition verdicts
-    * against the maintained corpus index, index append, group-edge
-    * delta, metrics, token sketch, compaction cadence). Replaying a
-    * batch rewrites its own WET directory byte-identically and no-ops
-    * the maintained stores through their existing replay guards — the
-    * maintained corpus is the one-shot corpus of everything ever
-    * driven (spec-pinned). Verdict rows join back to (uri, path) via
-    * doc_id in `onVerdicts` if the caller needs crawl-level routing.
-    *
-    * `robots` (r18) is the CRAWL-ADMISSION stage: a per-host rule
-    * relation (`host`, `rules: array<struct<allow, pattern>>` — the
-    * [[graft.functions.RobotsTxt.groupFor]] output for the crawler's
-    * product token). It is collected ONCE at stream build (robots
-    * rules are registry-sized — ≤|hosts|·maxRules, the dirpat
-    * broadcast-dim discipline) and broadcast; each record's verdict
-    * is a compile-free matcher call inside the SAME kernel pass that
-    * splits the container — no join, no extra scan. Disallowed
-    * records are quarantined to `dir/robots_denied/batch=<id>`
-    * (batch-keyed overwrite — replay-idempotent like the WET write)
-    * and never reach the WET materialization or the curated gate. */
-  def runWarcIngest(stream: DataFrame, idxDir: String, dir: String,
-      checkpoint: String,
-      bar: Double = graft.operators.DedupOps.TextDupJaccard,
-      minQuality10k: Long = AdmitMinQuality10k,
-      compactEveryBatches: Int = 0,
-      robots: Option[DataFrame] = None)(
-      onVerdicts: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery = {
-    val robotsBc = robots.map { rel =>
-      val m = rel.select(col("host"), col("rules"))
-        .collect()
-        .map(r => r.getString(0) ->
-          r.getSeq[org.apache.spark.sql.Row](1)
-            .map(t => (t.getBoolean(0), t.getString(1))))
-        .toMap
-      rel.sparkSession.sparkContext.broadcast(m)
-    }
-    runPerBatch(stream, checkpoint) { (raw, id) =>
-      // one derivation, two consumers (WET write + gate): checkpoint
-      // so the kernel chain runs once, freed after the step
-      val docs = warcBatchDocs(raw, robotsBc).localCheckpoint(true)
-      val ckptRdds = docs.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd
-      }
-      try {
-        if (robotsBc.isDefined)
-          docs.where(!col("robots_allowed"))
-            .select(col("doc_id"), col("uri"), col("warc_path"))
-            .write.mode("overwrite")
-            .parquet(s"$dir/robots_denied/batch=$id")
-        val kept = docs.where(col("robots_allowed"))
-        kept.select(col("doc_id"), col("uri"), col("http_status"),
-            col("cap_hit"),
-            length(col("text")).cast("int").as("n_chars"), col("text"))
-          .write.mode("overwrite").parquet(s"$dir/wet/batch=$id")
-        curatedIngestStep(kept.select(col("doc_id"), col("text")),
-          idxDir, id, bar, minQuality10k, compactEveryBatches)(onVerdicts)
-      } finally ckptRdds.foreach(_.unpersist(false))
-    }
-  }
-
-  /** Streaming wrapper for the ingest gate: AvailableNow foreachBatch —
-    * per-batch verdicts go to `onFlagged` (append to a quarantine table,
-    * metrics, ...). State is bounded: the gate's distinct/groupBy live
-    * inside one micro-batch; nothing accumulates across batches.
-    * `checkpoint` is REQUIRED (same contract as IngestPipeline.runStream):
-    * without it a restart replays the whole source and re-emits every
-    * historical verdict. */
-  def runGate(stream: DataFrame, corpusBandKeys: DataFrame,
-      corpusShingles: DataFrame, checkpoint: String,
-      bar: Double = graft.operators.DedupOps.TextDupJaccard)(
-      onFlagged: (DataFrame, Long) => Unit)
-      : org.apache.spark.sql.streaming.StreamingQuery =
-    runPerBatch(stream, checkpoint) { (batch, id) =>
-      onFlagged(
-        gateAgainstCorpus(batch, corpusBandKeys, corpusShingles, bar), id)
     }
 
   case class Ev(event_id: Long, ts: Timestamp, user_id: Long,
@@ -1540,12 +798,6 @@ object StreamingAnalytics {
       .select(col("id").cast("string").as("bucket"), lit(0L).as("cnt"))
   }
 
-  /** Same file-compaction cadence as the other gate tables (the table
-    * grows 256 tiny rows per batch; the read-back re-aggregates, so
-    * compaction is file hygiene, not semantics). */
-  def compactDriftIndex(spark: SparkSession, dir: String): (Int, Int) =
-    graft.functions.ScaleUtils.compactParquet(spark, s"$dir/drift_buckets")
-
   /** DRIFT ALARM for one micro-batch: TV distance (ppm) between the
     * maintained corpus distribution and the incoming batch —
     * [[graft.operators.TextOps.vocabDrift]]'s arithmetic served from
@@ -1557,374 +809,4 @@ object StreamingAnalytics {
   def batchDrift(batch: DataFrame, corpusBuckets: DataFrame): DataFrame =
     graft.operators.TextOps.tvDistanceOf(corpusBuckets,
       graft.operators.TextOps.tokenBuckets(batch))
-
-  /** [[batchDrift]] broken down PER SOURCE — the triage view behind the
-    * global alarm: each feed's micro-batch distribution compares against
-    * the SAME maintained corpus reference, so one drifted feed stands
-    * out (its tv_ppm spikes) while a calm aggregate would have hidden
-    * it, and the alarm's answer becomes "which crawl changed", not just
-    * "something changed". One row per source present in the batch, the
-    * global monitor's exact arithmetic grouped (shared tail — the two
-    * views can never disagree). */
-  def batchDriftBySource(batch: DataFrame,
-      corpusBuckets: DataFrame): DataFrame =
-    graft.operators.TextOps.tvDistanceByOf(corpusBuckets,
-      graft.operators.TextOps.tokenBucketsBy(batch, "source"), "source")
-
-  // ===== tokenizer drift monitor (VERDICT r16 item 7) =====
-
-  /** Fertility / char-piece-rate deviation (integer 1e-2 units — 25 =
-    * 0.25 tokens per word) beyond which a batch's encoding behavior
-    * under the FROZEN tokenizer has drifted from the training-corpus
-    * card: new vocabulary the stored pieces don't cover burns sequence
-    * length on single-char fallbacks, the signal a pipeline reads to
-    * schedule a tokenizer retrain. */
-  val TokenizerDriftBarX100 = 25L
-
-  private val TokenizerFertilitySchema =
-    org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("n_words",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_pieces",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("n_char_pieces",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("batch",
-        org.apache.spark.sql.types.LongType)))
-
-  /** Fold one admitted micro-batch's fertility census UNDER THE STORED
-    * unigram artifact into the maintained table at
-    * `dir/tokenizer_fertility` — the vocab-drift discipline applied to
-    * the tokenizer artifact: the batch pays one vocabulary-sized
-    * Viterbi pass ([[graft.operators.TextOps]]'s production-encode
-    * path, frozen costs broadcast), and its one census row lands in a
-    * batch-id-keyed directory written `overwrite` (the
-    * [[runJsonIngest]] exactly-once shape: a replayed batch rewrites
-    * its own row byte-identically instead of double-appending). */
-  def updateTokenizerFertility(batch: DataFrame,
-      cost: Map[String, Long], dir: String, batchId: Long): Unit =
-    graft.operators.TextOps.uniFertilityOf(batch, cost)
-      .coalesce(1).write.mode("overwrite")
-      .parquet(s"$dir/tokenizer_fertility/batch=$batchId")
-
-  /** Read-back of [[updateTokenizerFertility]] (empty-safe): one row
-    * per folded batch. */
-  def loadTokenizerFertility(spark: SparkSession, dir: String): DataFrame =
-    parquetOrEmpty(spark, s"$dir/tokenizer_fertility",
-      TokenizerFertilitySchema)
-
-  /** THE DRIFT ROWS for the gate report: every folded batch's
-    * fertility and char-piece (byte-fallback-analogue) rate under the
-    * frozen tokenizer, against the TRAINING-CORPUS card
-    * ([[graft.operators.TextOps.unigramTrainingCard]] — one broadcast
-    * row), with `alarm` set when either statistic deviates beyond
-    * [[TokenizerDriftBarX100]]. All integer 1e-2 units, truncating
-    * division on non-negative operands — deterministic across
-    * partitionings like every gate statistic. */
-  def tokenizerDriftRows(spark: SparkSession, dir: String,
-      baseCard: DataFrame): DataFrame =
-    loadTokenizerFertility(spark, dir)
-      .crossJoin(broadcast(baseCard.select(
-        col("n_words").as("base_words"),
-        col("n_pieces").as("base_pieces"),
-        col("n_char_pieces").as("base_chars"))))
-      .select(col("batch").cast("long").as("batch"), col("n_words"),
-        expr("n_pieces * 100 div greatest(n_words, 1)")
-          .as("fertility_100"),
-        expr("base_pieces * 100 div greatest(base_words, 1)")
-          .as("base_fertility_100"),
-        expr("n_char_pieces * 100 div greatest(n_pieces, 1)")
-          .as("char_piece_rate_100"),
-        expr("base_chars * 100 div greatest(base_pieces, 1)")
-          .as("base_char_rate_100"))
-      .withColumn("drift_100",
-        abs(col("fertility_100") - col("base_fertility_100")))
-      .withColumn("char_drift_100",
-        abs(col("char_piece_rate_100") - col("base_char_rate_100")))
-      .withColumn("alarm",
-        col("drift_100") > TokenizerDriftBarX100 ||
-          col("char_drift_100") > TokenizerDriftBarX100)
-
-  private val LinkGraphSchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("s",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("t",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("w",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("last_batch",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Fold one micro-batch of documents into the MAINTAINED weighted
-    * link graph at `dir/link_graph` — the streaming half of
-    * [[graft.operators.GraphOps]]'s scale story. The node dimension is
-    * a FIXED `registry` (source, rk) — the domain-registry posture a
-    * real crawl keeps (the benchmark-gram-set discipline): batch edge
-    * extraction must not depend on corpus state, or a fold and a
-    * one-shot would disagree. The batch pays one
-    * [[graft.operators.GraphOps.domainEdgesOf]] aggregate over ITS OWN
-    * docs; the stored graph merges by per-(s, t) weight ADD — edge
-    * weights are counts, so the maintained graph equals the one-shot
-    * graph over everything ever folded, identically (spec-pinned).
-    *
-    * Idempotence: addition is not idempotent, so the
-    * [[updateTokenSketch]] guard applies — every stored row carries
-    * `last_batch`; a REPLAY of the stored max batch id is a no-op,
-    * and a batch id strictly BELOW the stored max fails loudly
-    * (IllegalStateException): foreachBatch ids are monotone and a
-    * restart only ever re-delivers the LAST possibly-uncommitted
-    * batch, so a lower id is never a legitimate replay — silently
-    * skipping it would drop a batch's edges with no signal (ADVICE
-    * r15). Crash-safety is the same rename-swap. State is ≤ |domains|²
-    * tiny rows; serving ([[authorityFromLinkGraph]]) recomputes
-    * PageRank from the maintained graph on demand — iteration over the
-    * aggregated graph is cheap precisely because the corpus never
-    * iterates.
-    *
-    * Returns the count of batch docs whose `source` is ABSENT from the
-    * fixed registry: [[graft.operators.GraphOps.domainEdgesOf]]
-    * inner-joins the registry, so such docs contribute no edges — a
-    * crawl discovering a new domain must see that loss, not infer it
-    * (ADVICE r15). On nonzero, callers grow the node dimension with
-    * [[updateDomainRegistry]] and RE-QUEUE exactly the unregistered
-    * rows as a LATER batch id ([[foldWithDiscovery]] composes the
-    * protocol). A same-id re-fold of the whole batch is impossible by
-    * design (the replay guard no-ops it), and a whole-batch re-fold
-    * under a new id would double-add the registered rows' edges — the
-    * unregistered rows alone contributed NOTHING under this fold
-    * (the inner join dropped them), so re-queuing only them is
-    * lossless and add-once (ADVICE r16). The fold itself stays
-    * registry-fixed so maintained == one-shot holds per registry
-    * version. Replay/skip paths return 0 (nothing newly dropped). */
-  def updateLinkGraph(batch: DataFrame, registry: DataFrame, dir: String,
-      batchId: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val live = new Path(s"$dir/link_graph")
-    val tmp = new Path(s"$dir/link_graph_tmp")
-    val old = new Path(s"$dir/link_graph_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(old))
-      require(fs.rename(old, live), s"restore of orphaned $old failed")
-    val stored = parquetOrEmpty(spark, live.toString, LinkGraphSchema)
-      .localCheckpoint(true) // the rewrite below reads the live dir
-    val maxBatch = stored.agg(max(col("last_batch"))).head()
-    if (!maxBatch.isNullAt(0) && batchId < maxBatch.getLong(0))
-      throw new IllegalStateException(
-        s"link-graph fold saw batch $batchId below stored max " +
-          s"${maxBatch.getLong(0)} — ids must be monotone; a silent " +
-          "skip would lose the batch's edges")
-    if (maxBatch.isNullAt(0) || maxBatch.getLong(0) < batchId) {
-      // the loss census: per-source batch counts left-joined to the
-      // broadcast registry — docs whose source the registry lacks
-      // produce no edges below, so their count IS the drop signal
-      val unregistered = batch.groupBy(col("source"))
-        .agg(count(lit(1)).as("n_docs"))
-        .join(broadcast(registry.select(col("source"),
-          lit(true).as("reg"))), Seq("source"), "left")
-        .where(col("reg").isNull)
-        .agg(coalesce(sum(col("n_docs")), lit(0L))).head().getLong(0)
-      if (unregistered > 0)
-        org.slf4j.LoggerFactory.getLogger(getClass)
-          .warn(s"link-graph batch $batchId: $unregistered docs from " +
-            "unregistered domains dropped from the maintained graph")
-      val batchEdges = graft.operators.GraphOps
-        .domainEdgesOf(batch, registry)
-      val merged = stored.select(col("s"), col("t"), col("w"))
-        .unionAll(batchEdges)
-        .groupBy(col("s"), col("t")).agg(sum(col("w")).as("w"))
-        .withColumn("last_batch", lit(batchId))
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(old, true)
-      if (fs.exists(live))
-        require(fs.rename(live, old), s"swap-out of $live failed")
-      require(fs.rename(tmp, live), s"swap-in of $tmp failed")
-      fs.delete(old, true)
-      unregistered
-    } else 0L
-  }
-
-  /** Read-back of the maintained link graph (empty-safe). */
-  def loadLinkGraph(spark: SparkSession, dir: String): DataFrame =
-    parquetOrEmpty(spark, s"$dir/link_graph", LinkGraphSchema)
-      .select(col("s"), col("t"), col("w"))
-
-  /** `last_batch` is the STORE-level replay stamp (every row carries
-    * the latest folded id — the monotone guard reads its max);
-    * `reg_batch` is per-ROW provenance: the id of the batch that
-    * REGISTERED the domain, which [[foldWithDiscovery]] reads to
-    * re-derive a crash-lost re-queue set. */
-  private val RegistrySchema = org.apache.spark.sql.types.StructType(Seq(
-    org.apache.spark.sql.types.StructField("source",
-      org.apache.spark.sql.types.StringType),
-    org.apache.spark.sql.types.StructField("rk",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("last_batch",
-      org.apache.spark.sql.types.LongType),
-    org.apache.spark.sql.types.StructField("reg_batch",
-      org.apache.spark.sql.types.LongType)))
-
-  /** Fold one micro-batch's NEWLY-SEEN domains into the MAINTAINED
-    * registry at `dir/domain_registry` — the action
-    * [[updateLinkGraph]]'s unregistered-doc signal calls for: a crawl
-    * that discovers a domain grows the node dimension instead of
-    * silently shedding edges forever. New domains get the NEXT dense
-    * ranks (max rk + 1 ..), assigned by name order within the batch
-    * through [[graft.operators.GraphOps.ranksFrom]] (the same
-    * two-phase distributed rank — no partition-less window even on
-    * the delta), so the registry stays a dense 0..n−1 rank space and
-    * every EXISTING rank is untouched — edges already folded keep
-    * their keys. The maintained registry is therefore
-    * ARRIVAL-ordered, not name-ordered like the one-shot
-    * [[graft.operators.GraphOps.srcRanks]]; the graph semantics only
-    * need distinct dense ranks. Note the edge synthesis's `mod n`
-    * depends on |registry|, so maintained ≡ one-shot holds PER
-    * REGISTRY VERSION (the [[updateLinkGraph]] contract) — growth
-    * starts a new version going forward, it does not rewrite folded
-    * history.
-    *
-    * Same idempotence/ordering posture as the graph fold: replay of
-    * the stored max batch id is a no-op, a lower id fails loudly,
-    * crash-safety is the rename-swap. Returns the number of domains
-    * registered by this batch. */
-  def updateDomainRegistry(batch: DataFrame, dir: String,
-      batchId: Long): Long = {
-    import org.apache.hadoop.fs.Path
-    val spark = batch.sparkSession
-    val live = new Path(s"$dir/domain_registry")
-    val tmp = new Path(s"$dir/domain_registry_tmp")
-    val old = new Path(s"$dir/domain_registry_old")
-    val fs = live.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (!fs.exists(live) && fs.exists(old))
-      require(fs.rename(old, live), s"restore of orphaned $old failed")
-    val stored = parquetOrEmpty(spark, live.toString, RegistrySchema)
-      .localCheckpoint(true)
-    val maxBatch = stored.agg(max(col("last_batch"))).head()
-    if (!maxBatch.isNullAt(0) && batchId < maxBatch.getLong(0))
-      throw new IllegalStateException(
-        s"registry fold saw batch $batchId below stored max " +
-          s"${maxBatch.getLong(0)} — ids must be monotone")
-    if (!maxBatch.isNullAt(0) && maxBatch.getLong(0) == batchId) return 0L
-    val fresh = batch.select(col("source")).distinct()
-      .join(stored.select(col("source")), Seq("source"), "left_anti")
-      .localCheckpoint(true)
-    val nFresh = fresh.count()
-    if (nFresh > 0 || maxBatch.isNullAt(0)) {
-      val base = stored.agg(
-        coalesce(max(col("rk")) + 1, lit(0L)).as("base"))
-      val added = graft.operators.GraphOps
-        .ranksFrom(fresh)
-        .crossJoin(broadcast(base))
-        .select(col("source"), (col("rk") + col("base")).as("rk"),
-          lit(batchId).as("reg_batch"))
-      val merged = stored.select(col("source"), col("rk"),
-          col("reg_batch"))
-        .unionAll(added)
-        .withColumn("last_batch", lit(batchId))
-        .select(col("source"), col("rk"), col("last_batch"),
-          col("reg_batch"))
-      merged.coalesce(1).write.mode("overwrite").parquet(tmp.toString)
-      fs.delete(old, true)
-      if (fs.exists(live))
-        require(fs.rename(live, old), s"swap-out of $live failed")
-      require(fs.rename(tmp, live), s"swap-in of $tmp failed")
-      fs.delete(old, true)
-    }
-    nFresh
-  }
-
-  /** Read-back of the maintained domain registry (empty-safe):
-    * (source, rk) — the node dimension [[updateLinkGraph]] and
-    * [[authorityFromLinkGraph]] consume. */
-  def loadDomainRegistry(spark: SparkSession, dir: String): DataFrame =
-    parquetOrEmpty(spark, s"$dir/domain_registry", RegistrySchema)
-      .select(col("source"), col("rk"))
-
-  /** THE DISCOVERY LOOP, COMPOSED (VERDICT r16 item 5): one batch
-    * through the full grow-and-requeue protocol —
-    *
-    *  1. fold the batch into the link graph under the CURRENT registry
-    *     version (`foldId`); the return value counts docs from
-    *     unregistered domains, whose edges the version-fixed fold
-    *     correctly refused;
-    *  2. on nonzero: grow the registry from the batch's fresh domains
-    *     (existing ranks untouched — folded history keeps its keys);
-    *  3. re-queue EXACTLY the previously-unregistered rows as
-    *     `requeueId` under the grown registry. Those rows contributed
-    *     nothing in step 1, so this adds their edges exactly once;
-    *     the registered rows are NOT re-folded (a whole-batch re-fold
-    *     would double-add — the [[updateLinkGraph]] contract).
-    *
-    * Returns (dropped-at-fold, re-queued docs). CRASH-SAFE at every
-    * boundary: a foreachBatch redelivery re-runs all three steps, and
-    * each is individually idempotent at its id — the graph fold
-    * no-ops a replayed `foldId`, the registry fold no-ops a replayed
-    * `foldId`, and the re-queue SET is re-derived from the registry
-    * itself (the rows whose domains carry `reg_batch == foldId` are
-    * exactly the ones step 1 refused) rather than from step 1's
-    * return value, so a crash between the graph fold and the re-queue
-    * cannot lose the discovering batch's edges. Both state stores
-    * keep their monotone batch-id guards, so a foreachBatch caller
-    * maps its micro-batch id `b` to `foldId = 2*b,
-    * requeueId = 2*b + 1` — monotone in `b`, and the guards only need
-    * monotonicity, not density.
-    *
-    * Driver-cost contract (100 TB operator note): beyond the two
-    * folds, a DISCOVERING batch pays two extra driver-blocking jobs —
-    * `addedByThis.isEmpty` over the registry delta (bounded by the
-    * number of domains this one batch registered, typically a handful
-    * of rows; a non-discovering batch pays only this probe over an
-    * empty frame) and `requeue.count()` over the re-queued rows
-    * (bounded by the batch's own unregistered-domain docs, ≤ one
-    * micro-batch). Both are required by the return contract and never
-    * scale with corpus or graph size. */
-  def foldWithDiscovery(batch: DataFrame, dir: String, foldId: Long,
-      requeueId: Long): (Long, Long) = {
-    require(requeueId > foldId,
-      s"requeueId $requeueId must exceed foldId $foldId")
-    val spark = batch.sparkSession
-    // composed-step replay detection: the graph's monotone guard sees
-    // TWO ids per composed step, so a redelivery after the re-queue
-    // committed would present foldId below the stored max (= the
-    // requeue id) and trip it. If the store already holds requeueId,
-    // every sub-step committed — the whole composed step is a no-op.
-    val graphMaxRow = parquetOrEmpty(spark, s"$dir/link_graph",
-      LinkGraphSchema).agg(max(col("last_batch"))).head()
-    if (!graphMaxRow.isNullAt(0) && graphMaxRow.getLong(0) >= requeueId)
-      return (0L, 0L)
-    val regV1 = loadDomainRegistry(spark, dir).localCheckpoint(true)
-    val dropped = updateLinkGraph(batch, regV1, dir, foldId)
-    // unconditional: with nothing unregistered this is a no-op, and on
-    // a redelivery after a crash between the two folds it MUST run
-    updateDomainRegistry(batch, dir, foldId)
-    // replay-derivable re-queue set: the domains THIS batch registered
-    val addedByThis = parquetOrEmpty(spark, s"$dir/domain_registry",
-      RegistrySchema)
-      .where(col("reg_batch") === foldId)
-      .select(col("source"))
-      .localCheckpoint(true)
-    if (addedByThis.isEmpty) (dropped, 0L)
-    else {
-      val requeue = batch.join(broadcast(addedByThis), Seq("source"),
-        "left_semi")
-      val n = requeue.count()
-      val stillDropped = updateLinkGraph(requeue,
-        loadDomainRegistry(spark, dir), dir, requeueId)
-      require(stillDropped == 0L,
-        s"re-queue under the grown registry still dropped $stillDropped")
-      (dropped, n)
-    }
-  }
-
-  /** DOMAIN AUTHORITY SERVED FROM THE MAINTAINED GRAPH — PageRank
-    * recomputed on demand from the ≤|domains|² stored rows under the
-    * same fixed registry: equals
-    * [[graft.operators.GraphOps.pageRank]] over every document ever
-    * folded (spec-pinned), without re-reading one of them. */
-  def authorityFromLinkGraph(spark: SparkSession, dir: String,
-      registry: DataFrame): DataFrame =
-    graft.operators.GraphOps
-      .rankItersFrom(loadLinkGraph(spark, dir), registry)
-      .join(broadcast(registry), col("node") === col("rk"))
-      .select(col("source"), col("r").as("rank_u"))
 }

@@ -18,103 +18,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val inPlan = VectorOps.annPq(spark, sfDir).collect().map(_.toSeq).toSet
     assert(fromIdx == inPlan,
       s"from-index PQ must equal train-in-plan: ${fromIdx.diff(inPlan)} vs ${inPlan.diff(fromIdx)}")
-    val refineIdx = VectorOps.annPqRefineFrom(spark, sfDir, idx)
-      .collect().map(_.toSeq).toSet
-    val refinePlan = VectorOps.annPqRefine(spark, sfDir)
-      .collect().map(_.toSeq).toSet
-    assert(refineIdx == refinePlan, "from-index refine must equal in-plan")
     // and the cached search entry (the declared q_ann_pq_search) agrees
     val cached = VectorOps.annPqSearchCached(spark, sfDir)
       .collect().map(_.toSeq).toSet
     assert(cached == inPlan, "cached search entry must equal q_ann_pq")
-  }
-
-  test("appendAnnIndex: appended vectors searchable without retraining") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("annapp").toString
-    VectorOps.writeAnnIndex(spark, sfDir, idx)
-    // clone QUERY vector 2 under a fresh id: identical embedding →
-    // identical codes under the stored codebooks (deterministic encode)
-    val v2 = graft.sources.Tables.embeddings(spark, sfDir)
-      .where(col("vec_id") === 2L).select(col("embedding")).head()
-      .getAs[scala.collection.Seq[Float]](0).toSeq
-    VectorOps.appendAnnIndex(spark,
-      Seq((900002L, v2)).toDF("vec_id", "embedding"), idx, batchId = 1L)
-    val (_, _, _, codes) = VectorOps.loadAnnIndex(spark, idx)
-    def codesOf(id: Long) = codes.where(col("vec_id") === id).collect()
-      .map(r => (r.getInt(1), r.getInt(2))).toSet
-    assert(codesOf(900002L) == codesOf(2L) && codesOf(2L).nonEmpty,
-      "the clone must encode to the original's codes")
-    // the appended clone is the strongest possible ADC neighbor for its
-    // own query — search must surface it at the per-query max sim
-    def search() = VectorOps.annPqFrom(spark, sfDir, idx)
-      .where(col("query_id") === 2L).collect()
-      .map(r => (r.getAs[Long]("neighbor_id"), r.getAs[Double]("sim")))
-    val res = search()
-    assert(res.exists(_._1 == 900002L),
-      s"appended clone missing from query 2's results: ${res.toSeq}")
-    assert(res.find(_._1 == 900002L).get._2 == res.map(_._2).max,
-      s"clone must carry the max ADC sim: ${res.toSeq}")
-    // compaction folds the batch partitions without changing results
-    val ((aB, aA), (cB, cA)) = VectorOps.compactAnnIndex(spark, idx)
-    assert(aA <= aB && cA <= cB)
-    assert(search().toSet == res.toSet, "compaction must not change search")
-  }
-
-  test("annIndexStaleness: missing appends and orphaned deletes counted") {
-    import spark.implicits._
-    import org.apache.spark.sql.functions.col
-    val idx = java.nio.file.Files.createTempDirectory("annstale").toString
-    VectorOps.writeAnnIndex(spark, sfDir, idx)
-    val emb = graft.sources.Tables.embeddings(spark, sfDir)
-    val n = emb.count()
-    // freshly built: full coverage, nothing missing or orphaned
-    val fresh = VectorOps.annIndexStaleness(spark, emb, idx).head()
-    assert(fresh.getAs[Long]("n_corpus") == n &&
-      fresh.getAs[Long]("n_indexed") == n &&
-      fresh.getAs[Long]("n_missing") == 0L &&
-      fresh.getAs[Long]("n_orphaned") == 0L &&
-      fresh.getAs[Long]("coverage_ppm") == 1000000L, s"fresh: $fresh")
-    // corpus grows by 3 never-appended vectors and loses vector 2:
-    // the report must count exactly those
-    val dim = emb.select(org.apache.spark.sql.functions
-      .size(col("embedding"))).first().getInt(0)
-    val grown = emb.where(col("vec_id") =!= 2L)
-      .select(col("vec_id"), col("embedding"))
-      .union((1 to 3).map(i =>
-        (800000L + i, Array.fill(dim)(0.1f * i))).toDF("vec_id", "embedding"))
-    val stale = VectorOps.annIndexStaleness(spark, grown, idx).head()
-    assert(stale.getAs[Long]("n_corpus") == n - 1 + 3, s"grown: $stale")
-    assert(stale.getAs[Long]("n_missing") == 3L, s"missing: $stale")
-    assert(stale.getAs[Long]("n_orphaned") == 1L, s"orphaned: $stale")
-    // appending the new vectors clears `missing` (the steady-state fix)
-    VectorOps.appendAnnIndex(spark, (1 to 3).map(i =>
-      (800000L + i, Array.fill(dim)(0.1f * i))).toDF("vec_id", "embedding"),
-      idx, batchId = 1L)
-    val after = VectorOps.annIndexStaleness(spark, grown, idx).head()
-    assert(after.getAs[Long]("n_missing") == 0L &&
-      after.getAs[Long]("n_orphaned") == 1L, s"after append: $after")
-  }
-
-  test("near-dup from the persisted index equals train-in-plan IVF") {
-    import graft.operators.DedupOps
-    val idx = java.nio.file.Files.createTempDirectory("ndidx").toString
-    val n = graft.functions.ScaleUtils.footerRowCount(
-      spark, s"$sfDir/embeddings.parquet")
-    val cells = DedupOps.ivfCells(n)
-    // full-corpus training with the near-dup path's own cell policy →
-    // identical centroids → identical pairs
-    VectorOps.writeAnnIndex(spark, sfDir, idx, cells = cells)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(_.toSeq).toSet
-    val fromIdx = rows(DedupOps.cosineNearDupFromIndex(spark, sfDir, idx))
-    val inPlan = rows(DedupOps.cosineNearDupIvfCore(spark,
-      graft.sources.Tables.embeddings(spark, sfDir), cells,
-      DedupOps.NearDupNProbe, DedupOps.CosineDupThreshold))
-    assert(fromIdx == inPlan,
-      s"from-index near-dup must equal train-in-plan: " +
-        s"${fromIdx.diff(inPlan)} vs ${inPlan.diff(fromIdx)}")
   }
 
   /** 4 well-separated clusters + noise — the clustered structure real

@@ -9,6 +9,41 @@ import graft.operators.TextOps
 class BpeBatchedSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Sequential BPE with a caller-chosen merge budget — one pair-count
+    * job per merge, the reference order the batched trainer must
+    * reproduce. Returns (merges, final words, base vocabulary). */
+  private def bpeLoopOverN(docs: org.apache.spark.sql.DataFrame, iters: Int)
+      : (Seq[(Long, String, Long)], org.apache.spark.sql.DataFrame,
+        org.apache.spark.sql.DataFrame) = {
+    import org.apache.spark.sql.functions._
+    val base = TextOps.sentinelVocab(docs).persist()
+    val merges = Seq.newBuilder[(Long, String, Long)]
+    var words = base
+    var rank = 1
+    var exhausted = false
+    while (rank <= iters && !exhausted) {
+      val syms = split(trim(col("w")), "  ")
+      val top = TextOps.explodeNN(words, filter(
+          zip_with(syms, slice(syms, 2, Int.MaxValue - 8),
+            (a, b) => concat(a, lit(" "), b)),
+          p => p.isNotNull), "pair", col("cnt"))
+        .groupBy(col("pair")).agg(sum(col("cnt")).as("n_occ"))
+        .orderBy(col("n_occ").desc, col("pair"))
+        .limit(1)
+        .collect()
+      if (top.isEmpty) exhausted = true // every word is one symbol
+      else {
+        val pair = top(0).getString(0)
+        merges += ((rank.toLong, pair, top(0).getLong(1)))
+        words = words.withColumn("w", replace(col("w"),
+          lit(" " + pair.replace(" ", "  ") + " "),
+          lit(" " + pair.replace(" ", "") + " ")))
+        rank += 1
+      }
+    }
+    (merges.result(), words, base)
+  }
+
   private def docsOf(words: Seq[(String, Int)]) =
     words.flatMap { case (w, n) => Seq.fill(n)(w) }
       .grouped(50).map(_.mkString(" ")).toSeq.toDF("text")
@@ -19,7 +54,7 @@ class BpeBatchedSpec extends SparkSpec {
     // must admit all three merges in sequential-greedy order
     val docs = docsOf(Seq("aa" -> 30, "bb" -> 20, "cc" -> 10))
     val batched = TextOps.bpeLoopBatchedOver(docs, 3, 256)
-    val (seq3, _, base) = TextOps.bpeLoopOverN(spark, docs, 3)
+    val (seq3, _, base) = bpeLoopOverN(docs, 3)
     base.unpersist(false)
     assert(batched == seq3, s"$batched vs $seq3")
     assert(batched.map(_._2) == Seq("a a", "b b", "c c"))
@@ -33,7 +68,7 @@ class BpeBatchedSpec extends SparkSpec {
     // must still be exactly the sequential trainer's.
     val docs = docsOf(Seq("ab" -> 30, "bc" -> 20, "de" -> 10))
     val batched = TextOps.bpeLoopBatchedOver(docs, 3, 256)
-    val (seq3, _, base) = TextOps.bpeLoopOverN(spark, docs, 3)
+    val (seq3, _, base) = bpeLoopOverN(docs, 3)
     base.unpersist(false)
     assert(batched == seq3, s"$batched vs $seq3")
     assert(batched.map(_._2) == Seq("a b", "b c", "d e"))
@@ -45,7 +80,7 @@ class BpeBatchedSpec extends SparkSpec {
       .select(org.apache.spark.sql.functions.col("text"))
     val batched = TextOps.bpeLoopBatchedOver(docs, TextOps.BpeMergeIters, 256)
     val (seq8, _, base) =
-      TextOps.bpeLoopOverN(spark, docs, TextOps.BpeMergeIters)
+      bpeLoopOverN(docs, TextOps.BpeMergeIters)
     base.unpersist(false)
     assert(batched == seq8)
   }

@@ -186,8 +186,11 @@ class CrossCorpusSpec extends SparkSpec {
       (102L, Array(0.0f, 5.0f))).toDF("vec_id", "embedding")
     val langs = Seq((0L, "en"), (50L, "en"), (100L, "fr"), (101L, "fr"),
       (102L, "fr")).toDF("doc_id", "lang")
-    val got = VectorOps.bitextMineFrom(spark,
-        VectorOps.quantizedOf(spark, vecs), langs, "en", "fr")
+    val dot = graft.plans.DotProductLong.dotLong(spark) _
+    val quantized = vecs
+      .select(col("vec_id"), VectorOps.quantize(col("embedding")).as("qe"))
+      .withColumn("nrm", dot(col("qe"), col("qe")))
+    val got = VectorOps.bitextMineFrom(spark, quantized, langs, "en", "fr")
       .collect().map(r => r.getLong(0) -> r).toMap
     assert(got.size == 2)
     assert(got(0L).getAs[Long]("best_id") == 100L

@@ -267,7 +267,8 @@ class CurationPackSpec extends SparkSpec {
     assert(!docLevel.contains(100L),
       s"doc-level containment must MISS the partial quote, got $docLevel")
     // chunk-level: 3 of doc 100's 7 chunks carry benchmark fps (43% ≥ 30%)
-    val chunkLevel = CurationOps.chunkContamination(spark, dir).collect()
+    val chunkLevel = CurationOps.chunkContaminationOf(
+      CurationOps.chunkDocs(spark, dir)).collect()
     val flagged = chunkLevel.map(_.getAs[Long]("doc_id")).toSet
     assert(flagged == Set(100L),
       s"chunk containment must flag exactly doc 100, got ${chunkLevel.toSeq}")
@@ -447,23 +448,14 @@ class CurationPackSpec extends SparkSpec {
       "the report covers ingestion, validation and registration of files " +
         "in the archive, with notes on each failure mode."
     ).zipWithIndex.map { case (t, i) => ((100 + i).toLong, "clean", t) }
-    val labeled = (garbage ++ clean).toDF("doc_id", "label", "text")
-    val cal = TextOps.qualityCalibration(labeled).collect()
-    // the floor must sit in an EMPTY band: every garbage bin below it
-    // (not admitted), every clean bin at or above it (admitted)
-    cal.foreach { r =>
-      val admitted = r.getAs[Boolean]("admitted")
-      if (r.getAs[Long]("n_garbage") > 0)
-        assert(!admitted, s"garbage bin admitted: $r")
-      if (r.getAs[Long]("n_clean") > 0)
-        assert(admitted, s"clean bin rejected: $r")
-    }
-    // pin the measured split the QualityFloor10k scaladoc records:
-    // garbage tops out well under the floor, clean prose well over
-    val maxGarbage = cal.filter(_.getAs[Long]("n_garbage") > 0)
-      .map(_.getAs[Long]("max_q10k")).max
-    val minClean = cal.filter(_.getAs[Long]("n_clean") > 0)
-      .map(_.getAs[Long]("min_q10k")).min
+    val scored = (garbage ++ clean).toDF("doc_id", "label", "text")
+      .select(col("label"), TextOps.quality10k(col("text")).as("q10k"))
+      .collect().map(r => r.getString(0) -> r.getLong(1))
+    // pin the measured split the QualityFloor10k scaladoc records: the
+    // floor sits in an EMPTY band — garbage tops out well under it,
+    // clean prose well over
+    val maxGarbage = scored.filter(_._1 == "garbage").map(_._2).max
+    val minClean = scored.filter(_._1 == "clean").map(_._2).min
     assert(maxGarbage < TextOps.QualityFloor10k,
       s"garbage must stay under the floor, max=$maxGarbage")
     assert(minClean >= 5000,
@@ -492,7 +484,8 @@ class CurationPackSpec extends SparkSpec {
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(!docLevel.contains(100L),
       s"doc-level containment must MISS the short quote, got $docLevel")
-    val chunkLevel = CurationOps.chunkContamination(spark, dir)
+    val chunkLevel = CurationOps.chunkContaminationOf(
+        CurationOps.chunkDocs(spark, dir))
       .collect().map(_.getAs[Long]("doc_id")).toSet
     assert(chunkLevel.isEmpty,
       s"chunk containment must MISS the unaligned quote, got $chunkLevel")

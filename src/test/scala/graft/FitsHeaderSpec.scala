@@ -37,7 +37,7 @@ class FitsHeaderSpec extends AnyFunSuite {
   }
 
   test("parseAll walks primary + extension HDUs") {
-    val bytes = FitsHeader.renderMulti(Seq(
+    val bytes = FitsHeaderSpec.renderMulti(Seq(
       Seq("DATE-OBS" -> "x", "RA" -> "1.5"),
       Seq("GAINA" -> "4.2", "CCDNUM" -> "7"),
       Seq("GAINB" -> "4.0")))
@@ -94,4 +94,19 @@ class FitsHeaderSpec extends AnyFunSuite {
     assert(hdus(0)("RA") == "9")
     assert(hdus(1)("GAINA") == "1")
   }
+}
+
+object FitsHeaderSpec {
+  /** Render a multi-HDU FITS byte stream: the first HDU gets a leading
+    * SIMPLE card, the rest a leading XTENSION card, unless the caller
+    * already supplied one. No data blocks (NAXIS defaults absent → 0). */
+  def renderMulti(hdus: Seq[Seq[(String, String)]]): Array[Byte] =
+    hdus.zipWithIndex.map { case (kv, i) =>
+      val lead =
+        if (i == 0 && !kv.exists(_._1 == "SIMPLE")) Seq("SIMPLE" -> "T")
+        else if (i > 0 && !kv.exists(_._1 == "XTENSION"))
+          Seq("XTENSION" -> "IMAGE")
+        else Seq.empty
+      FitsHeader.render(lead ++ kv)
+    }.reduce(_ ++ _)
 }

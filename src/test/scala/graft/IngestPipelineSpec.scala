@@ -158,6 +158,26 @@ class IngestPipelineSpec extends SparkSpec {
     assert(err.getMessage.contains("archive_dir"))
   }
 
+  test("configFromFile: a non-integer dts_task_id names the file and key") {
+    val cfgFile = Files.createTempDirectory("cfgbad").resolve("save.cfg")
+    Files.write(cfgFile,
+      """delivery_notice_dir = /stage/in
+        |archive_dir = /archive
+        |bad_file_dir = /quarantine
+        |registry_dir = /registry
+        |bad_file_table_dir = /bad_file
+        |dts_task_id = 30x1
+        |""".stripMargin.getBytes)
+    val err = intercept[IllegalArgumentException] {
+      IngestPipeline.configFromFile(cfgFile.toString)
+    }
+    assert(!err.isInstanceOf[NumberFormatException],
+      s"a bare parse error escaped: $err")
+    assert(err.getMessage.contains(cfgFile.toString) &&
+      err.getMessage.contains("dts_task_id") &&
+      err.getMessage.contains("30x1"), err.getMessage)
+  }
+
   test("registry layout: nite-partitioned, per-nite scans prune (S6)") {
     val (stage, cfg) = mkConfig()
     writeFixtures(stage)
@@ -187,12 +207,12 @@ class IngestPipelineSpec extends SparkSpec {
   test("keyword contract: extension HDUs validated against the R-ext flags") {
     val (stage, cfg) = mkConfig()
     // multi-HDU file: complete primary + one complete extension → archive
-    val goodMulti = FitsHeader.renderMulti(Seq(primaryCards, extCards))
+    val goodMulti = FitsHeaderSpec.renderMulti(Seq(primaryCards, extCards))
     Files.write(stage.resolve("DECam_00000010.fits.fz"), goodMulti)
     Files.write(stage.resolve("DECam_00000010.fits.fz.dbb"),
       notifyBytesFor(goodMulti))
     // multi-HDU file: complete primary, extension 2 missing GAINA/GAINB
-    val badExt = FitsHeader.renderMulti(Seq(primaryCards, extCards,
+    val badExt = FitsHeaderSpec.renderMulti(Seq(primaryCards, extCards,
       extCards.filterNot(c => c._1 == "GAINA" || c._1 == "GAINB")))
     Files.write(stage.resolve("DECam_00000011.fits.fz"), badExt)
     Files.write(stage.resolve("DECam_00000011.fits.fz.dbb"),

@@ -7,6 +7,10 @@ import org.apache.spark.sql.functions._
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
 
+  /** Stored-frame count of an AVI (container walk only, no decode). */
+  private def storedFrames(content: Array[Byte]): Int =
+    MultimodalOps.AviMjpegCodec.frameChunks(content).length
+
   private def media(n: Int, bytesPer: Int = 100) =
     spark.createDataset((0 until n).map { i =>
       MediaFile(i.toLong, if (i % 2 == 0) "image" else "audio",
@@ -69,24 +73,6 @@ class MultimodalSpec extends SparkSpec {
       .collect()
     assert(frames.length == 5 * 2, "4 frames every 2 = 2 samples per media")
     assert(frames.forall(f => f.frame_sig == 1000L + f.frame_idx))
-  }
-
-  test("byte-budget repartitioning scales partition count with data size") {
-    // explicit estimates (in-memory relations carry only default-size
-    // stats); file-backed media get the same sizing free from scan stats
-    val small = MultimodalOps.repartitionByBytes(media(8, 100), 10000,
-      estimatedBytes = Some(8L * 100))
-    assert(small.rdd.getNumPartitions == 1)
-    val big = MultimodalOps.repartitionByBytes(media(64, 5000), 10000,
-      estimatedBytes = Some(64L * 5000))
-    assert(big.rdd.getNumPartitions >= 8)
-    // stats path: no job is run, and a parquet-backed dataset sizes from
-    // its scan bytes
-    val dir = java.nio.file.Files.createTempDirectory("media").toString
-    media(64, 5000).write.mode("overwrite").parquet(dir)
-    val fromFiles = spark.read.parquet(dir).as[MediaFile]
-    val sized = MultimodalOps.repartitionByBytes(fromFiles, 10000)
-    assert(sized.rdd.getNumPartitions >= 2)
   }
 
   test("media query surface matches the stub arithmetic") {
@@ -593,7 +579,7 @@ class MultimodalSpec extends SparkSpec {
     val f = MultimodalOps.AviMjpegCodec.decode(bomb) // must not throw
     val stub = DecodeStub.decode(bomb)
     assert(f.copy(feature = null) == stub.copy(feature = null))
-    assert(MultimodalOps.AviMjpegCodec.storedFrames(bomb.content) == 0)
+    assert(storedFrames(bomb.content) == 0)
     // the depth CAP (not just iteration) is what bounds work: a movi
     // list buried under the cap still yields its frames, one below the
     // cap does not — pin the bound so a refactor cannot silently
@@ -620,9 +606,9 @@ class MultimodalSpec extends SparkSpec {
       c.put("00dc".getBytes("ISO-8859-1")).putInt(p.length).put(p)
       c.array()
     }
-    assert(MultimodalOps.AviMjpegCodec.storedFrames(
+    assert(storedFrames(
       rewrap(nest(10, frame))) == 1, "within the cap: frames found")
-    assert(MultimodalOps.AviMjpegCodec.storedFrames(
+    assert(storedFrames(
       rewrap(nest(40, frame))) == 0, "beyond the cap: descent stops")
   }
 

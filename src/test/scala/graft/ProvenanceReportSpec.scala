@@ -18,7 +18,8 @@ class ProvenanceReportSpec extends SparkSpec {
     import spark.implicits._
     val stamped = Seq(("f1", t1), ("f2", t2), ("f3", t2))
       .toDF("filename", "task_id")
-    val joined = Provenance.withTaskInfo(stamped, tasks)
+    val joined = stamped.join(broadcast(tasks.select(col("task_id"),
+      col("prov_msg"))), Seq("task_id"), "left_outer")
     assert(joined.where(col("prov_msg") === "round2").count() == 2)
   }
 

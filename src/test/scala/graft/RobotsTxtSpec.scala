@@ -13,6 +13,23 @@ import graft.operators.UrlOps
   * group-selection corners. */
 class RobotsTxtSpec extends SparkSpec {
 
+  /** The SQL LIKE twin of a robots pattern (`*`→`%`, LIKE metachars
+    * escaped with `\`, a trailing `%` unless `$`-anchored); None for the
+    * empty pattern (matches nothing). */
+  private def likePattern(pattern: String): Option[String] = {
+    if (pattern == null || pattern.isEmpty) return None
+    val anchored = pattern.charAt(pattern.length - 1) == '$'
+    val pat = if (anchored) pattern.substring(0, pattern.length - 1) else pattern
+    val sb = new java.lang.StringBuilder(pat.length + 8)
+    pat.foreach {
+      case '*' => sb.append('%')
+      case c @ ('%' | '_' | '\\') => sb.append('\\').append(c)
+      case c => sb.append(c)
+    }
+    if (!anchored) sb.append('%')
+    Some(sb.toString)
+  }
+
   private def b(s: String): Array[Byte] =
     s.getBytes(java.nio.charset.StandardCharsets.UTF_8)
 
@@ -132,7 +149,7 @@ class RobotsTxtSpec extends SparkSpec {
     }.distinct
     import spark.implicits._
     val df = cases.map { case (pat, path) =>
-      (pat, path, RobotsTxt.likePattern(pat).orNull) }
+      (pat, path, likePattern(pat).orNull) }
       .toDF("pat", "path", "lp")
     val got = df.select(col("pat"), col("path"),
         coalesce(expr("path LIKE lp"), lit(false)).as("sql_like"))

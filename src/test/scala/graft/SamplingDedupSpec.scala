@@ -7,6 +7,18 @@ import org.apache.spark.sql.functions._
   * sampling (corpus mixture building) and SimHash banded near-dup. */
 class SamplingDedupSpec extends SparkSpec {
 
+  /** Single-window reference form of [[CurationOps.fixedKSample]] — the
+    * equality baseline for its two-phase plan. */
+  private def fixedKSamplePlain(df: org.apache.spark.sql.DataFrame,
+      idCol: String, stratumCol: String, k: Int) = {
+    val w = org.apache.spark.sql.expressions.Window
+      .partitionBy(col(stratumCol)).orderBy(col("rk"), col(idCol))
+    df.withColumn("rk", md5(col(idCol).cast("string").cast("binary")))
+      .withColumn("rn", row_number().over(w))
+      .where(col("rn") <= k)
+      .drop("rk")
+  }
+
   test("stratified sample: deterministic, rate-accurate, stratum-sensitive") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val total = docs.groupBy(col("lang")).count().collect()
@@ -56,7 +68,7 @@ class SamplingDedupSpec extends SparkSpec {
         r.getAs[String]("lang")) -> r.getAs[Int]("rn")).toMap
     val twoPhase = asMap(CurationOps.fixedKSample(df, "doc_id", "lang", k)
       .select(col("doc_id"), col("lang"), col("rn")))
-    val plain = asMap(CurationOps.fixedKSamplePlain(df, "doc_id", "lang", k)
+    val plain = asMap(fixedKSamplePlain(df, "doc_id", "lang", k)
       .select(col("doc_id"), col("lang"), col("rn")))
     assert(twoPhase == plain,
       "the salted two-phase plan must be result-identical to one window")
@@ -219,59 +231,6 @@ class SamplingDedupSpec extends SparkSpec {
     assert(labeling(DedupOps.connectedComponents(three, driverMaxEdges = 2))
       == labeling(DedupOps.connectedComponents(three)),
       "bound+1 edges must dispatch to the loop and still agree")
-  }
-
-  test("connectedComponentsSalted: identical to plain on a planted " +
-      "10%-of-edges star and random graphs") {
-    import spark.implicits._
-    def labeling(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    // hub-heavy fixture: 10% of all edges attach to one hub (node 1000
-    // — NOT the min, so its component's label must still propagate
-    // THROUGH the hub), the rest are chains and pairs
-    val hub = (1L to 30L).map(i => (1000L, 2000L + i))
-    val chains = (0 until 9).flatMap { c =>
-      val base = 100L * c
-      (0 until 29).map(i => (base + i, base + i + 1))
-    }
-    val star = (hub ++ chains :+ (2001L, 5L)).toDF("id_a", "id_b")
-    val plain = labeling(DedupOps.connectedComponents(star))
-    val salted = labeling(DedupOps.connectedComponentsSalted(star))
-    assert(salted == plain, "salting must never change the labeling")
-    // the hub's component folded into chain 0 through edge (2001, 5)
-    assert(salted(1000L) == 0L && salted(2030L) == 0L)
-    // randomized graphs: same equality, several shapes
-    for (seed <- 1 to 3) {
-      val rnd = new scala.util.Random(seed)
-      val n = 12 + rnd.nextInt(8)
-      val edges = Seq.fill(10 + rnd.nextInt(10))(
-        (rnd.nextInt(n).toLong, rnd.nextInt(n).toLong))
-        .filter(e => e._1 != e._2)
-      if (edges.nonEmpty) {
-        val df = edges.toDF("id_a", "id_b")
-        assert(labeling(DedupOps.connectedComponentsSalted(df))
-          == labeling(DedupOps.connectedComponents(df)), s"seed $seed")
-      }
-    }
-    // AUTO dispatch (r17): the star's hub holds 31/62 endpoint slots
-    // over ~300 nodes (degree skew far beyond 8x average) -> salted;
-    // a uniform chain graph stays plain. Both labelings equal plain's
-    // by the equality above; here pin the DECISION itself.
-    import graft.operators.ReconOps
-    val starKeys = star.select(col("id_a").as("k"))
-      .unionAll(star.select(col("id_b").as("k")))
-    assert(ReconOps.keySkewX100(starKeys, "k") >=
-      ReconOps.SkewAutoCutoverX100, "star fixture must trip the census")
-    val chainDf = chains.toDF("id_a", "id_b")
-    val chainKeys = chainDf.select(col("id_a").as("k"))
-      .unionAll(chainDf.select(col("id_b").as("k")))
-    assert(ReconOps.keySkewX100(chainKeys, "k") <
-      ReconOps.SkewAutoCutoverX100, "uniform chains must stay plain")
-    assert(labeling(DedupOps.connectedComponentsAuto(star)) == plain,
-      "auto (salted branch) must produce the plain labeling")
-    assert(labeling(DedupOps.connectedComponentsAuto(chainDf)) ==
-      labeling(DedupOps.connectedComponents(chainDf)),
-      "auto (plain branch) must produce the plain labeling")
   }
 
   test("connectedComponents: checkpoint blocks freed (no storage leak)") {

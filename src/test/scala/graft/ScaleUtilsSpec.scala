@@ -176,14 +176,4 @@ class ScaleUtilsSpec extends SparkSpec {
     val expected = graft.sources.Tables.orders(spark, sfDir).count()
     assert(ScaleUtils.footerRowCount(spark, dir) == expected)
   }
-
-  test("repartitionForKey sizes partition count from stats") {
-    val li = graft.sources.Tables.lineitem(spark, sfDir)
-    val small = ScaleUtils.repartitionForKey(li, "l_orderkey",
-      targetPartitionBytes = 64L * 1024 * 1024)
-    assert(small.rdd.getNumPartitions >= 1)
-    val many = ScaleUtils.repartitionForKey(li, "l_orderkey",
-      targetPartitionBytes = 64L * 1024, estimatedBytes = Some(64L * 1024 * 100))
-    assert(many.rdd.getNumPartitions == 100)
-  }
 }

@@ -12,6 +12,15 @@ class StreamingAnalyticsSpec extends SparkSpec {
 
   private def ts(s: String) = Timestamp.valueOf(s)
 
+  /** In-memory static side for the admission gate: (band keys, shingle
+    * sets) of `corpus`, persisted so a run's per-batch joins reuse the
+    * blocks — the parity reference for the table-backed index. The
+    * caller unpersists both frames. */
+  private def corpusIndex(corpus: org.apache.spark.sql.DataFrame) = (
+    graft.operators.DedupOps.bandKeysPerRow(corpus).persist(),
+    corpus.select(col("doc_id").as("dup_of"),
+      graft.operators.TextOps.shingles3(col("text")).as("ts_c")).persist())
+
   test("foldSessions: gap splitting, carry-in continuation") {
     val evs = Seq(
       Ev(1, ts("2024-01-01 10:00:00"), 1, "click", 1.0),
@@ -76,13 +85,14 @@ class StreamingAnalyticsSpec extends SparkSpec {
 
   test("dedup-on-ingest gate: parity with the batch chain, streaming run") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val (cbk, csh) = StreamingAnalytics.corpusIndex(docs)
+    val (cbk, csh) = corpusIndex(docs)
 
-    // 1. PARITY: gating the corpus against itself must flag exactly the
-    // docs that appear in the batch chain's dup pairs (per-row band keys
-    // == aggregated band keys; set-Jaccard == shared-shingle Jaccard)
-    val flagged = StreamingAnalytics.gateAgainstCorpus(docs, cbk, csh)
-      .collect()
+    // 1. PARITY: admitting the corpus against itself must flag as dup
+    // exactly the docs that appear in the batch chain's dup pairs
+    // (per-row band keys == aggregated band keys; set-Jaccard ==
+    // shared-shingle Jaccard)
+    val flagged = StreamingAnalytics.admitBatch(docs, cbk, csh)
+      .where(col("verdict") === "dup").collect()
     val pairDocs = graft.operators.DedupOps.textDupPairs(spark, sfDir)
       .collect().flatMap(r => Seq(r.getLong(0), r.getLong(1))).toSet
     assert(flagged.map(_.getLong(0)).toSet == pairDocs,
@@ -104,10 +114,10 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val ckpt = java.nio.file.Files.createTempDirectory("gateckpt").toString
     val buf = scala.collection.mutable.ArrayBuffer
       .empty[(Long, Long, Double)]
-    val q = StreamingAnalytics.runGate(stream, cbk, csh, ckpt) {
+    val q = StreamingAnalytics.runAdmission(stream, cbk, csh, ckpt) {
       (verdicts, _) =>
-        buf ++= verdicts.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getAs[Double]("jac"))); ()
+        buf ++= verdicts.where(col("verdict") === "dup").collect().map(r =>
+          (r.getLong(0), r.getAs[Long]("dup_of"), r.getAs[Double]("jac"))); ()
     }
     q.awaitTermination()
     assert(buf.exists { case (id, of, jac) =>
@@ -123,7 +133,7 @@ class StreamingAnalyticsSpec extends SparkSpec {
 
   test("table-backed corpus index: gate parity with the in-memory index") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val (cbk, csh) = StreamingAnalytics.corpusIndex(docs)
+    val (cbk, csh) = corpusIndex(docs)
     val idxDir = java.nio.file.Files.createTempDirectory("gateidx").toString
     StreamingAnalytics.writeCorpusIndex(docs, idxDir)
     val (tbk, tsh) = StreamingAnalytics.loadCorpusIndex(spark, idxDir)
@@ -203,279 +213,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
         s"(feedback append), got $buf")
     // and the doc did not flag against itself (eager-verdict ordering)
     assert(buf.count(_._1 == 9101L) == 1)
-  }
-
-  test("warc ingest stream: split → charset decode → extract → WET per " +
-      "batch, gate verdicts, replay-idempotent") {
-    def rec(id: String, uri: String, payload: String): String =
-      s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: <$id>\r\n" +
-        s"WARC-Target-URI: $uri\r\nContent-Length: ${payload.length}" +
-        s"\r\n\r\n$payload\r\n\r\n"
-    def http(html: String, cs: String = "") =
-      s"HTTP/1.1 200 OK\r\nContent-Type: text/html$cs\r\n\r\n$html"
-    def gz(s: String): Array[Byte] = {
-      val bos = new java.io.ByteArrayOutputStream()
-      val g = new java.util.zip.GZIPOutputStream(bos)
-      g.write(s.getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-      g.close(); bos.toByteArray
-    }
-    val novel = "a genuinely fresh walrus umbrella paragraph with many " +
-      "distinct readable words and the usual connective tissue of an " +
-      "honest document"
-    val other = "completely different prose describing quantum chess " +
-      "strategies and the many openings that tournament players have " +
-      "favored over the long history of the game"
-    val inDir = java.nio.file.Files.createTempDirectory("warcin")
-    // batch 1: one novel page; batch 2: a COPY under a new record id
-    // (must flag dup of the batch-1 admission) + a cp1252-declared page
-    // whose curly-quote byte 0x93 must decode to U+201C
-    java.nio.file.Files.write(inDir.resolve("a.warc.gz"), gz(
-      rec("urn:uuid:w-1", "http://w.example/1",
-        http(s"<html><body><p>$novel</p></body></html>"))))
-    Thread.sleep(1100) // distinct mtimes → deterministic batch order
-    java.nio.file.Files.write(inDir.resolve("b.warc.gz"), gz(
-      rec("urn:uuid:w-2", "http://w.example/2",
-        http(s"<html><body><p>$novel</p></body></html>")) +
-        rec("urn:uuid:w-3", "http://w.example/3",
-          http(s"<html><body><p>$other \u0093q\u0094</p></body></html>",
-            cs = "; charset=windows-1252"))))
-    val idxDir = java.nio.file.Files.createTempDirectory("warcidx")
-      .toString + "/never_written"
-    val outDir = java.nio.file.Files.createTempDirectory("warcout").toString
-    val binSchema = StructType(Seq(StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    def drive(ckpt: String): Seq[(Long, String, Any)] = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String, Any)]
-      val q = StreamingAnalytics.runWarcIngest(
-        spark.readStream.format("binaryFile").schema(binSchema)
-          .option("pathGlobFilter", "*.warc*")
-          .option("maxFilesPerTrigger", "1").load(inDir.toString),
-        idxDir, outDir,
-        java.nio.file.Files.createTempDirectory(ckpt).toString) {
-        (verdicts, _) =>
-          buf ++= verdicts.collect().map(r =>
-            (r.getLong(0), r.getAs[String]("verdict"), r.get(2)))
-      }
-      q.awaitTermination()
-      buf.toSeq
-    }
-    val first = drive("warcck1")
-    def did(ident: String): Long =
-      spark.range(1).select(xxhash64(lit(ident))).head().getLong(0)
-    val byId = first.map(t => t._1 -> t).toMap
-    assert(byId(did("urn:uuid:w-1"))._2 == "admit", s"w-1 admits: $first")
-    assert(byId(did("urn:uuid:w-2"))._2 == "dup" &&
-      byId(did("urn:uuid:w-2"))._3 == did("urn:uuid:w-1"),
-      s"the copy must flag against the batch-1 admission: $first")
-    assert(byId(did("urn:uuid:w-3"))._2 == "admit", s"w-3 admits: $first")
-    // WET materialization: one row per kept record, charset honored
-    val wet = spark.read.option("basePath", s"$outDir/wet")
-      .parquet(s"$outDir/wet")
-      .select(col("uri"), col("text")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(wet.size == 3)
-    assert(wet("http://w.example/1").startsWith("a genuinely fresh"))
-    assert(wet("http://w.example/3").contains('“') &&
-      wet("http://w.example/3").contains('”'),
-      s"cp1252 quotes must decode via the declared charset: " +
-        s"${wet("http://w.example/3").takeRight(20)}")
-    // replay with a FRESH checkpoint over the populated stores: same
-    // verdicts (self-id exclusion keeps admits; the dup still flags its
-    // original rep), WET partitions rewritten byte-identically
-    val second = drive("warcck2")
-    assert(second.toSet == first.toSet,
-      s"replay must re-emit the same verdicts:\n$first\n$second")
-    val wet2 = spark.read.parquet(s"$outDir/wet")
-      .select(col("uri"), col("text")).collect()
-      .map(r => r.getString(0) -> r.getString(1)).toMap
-    assert(wet2 == wet)
-  }
-
-  test("warc ingest stream: robots admission quarantines disallowed " +
-      "records before WET and the gate, replay-idempotent") {
-    def rec(id: String, uri: String, payload: String): String =
-      s"WARC/1.0\r\nWARC-Type: response\r\nWARC-Record-ID: <$id>\r\n" +
-        s"WARC-Target-URI: $uri\r\nContent-Length: ${payload.length}" +
-        s"\r\n\r\n$payload\r\n\r\n"
-    def http(html: String) =
-      s"HTTP/1.1 200 OK\r\nContent-Type: text/html\r\n\r\n$html"
-    val novel = "an original essay about deep sea cartography with " +
-      "plenty of distinct readable words and the usual connective " +
-      "tissue of an honest document"
-    val other = "a different long discussion of alpine beekeeping " +
-      "practices with many varied words and the usual connective " +
-      "tissue of an honest document"
-    val banned = "content that must never reach the corpus because " +
-      "its path is disallowed by the host robots rules entirely"
-    val inDir = java.nio.file.Files.createTempDirectory("robin")
-    java.nio.file.Files.write(inDir.resolve("a.warc"),
-      (rec("urn:uuid:r-1", "http://w.example/1",
-        http(s"<html><body><p>$novel</p></body></html>")) +
-        rec("urn:uuid:r-2", "http://WWW.w.example:80/2?x=1",
-          http(s"<html><body><p>$banned</p></body></html>")) +
-        rec("urn:uuid:r-3", "http://w.example/3",
-          http(s"<html><body><p>$other</p></body></html>")))
-        .getBytes(java.nio.charset.StandardCharsets.ISO_8859_1))
-    val idxDir = java.nio.file.Files.createTempDirectory("robidx")
-      .toString + "/never_written"
-    val outDir = java.nio.file.Files.createTempDirectory("robout").toString
-    val binSchema = StructType(Seq(StructField("path", StringType),
-      StructField("modificationTime", TimestampType),
-      StructField("length", LongType),
-      StructField("content", BinaryType)))
-    import spark.implicits._
-    // the host disallows /2 (and the record's messy www./port/query
-    // form must still resolve to it); /1 and /3 carry no matching rule
-    val robots = Seq(("w.example", Seq((false, "/2"))))
-      .toDF("host", "rules")
-    def drive(ckpt: String): Seq[(Long, String)] = {
-      val buf = scala.collection.mutable.ArrayBuffer.empty[(Long, String)]
-      val q = StreamingAnalytics.runWarcIngest(
-        spark.readStream.format("binaryFile").schema(binSchema)
-          .option("pathGlobFilter", "*.warc*").load(inDir.toString),
-        idxDir, outDir,
-        java.nio.file.Files.createTempDirectory(ckpt).toString,
-        robots = Some(robots)) { (verdicts, _) =>
-        buf ++= verdicts.collect().map(r =>
-          (r.getLong(0), r.getAs[String]("verdict")))
-      }
-      q.awaitTermination()
-      buf.toSeq
-    }
-    val first = drive("robck1")
-    def did(ident: String): Long =
-      spark.range(1).select(xxhash64(lit(ident))).head().getLong(0)
-    assert(first.map(_._1).toSet ==
-      Set(did("urn:uuid:r-1"), did("urn:uuid:r-3")),
-      s"the disallowed record must never reach the gate: $first")
-    assert(first.forall(_._2 == "admit"))
-    val denied = spark.read.parquet(s"$outDir/robots_denied")
-      .select(col("uri")).collect().map(_.getString(0)).toSet
-    assert(denied == Set("http://WWW.w.example:80/2?x=1"),
-      s"denied quarantine must carry exactly the disallowed capture: " +
-        s"$denied")
-    val wet = spark.read.parquet(s"$outDir/wet")
-      .select(col("uri")).collect().map(_.getString(0)).toSet
-    assert(wet == Set("http://w.example/1", "http://w.example/3"),
-      s"WET must carry only admitted captures: $wet")
-    // replay over the populated stores: same verdicts, same routing
-    val second = drive("robck2")
-    assert(second.toSet == first.toSet)
-    assert(spark.read.parquet(s"$outDir/robots_denied")
-      .select(col("uri")).collect().map(_.getString(0)).toSet == denied)
-  }
-
-  test("semantic gate: batch-2 embedding duplicating an admitted " +
-      "batch-1 doc is rejected sem_dup") {
-    // the later-batches-see-earlier-admissions contract on the EMBEDDING
-    // axis: two texts with nothing in common textually but the same
-    // embedding — batch 1 admits, writeSemIndex appends its cells +
-    // vector, batch 2's gate must flag against that admission with the
-    // exact cosine (1.0 for an identical vector)
-    val annDir = java.nio.file.Files.createTempDirectory("semann").toString
-    graft.operators.VectorOps.writeAnnIndex(spark, sfDir, annDir)
-    val dim = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(size(col("embedding"))).first().getInt(0)
-    val emb = Array.tabulate(dim)(i => 0.3f + 0.01f * (i % 7))
-    val textA = "a genuinely novel paragraph about walrus migration " +
-      "routes with plenty of distinct readable words and the usual " +
-      "connective tissue of an honest document"
-    val textB = "completely different prose describing quantum chess " +
-      "strategies and the many openings that tournament players have " +
-      "favored over the long history of the game"
-    val idxDir = java.nio.file.Files.createTempDirectory("semidx")
-      .toString + "/never_written"
-    val inDir = java.nio.file.Files.createTempDirectory("semin").toString
-    Seq((9301L, textA, emb)).toDF("doc_id", "text", "embedding")
-      .coalesce(1).write.mode("append").parquet(inDir)
-    Thread.sleep(1100) // distinct mtimes → deterministic batch order
-    Seq((9302L, textB, emb)).toDF("doc_id", "text", "embedding")
-      .coalesce(1).write.mode("append").parquet(inDir)
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("text", StringType),
-      StructField("embedding", ArrayType(FloatType))))
-    val buf =
-      scala.collection.mutable.ArrayBuffer.empty[(Long, String, Any, Any)]
-    val q = StreamingAnalytics.runCuratedIngestSem(
-      spark.readStream.schema(schema).option("maxFilesPerTrigger", "1")
-        .parquet(inDir),
-      idxDir, annDir,
-      java.nio.file.Files.createTempDirectory("semckpt").toString) {
-      (verdicts, _) =>
-        buf ++= verdicts.collect().map(r => (r.getLong(0),
-          r.getAs[String]("verdict"), r.getAs[Any]("sem_dup_of"),
-          r.getAs[Any]("cos")))
-    }
-    q.awaitTermination()
-    val byId = buf.map(t => t._1 -> t).toMap
-    assert(byId(9301L)._2 == "admit",
-      s"novel text + novel embedding must admit, got $buf")
-    assert(byId(9302L)._2 == "sem_dup" && byId(9302L)._3 == 9301L,
-      s"the NEXT batch's embedding copy must flag against the prior " +
-        s"admission (sem-index append), got $buf")
-    assert(byId(9302L)._4 == 1.0,
-      s"identical vector must verify at exact cosine 1.0, got $buf")
-    // the maintained group table carries the semantic edge too
-    val groups = StreamingAnalytics.loadGroupTable(spark, idxDir)
-      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(groups.get(9302L).contains(9301L),
-      s"sem_dup edge must reach the group table, got ${groups.toSeq}")
-  }
-
-  test("ANN retrain trigger: stale coverage rebuilds + re-posts, " +
-      "searches served across the swap") {
-    import graft.operators.VectorOps
-    val dim = 8
-    def vec(seed: Int) = Array.tabulate(dim)(i => seed * 0.1f + i * 0.01f)
-    val all = (0L until 10L).map(id => (id, vec(id.toInt % 4 + 1)))
-    val q10 = VectorOps.quantizedOf(spark,
-      all.toDF("vec_id", "embedding")).persist()
-    val annDir = java.nio.file.Files.createTempDirectory("retrann").toString
-    // bootstrap: index trained + built over only the first 2 vectors —
-    // the corpus then grows to 10 without appends, so coverage = 20%
-    VectorOps.writeAnnIndexFrom(spark,
-      q10.where(col("vec_id") < 2), annDir, cells = 2)
-    val idxDir = java.nio.file.Files.createTempDirectory("retridx").toString
-    q10.select(col("vec_id").as("doc_id"), col("qe"), col("nrm"))
-      .withColumn("batch", lit(0L)).write.mode("overwrite")
-      .partitionBy("batch").parquet(s"$idxDir/sem_vectors")
-    // placeholder postings from the RETIRED quantizer era — the rebuild
-    // must replace them wholesale (cell ids across quantizer
-    // generations must never meet in one join)
-    Seq.tabulate(10)(i => (i.toLong, 77)).toDF("doc_id", "cluster")
-      .withColumn("batch", lit(0L)).write.mode("overwrite")
-      .partitionBy("batch").parquet(s"$idxDir/sem_cells")
-    // below the 80% floor -> rebuild fires
-    val (cov1, rebuilt1) =
-      StreamingAnalytics.maybeRebuildAnnIndex(spark, idxDir, annDir)
-    assert(cov1 == 200000L && rebuilt1, s"($cov1, $rebuilt1)")
-    // after the swap the index serves the FULL corpus...
-    val (_, assigns, _, _) = VectorOps.loadAnnIndex(spark, annDir)
-    assert(assigns.select(col("vec_id")).distinct().count() == 10)
-    val cov2 = VectorOps.annIndexStaleness(spark,
-        q10.select(col("vec_id")), annDir)
-      .select(col("coverage_ppm")).collect().head.getLong(0)
-    assert(cov2 == 1000000L)
-    // ...and the postings were re-posted against the NEW centroids
-    val cells = spark.read.parquet(s"$idxDir/sem_cells")
-    assert(cells.select(col("doc_id")).distinct().count() == 10)
-    assert(cells.where(col("cluster") === 77).count() == 0,
-      "retired-era placeholder postings must be gone")
-    // served throughout: the gate answers against the swapped state —
-    // a batch vector identical to an indexed doc flags sem_dup
-    val (sc, sv) = StreamingAnalytics.loadSemIndexOrEmpty(spark, idxDir)
-    val flagged = StreamingAnalytics.semGateAgainstIndex(spark,
-      Seq((99L, all(5)._2)).toDF("doc_id", "embedding"),
-      annDir, sc, sv).collect()
-    assert(flagged.exists(r => r.getLong(0) == 99L),
-      s"post-swap gate must flag the duplicate, got ${flagged.toSeq}")
-    // fresh index: the trigger measures and declines
-    val (cov3, rebuilt3) =
-      StreamingAnalytics.maybeRebuildAnnIndex(spark, idxDir, annDir)
-    assert(cov3 == 1000000L && !rebuilt3)
-    q10.unpersist()
   }
 
   test("curated ingest loop: unseeded index dir bootstraps empty") {
@@ -647,7 +384,7 @@ class StreamingAnalyticsSpec extends SparkSpec {
 
   test("admission policy: dup > repetitive > low_quality > admit") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
-    val (cbk, csh) = StreamingAnalytics.corpusIndex(docs)
+    val (cbk, csh) = corpusIndex(docs)
     val dupText = docs.orderBy(col("doc_id")).select("doc_id", "text").head()
     // a corpus replay, a keyboard-mash doc, a thin junk doc, a good doc
     val good = "the quick brown fox jumps over a lazy dog and then " +
@@ -679,25 +416,7 @@ class StreamingAnalyticsSpec extends SparkSpec {
     cbk.unpersist(); csh.unpersist(); ()
   }
 
-  test("dedupStream: replayed deliveries within the watermark are dropped") {
-    val schema = StructType(Seq(
-      StructField("event_id", LongType), StructField("ts", TimestampType),
-      StructField("user_id", LongType), StructField("event_type", StringType),
-      StructField("value", DoubleType)))
-    val base = graft.sources.Tables.events(spark, sfDir)
-      .select("event_id", "ts", "user_id", "event_type", "value")
-    val dir = java.nio.file.Files.createTempDirectory("dedupstream").toString
-    // simulate at-least-once delivery: every event arrives twice
-    base.unionAll(base).write.mode("overwrite").parquet(dir)
-    val stream = spark.readStream.schema(schema).parquet(dir)
-    val got = StreamingAnalytics.runToMemory(spark,
-      StreamingAnalytics.dedupStream(stream, Seq("event_id")), "dedup_stream")
-    assert(got.count() == base.select("event_id").distinct().count(),
-      "exactly one row per key must survive")
-    assert(got.groupBy("event_id").count().where($"count" > 1).count() == 0)
-  }
-
-  test("drift monitor: maintained distribution, alarm parity, compaction") {
+  test("drift monitor: maintained distribution, alarm parity") {
     import graft.operators.TextOps
     val dir = java.nio.file.Files.createTempDirectory("drift").toString
     // never-seeded dir reads as the empty distribution
@@ -722,11 +441,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
     val total = StreamingAnalytics.loadDriftIndexOrEmpty(spark, dir)
       .agg(sum($"cnt")).head.getLong(0)
     assert(total == 6L + 5L, s"b1 (6 tokens) + b2 (5 tokens): $total")
-    // compaction is file hygiene only — counts unchanged
-    StreamingAnalytics.compactDriftIndex(spark, dir)
-    val afterCompact = StreamingAnalytics.loadDriftIndexOrEmpty(spark, dir)
-      .agg(sum($"cnt")).head.getLong(0)
-    assert(afterCompact == total)
     // arithmetic parity with the batch-mode q_vocab_drift: even docs as
     // the corpus side, odd docs as the batch side
     val parity = Seq((0L, "en", "alpha beta gamma"), (2L, "en", "delta"),
@@ -740,36 +454,8 @@ class StreamingAnalyticsSpec extends SparkSpec {
       s"monitor and query disagree: $viaQuery vs $viaMonitor")
   }
 
-  test("per-source drift: the drifted feed stands out, calm feed reads low") {
-    import graft.operators.TextOps
-    val corpusDocs = Seq((0L, "en", "alpha beta gamma alpha beta delta"))
-      .toDF("doc_id", "lang", "text")
-    val corpus = TextOps.tokenBuckets(corpusDocs)
-    // srcA mirrors the corpus vocabulary; srcB is disjoint
-    val batch = Seq(
-      (1L, "srcA", "alpha beta gamma delta"),
-      (2L, "srcB", "zeta eta theta iota"))
-      .toDF("doc_id", "source", "text")
-    val by = StreamingAnalytics.batchDriftBySource(batch, corpus)
-      .collect().map(r => r.getAs[String]("source") -> r).toMap
-    assert(by.size == 2)
-    val calm = by("srcA").getAs[Long]("tv_ppm")
-    val loud = by("srcB").getAs[Long]("tv_ppm")
-    assert(calm < loud, s"drifted feed must stand out: $calm vs $loud")
-    assert(loud >= 600000L, s"disjoint-vocab feed must alarm: $loud")
-    // a single-source batch's per-source row IS the global alarm row
-    // (shared arithmetic, grouped)
-    val solo = batch.where($"source" === "srcB")
-    val g = StreamingAnalytics.batchDrift(
-      solo.withColumn("lang", org.apache.spark.sql.functions.lit("en")),
-      corpus).head
-    val s = StreamingAnalytics.batchDriftBySource(solo, corpus).head
-    assert(s.getAs[Long]("tv_ppm") == g.getAs[Long]("tv_ppm")
-      && s.getAs[Long]("n_buckets") == g.getAs[Long]("n_buckets"))
-  }
-
-  test("contamination gate: quoted benchmark gram flagged, " +
-      "contaminated outranks dup in the full policy") {
+  test("contamination gate: only the doc quoting a benchmark gram " +
+      "is flagged, with its one hit") {
     import graft.operators.DedupOps
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val benchGrams = DedupOps.benchmarkGrams(spark, sfDir)
@@ -792,306 +478,6 @@ class StreamingAnalyticsSpec extends SparkSpec {
       s"only the quoting doc may flag: ${flagged.mkString("; ")}")
     assert(flagged.head.getAs[Long]("n_bench_hits") == 1L,
       s"exactly the one quoted gram: ${flagged.head}")
-    // full policy: a verbatim benchmark replay is BOTH a corpus dup and
-    // contaminated — the verdict must be contaminated (eval hygiene
-    // outranks dedup bookkeeping); the clean doc still admits
-    val annDir = java.nio.file.Files.createTempDirectory("conann").toString
-    graft.operators.VectorOps.writeAnnIndex(spark, sfDir, annDir)
-    val (semCells, semVecs) = StreamingAnalytics.loadSemIndexOrEmpty(spark,
-      java.nio.file.Files.createTempDirectory("conidx").toString + "/none")
-    val (cbk, csh) = StreamingAnalytics.corpusIndex(docs)
-    val dim = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(size(col("embedding"))).first().getInt(0)
-    val emb = Array.tabulate(dim)(i => 0.2f + 0.03f * (i % 5))
-    // sign-alternating — near-orthogonal to the all-positive emb, so
-    // the clean doc cannot accidentally flag sem_dup against 9103
-    val emb2 = Array.tabulate(dim)(i =>
-      (if (i % 2 == 0) 1f else -1f) * (0.4f + 0.02f * (i % 5)))
-    val full = StreamingAnalytics.admitBatchFull(
-      Seq((9103L, benchText, emb),
-        (9104L, "yet another honest paragraph with plainly novel " +
-          "wording on the upkeep of small wooden boats in freshwater",
-          emb2))
-        .toDF("doc_id", "text", "embedding"),
-      cbk, csh, semCells, semVecs, annDir, benchGrams)
-      .collect().map(r => r.getLong(0) -> r).toMap
-    assert(full(9103L).getAs[String]("verdict") == "contaminated",
-      s"benchmark replay must reject contaminated first: ${full(9103L)}")
-    assert(full(9103L).getAs[Long]("n_bench_hits") >= 1L)
-    assert(full(9104L).getAs[String]("verdict") == "admit",
-      s"clean doc must admit: ${full(9104L)}")
-    cbk.unpersist(); csh.unpersist(); ()
-  }
-
-  test("learned policy: NB veto rewrites only admit, keeps explainable reasons") {
-    import graft.operators.TextOps
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    val (nbW, nbPrior) = TextOps.nbTrain(docs)
-    val benchGrams = graft.operators.DedupOps.benchmarkGrams(spark, sfDir)
-    val annDir = java.nio.file.Files.createTempDirectory("nbann").toString
-    graft.operators.VectorOps.writeAnnIndex(spark, sfDir, annDir)
-    val (semCells, semVecs) = StreamingAnalytics.loadSemIndexOrEmpty(spark,
-      java.nio.file.Files.createTempDirectory("nbidx").toString + "/none")
-    val (cbk, csh) = StreamingAnalytics.corpusIndex(docs)
-    val dim = graft.sources.Tables.embeddings(spark, sfDir)
-      .select(size(col("embedding"))).first().getInt(0)
-    val emb = Array.tabulate(dim)(i => 0.2f + 0.03f * (i % 5))
-    val emb2 = Array.tabulate(dim)(i =>
-      (if (i % 2 == 0) 1f else -1f) * (0.4f + 0.02f * (i % 5)))
-    val batch = Seq(
-      (9301L, "a perfectly ordinary paragraph about garden furniture " +
-        "maintenance through the wetter months of a temperate year", emb),
-      (9302L, Array.fill(40)("again").mkString(" "), emb2))
-      .toDF("doc_id", "text", "embedding")
-    val base = StreamingAnalytics.admitBatchFull(batch, cbk, csh,
-        semCells, semVecs, annDir, benchGrams)
-      .collect().map(r => r.getLong(0) -> r.getAs[String]("verdict")).toMap
-    assert(base(9301L) == "admit" && base(9302L) == "repetitive", s"$base")
-    // permissive bar: the learned stage is a no-op, policies coincide
-    val loose = StreamingAnalytics.admitBatchLearned(batch, cbk, csh,
-        semCells, semVecs, annDir, benchGrams, nbW, nbPrior,
-        nbMinScore = Long.MinValue / 2)
-      .collect().map(r => r.getLong(0) -> r.getAs[String]("verdict")).toMap
-    assert(loose == base, s"$loose vs $base")
-    // veto-everything bar: admit flips to nb_rejected, every explainable
-    // rejection keeps its specific reason (the NB stage ranks last)
-    val strict = StreamingAnalytics.admitBatchLearned(batch, cbk, csh,
-        semCells, semVecs, annDir, benchGrams, nbW, nbPrior,
-        nbMinScore = 1000000L)
-      .collect().map(r => r.getLong(0) -> r.getAs[String]("verdict")).toMap
-    assert(strict(9301L) == "nb_rejected" && strict(9302L) == "repetitive",
-      s"$strict")
-    cbk.unpersist(); csh.unpersist(); ()
-  }
-
-  test("maintained link graph: fold == one-shot, replay no-op, " +
-      "served authority == batch pagerank") {
-    import graft.operators.GraphOps
-    val dir = java.nio.file.Files.createTempDirectory("linkgraph").toString
-    // fixed domain registry (sorted-source ranks), the crawl's dimension
-    val registry = Seq(("sa", 0L), ("sb", 1L), ("sc", 2L))
-      .toDF("source", "rk")
-    val b1 = Seq((0L, "sa"), (1L, "sb"), (2L, "sc"), (3L, "sa"))
-      .toDF("doc_id", "source")
-    val b2 = Seq((4L, "sb"), (5L, "sc"), (6L, "sa"), (1000L, "sb"))
-      .toDF("doc_id", "source")
-    assert(StreamingAnalytics
-      .updateLinkGraph(b1, registry, dir, batchId = 0L) == 0L)
-    assert(StreamingAnalytics
-      .updateLinkGraph(b2, registry, dir, batchId = 1L) == 0L)
-    // edge weights merge by ADD → maintained graph equals the one-shot
-    // aggregation over everything folded, row for row
-    def edgeSet(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val folded = edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir))
-    val oneShot = edgeSet(GraphOps.domainEdgesOf(b1.unionAll(b2), registry))
-    assert(folded == oneShot, s"maintained $folded vs one-shot $oneShot")
-    // at-least-once replay: addition is not idempotent, the guard is
-    StreamingAnalytics.updateLinkGraph(b2, registry, dir, batchId = 1L)
-    assert(edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir)) == folded,
-      "replay double-counted edge weights")
-    // a batch id BELOW the stored max is never a legitimate replay
-    // (foreachBatch ids are monotone): fail loudly, not a silent skip
-    intercept[IllegalStateException] {
-      StreamingAnalytics.updateLinkGraph(b1, registry, dir, batchId = 0L)
-    }
-    // docs from a domain the registry lacks produce no edges — the
-    // fold must RETURN that loss, and leave the graph untouched by
-    // the unregistered rows
-    val b3 = Seq((7L, "sa"), (8L, "zz_new"), (9L, "zz_new"))
-      .toDF("doc_id", "source")
-    assert(StreamingAnalytics
-      .updateLinkGraph(b3, registry, dir, batchId = 2L) == 2L,
-      "unregistered-source docs must be counted and surfaced")
-    val afterB3 = edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir))
-    val oneShot3 = edgeSet(GraphOps.domainEdgesOf(
-      b1.unionAll(b2).unionAll(b3.where(col("source") =!= "zz_new")),
-      registry))
-    assert(afterB3 == oneShot3, "registered rows of a mixed batch fold")
-    // authority served from the maintained graph == the batch operator
-    // over a corpus dir holding the same documents (the registered
-    // ones — zz_new folded no edges, so the one-shot corpus omits it)
-    val corpusDir = java.nio.file.Files
-      .createTempDirectory("linkgraph_corpus").toString
-    b1.unionAll(b2).unionAll(b3.where(col("source") =!= "zz_new"))
-      .withColumn("text", lit("x"))
-      .write.mode("overwrite").parquet(s"$corpusDir/documents.parquet")
-    val served = StreamingAnalytics
-      .authorityFromLinkGraph(spark, dir, registry)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    // the batch operator names nodes by the CANONICAL HOST of the doc's
-    // URL surface (source + ".example.org"); the streaming path serves
-    // under the caller-supplied registry names — rank VALUES must match
-    // under that bijection
-    val batch = GraphOps.pageRank(spark, corpusDir)
-      .collect()
-      .map(r => r.getString(0).stripSuffix(".example.org") -> r.getLong(1))
-      .toMap
-    assert(served == batch,
-      s"served authority $served diverged from batch pagerank $batch")
-  }
-
-  test("maintained domain registry: discovery grows dense ranks, " +
-      "existing ranks untouched, replay no-op, regrown fold sees all") {
-    import graft.operators.GraphOps
-    val dir = java.nio.file.Files.createTempDirectory("registry").toString
-    val b1 = Seq((0L, "sb"), (1L, "sa"), (2L, "sb")).toDF("doc_id", "source")
-    // bootstrap: batch domains become ranks 0..n-1 by name
-    assert(StreamingAnalytics.updateDomainRegistry(b1, dir, 0L) == 2L)
-    val r1 = StreamingAnalytics.loadDomainRegistry(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(r1 == Map("sa" -> 0L, "sb" -> 1L), s"$r1")
-    // replay is a no-op; a lower id fails loudly
-    assert(StreamingAnalytics.updateDomainRegistry(b1, dir, 0L) == 0L)
-    // discovery: new domains get the NEXT ranks, old ranks untouched
-    val b2 = Seq((3L, "sa"), (4L, "zz"), (5L, "aa")).toDF("doc_id", "source")
-    assert(StreamingAnalytics.updateDomainRegistry(b2, dir, 1L) == 2L)
-    val r2 = StreamingAnalytics.loadDomainRegistry(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(r2 == Map("sa" -> 0L, "sb" -> 1L, "aa" -> 2L, "zz" -> 3L),
-      s"arrival-ordered dense growth expected: $r2")
-    intercept[IllegalStateException] {
-      StreamingAnalytics.updateDomainRegistry(b2, dir, 0L)
-    }
-    // the unregistered-doc loop closes: a fold that dropped docs
-    // reports them, the registry grows, and the RE-FOLD under the
-    // grown registry drops nothing
-    val reg2 = StreamingAnalytics.loadDomainRegistry(spark, dir)
-    assert(StreamingAnalytics.updateLinkGraph(b2, reg2, dir, 0L) == 0L)
-    val folded = StreamingAnalytics.loadLinkGraph(spark, dir)
-      .agg(org.apache.spark.sql.functions.sum("w")).head().getLong(0)
-    assert(folded == 3L, "every b2 doc folds under the grown registry")
-    // the one-shot aggregation under the SAME registry agrees
-    val oneShot = GraphOps.domainEdgesOf(b2, reg2)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    val stored = StreamingAnalytics.loadLinkGraph(spark, dir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    assert(stored == oneShot)
-  }
-
-  test("discovery loop composed: grow-and-requeue is lossless, " +
-      "maintained == one-shot per registry version, replay-safe") {
-    import graft.operators.GraphOps
-    val dir = java.nio.file.Files.createTempDirectory("discovery").toString
-    def edgeSet(df: org.apache.spark.sql.DataFrame) = df
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2))).toSet
-    def oneShotSum(parts: Seq[org.apache.spark.sql.DataFrame]) =
-      edgeSet(parts.reduce(_ unionAll _)
-        .groupBy(col("s"), col("t"))
-        .agg(org.apache.spark.sql.functions.sum(col("w")).as("w")))
-    // bootstrap: empty registry — EVERY doc is unregistered, the loop
-    // grows the registry and re-queues the whole batch
-    val b0 = Seq((0L, "sa"), (1L, "sb"), (2L, "sa"), (3L, "sb"))
-      .toDF("doc_id", "source")
-    val (d0, r0) = StreamingAnalytics.foldWithDiscovery(b0, dir,
-      foldId = 0L, requeueId = 1L)
-    assert(d0 == 4L && r0 == 4L, s"bootstrap: ($d0, $r0)")
-    val regV1 = StreamingAnalytics.loadDomainRegistry(spark, dir)
-      .localCheckpoint(true)
-    assert(edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir)) ==
-      edgeSet(GraphOps.domainEdgesOf(b0, regV1)),
-      "bootstrap batch must fold under the grown registry, losslessly")
-    // growth event: a mixed batch — registered rows fold under V1,
-    // the zz discovery grows V2 and ONLY the zz rows re-queue
-    val b1 = Seq((4L, "sa"), (5L, "zz"), (6L, "zz"), (7L, "sb"))
-      .toDF("doc_id", "source")
-    val (d1, r1) = StreamingAnalytics.foldWithDiscovery(b1, dir,
-      foldId = 2L, requeueId = 3L)
-    assert(d1 == 2L && r1 == 2L, s"growth event: ($d1, $r1)")
-    val regV2 = StreamingAnalytics.loadDomainRegistry(spark, dir)
-      .localCheckpoint(true)
-    // maintained == one-shot PER REGISTRY VERSION, summed across the
-    // growth boundary: b0 and b1's registered rows under V1, the
-    // discovering rows under V2
-    val expect = oneShotSum(Seq(
-      GraphOps.domainEdgesOf(b0, regV1),
-      GraphOps.domainEdgesOf(b1.where(col("source") =!= "zz"), regV1),
-      GraphOps.domainEdgesOf(b1.where(col("source") === "zz"), regV2)))
-    assert(edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir)) == expect,
-      "maintained graph diverged from the per-version one-shot sum")
-    // authority serves across the growth boundary: every domain,
-    // including the discovered one, gets a rank from the same iteration
-    // core over the maintained graph
-    val served = StreamingAnalytics
-      .authorityFromLinkGraph(spark, dir, regV2)
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(served.keySet == Set("sa", "sb", "zz"), s"$served")
-    val direct = GraphOps.rankItersFrom(
-      StreamingAnalytics.loadLinkGraph(spark, dir), regV2)
-      .join(regV2, col("node") === col("rk"))
-      .collect().map(r => r.getAs[String]("source") ->
-        r.getAs[Long]("r")).toMap
-    assert(served == direct, "serve path diverged from the rank core")
-    // redelivery of the whole composed step is a no-op (all three
-    // sub-steps are idempotent at their ids; the re-queue set is
-    // re-derived from the registry, not from the fold's return)
-    val (d1r, _) = StreamingAnalytics.foldWithDiscovery(b1, dir,
-      foldId = 2L, requeueId = 3L)
-    assert(d1r == 0L)
-    assert(edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir)) == expect,
-      "replayed discovery loop changed the graph")
-    // crash BETWEEN the graph fold and the registry fold: step 1 ran
-    // alone (the yy docs' edges refused), then the redelivered
-    // composed step must still grow the registry and recover exactly
-    // the refused rows from the registry's per-row reg_batch stamp
-    val b2 = Seq((8L, "yy"), (9L, "sa")).toDF("doc_id", "source")
-    assert(StreamingAnalytics.updateLinkGraph(b2, regV2, dir, 4L) == 1L)
-    val (d2, r2) = StreamingAnalytics.foldWithDiscovery(b2, dir,
-      foldId = 4L, requeueId = 5L)
-    assert(d2 == 0L && r2 == 1L, s"crash recovery: ($d2, $r2)")
-    val regV3 = StreamingAnalytics.loadDomainRegistry(spark, dir)
-      .localCheckpoint(true)
-    val expect2 = oneShotSum(Seq(
-      GraphOps.domainEdgesOf(b0, regV1),
-      GraphOps.domainEdgesOf(b1.where(col("source") =!= "zz"), regV1),
-      GraphOps.domainEdgesOf(b1.where(col("source") === "zz"), regV2),
-      GraphOps.domainEdgesOf(b2.where(col("source") =!= "yy"), regV2),
-      GraphOps.domainEdgesOf(b2.where(col("source") === "yy"), regV3)))
-    assert(edgeSet(StreamingAnalytics.loadLinkGraph(spark, dir)) == expect2,
-      "crash-recovered fold lost or double-added the discovering rows")
-  }
-
-  test("tokenizer drift monitor: maintained fold == one-shot, replay " +
-      "rewrites, calm batch quiet, shifted batch alarms") {
-    import graft.operators.TextOps
-    val dir = java.nio.file.Files.createTempDirectory("tokdrift").toString
-    // a frozen toy artifact: two learned pieces + full char alphabet at
-    // equal per-piece cost, so "ab"/"cd" always beat their char splits
-    val cost = Map("ab" -> 8L, "cd" -> 8L, "a" -> 8L, "b" -> 8L,
-      "c" -> 8L, "d" -> 8L, "x" -> 8L, "y" -> 8L, "z" -> 8L)
-    // training corpus: every word covered by the learned pieces —
-    // fertility 2 pieces/word, zero char fallbacks
-    val trainDocs = Seq("abab cdcd abcd", "cdab abab").toDF("text")
-    val baseCard = TextOps.uniFertilityOf(trainDocs, cost)
-      .localCheckpoint(true)
-    assert(baseCard.collect().head.toSeq == Seq(5L, 10L, 0L))
-    // batch 0: same regime as training → quiet; batch 1: novel
-    // vocabulary the pieces don't cover → char fallbacks → alarm
-    val calm = Seq("abab cdcd", "abcd").toDF("text")
-    val shifted = Seq("xyzxyz zyx", "xyz zzz").toDF("text")
-    StreamingAnalytics.updateTokenizerFertility(calm, cost, dir, 0L)
-    StreamingAnalytics.updateTokenizerFertility(shifted, cost, dir, 1L)
-    // maintained fold == one-shot census over everything folded
-    val folded = StreamingAnalytics.loadTokenizerFertility(spark, dir)
-      .agg(sum(col("n_words")), sum(col("n_pieces")),
-        sum(col("n_char_pieces"))).collect().head.toSeq
-    val oneShot = TextOps.uniFertilityOf(calm.unionAll(shifted), cost)
-      .collect().head.toSeq
-    assert(folded == oneShot,
-      s"maintained $folded diverged from one-shot $oneShot")
-    // replay rewrites the batch's own row instead of double-appending
-    StreamingAnalytics.updateTokenizerFertility(shifted, cost, dir, 1L)
-    assert(StreamingAnalytics.loadTokenizerFertility(spark, dir)
-      .count() == 2L, "replay must rewrite, not append")
-    // the gate report's drift rows: calm quiet, shifted alarmed
-    val rows = StreamingAnalytics.tokenizerDriftRows(spark, dir, baseCard)
-      .collect().map(r => r.getAs[Long]("batch") ->
-        (r.getAs[Long]("fertility_100"), r.getAs[Long]("char_drift_100"),
-          r.getAs[Boolean]("alarm"))).toMap
-    assert(rows(0L)._1 == 200L && !rows(0L)._3, s"calm batch: $rows")
-    // shifted words segment to single chars: fertility 6/word on
-    // "xyzxyz", all pieces single-char → char rate 100 vs base 0
-    assert(rows(1L)._2 == 100L && rows(1L)._3, s"shifted batch: $rows")
   }
 
   test("maintained token sketch: incremental fold == one-shot exactly, " +
@@ -1145,196 +531,5 @@ class StreamingAnalyticsSpec extends SparkSpec {
     assert(healed.getLong(1) == folded.getLong(1) + 1L)
     assert(healed.getLong(2) == 2L)
     assert(!fs.exists(new org.apache.hadoop.fs.Path(s"$dir/token_sketch_old")))
-  }
-
-  test("event rollup stream: file-source loop maintains day sketches, " +
-      "served WAU equals exact over the whole feed") {
-    val schema = StructType(Seq(
-      StructField("user_id", LongType), StructField("ts", TimestampType)))
-    def ev(rows: Seq[(Long, String)]) = rows.toDF("user_id", "d")
-      .select(col("user_id"), to_timestamp(col("d")).as("ts"))
-    val feed = java.nio.file.Files.createTempDirectory("evroll").toString
-    val tbl = java.nio.file.Files.createTempDirectory("evrolltbl").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("evrollck").toString
-    // two files -> AvailableNow may take them as one or two batches;
-    // the maintained table must not care
-    ev(Seq((1L, "2024-02-01 08:00:00"), (2L, "2024-02-01 09:00:00"),
-      (2L, "2024-02-03 10:00:00"))).write.parquet(s"$feed/f1.parquet")
-    ev(Seq((3L, "2024-02-03 11:00:00"), (1L, "2024-02-12 12:00:00")))
-      .write.parquet(s"$feed/f2.parquet")
-    val stream = spark.readStream.schema(schema)
-      .option("recursiveFileLookup", "true").parquet(feed)
-    val q = StreamingAnalytics.runEventRollup(stream, tbl, ckpt)
-    q.awaitTermination(60000)
-    val wau = StreamingAnalytics.wauFromDaySketches(spark, tbl)
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("est_wau")).toMap
-    // exact trailing-7-day distinct over the whole feed (tiny sets sit
-    // in the sketch's exact regime): day1 {1,2}; day3 window unions
-    // day1 -> {1,2,3}; day12 window [feb6..feb12] holds only user 1
-    assert(wau == Map("2024-02-01" -> 2L, "2024-02-03" -> 3L,
-      "2024-02-12" -> 1L), s"served WAU diverged: $wau")
-  }
-
-  test("maintained day sketches: incremental fold == one-shot estimates, " +
-      "replay no-op, served WAU matches exact on small sets") {
-    val dir = java.nio.file.Files.createTempDirectory("daysketch").toString
-    def ev(rows: Seq[(Long, String)]) = rows.toDF("user_id", "d")
-      .select(col("user_id"), to_timestamp(col("d")).as("ts"))
-    // batch 0: day1 {1,2}, day4 {2,3}; batch 1: day4 {4}, day11 {1}
-    val b1 = ev(Seq((1L, "2024-01-01 10:00:00"), (2L, "2024-01-01 11:00:00"),
-      (2L, "2024-01-04 09:00:00"), (3L, "2024-01-04 12:00:00")))
-    val b2 = ev(Seq((4L, "2024-01-04 23:00:00"), (1L, "2024-01-11 01:00:00")))
-    StreamingAnalytics.updateDaySketches(b1, dir, batchId = 0L)
-    StreamingAnalytics.updateDaySketches(b2, dir, batchId = 1L)
-    def estMap() = StreamingAnalytics.loadDaySketches(spark, dir)
-      .select(date_format(col("day"), "yyyy-MM-dd").as("d"),
-        hll_sketch_estimate(col("sk")).as("e"))
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
-    val folded = estMap()
-    // HLL union is register-wise max -> the maintained table serves
-    // the same per-day estimates as one-shot sketches over both
-    // batches; on tiny sets the sketch is in its exact regime, so the
-    // expected map IS the one-shot answer
-    assert(folded == Map("2024-01-01" -> 2L, "2024-01-04" -> 3L,
-      "2024-01-11" -> 1L), s"per-day estimates exact on tiny sets: $folded")
-    // replay of an already-folded batch is a no-op (and would be
-    // harmless anyway: max-merge is idempotent)
-    StreamingAnalytics.updateDaySketches(b2, dir, batchId = 1L)
-    assert(estMap() == folded, "replay changed the table")
-    // served trailing-window estimates equal the exact WAU at this size
-    val wau = StreamingAnalytics.wauFromDaySketches(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("est_wau")).toMap
-    assert(wau == Map("2024-01-01" -> 2L, "2024-01-04" -> 4L,
-      "2024-01-11" -> 1L),
-      s"day-4 window unions day-1, day-11 window ages both out: $wau")
-  }
-
-  test("json ingest gate: valid rows land typed, malformed land raw, " +
-      "replay rewrites batch dirs instead of appending") {
-    val feed = java.nio.file.Files.createTempDirectory("jsonfeed").toString
-    val out = java.nio.file.Files.createTempDirectory("jsonout").toString
-    val ck1 = java.nio.file.Files.createTempDirectory("jsonck1").toString
-    val ck2 = java.nio.file.Files.createTempDirectory("jsonck2").toString
-    def payload(id: Long, lang: String, n: Long): String =
-      s"""{"id": $id, "tags": ["a","b"], "meta": {"lang": "$lang", """ +
-        s""""n": $n}, "score": ${id % 100}}"""
-    Seq((1L, payload(1, "en", 7)), (2L, "{\"id\": 2, \"tags\": [\"a\""),
-      (3L, payload(3, "de", 9)))
-      .toDF("doc_id", "j").write.parquet(s"$feed/f1.parquet")
-    Seq((4L, "not json"), (5L, payload(5, "fr", 3)))
-      .toDF("doc_id", "j").write.parquet(s"$feed/f2.parquet")
-    val schema = StructType(Seq(StructField("doc_id", LongType),
-      StructField("j", StringType)))
-    def stream = spark.readStream.schema(schema)
-      .option("recursiveFileLookup", "true").parquet(feed)
-    StreamingAnalytics.runJsonIngest(stream, out, ck1)
-      .awaitTermination(60000)
-    def clean() = spark.read.option("basePath", s"$out/json_clean")
-      .parquet(s"$out/json_clean")
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        (r.getAs[String]("lang"), r.getAs[Long]("n"))).toMap
-    def quarantined() = spark.read
-      .option("basePath", s"$out/json_quarantine")
-      .parquet(s"$out/json_quarantine")
-      .collect().map(r => r.getAs[Long]("doc_id") ->
-        r.getAs[String]("j")).toMap
-    val c1 = clean(); val q1 = quarantined()
-    assert(c1 == Map(1L -> ("en", 7L), 3L -> ("de", 9L),
-      5L -> ("fr", 3L)), s"typed clean rows: $c1")
-    // the quarantine keeps the BROKEN BYTES intact for later re-parse
-    assert(q1 == Map(2L -> "{\"id\": 2, \"tags\": [\"a\"",
-      4L -> "not json"), s"raw quarantine: $q1")
-    // full replay from a fresh checkpoint: batch dirs REWRITE, content
-    // identical — at-least-once delivery composes to exactly-once
-    StreamingAnalytics.runJsonIngest(stream, out, ck2)
-      .awaitTermination(60000)
-    assert(clean() == c1, "replay duplicated clean rows")
-    assert(quarantined() == q1, "replay duplicated quarantine rows")
-  }
-
-  test("fuzzy store loop: batches probe earlier arrivals only, store " +
-      "accumulates, replay re-emits identical verdicts") {
-    val feed = java.nio.file.Files.createTempDirectory("fzfeed").toString
-    val out = java.nio.file.Files.createTempDirectory("fzout").toString
-    val ck1 = java.nio.file.Files.createTempDirectory("fzck1").toString
-    val ck2 = java.nio.file.Files.createTempDirectory("fzck2").toString
-    // file 1 arrives first (its mtime orders the source): the original
-    Seq((1L, "martha jones")).toDF("id", "name")
-      .coalesce(1).write.parquet(s"$feed/f1.parquet")
-    Thread.sleep(1100) // distinct mtimes -> deterministic batch order
-    // file 2: a typo twin of record 1, an exact copy under a new id,
-    // and an unrelated record — ONE part file, so it is ONE batch
-    Seq((2L, "marsha jones"), (3L, "martha jones"), (4L, "wholly other"))
-      .toDF("id", "name").coalesce(1).write.parquet(s"$feed/f2.parquet")
-    val schema = StructType(Seq(StructField("id", LongType),
-      StructField("name", StringType)))
-    def stream = spark.readStream.schema(schema)
-      .option("recursiveFileLookup", "true")
-      .option("maxFilesPerTrigger", 1) // one file per batch: true arrival order
-      .parquet(feed)
-    def run(ck: String): Seq[(Long, Long, Int)] = {
-      val got = scala.collection.mutable.ArrayBuffer.empty[(Long, Long, Int)]
-      StreamingAnalytics.runFuzzyStore(stream, out, ck) { (m, _) =>
-        got ++= m.collect().map(r =>
-          (r.getLong(0), r.getLong(1), r.getInt(2)))
-      }.awaitTermination(60000)
-      got.toSeq.sorted
-    }
-    val first = run(ck1)
-    // batch 0 probes an empty store; batch 1 finds the typo twin
-    // (dist 1) and the exact copy (dist 0) — both against record 1
-    assert(first == Seq((2L, 1L, 1), (3L, 1L, 0)), s"got $first")
-    // the store now serves ad-hoc batch probes too
-    import spark.implicits._
-    val adhoc = graft.operators.FuzzyOps.matchAgainstStore(
-      Seq((9L, "martha jone")).toDF("id", "name"), out)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSet
-    assert(adhoc == Set((9L, 1L, 1), (9L, 3L, 1)), s"got $adhoc")
-    // full replay from a fresh checkpoint: same batches, same store
-    // dirs rewritten, same verdicts — exactly-once content
-    assert(run(ck2) == first, "replay diverged")
-  }
-
-  test("late event for an already-served day: re-serve REVISES history — " +
-      "every trailing window containing the day updates, others don't") {
-    // VERDICT r12 item 8: the maintained table merges per-day by HLL
-    // union, so a LATE arrival (an event for a day whose windows were
-    // already served) changes previously-served answers. That is the
-    // DOCUMENTED semantics — the table tracks the true event history,
-    // not the serve history — and this pins its exact shape:
-    //   1. the late day's sketch absorbs the new user (union, in-place);
-    //   2. every trailing window whose [win_end-6, win_end] span covers
-    //      the late day re-serves with the revised estimate;
-    //   3. windows NOT covering the late day re-serve bit-identically;
-    //   4. revision is MONOTONE: HLL union never subtracts, so a late
-    //      event can only raise (or keep) every affected window — there
-    //      is no retraction path, only additive revision. A true
-    //      retraction (drop a user from history) would need a rebuild
-    //      from raw events; the sketch table cannot express it.
-    val dir = java.nio.file.Files.createTempDirectory("latewau").toString
-    def ev(rows: Seq[(Long, String)]) = rows.toDF("user_id", "d")
-      .select(col("user_id"), to_timestamp(col("d")).as("ts"))
-    // served state: day1 {1,2}, day4 {2,3}, day11 {1}
-    StreamingAnalytics.updateDaySketches(
-      ev(Seq((1L, "2024-01-01 10:00:00"), (2L, "2024-01-01 11:00:00"),
-        (2L, "2024-01-04 09:00:00"), (3L, "2024-01-04 12:00:00"),
-        (1L, "2024-01-11 01:00:00"))), dir, batchId = 0L)
-    def wauMap() = StreamingAnalytics.wauFromDaySketches(spark, dir)
-      .collect().map(r => r.getString(0) -> r.getAs[Long]("est_wau")).toMap
-    val served = wauMap()
-    assert(served == Map("2024-01-01" -> 2L, "2024-01-04" -> 3L,
-      "2024-01-11" -> 1L), s"pre-late serve: $served")
-    // LATE: user 9's day-1 event arrives after day-1/day-4 were served
-    StreamingAnalytics.updateDaySketches(
-      ev(Seq((9L, "2024-01-01 23:59:00"))), dir, batchId = 1L)
-    val reserved = wauMap()
-    // windows covering day 1 (win_end 01 and 04) revise to include 9;
-    // the day-11 window ([01-05, 01-11]) never sees day 1: unchanged
-    assert(reserved == Map("2024-01-01" -> 3L, "2024-01-04" -> 4L,
-      "2024-01-11" -> 1L), s"post-late re-serve: $reserved")
-    // monotone revision: no window ever decreased
-    served.foreach { case (d, e) =>
-      assert(reserved(d) >= e, s"window $d retracted: ${reserved(d)} < $e")
-    }
   }
 }

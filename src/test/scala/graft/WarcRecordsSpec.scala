@@ -135,36 +135,6 @@ class WarcRecordsSpec extends SparkSpec {
     assert(new String(rs.head.payload) == "kept")
   }
 
-  test("directory scan: binaryFile over multi-record warc.gz files " +
-      "splits one row per record") {
-    val dir = java.nio.file.Files.createTempDirectory("warcdir")
-    val f1 = gzip(rec("warcinfo", "software: graft") +
-      rec("response", "HTTP/1.1 200 OK\r\n\r\n<p>one</p>",
-        extra = "WARC-Target-URI: http://e.com/1\r\n"))
-    val f2 = gzip(rec("response", "HTTP/1.1 200 OK\r\n\r\n<p>two</p>",
-      extra = "WARC-Target-URI: http://e.com/2\r\n")) ++
-      gzip(rec("metadata", "fetchTimeMs: 7"))
-    java.nio.file.Files.write(dir.resolve("a.warc.gz"), f1)
-    java.nio.file.Files.write(dir.resolve("b.warc.gz"), f2)
-    java.nio.file.Files.write(dir.resolve("ignore.txt"), bytes("x"))
-    val rows = graft.operators.TextOps
-      .warcRecordsFromDir(spark, dir.toString)
-      .collect()
-    assert(rows.length == 4, rows.mkString(", "))
-    val byUri = rows.filter(_.getAs[String]("warc_type") == "response")
-      .map(r => r.getAs[String]("target_uri") ->
-        new String(WarcRecords.httpBody(
-          r.getAs[Array[Byte]]("payload"))._2)).toMap
-    assert(byUri == Map("http://e.com/1" -> "<p>one</p>",
-      "http://e.com/2" -> "<p>two</p>"))
-    assert(rows.forall(!_.getAs[Boolean]("truncated")))
-    // per-record offsets are post-gunzip stream positions: record 2 of
-    // file b starts after record 1's full rendering
-    val metaOff = rows.find(_.getAs[String]("warc_type") == "metadata")
-      .get.getAs[Long]("offset")
-    assert(metaOff > 0L)
-  }
-
   test("digest capture + verify seam: hex algos, CommonCrawl " +
       "sha1-base32, and the nothing-to-check cases") {
     def md = java.security.MessageDigest.getInstance(_: String)
@@ -198,11 +168,10 @@ class WarcRecordsSpec extends SparkSpec {
     assert(WarcRecords.verifyDigest(ok.copy(truncated = true)).isEmpty)
   }
 
-  test("quarantine route: directory scan + verifyDigest re-verify " +
-      "splits kept from corrupted records") {
+  test("quarantine route: verifyDigest re-verify splits kept from " +
+      "corrupted records") {
     def md5hex(s: String) = java.security.MessageDigest
       .getInstance("MD5").digest(bytes(s)).map("%02x".format(_)).mkString
-    val dir = java.nio.file.Files.createTempDirectory("warcverify")
     val good = rec("response", "clean-payload",
       extra = "WARC-Target-URI: http://e.com/ok\r\n" +
         s"WARC-Payload-Digest: md5:${md5hex("clean-payload")}\r\n")
@@ -211,20 +180,15 @@ class WarcRecordsSpec extends SparkSpec {
     val rotted = rec("response", "rotted-payload",
       extra = "WARC-Target-URI: http://e.com/bad\r\n" +
         s"WARC-Payload-Digest: md5:${md5hex("clean-payload")}\r\n")
-    java.nio.file.Files.write(dir.resolve("a.warc"), bytes(good + rotted))
-    val rows = graft.operators.TextOps
-      .warcRecordsFromDir(spark, dir.toString)
-      .collect()
+    val rows = WarcRecords.split(bytes(good + rotted))
       .map { r =>
         val verdict = WarcRecords.verifyDigest(
-          r.getAs[String]("payload_digest"),
-          r.getAs[Array[Byte]]("payload"),
-          r.getAs[Boolean]("truncated")) match {
+          r.payloadDigest, r.payload, r.truncated) match {
           case Some(true) => "ok"
           case Some(false) => "quarantine"
           case None => "unchecked"
         }
-        r.getAs[String]("target_uri") -> verdict
+        r.targetUri -> verdict
       }.toMap
     assert(rows == Map("http://e.com/ok" -> "ok",
       "http://e.com/bad" -> "quarantine"))
