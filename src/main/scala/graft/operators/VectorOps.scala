@@ -485,13 +485,9 @@ object VectorOps {
     val cents = pqCodebooks(spark, slicedOf(spark, trainEmb), trainIters)
     val codes = pqEncode(spark, slicedOf(spark, emb), cents)
     coarse.write.mode("overwrite").parquet(s"$indexDir/coarse_centroids")
-    // the per-vector relations are batch-partitioned (a build is batch 0)
-    // — the corpus-index layout convention
-    assignments.withColumn("batch", lit(0L)).write.mode("overwrite")
-      .partitionBy("batch").parquet(s"$indexDir/assignments")
+    assignments.write.mode("overwrite").parquet(s"$indexDir/assignments")
     cents.write.mode("overwrite").parquet(s"$indexDir/pq_codebooks")
-    codes.withColumn("batch", lit(0L)).write.mode("overwrite")
-      .partitionBy("batch").parquet(s"$indexDir/pq_codes")
+    codes.write.mode("overwrite").parquet(s"$indexDir/pq_codes")
   }
 
   // explicit index schemas: reads never infer (footer scan per search,
@@ -502,26 +498,22 @@ object VectorOps {
     StructField("cluster", IntegerType), StructField("centroid",
       ArrayType(LongType)), StructField("c_nrm", LongType)))
   private val AssignSchema = StructType(Seq(
-    StructField("vec_id", LongType), StructField("cluster", IntegerType),
-    StructField("batch", LongType)))
+    StructField("vec_id", LongType), StructField("cluster", IntegerType)))
   private val CodebookSchema = StructType(Seq(
     StructField("s", IntegerType), StructField("cl", IntegerType),
     StructField("cent", ArrayType(LongType)), StructField("c_nrm", LongType)))
   private val CodesSchema = StructType(Seq(
     StructField("vec_id", LongType), StructField("s", IntegerType),
-    StructField("cl", IntegerType), StructField("batch", LongType)))
+    StructField("cl", IntegerType)))
 
   /** Read-back side of [[writeAnnIndex]]:
-    * (coarse, assignments, codebooks, codes). The batch partition column
-    * is dropped at load — searches are batch-agnostic. */
+    * (coarse, assignments, codebooks, codes). */
   def loadAnnIndex(spark: SparkSession, indexDir: String)
       : (DataFrame, DataFrame, DataFrame, DataFrame) = (
     spark.read.schema(CoarseSchema).parquet(s"$indexDir/coarse_centroids"),
-    spark.read.schema(AssignSchema).parquet(s"$indexDir/assignments")
-      .select(col("vec_id"), col("cluster")),
+    spark.read.schema(AssignSchema).parquet(s"$indexDir/assignments"),
     spark.read.schema(CodebookSchema).parquet(s"$indexDir/pq_codebooks"),
-    spark.read.schema(CodesSchema).parquet(s"$indexDir/pq_codes")
-      .select(col("vec_id"), col("s"), col("cl")))
+    spark.read.schema(CodesSchema).parquet(s"$indexDir/pq_codes"))
 
   /** SEARCH half of the build/search split: [[annPq]]'s ADC scoring
     * against a [[writeAnnIndex]] directory — no training in the plan,
@@ -543,7 +535,10 @@ object VectorOps {
     * both carried by the cache key: an md5 of the RAW corpus path (no
     * lossy sanitizing — distinct dirs can never collide) plus the
     * (name, length, mtime) of every embeddings data file, so a
-    * regenerated corpus at the same path AND size still rebuilds.
+    * regenerated corpus at the same path AND size still rebuilds. The
+    * key also names the index layout (`layout=flat`: no partition level
+    * under the per-vector tables), so an index cached in an older layout
+    * is rebuilt, never read under the wrong schema.
     * Build completion is a `_COMPLETE` sentinel written after all four
     * tables commit — a killed half-built index is rebuilt, never
     * silently served as empty tables (the explicit read schemas would
@@ -556,7 +551,7 @@ object VectorOps {
       .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
       .sorted.mkString(",")
     val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$stamp".getBytes("UTF-8"))
+      .digest(s"$dir|$stamp|layout=flat".getBytes("UTF-8"))
       .map("%02x".format(_)).mkString
     val idx = System.getProperty("java.io.tmpdir") + s"/graft_ann_index/$key"
     val done = new org.apache.hadoop.fs.Path(s"$idx/_COMPLETE")

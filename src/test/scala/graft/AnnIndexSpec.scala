@@ -18,6 +18,10 @@ class AnnIndexSpec extends AnyFunSuite with SparkSpec {
     val inPlan = VectorOps.annPq(spark, sfDir).collect().map(_.toSeq).toSet
     assert(fromIdx == inPlan,
       s"from-index PQ must equal train-in-plan: ${fromIdx.diff(inPlan)} vs ${inPlan.diff(fromIdx)}")
+    // the per-vector tables are flat: no partition level under them
+    for (t <- Seq("assignments", "pq_codes"))
+      assert(!new java.io.File(s"$idx/$t").listFiles().exists(_.isDirectory),
+        s"$t must not be partitioned")
     // and the cached search entry (the declared q_ann_pq_search) agrees
     val cached = VectorOps.annPqSearchCached(spark, sfDir)
       .collect().map(_.toSeq).toSet

@@ -6,6 +6,7 @@ import graft.functions.FitsHeader
 import graft.streaming.IngestPipeline
 import graft.streaming.IngestPipeline.Config
 import org.apache.spark.sql.functions._
+import scala.jdk.CollectionConverters._
 
 /** End-to-end ingest (reference E1): temp stage-in dir with notify/payload
   * pairs exercising every routing branch, then conservation + idempotence
@@ -38,9 +39,14 @@ class IngestPipelineSpec extends SparkSpec {
         case Some(m) => s"md5sum = $m\nfilesize = ${bytes.length}\n".getBytes
       })
 
-    // good FITS with every contract-required primary keyword
+    // good FITS with every contract-required primary keyword, written
+    // through Hadoop's local FileSystem: it leaves a `.crc` sidecar that
+    // the archive move must take along
     val good = FitsHeader.render(Seq("SIMPLE" -> "T") ++ primaryCards)
-    put("DECam_00000001.fits.fz", good); notifyFor("DECam_00000001.fits.fz", good)
+    val out = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+      .create(new org.apache.hadoop.fs.Path(stage.resolve("DECam_00000001.fits.fz").toString))
+    out.write(good); out.close()
+    notifyFor("DECam_00000001.fits.fz", good)
     // manifest (no keyword contract)
     val man = """{"nite": "20240115"}""".getBytes
     put("manifest_SN1.json", man); notifyFor("manifest_SN1.json", man)
@@ -58,6 +64,15 @@ class IngestPipelineSpec extends SparkSpec {
     // notify without payload
     Files.write(stage.resolve("DECam_00000009.fits.fz.dbb"),
       "md5sum = abc\n".getBytes)
+  }
+
+  /** `dir` on the spec's second local scheme (`xfs://`, registered in the
+    * session's Hadoop conf): a different FileSystem from the stage dir's,
+    * so moves into it take the copy-verify arm. */
+  private def onXfs(dir: String): String = {
+    spark.sparkContext.hadoopConfiguration
+      .set("fs.xfs.impl", classOf[XfsFileSystem].getName)
+    "xfs://" + Paths.get(dir).toAbsolutePath
   }
 
   private def mkConfig(): (Path, Config) = {
@@ -98,6 +113,13 @@ class IngestPipelineSpec extends SparkSpec {
       Paths.get(cfg.archiveDir, "raw", "DECam_00000001.fits.fz")))
     assert(Files.exists(
       Paths.get(cfg.archiveDir, "snmanifest", "manifest_SN1.json")))
+    // the sidecar moved with its file: a checksummed read still verifies
+    val archivedFits = new org.apache.hadoop.fs.Path(
+      Paths.get(cfg.archiveDir, "raw", "DECam_00000001.fits.fz").toString)
+    val localFs = org.apache.hadoop.fs.FileSystem.getLocal(spark.sparkContext.hadoopConfiguration)
+    assert(localFs.exists(localFs.getChecksumFile(archivedFits)))
+    val in = localFs.open(archivedFits)
+    try assert(in.readAllBytes().length > 0) finally in.close()
 
     val bad = spark.read.parquet(cfg.badFileDir)
     val msgs = bad.collect().map(r => r.getAs[String]("orig_filename") ->
@@ -252,16 +274,20 @@ class IngestPipelineSpec extends SparkSpec {
   test("copyVerify: clean copy verifies on attempt 1; torn copy retries") {
     import org.apache.hadoop.fs.{FileSystem, Path => HPath}
     val conf = spark.sparkContext.hadoopConfiguration
-    val fs = FileSystem.get(conf)
     val dir = Files.createTempDirectory("cv")
+    // source on the default FS, destinations on the second scheme: the
+    // cross-FileSystem copy the archive stage runs
+    val srcFs = FileSystem.get(conf)
+    val dstDir = onXfs(dir.toString)
+    val fs = new HPath(dstDir).getFileSystem(conf)
     val src = dir.resolve("src.bin")
     val bytes = "payload-bytes".getBytes
     Files.write(src, bytes)
     val expected = md5hex(bytes)
 
     // clean: one attempt
-    val dst1 = new HPath(dir.resolve("out1").toString)
-    assert(IngestPipeline.copyVerify(fs, new HPath(src.toString), dst1,
+    val dst1 = new HPath(s"$dstDir/out1")
+    assert(IngestPipeline.copyVerify(srcFs, new HPath(src.toString), fs, dst1,
       Some(expected), 5, 0L, conf) == 1)
     assert(Files.exists(dir.resolve("out1")))
 
@@ -273,8 +299,8 @@ class IngestPipelineSpec extends SparkSpec {
           out.write("garbage".getBytes); out.close()
         }
     }
-    val dst2 = new HPath(dir.resolve("out2").toString)
-    assert(IngestPipeline.copyVerify(fs, new HPath(src.toString), dst2,
+    val dst2 = new HPath(s"$dstDir/out2")
+    assert(IngestPipeline.copyVerify(srcFs, new HPath(src.toString), fs, dst2,
       Some(expected), 5, 0L, conf, Some(tornTwice)) == 3)
 
     // torn every time: fails after maxTries, destination removed
@@ -284,8 +310,8 @@ class IngestPipelineSpec extends SparkSpec {
         out.write("garbage".getBytes); out.close()
       }
     }
-    val dst3 = new HPath(dir.resolve("out3").toString)
-    assert(IngestPipeline.copyVerify(fs, new HPath(src.toString), dst3,
+    val dst3 = new HPath(s"$dstDir/out3")
+    assert(IngestPipeline.copyVerify(srcFs, new HPath(src.toString), fs, dst3,
       Some(expected), 4, 0L, conf, Some(tornAlways)) == 0)
     assert(!Files.exists(dir.resolve("out3")), "failed copy cleaned up")
   }
@@ -300,8 +326,9 @@ class IngestPipelineSpec extends SparkSpec {
           out.write("garbage".getBytes); out.close()
         }
     }
-    val cfg = cfg0.copy(maxCopyTries = 3, copyRetrySleepMs = 0L,
-      copyFault = Some(alwaysTorn))
+    // the archive on another FileSystem: moves take the copy-verify arm
+    val cfg = cfg0.copy(archiveDir = onXfs(cfg0.archiveDir), maxCopyTries = 3,
+      copyRetrySleepMs = 0L, copyFault = Some(alwaysTorn))
     val good = FitsHeader.render(Seq("SIMPLE" -> "T") ++ primaryCards)
     for (n <- Seq("DECam_00000030.fits.fz", "DECam_00000031.fits.fz")) {
       Files.write(stage.resolve(n), good)
@@ -329,22 +356,120 @@ class IngestPipelineSpec extends SparkSpec {
     assert(stage.toFile.listFiles().isEmpty, "stage drained")
   }
 
+  test("archive on another FileSystem: moves resolve each path's own scheme") {
+    // the archive on the second scheme: every move must open the
+    // destination on ITS FileSystem (the default FS rejects an xfs:// path)
+    // and the notify deletes must still drain the stage dir
+    val (stage, cfg0) = mkConfig()
+    val cfg = cfg0.copy(archiveDir = onXfs(cfg0.archiveDir))
+    writeFixtures(stage)
+    val report = IngestPipeline.runBatch(spark, cfg)
+    assert(report.archived == 2 && report.quarantined == 4)
+    assert(stage.toFile.listFiles().isEmpty, "stage dir fully drained")
+    val local = Paths.get(cfg0.archiveDir, "raw", "DECam_00000001.fits.fz")
+    assert(Files.exists(local))
+    val paths = spark.read.parquet(cfg.locationTableDir).collect()
+      .map(_.getAs[String]("archive_path"))
+    assert(paths.length == 2 && paths.forall(_.startsWith("xfs:///")),
+      paths.mkString(", "))
+    val reg = spark.read.parquet(cfg.registryDir)
+      .where(col("filename") === "DECam_00000001.fits.fz").head()
+    assert(reg.getAs[String]("md5sum") == md5hex(Files.readAllBytes(local)))
+  }
+
+  test("rename guard: a payload changed after the scan is copy-verified, not renamed") {
+    import java.nio.file.attribute.FileTime
+    val (stage, cfg0) = mkConfig()
+    val cfg = cfg0.copy(maxCopyTries = 2, copyRetrySleepMs = 0L)
+    val good = FitsHeader.render(Seq("SIMPLE" -> "T") ++ primaryCards)
+    val Seq(kept, grown, rewritten) =
+      Seq(70, 71, 72).map(i => f"DECam_000000$i%02d.fits.fz")
+    Seq(kept, grown, rewritten).foreach { n =>
+      Files.write(stage.resolve(n), good)
+      Files.write(stage.resolve(n + ".dbb"), notifyBytesFor(good))
+    }
+    val manifest = IngestPipeline.writeManifest(spark, cfg)
+    // after the scan: one payload grows, one keeps its size but gets
+    // other bytes and a later mtime
+    Files.write(stage.resolve(grown), good ++ "tail".getBytes)
+    val before = Files.getLastModifiedTime(stage.resolve(rewritten)).toMillis
+    Files.write(stage.resolve(rewritten), good.map(b => (b ^ 1).toByte))
+    Files.setLastModifiedTime(stage.resolve(rewritten),
+      FileTime.fromMillis(before + 5000L))
+    val routed = IngestPipeline.moveFiles(spark, cfg, manifest)
+    IngestPipeline.register(spark, cfg, routed)
+    val report = IngestPipeline.commitNotifies(spark, routed)
+    assert(report.archived == 1 && report.quarantined == 2)
+    // the unchanged payload: archived with the scan's md5 and size
+    val reg = spark.read.parquet(cfg.registryDir).collect()
+    assert(reg.map(_.getAs[String]("filename")).toSeq == Seq(kept))
+    assert(reg.head.getAs[String]("md5sum") == md5hex(good))
+    assert(reg.head.getAs[Int]("filesize") == good.length)
+    assert(Files.readAllBytes(Paths.get(cfg.archiveDir, "raw", kept)).toSeq
+      == good.toSeq)
+    // the changed ones went through copy-verify and failed it
+    val msgs = spark.read.parquet(cfg.badFileDir).collect()
+      .map(r => r.getAs[String]("orig_filename") -> r.getAs[String]("rejected_msg"))
+      .toMap
+    assert(msgs == Map(grown -> "copy verification failed after 2 tries",
+      rewritten -> "copy verification failed after 2 tries"), msgs)
+    assert(!Files.exists(Paths.get(cfg.archiveDir, "raw", grown)) &&
+      !Files.exists(Paths.get(cfg.archiveDir, "raw", rewritten)))
+    assert(stage.toFile.listFiles().isEmpty, "stage drained")
+  }
+
+  test("same scheme, another mount: the rename fails over to a verified copy") {
+    // Hadoop's local rename would silently copy across mounts; the
+    // archive stage must see the failed rename and verify its copy. The
+    // stage dir sits on the temp dir's mount, the archive on /dev/shm.
+    val shm = Paths.get("/dev/shm")
+    val (stage, cfg0) = mkConfig()
+    assume(Files.isDirectory(shm) && Files.isWritable(shm) &&
+      Files.getFileStore(shm) != Files.getFileStore(stage),
+      "needs a writable /dev/shm on another mount than the temp dir")
+    val archive = Files.createTempDirectory(shm, "ingest_archive")
+    try {
+      val torn = new IngestPipeline.CopyFault {
+        def apply(attempt: Int, fs: org.apache.hadoop.fs.FileSystem,
+            dst: org.apache.hadoop.fs.Path): Unit = {
+          val out = fs.create(dst, true)
+          out.write("garbage".getBytes); out.close()
+        }
+      }
+      val cfg = cfg0.copy(archiveDir = archive.toString, maxCopyTries = 2,
+        copyRetrySleepMs = 0L, copyFault = Some(torn))
+      val good = FitsHeader.render(Seq("SIMPLE" -> "T") ++ primaryCards)
+      Files.write(stage.resolve("DECam_00000080.fits.fz"), good)
+      Files.write(stage.resolve("DECam_00000080.fits.fz.dbb"), notifyBytesFor(good))
+      val report = IngestPipeline.runBatch(spark, cfg)
+      assert(report.archived == 0 && report.quarantined == 1)
+      assert(spark.read.parquet(cfg.badFileDir).head()
+        .getAs[String]("rejected_msg") == "copy verification failed after 2 tries")
+      assert(stage.toFile.listFiles().isEmpty, "stage drained")
+    } finally {
+      val walk = Files.walk(archive)
+      try walk.sorted(java.util.Comparator.reverseOrder[Path]())
+        .forEach(p => Files.delete(p))
+      finally walk.close()
+    }
+  }
+
   test("intra-batch duplicates: earliest delivery wins, later quarantined") {
     import spark.implicits._
     val good = FitsHeader.render(Seq("SIMPLE" -> "T") ++ primaryCards)
     val notifyBytes =
       notifyBytesFor(good)
-    val notify = Seq(
+    val files = Seq(
       ("file:///s/a/x.fits.fz.dbb", notifyBytes,
         new java.sql.Timestamp(2000L)),
       ("file:///s/b/x.fits.fz.dbb", notifyBytes,
-        new java.sql.Timestamp(1000L)))
+        new java.sql.Timestamp(1000L)),
+      ("file:///s/a/x.fits.fz", good, new java.sql.Timestamp(2000L)),
+      ("file:///s/b/x.fits.fz", good, new java.sql.Timestamp(1000L)))
       .toDF("path", "content", "modificationTime")
-    val pays = Seq(("file:///s/a/x.fits.fz", good),
-      ("file:///s/b/x.fits.fz", good)).toDF("path", "content")
     val registry = Seq.empty[String].toDF("filename")
     val (_, cfg) = mkConfig()
-    val planned = IngestPipeline.plan(spark, notify, pays, registry, cfg)
+    val planned = IngestPipeline.plan(spark, files, registry, cfg)
       .select("notify_path", "status", "reject_msg").collect()
       .map(r => r.getString(0) -> (r.getString(1), r.getString(2))).toMap
     // mtime 1000 (delivered first) wins; mtime 2000 is the duplicate
@@ -458,19 +583,60 @@ class IngestPipelineSpec extends SparkSpec {
     // broadcasts are the ones AQE itself chooses from observed sizes.
     import spark.implicits._
     withAutoBroadcastOff {
-      val notify = Seq(("file:///s/a.fits.fz.dbb",
+      val files = Seq(("file:///s/a.fits.fz.dbb",
         "md5sum = 0\nfilesize = 1\n".getBytes,
-        new java.sql.Timestamp(1000L)))
+        new java.sql.Timestamp(1000L)),
+        ("file:///s/a.fits.fz", "x".getBytes, new java.sql.Timestamp(1000L)))
         .toDF("path", "content", "modificationTime")
-      val pay = Seq(("file:///s/a.fits.fz", "x".getBytes))
-        .toDF("path", "content")
       val registry = Seq("b.fits.fz").toDF("filename")
       val (_, cfg) = mkConfig()
-      val planStr = IngestPipeline.plan(spark, notify, pay, registry, cfg)
+      val planStr = IngestPipeline.plan(spark, files, registry, cfg)
         .queryExecution.executedPlan.toString
       assert(!planStr.contains("BroadcastExchange"),
         s"registry side must not be hint-broadcast:\n$planStr")
     }
+  }
+
+  test("one batch scans the stage dir once and shuffles no payload bytes") {
+    // every plan the batch executes, AQE stages included: exactly one
+    // binaryFile scan (both pairing sides come from it) and no exchange
+    // carrying a binary column (md5, size and the header parse run
+    // inside the scan, so `content` never reaches a shuffle)
+    import org.apache.spark.sql.execution.{FileSourceScanExec, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.datasources.binaryfile.BinaryFileFormat
+    import org.apache.spark.sql.execution.exchange.Exchange
+    import org.apache.spark.sql.types.BinaryType
+    val (stage, cfg) = mkConfig()
+    writeFixtures(stage)
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    val report =
+      try {
+        val r = IngestPipeline.runBatch(spark, cfg)
+        org.apache.spark.ListenerBusAccess.drain(spark.sparkContext)
+        r
+      } finally spark.listenerManager.unregister(listener)
+    assert(report.archived == 2 && report.quarantined == 4)
+    val helper = new AdaptiveSparkPlanHelper {}
+    val nodes = plans.asScala.toSeq.flatMap(p => helper.collect(p) { case n => n })
+    val stageScans = nodes.collect {
+      case s: FileSourceScanExec if s.relation.fileFormat.isInstanceOf[BinaryFileFormat] &&
+          s.relation.location.rootPaths.exists(_.toUri.getPath == stage.toString) => s
+    }
+    assert(stageScans.size == 1,
+      s"the stage dir must be scanned once per batch, saw ${stageScans.size}")
+    val binaryExchanges = nodes.collect {
+      case e: Exchange if e.output.exists(_.dataType == BinaryType) => e
+    }
+    assert(binaryExchanges.isEmpty,
+      s"payload bytes crossed an exchange:\n${binaryExchanges.mkString("\n")}")
   }
 
   private def withAutoBroadcastOff[A](body: => A): A = {
@@ -622,7 +788,9 @@ class IngestPipelineSpec extends SparkSpec {
           .foreach(n => fs.delete(
             new org.apache.hadoop.fs.Path(s"$stageDir/$n"), false))
     }
-    val cfg = cfg0.copy(copyFault = Some(vandal))
+    // the fault fires in the copy arm: archive on another FileSystem
+    val cfg = cfg0.copy(archiveDir = onXfs(cfg0.archiveDir),
+      copyFault = Some(vandal))
     val prevOpenCost = spark.conf.get("spark.sql.files.openCostInBytes")
     val prevMinPart = spark.conf.getOption("spark.sql.files.minPartitionNum")
     spark.conf.set("spark.sql.files.openCostInBytes", "0")
@@ -658,4 +826,12 @@ class IngestPipelineSpec extends SparkSpec {
     assert(spark.read.parquet(cfg.registryDir).count() == 2)
     assert(spark.read.parquet(cfg.locationTableDir).count() == 2)
   }
+}
+
+/** A second local scheme, `xfs://`, on the same disk: another FileSystem
+  * (by URI) than the default `file://`, for specs whose archive must not
+  * share the stage dir's FileSystem. */
+class XfsFileSystem extends org.apache.hadoop.fs.RawLocalFileSystem {
+  override def getUri: java.net.URI = java.net.URI.create("xfs:///")
+  override def getScheme: String = "xfs"
 }

@@ -143,7 +143,7 @@ class SparkEntrySpec extends SparkSpec {
     }
   }
 
-  test("every library object member is named outside its own definition") {
+  test("every library object member is reachable from a production root") {
     val code = (scalaFiles("src/main/scala") ++
         scalaFiles("perfbench/src/main/scala"))
       .map(f => f -> stripComments(Files.readString(f)).split("\n", -1))
@@ -155,20 +155,33 @@ class SparkEntrySpec extends SparkSpec {
     }.flatten
     assert(members.size > 500, s"lint saw only ${members.size} members")
     val names = members.map(_._2).toSet
-    // per file, per line: how often each member name appears on it
-    val uses: Map[Path, Array[Map[String, Int]]] = code.map { case (f, lines) =>
-      f -> lines.map(l => """\b\w+\b""".r.findAllIn(l).filter(names).toSeq
-        .groupMapReduce(identity)(_ => 1)(_ + _))
+    def named(lines: Iterable[String]): Set[String] =
+      lines.flatMap(l => """\b\w+\b""".r.findAllIn(l).filter(names)).toSet
+    // roots: every line outside a linted member's definition (the
+    // catalog maps' owners, the mains, the report code, perfbench) plus
+    // the kept reference surface
+    val inMember: Map[Path, Set[Int]] = members.groupMapReduce(_._1) {
+      case (_, _, from, to) => (from until to).toSet }(_ ++ _)
+    val roots = code.flatMap { case (f, lines) =>
+      val skip = inMember.getOrElse(f, Set.empty[Int])
+      named(lines.indices.filterNot(skip).map(lines))
+    }.toSet ++ ReferenceSurface
+    // to a fixpoint: a member is used when a root or a used member names
+    // it — a member naming itself (recursion) does not count
+    val bodies = members.groupMapReduce(_._2) { case (f, name, from, to) =>
+      named(code(f).slice(from, to)) - name }(_ ++ _)
+    var used = roots
+    var frontier = roots
+    while (frontier.nonEmpty) {
+      val next = frontier.flatMap(n => bodies.getOrElse(n, Set.empty[String])) -- used
+      used ++= next
+      frontier = next
     }
-    val total = uses.values.toSeq.flatMap(_.toSeq.flatMap(_.toSeq))
-      .groupMapReduce(_._1)(_._2)(_ + _)
-    val unused = members.filter { case (f, name, from, to) =>
-      val own = (from until to).map(i => uses(f)(i).getOrElse(name, 0)).sum
-      total.getOrElse(name, 0) == own && !ReferenceSurface(name)
-    }.map { case (f, name, from, _) => s"${f.getFileName}:${from + 1} $name" }
+    val unused = members.filterNot(m => used(m._2))
+      .map { case (f, name, from, _) => s"${f.getFileName}:${from + 1} $name" }
     if (unused.nonEmpty)
-      fail(s"${unused.size} members are named only in their own definition " +
-        s"(delete them, or name the caller):\n${unused.sorted.mkString("\n")}")
+      fail(s"${unused.size} members are unreachable from every production " +
+        s"root (delete them, or name the caller):\n${unused.sorted.mkString("\n")}")
     val missing = ReferenceSurface -- names
     assert(missing.isEmpty, s"reference surface no longer defined: $missing")
   }
