@@ -1,6 +1,6 @@
 package graft.functions
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Scale utilities (SURVEY.md §7.4.5, README scale notes): bucketed
@@ -214,6 +214,14 @@ object ScaleUtils {
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(in)
       try r.getRecordCount finally r.close()
     }.sum
+  }
+
+  /** The driver-cutover probe: `df`'s rows when there are at most `max`
+    * of them, else None. One bounded `limit(max + 1)` job — a frame far
+    * above the bound costs its first partitions' rows, never a count. */
+  def collectAtMost(df: DataFrame, max: Int): Option[Array[Row]] = {
+    val rows = df.limit(max + 1).collect()
+    if (rows.length <= max) Some(rows) else None
   }
 
   /** Fan a narrow-parallelism scan out to the session's cores before

@@ -778,7 +778,7 @@ object CurationOps {
     * down and the chunk-EMBEDDING path
     * ([[graft.operators.DedupOps.chunkSemDedup]]) consumes directly. */
   private[graft] def chunkedToks(docs: DataFrame): DataFrame = {
-    val toksCol = filter(split(col("text"), " "), t => t =!= "")
+    val toksCol = TextOps.toks(col("text"))
     // explodeNN replaces both the explicit `n > 0` filter and plain
     // explode's pruning filter: a zero-token doc takes the when()'s null
     // branch (sequence itself would throw on 0 to -1), outer-explode
@@ -873,7 +873,7 @@ object CurationOps {
         -1)
     docs
       .select(col("doc_id"), col("lang"),
-        posexplode(filter(split(col("text"), " "), t => t =!= ""))
+        posexplode(TextOps.toks(col("text")))
           .as(Seq("pos", "tok")))
       .withColumn("b", when(expr("CAST(conv(substring(md5(cast(tok AS " +
         s"binary)), 1, 8), 16, 10) AS BIGINT) % $CdcDivisor") === 0, 1L)
@@ -1121,7 +1121,7 @@ object CurationOps {
     // fan-out before the URL synthesis + downstream canonicalization
     // regexes — identity at scale
     graft.functions.ScaleUtils.fanOutScan(docs, col("doc_id"))
-      .withColumn("w", filter(split(col("text"), " "), t => t =!= ""))
+      .withColumn("w", TextOps.toks(col("text")))
       .select(col("doc_id"), concat(
         when(col("doc_id") % 2 === 0, "HTTP").otherwise("http"),
         lit("://"),

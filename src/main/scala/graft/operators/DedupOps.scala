@@ -47,14 +47,15 @@ object DedupOps {
     * that duplicate pass on the narrow scan. [[TextOps.shingles3]] is
     * total: it returns a 1-element array (the whole-text join) for docs
     * under 3 tokens, so the array is NEVER null or empty and the outer
-    * explode emits row-identical output with no filter in the plan. */
-  private[graft] def explodedDocs(docs: DataFrame): DataFrame =
+    * explode emits row-identical output with no filter in the plan.
+    * `lang` rides along next to doc_id when the input has it. */
+  private[graft] def explodedDocs(docs: DataFrame): DataFrame = {
+    val kept = col("doc_id") +: Seq("lang").filter(docs.columns.contains).map(col)
     graft.functions.ScaleUtils.fanOutScan(docs, col("doc_id"))
-      .select(col("doc_id"), col("lang"),
-        TextOps.shingles3(col("text")).as("tset"))
+      .select(kept :+ TextOps.shingles3(col("text")).as("tset"): _*)
       .withColumn("n_tok", size(col("tset")))
-      .select(col("doc_id"), col("lang"), col("n_tok"),
-        explode_outer(col("tset")).as("tok"))
+      .select(kept ++ Seq(col("n_tok"), explode_outer(col("tset")).as("tok")): _*)
+  }
 
   /** Digest-family prefix for family `f`: family f hashes
     * md5(prefix(f) | tok). Families 0-2 keep their historical prefixes
@@ -1133,11 +1134,11 @@ object DedupOps {
       // checkpoint blocks (first wave almost always decides), never the
       // upstream chain.
       if (driverMaxEdges > 0 && e.schema.fields.forall(
-          _.dataType == org.apache.spark.sql.types.LongType)) {
-        val probe = e.limit(driverMaxEdges + 1).collect()
-        if (probe.length <= driverMaxEdges)
-          return ccDriver(e.sparkSession, probe)
-      }
+          _.dataType == org.apache.spark.sql.types.LongType))
+        graft.functions.ScaleUtils.collectAtMost(e, driverMaxEdges) match {
+          case Some(rows) => return ccDriver(e.sparkSession, rows)
+          case None =>
+        }
       val adj = e.select(col("id_a").as("src"), col("id_b").as("dst"))
         .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
       var labels = adj.select(col("src").as("id")).distinct()
@@ -1844,17 +1845,11 @@ object DedupOps {
     * division — bit-identical cross-engine). */
   private[graft] def contaminationCore(bench: DataFrame, corpus: DataFrame,
       bar: Double): DataFrame = {
-    // explode_outer: shingles3 is total — see [[explodedDocs]];
-    // fan-out before the shingle pass (identity at scale, and on the
-    // tiny bench side it just spreads 25 rows)
-    def ex(df: DataFrame): DataFrame = graft.functions.ScaleUtils.fanOutScan(df, col("doc_id"))
-      .select(col("doc_id"), TextOps.shingles3(col("text")).as("tset"))
-      .withColumn("n_tok", size(col("tset")))
-      .select(col("doc_id"), col("n_tok"),
-        explode_outer(col("tset")).as("tok"))
-    val b = ex(bench).select(col("doc_id").as("bench_id"),
+    // explodedDocs fans out first: identity at scale, and on the tiny
+    // bench side it just spreads 25 rows
+    val b = explodedDocs(bench).select(col("doc_id").as("bench_id"),
       col("n_tok").as("n_b"), col("tok"))
-    val c = ex(corpus).select(col("doc_id"), col("tok"))
+    val c = explodedDocs(corpus).select(col("doc_id"), col("tok"))
     c.join(broadcast(b), Seq("tok"))
       .groupBy(col("doc_id"), col("bench_id"))
       .agg(count(lit(1)).as("shared"), first(col("n_b")).as("n_b"))
@@ -1904,36 +1899,25 @@ object DedupOps {
     * trips only this one. Emits (doc_id, n_hits = distinct benchmark
     * n-grams present).
     *
-    * Scale shape: n-grams are per-row array expressions over the
-    * MATERIALIZED token column (a lambda body referencing an attribute —
-    * never re-splitting per element, the shingles3 CSE lesson);
-    * benchmark grams are distinct + broadcast (benchmarks are small);
+    * Scale shape: n-grams are per-row array expressions
+    * ([[TextOps.grams]]); benchmark grams are distinct + broadcast (benchmarks are small);
     * the corpus side is one scan, no shuffle of the big side. The gram
     * explode is ~len rows per doc — same volume class as the shingle
     * paths the LSH chain already runs. */
   /** (doc_id, gram) — each document's DISTINCT n-word grams, the unit
-    * of exact decontamination; per-row array expressions over the
-    * materialized token column (the shingles3 CSE lesson). Shared by
+    * of exact decontamination ([[TextOps.grams]]). Shared by
     * [[ngramContamination]], [[benchmarkGrams]] and the streaming
     * gate's contamination verdict, so "a benchmark n-gram" means the
     * same string everywhere. */
   private[graft] def ngramsRel(docs: DataFrame,
       n: Int = ContamNgram): DataFrame =
-    // explode_outer + null-drop on the OUTPUT column: the gram array CAN
-    // be empty (docs under n tokens), and plain explode would plant a
-    // pruning Filter that re-evaluates the whole gram tree per row below
-    // any exchange (see [[explodedDocs]]). Gram elements are array_join
-    // results (never null), so `gram IS NULL` marks exactly the padded
-    // row explode_outer emits for an empty array — dropping it is
-    // row-identical to explode, and the filter is a cheap column ref.
-    graft.functions.ScaleUtils.fanOutScan(docs, col("doc_id"))
-      .select(col("doc_id"), TextOps.toks(col("text")).as("t"))
-      .select(col("doc_id"), explode_outer(array_distinct(
-        when(size(col("t")) >= n,
-          transform(sequence(lit(1), size(col("t")) - (n - 1)),
-            i => array_join(slice(col("t"), i, lit(n)), " ")))
-          .otherwise(array().cast("array<string>")))).as("gram"))
-      .where(col("gram").isNotNull)
+    // explodeNN, not plain explode: the gram array CAN be empty (docs
+    // under n tokens), and plain explode would plant a pruning Filter
+    // that re-evaluates the whole gram tree per row below any exchange
+    // (see [[explodedDocs]])
+    TextOps.explodeNN(graft.functions.ScaleUtils.fanOutScan(docs, col("doc_id")),
+      array_distinct(TextOps.grams(TextOps.toks(col("text")), n)), "gram",
+      col("doc_id"))
 
   /** The distinct benchmark-split n-gram set — the (small, broadcast)
     * reference relation every decontamination pass joins against; a

@@ -50,7 +50,7 @@ object FuzzyOps {
     * 3 tokens, plus the planted typo twins. */
   private[graft] def records(spark: SparkSession, dir: String): DataFrame = {
     val base = Tables.documents(spark, dir)
-      .withColumn("w", filter(split(col("text"), " "), t => t =!= ""))
+      .withColumn("w", TextOps.toks(col("text")))
       .where(size(col("w")) >= 3)
       .select(col("doc_id").as("id"),
         array_join(slice(col("w"), 1, 3), " ").as("name"))

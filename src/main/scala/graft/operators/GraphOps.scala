@@ -240,16 +240,17 @@ object GraphOps {
         .schema.fields ++ nodes.schema.fields)
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
     if (allLong && driverMaxRows > 0) {
-      val eProbe = ew.select(col("s"), col("t"), col("w"), col("ow"))
-        .limit(driverMaxRows + 1).collect()
-      if (eProbe.length <= driverMaxRows) {
-        val nProbe = nodes.select(col("node"), col("r0"), col("tel"))
-          .limit(driverMaxRows + 1).collect()
-        if (nProbe.length <= driverMaxRows) {
-          val out = rankLoopDriver(e.sparkSession, eProbe, nProbe)
+      def probe(df: DataFrame) =
+        graft.functions.ScaleUtils.collectAtMost(df, driverMaxRows)
+      val local = for {
+        eRows <- probe(ew.select(col("s"), col("t"), col("w"), col("ow")))
+        nRows <- probe(nodes.select(col("node"), col("r0"), col("tel")))
+      } yield rankLoopDriver(e.sparkSession, eRows, nRows)
+      local match {
+        case Some(out) =>
           (ckptRdds(ew) ++ ckptRdds(nodes)).foreach(_.unpersist(false))
           return out
-        }
+        case None =>
       }
     }
     var r = nodes.select(col("node"), col("r0").as("r"))

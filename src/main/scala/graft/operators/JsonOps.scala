@@ -56,7 +56,7 @@ object JsonOps {
     * branch references it without re-deriving the concat (the
     * HOF-no-CSE discipline). */
   private[graft] def jsonDocsOf(docs: DataFrame): DataFrame = {
-    val w = filter(split(col("text"), " "), t => t =!= "")
+    val w = TextOps.toks(col("text"))
     val tags = array_join(transform(slice(w, 1, 3),
       t => concat(lit("\""), t, lit("\""))), ",")
     val full = concat(

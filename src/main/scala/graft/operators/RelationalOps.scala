@@ -386,7 +386,7 @@ object RelationalOps {
     import graft.sources.Tables
     val base = Tables.documents(spark, dir)
       .select(col("doc_id"), col("text"))
-    val w = filter(split(col("text"), " "), t => t =!= "")
+    val w = TextOps.toks(col("text"))
     val updates = Tables.documents(spark, dir)
       .where(col("doc_id") % MergeUpdMod === 0 &&
         col("doc_id") % MergeDelMod =!= 0)

@@ -63,29 +63,51 @@ object TextOps {
 
   private[operators] val contentFpSql: String = "md5(lower(trim(text)))"
 
+  /** Positional n-grams of `arr`: every window of n consecutive elements
+    * joined by one space, in order, duplicates kept — the one definition
+    * of "an n-gram" every dedup, contamination, scrub and LM signal keys
+    * on. Under n elements gives an empty array, a null array gives null,
+    * and no element is ever null (the [[explodeNN]] contract) as long as
+    * `arr`'s own elements are non-null, as every tokenizer here
+    * guarantees.
+    *
+    * `arr` is bound ONCE per row as the lambda variable of a one-element
+    * transform: Catalyst does not CSE into lambda bodies, so a window
+    * sliced from an unmaterialized `arr` (a [[toks]] expression, say)
+    * would re-tokenize the text per window. Up to 4-grams the zip-shift
+    * form (zip against the 1..n-1 shifted slices; the shorter side's
+    * null pad drops in the filter) is cheaper; it pays one more zip_with
+    * pass per extra element, while the per-window `slice` form barely
+    * moves with n. Distinct grams of 40k documents on local[4], medians
+    * of 9 interleaved runs, zip-shift vs slice: n=3 1.18 vs 1.43 s, n=5
+    * 2.12 vs 2.08 s, n=7 2.40 vs 1.95 s, n=13 3.42 vs 2.19 s. A shifted
+    * slice's length is `size(t)`: an `Int.MaxValue - 8` "to the end"
+    * length overflows start + length from start 10 on and silently
+    * yields an EMPTY array. */
+  private[graft] def grams(arr: Column, n: Int): Column = {
+    require(n >= 1, s"gram width must be positive, got $n")
+    def windows(t: Column): Column =
+      if (n <= 4) filter((2 to n).foldLeft(t)((acc, k) =>
+          zip_with(acc, slice(t, lit(k), size(t)), (x, y) => concat(x, lit(" "), y))),
+        g => g.isNotNull)
+      else when(size(t) >= n, transform(sequence(lit(1), size(t) - (n - 1)),
+          i => array_join(slice(t, i, lit(n)), " ")))
+        .otherwise(slice(t, 1, 0))
+    element_at(transform(array(arr), windows _), 1)
+  }
+
+  /** Positional 3-grams of `t`, or one whole-text gram for docs under 3
+    * tokens — the shared unit of [[shingles3]] and
+    * [[winnowFingerprintCore]]. */
+  private def grams3OrWhole(t: Column): Column =
+    when(size(t) >= 3, grams(t, 3)).otherwise(array(array_join(t, " ")))
+
   /** Distinct 3-gram word shingles (the MinHash/Jaccard unit). Word-level
     * sets degenerate on small vocabularies — every doc looks like every
     * other; 3-grams carry word order, so similarity concentrates on real
     * near-dups and shingle-blocked joins stop exploding. Docs shorter than
     * 3 tokens fall back to one whole-text shingle. */
-  def shingles3(text: Column): Column = {
-    val t = toks(text)
-    // zip the token array against its 1- and 2-shifted slices instead of
-    // indexing with element_at inside a transform lambda: element_at(t, i)
-    // re-evaluates the whole split() subtree per ELEMENT (Catalyst does
-    // not CSE into lambda bodies), which turned this into O(len²) string
-    // splitting. zip_with evaluates each input array once per ROW.
-    // zip_with pads the shorter side with null and concat propagates null,
-    // so the 2 trailing partial shingles drop out in the filter.
-    val shifted1 = slice(t, 2, Int.MaxValue - 8)
-    val shifted2 = slice(t, 3, Int.MaxValue - 8)
-    val grams = filter(
-      zip_with(zip_with(t, shifted1, (x, y) => concat(x, lit(" "), y)),
-        shifted2, (xy, z) => concat(xy, lit(" "), z)),
-      g => g.isNotNull)
-    array_distinct(
-      when(size(t) >= 3, grams).otherwise(array(array_join(t, " "))))
-  }
+  def shingles3(text: Column): Column = array_distinct(grams3OrWhole(toks(text)))
 
   /** DuckDB rendering of [[shingles3]] — must stay semantically identical. */
   val shingles3Sql: String = {
@@ -153,11 +175,7 @@ object TextOps {
   def bpePairs(spark: SparkSession, dir: String): DataFrame =
     explodeNN(
       explodeNN(Tables.documents(spark, dir), toks(col("text")), "tok"),
-      filter(
-        zip_with(split(col("tok"), ""),
-          slice(split(col("tok"), ""), 2, Int.MaxValue - 8),
-          (a, b) => concat(a, lit(" "), b)),
-        p => p.isNotNull), "pair")
+      grams(split(col("tok"), ""), 2), "pair")
       .groupBy(col("pair"))
       .agg(count(lit(1)).as("n_pairs"))
       .orderBy(col("n_pairs").desc, col("pair"))
@@ -367,11 +385,8 @@ object TextOps {
     // job per (often small) round
     var pending = 0
     while (rank <= nMerges && !exhausted) {
-      val syms = split(trim(col("w")), "  ")
-      val top = explodeNN(words, filter(
-          zip_with(syms, slice(syms, 2, Int.MaxValue - 8),
-            (a, b) => concat(a, lit(" "), b)),
-          p => p.isNotNull), "pair", col("cnt"))
+      val top = explodeNN(words, grams(split(trim(col("w")), "  "), 2),
+          "pair", col("cnt"))
         .groupBy(col("pair")).agg(sum(col("cnt")).as("n_occ"))
         .orderBy(col("n_occ").desc, col("pair"))
         .limit(batchCap + 1)
@@ -725,11 +740,11 @@ object TextOps {
     // Parity spec-pinned (UnigramSpec); driverMaxWords = 0 forces the
     // distributed rounds. A 100 TB corpus's distinct-word relation
     // exceeds the bound and trains distributed, unchanged.
-    val probe = words.limit(UniDriverMaxWords + 1).collect()
-    if (probe.length <= UniDriverMaxWords)
-      return uniTrainDriver(spark,
-        probe.map(r => (r.getString(0), r.getLong(1))), words)
-    uniTrainDistributed(spark, words)
+    graft.functions.ScaleUtils.collectAtMost(words, UniDriverMaxWords) match {
+      case Some(rows) => uniTrainDriver(spark,
+        rows.map(r => (r.getString(0), r.getLong(1))), words)
+      case None => uniTrainDistributed(spark, words)
+    }
   }
 
   /** Word-table bound for [[uniTrain]]'s driver cutover: 2²⁰ distinct
@@ -1125,14 +1140,10 @@ object TextOps {
     divPos(topCnt * 10000L, greatest(size(t).cast("long"), lit(1L)))
   }
 
-  /** Duplicate-bigram fraction in 1e-4 units as one per-row expression.
-    * Bigrams keep duplicates (zip against the 1-shifted slice; the null
-    * pad from the shorter side drops in the filter). */
+  /** Duplicate-bigram fraction in 1e-4 units as one per-row expression
+    * (positional bigrams, duplicates kept). */
   private[graft] def dup2gram10k(text: Column): Column = {
-    val t = toks(text)
-    val g2 = filter(
-      zip_with(t, slice(t, 2, Int.MaxValue - 8), (x, y) => concat(x, lit(" "), y)),
-      g => g.isNotNull)
+    val g2 = grams(toks(text), 2)
     divPos((size(g2) - size(array_distinct(g2))).cast("long") * 10000L,
       greatest(size(g2).cast("long"), lit(1L)))
   }
@@ -1429,20 +1440,12 @@ object TextOps {
   }
 
   /** Positional bigram relation (doc_id, lang, w1, bg) over a documents
-    * frame — the shared base of [[bigramScore]] and [[collocations]].
-    * zip-shift form (tokens materialized once as a named column, the
-    * CSE discipline); docs under 2 tokens emit no rows. */
-  private def bigramRel(docs: DataFrame): DataFrame = {
-    val base = docs.select(col("doc_id"), col("lang"),
-      toks(col("text")).as("t"))
-    explodeNN(base,
-        filter(
-          zip_with(col("t"), slice(col("t"), 2, Int.MaxValue - 8),
-            (x, y) => concat(x, lit(" "), y)),
-          g => g.isNotNull), "bg",
+    * frame — the shared base of [[bigramScore]] and [[collocations]];
+    * docs under 2 tokens emit no rows. */
+  private def bigramRel(docs: DataFrame): DataFrame =
+    explodeNN(docs, grams(toks(col("text")), 2), "bg",
         col("doc_id"), col("lang"))
       .withColumn("w1", substring_index(col("bg"), " ", 1))
-  }
 
   /** BIGRAM CONDITIONAL-LM document scoring — the order-2 upgrade of
     * [[lmScore]]'s unigram filter: train corpus bigram conditionals
@@ -2372,17 +2375,9 @@ object TextOps {
     // fan-out before the per-row gram-hash + window-min walk (O(len*W)
     // interpreted HOFs) — identity at scale (see ScaleUtils.fanOutScan)
     val docs = graft.functions.ScaleUtils.fanOutScan(docsIn, col("doc_id"))
-    val t = toks(col("text"))
-    val s1 = slice(t, 2, Int.MaxValue - 8)
-    val s2 = slice(t, 3, Int.MaxValue - 8)
-    val grams = filter(
-      zip_with(zip_with(t, s1, (x, y) => concat(x, lit(" "), y)),
-        s2, (xy, z) => concat(xy, lit(" "), z)),
-      g => g.isNotNull)
-    val posGrams = when(size(t) >= 3, grams)
-      .otherwise(array(array_join(t, " ")))
     docs
-      .select(col("doc_id"), col("lang"), posGrams.as("grams"))
+      .select(col("doc_id"), col("lang"),
+        grams3OrWhole(toks(col("text"))).as("grams"))
       .withColumn("h", transform(col("grams"), g => md5(g.cast("binary"))))
       .withColumn("fps", expr(
         s"array_distinct(transform(" +
@@ -2491,16 +2486,10 @@ object TextOps {
     // materializes — identity at scale (see ScaleUtils.fanOutScan)
     val docs = graft.functions.ScaleUtils.fanOutScan(docsIn, col("doc_id"))
     val t = toks(col("text"))
-    val s1 = slice(t, 2, Int.MaxValue - 8)
-    val s2 = slice(t, 3, Int.MaxValue - 8)
-    val grams = filter(
-      zip_with(zip_with(t, s1, (x, y) => concat(x, lit(" "), y)),
-        s2, (xy, z) => concat(xy, lit(" "), z)),
-      g => g.isNotNull)
     val pgArr = docs
       .where(size(t) >= barTokens)
       .select(col("doc_id"),
-        transform(grams, g => md5(g.cast("binary"))).as("h"))
+        transform(grams(t, 3), g => md5(g.cast("binary"))).as("h"))
       .localCheckpoint(true)
     val pg = pgArr
       .select(col("doc_id"), posexplode(col("h")))
@@ -2965,32 +2954,36 @@ object TextOps {
   def repeatScrub(spark: SparkSession, dir: String): DataFrame =
     repeatScrubCore(Tables.documents(spark, dir))
 
-  /** [[repeatScrub]] over any (doc_id, text) relation. */
-  private[graft] def repeatScrubCore(docsIn: DataFrame): DataFrame = {
+  /** [[repeatScrub]] over any (doc_id, text) relation: a gram occurrence
+    * is covered when the same gram starts earlier in the document. */
+  private[graft] def repeatScrubCore(docsIn: DataFrame): DataFrame =
+    scrubCovered(docsIn) { (_, pg) =>
+      val first = pg.groupBy(col("doc_id"), col("g"))
+        .agg(min(col("s")).as("s0"))
+      pg.join(first, Seq("doc_id", "g")).where(col("s") > col("s0"))
+    }
+
+  /** The skeleton [[repeatScrubCore]] and [[crossDocScrubCore]] share:
+    * the positional [[RepeatGramN]]-gram relation `pg` (doc_id, s, g), the
+    * tokens covered by the (doc_id, s) gram starts `coveredStarts`
+    * picks from it, and the reassembly of the surviving tokens in order
+    * into (doc_id, n_tok, n_removed, scrubbed_fp). */
+  private def scrubCovered(docsIn: DataFrame)(
+      coveredStarts: (DataFrame, DataFrame) => DataFrame): DataFrame = {
     // fan-out before the per-row gram assembly — identity at scale
     val docs = graft.functions.ScaleUtils.fanOutScan(docsIn, col("doc_id"))
     val toksed = docs.select(col("doc_id"), toks(col("text")).as("t"))
       .where(size(col("t")) > 0)
     val pos = toksed.select(col("doc_id"), posexplode_outer(col("t")))
       .where(col("col").isNotNull).withColumnRenamed("col", "tok")
-    // positional 3-grams via the zip-shift pattern (shingles3's O(L)
-    // shape) — a transform(sequence, i -> slice(t, i, n)) would slice
-    // per POSITION in the interpreted HOF path: O(L²) per doc
-    val g2 = zip_with(col("t"), slice(col("t"), 2, Int.MaxValue - 8),
-      (a, b) => concat(a, lit(" "), b))
-    val g3 = filter(zip_with(g2, slice(col("t"), 3, Int.MaxValue - 8),
-      (a, b) => concat(a, lit(" "), b)), x => x.isNotNull)
     // posexplode_outer + null-drop: plain posexplode plants a pruning
-    // Filter that re-evaluates the whole zip_with gram chain per row
-    // (see explodeNN); gram elements are concat results (never null)
-    val grams = toksed.where(size(col("t")) >= RepeatGramN)
-      .select(col("doc_id"), posexplode_outer(g3))
+    // Filter that re-evaluates the whole gram expression per row (see
+    // explodeNN); gram elements are never null
+    val pg = toksed.where(size(col("t")) >= RepeatGramN)
+      .select(col("doc_id"), posexplode_outer(grams(col("t"), RepeatGramN)))
       .where(col("col").isNotNull)
       .select(col("doc_id"), col("pos").as("s"), col("col").as("g"))
-    val first = grams.groupBy(col("doc_id"), col("g"))
-      .agg(min(col("s")).as("s0"))
-    val covered = grams.join(first, Seq("doc_id", "g"))
-      .where(col("s") > col("s0"))
+    val covered = coveredStarts(docs, pg)
       .select(col("doc_id"),
         explode(sequence(col("s"), col("s") + (RepeatGramN - 1))).as("pos"))
       .distinct()
@@ -3032,49 +3025,22 @@ object TextOps {
   def crossDocScrub(spark: SparkSession, dir: String): DataFrame =
     crossDocScrubCore(Tables.documents(spark, dir), BoilerplateDocBar)
 
-  /** [[crossDocScrub]] over any (doc_id, text) relation. */
+  /** [[crossDocScrub]] over any (doc_id, text) relation: a gram
+    * occurrence is covered when the gram clears the corpus df bar and
+    * the document is not the gram's owner. */
   private[graft] def crossDocScrubCore(docsIn: DataFrame,
-      docBar: Long): DataFrame = {
-    // fan-out before the per-row gram assembly — identity at scale
-    val docs = graft.functions.ScaleUtils.fanOutScan(docsIn, col("doc_id"))
-    val toksed = docs.select(col("doc_id"), toks(col("text")).as("t"))
-      .where(size(col("t")) > 0)
-    val pos = toksed.select(col("doc_id"), posexplode_outer(col("t")))
-      .where(col("col").isNotNull).withColumnRenamed("col", "tok")
-    val g2 = zip_with(col("t"), slice(col("t"), 2, Int.MaxValue - 8),
-      (a, b) => concat(a, lit(" "), b))
-    val g3 = filter(zip_with(g2, slice(col("t"), 3, Int.MaxValue - 8),
-      (a, b) => concat(a, lit(" "), b)), x => x.isNotNull)
-    // posexplode_outer + null-drop — see repeatScrubCore
-    val grams = toksed.where(size(col("t")) >= RepeatGramN)
-      .select(col("doc_id"), posexplode_outer(g3))
-      .where(col("col").isNotNull)
-      .select(col("doc_id"), col("pos").as("s"), col("col").as("g"))
-    val total = docs.agg(count(lit(1)).as("n_total"))
-    val common = grams.select(col("doc_id"), col("g")).distinct()
-      .groupBy(col("g"))
-      .agg(count(lit(1)).as("nd"), min(col("doc_id")).as("owner"))
-      .crossJoin(broadcast(total))
-      .where(col("nd") >
-        greatest(lit(docBar), expr(s"n_total div $BoilerplateFracDiv")))
-      .select(col("g"), col("owner"))
-    val covered = grams.join(common, Seq("g"))
-      .where(col("doc_id") =!= col("owner"))
-      .select(col("doc_id"),
-        explode(sequence(col("s"), col("s") + (RepeatGramN - 1))).as("pos"))
-      .distinct()
-    val scrub = pos.join(covered, Seq("doc_id", "pos"), "left_anti")
-      .groupBy(col("doc_id"))
-      .agg(count(lit(1)).as("n_kept"),
-        md5(array_join(transform(
-          array_sort(collect_list(struct(col("pos"), col("tok")))),
-          x => x.getField("tok")), " ").cast("binary")).as("fp"))
-    toksed.select(col("doc_id"), size(col("t")).as("n_tok"))
-      .join(scrub, Seq("doc_id"), "left")
-      .select(col("doc_id"), col("n_tok"),
-        (col("n_tok") - coalesce(col("n_kept"), lit(0L))).as("n_removed"),
-        coalesce(col("fp"), md5(lit("").cast("binary"))).as("scrubbed_fp"))
-  }
+      docBar: Long): DataFrame =
+    scrubCovered(docsIn) { (docs, pg) =>
+      val total = docs.agg(count(lit(1)).as("n_total"))
+      val common = pg.select(col("doc_id"), col("g")).distinct()
+        .groupBy(col("g"))
+        .agg(count(lit(1)).as("nd"), min(col("doc_id")).as("owner"))
+        .crossJoin(broadcast(total))
+        .where(col("nd") >
+          greatest(lit(docBar), expr(s"n_total div $BoilerplateFracDiv")))
+        .select(col("g"), col("owner"))
+      pg.join(common, Seq("g")).where(col("doc_id") =!= col("owner"))
+    }
 
   // --- Unicode normalization (graft_nfc / graft_strip_accents) ---
 
@@ -3466,7 +3432,7 @@ object TextOps {
         array_join(slice(col("w"), (p * 10 + 7).cast("int"), lit(9)), " "),
         lit("</p>"))), "")).otherwise(lit(""))
     docs
-      .withColumn("w", filter(split(col("text"), " "), t => t =!= ""))
+      .withColumn("w", toks(col("text")))
       .select(col("doc_id") +: keep.map(col) :+ concat(
         lit("<html><head><title>t</title><script type=\"text/javascript\">" +
           "var s = \""),
@@ -3902,7 +3868,7 @@ object TextOps {
       .when(stride === 1, lit("; charset=utf-8"))
       .otherwise(lit(""))
     val tok1 = element_at(
-      filter(split(col("text"), " "), t => t =!= ""), 1)
+      toks(col("text")), 1)
     val body = concat(bin(lit("<p>")), bin(tok1), bin(lit(" ")),
       qL, bin(lit("quoted")), qR, bin(lit("</p>")))
     val payload = concat(

@@ -278,7 +278,7 @@ object IngestPipeline {
       when(size(hduKeys) >= 1, array_except(reqPrimary, element_at(hduKeys, 1)))
         .otherwise(reqPrimary),
       // each extension HDU: required-extension minus its keys
-      array_distinct(flatten(transform(slice(hduKeys, 2, Int.MaxValue - 8),
+      array_distinct(flatten(transform(slice(hduKeys, lit(2), size(hduKeys)),
         ks => array_except(reqExt, ks)))))
     when(hduKeys.isNotNull, concat(lit("missing required keywords: "),
       nullif(array_join(missing, ","), lit(""))))

@@ -63,7 +63,7 @@ object CurationDemo {
     val admitted = run("admitted")
     val admittedDocs = graft.sources.Tables.documents(spark, sfDir)
       .join(admitted.select("doc_id"), "doc_id")
-    val tok = size(filter(split(col("text"), " "), t => t =!= "")).cast("long")
+    val tok = size(TextOps.toks(col("text"))).cast("long")
     val packed = CurationOps.packSequences(admittedDocs, "doc_id", "lang",
       tok, budget = CurationOps.PackBudget, shards = 4)
     println(s"[demo] packed ${packed.count()} admitted docs into " +

@@ -71,7 +71,7 @@ object StreamDemo {
     val benchGrams = graft.operators.DedupOps.benchmarkGrams(spark, sfDir)
     val benchText = docs
       .where(col("doc_id") < graft.operators.DedupOps.BenchmarkMaxId &&
-        size(filter(split(col("text"), " "), t => t =!= "")) >= 13)
+        size(graft.operators.TextOps.toks(col("text"))) >= 13)
       .orderBy(col("doc_id")).select("text").head().getString(0)
     val quote = benchText.split(" ").filter(_.nonEmpty).take(13).mkString(" ")
     val gateBatch = Seq(

@@ -185,4 +185,54 @@ class SparkEntrySpec extends SparkSpec {
     val missing = ReferenceSurface -- names
     assert(missing.isEmpty, s"reference surface no longer defined: $missing")
   }
+
+  /** `split(<x>, " ")` with up to two levels of nested parens in `<x>`. */
+  private val Tokenizer =
+    """split\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*,\s*" "\s*\)""".r
+
+  /** Offset past the paren that closes the one opening at `open`. */
+  private def closeOf(code: String, open: Int): Int = {
+    var depth = 0
+    var j = open
+    while (j < code.length && { if (code(j) == '(') depth += 1
+        else if (code(j) == ')') depth -= 1
+        j += 1
+        depth > 0 }) ()
+    j
+  }
+
+  test("tokens are split only in TextOps.toks, n-grams joined only in TextOps.grams") {
+    val textOps = Paths.get("src/main/scala/graft/operators/TextOps.scala")
+    val hits = scalaFiles("src/main/scala").flatMap { f =>
+      val code = stripComments(Files.readString(f))
+      val lines = code.split("\n", -1)
+      val owner: Map[String, Range] =
+        if (f != textOps) Map.empty
+        else objectMembers(lines).collect {
+          case (n @ ("toks" | "grams"), from, to) => n -> (from until to)
+        }.toMap
+      def lineOf(at: Int) = code.substring(0, at).count(_ == '\n')
+      def report(at: Int, what: String, allowedIn: String) = {
+        val line = lineOf(at)
+        if (owner.get(allowedIn).exists(_.contains(line))) Nil
+        else List(s"${f.getFileName}:${line + 1} $what")
+      }
+      val tokenizers = Tokenizer.findAllMatchIn(code).toList.flatMap(m =>
+        report(m.start, s"tokenizer ${m.matched}", "toks"))
+      // the zip-shift gram idiom: a zip_with (over shifted slices, maybe
+      // bound to vals first) that joins neighbours with a space; a
+      // zip_with that only compares neighbours, like ChatOps' role
+      // alternation, builds no gram
+      val zipShifts = "zip_with\\(".r.findAllMatchIn(code).toList.flatMap { m =>
+        if (code.substring(m.start, closeOf(code, m.end - 1)).contains("\" \""))
+          report(m.start, "zip-shift n-gram", "grams")
+        else Nil
+      }
+      val toEnd = "Int\\.MaxValue\\s*-\\s*8".r.findAllMatchIn(code).toList
+        .map(m => s"${f.getFileName}:${lineOf(m.start) + 1} Int.MaxValue - 8 slice length")
+      tokenizers ++ zipShifts ++ toEnd
+    }
+    assert(hits.isEmpty, "build tokens with TextOps.toks and n-grams with " +
+      s"TextOps.grams (Int.MaxValue - 8 overflows a slice from 10 on):\n${hits.mkString("\n")}")
+  }
 }
