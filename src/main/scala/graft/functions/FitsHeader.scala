@@ -19,13 +19,6 @@ object FitsHeader {
 
   val BlockLen = 2880
 
-  /** Parse header cards from the leading bytes of a FITS file into an
-    * ordered keyword → value map. Stops at the END card or when bytes run
-    * out. Values keep their raw text form; quoted strings are unquoted,
-    * trailing comments (`/ ...`) stripped. Comment-ish cards (COMMENT,
-    * HISTORY, blank keyword) are skipped. */
-  def parse(bytes: Array[Byte]): Map[String, String] = parseFrom(bytes, 0)._1
-
   /** Parse EVERY HDU header — primary plus extensions. Data blocks between
     * headers are skipped using the FITS size rule
     * |BITPIX|/8 × GCOUNT × (PCOUNT + Π NAXISn), rounded up to the 2880-byte
@@ -55,6 +48,11 @@ object FitsHeader {
     out.toSeq
   }
 
+  /** One HDU's header cards from `start` as an ordered keyword → value
+    * map, and the offset past its last header block. Stops at the END
+    * card or when bytes run out. Values keep their raw text form; quoted
+    * strings are unquoted, trailing comments (`/ ...`) stripped.
+    * Comment-ish cards (COMMENT, HISTORY, blank keyword) are skipped. */
   private def parseFrom(bytes: Array[Byte], start: Int)
       : (Map[String, String], Int) = {
     var out = ListMap.empty[String, String]

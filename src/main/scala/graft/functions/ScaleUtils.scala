@@ -3,58 +3,11 @@ package graft.functions
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
 
-/** Scale utilities (SURVEY.md §7.4.5, README scale notes): bucketed
-  * co-located joins and salt-based skew mitigation — the two manual
-  * levers that matter at 100 TB when AQE alone is not enough.
+/** Scale utilities (SURVEY.md §7.4.5, README scale notes): schema-drift
+  * projection, small-file compaction, footer-only row counts, bounded
+  * collects and scan fan-out.
   */
 object ScaleUtils {
-
-  /** Write a DataFrame as a bucketed table: rows are hash-bucketed by the
-    * join key at write time, so future equi-joins between tables bucketed
-    * the same way need NO shuffle (Exchange disappears from the plan —
-    * asserted in ScaleUtilsSpec). Bucket metadata requires the catalog, so
-    * this goes through `saveAsTable`. */
-  def writeBucketed(df: DataFrame, table: String, key: String,
-      buckets: Int): Unit = {
-    val spark = df.sparkSession
-    spark.sql(s"DROP TABLE IF EXISTS $table")
-    // a stale managed-table location from a previous session (catalog is
-    // per-JVM, the warehouse dir is not) blocks CREATE — clear it
-    val warehouse = new java.net.URI(
-      spark.sessionState.conf.getConfString("spark.sql.warehouse.dir")).getPath
-    val loc = new org.apache.hadoop.fs.Path(warehouse, table.toLowerCase)
-    val fs = loc.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    if (fs.exists(loc)) fs.delete(loc, true)
-    df.write
-      .bucketBy(buckets, key)
-      .sortBy(key)
-      .mode("overwrite")
-      .saveAsTable(table)
-  }
-
-  /** Salted join for skewed keys: the big side's rows get a deterministic
-    * salt derived from the full row (stable under task retries — never
-    * rand()), the small side is exploded across all salt values, and the
-    * join key becomes (key, salt). Hot keys spread over `saltFactor`
-    * reducers; results are identical to the unsalted join. */
-  def saltedJoin(big: DataFrame, small: DataFrame, key: String,
-      saltFactor: Int, joinType: String = "inner"): DataFrame = {
-    // the small side is EXPLODED saltFactor times, so any join type that
-    // can emit unmatched small-side rows (right/full outer) would emit
-    // them once PER SALT — silently wrong row counts. Inner/left-side
-    // types are salt-invariant (each big row carries exactly one salt).
-    val jt = joinType.toLowerCase.replace("_", "")
-    require(!jt.contains("right") && !jt.contains("full") && jt != "outer",
-      s"saltedJoin: $joinType would duplicate unmatched small-side rows " +
-        s"$saltFactor times; use the unsalted join for right/full outer")
-    val bigSalted = big.withColumn("__salt",
-      pmod(xxhash64(struct(big.columns.map(col).toIndexedSeq: _*)), lit(saltFactor))
-        .cast("int"))
-    val smallExploded = small.withColumn("__salt",
-      explode(sequence(lit(0), lit(saltFactor - 1))))
-    bigSalted.join(smallExploded, Seq(key, "__salt"), joinType)
-      .drop("__salt")
-  }
 
   /** Column-intersection projection — P9/J4 (save:274-278): project a
     * row set onto whatever columns the TARGET table currently has, the

@@ -230,8 +230,8 @@ object CurationOps {
     * the emitted token volume matches tokens_needed in expectation in
     * both regimes. Summarized per language: corpus docs, emitted
     * copies, available vs emitted tokens. A production run explodes
-    * `emit` into physical repetitions feeding
-    * [[writeTrainingShards]]; the declared query reports the realized
+    * `emit` into physical repetitions feeding the trainer's input;
+    * the declared query reports the realized
     * tallies the plan's tokens_needed column predicts.
     *
     * Scale shape: the plan is a langs-sized broadcast; the realization
@@ -530,58 +530,6 @@ object CurationOps {
         col("floor_q10k"), col("n_admitted"))
   }
 
-  /** Training-shard EXPORT — the last-mile sink between an admitted
-    * corpus and a trainer: write the documents as `shard=<k>` hive
-    * partitions (each shard a self-contained input file set) plus a
-    * MANIFEST table the trainer and any auditor reconcile against:
-    * per-shard doc count, token sum, and an order-insensitive content
-    * fingerprint (bit_xor of a 60-bit md5-prefix per doc — commutative,
-    * so partition order, task retries and re-shuffles can never change
-    * it; mirrored recomputable from the shard's read-back).
-    *
-    * Shard assignment is the md5-threshold family's ([[stratifiedSample]])
-    * determinism contract applied to placement: shard =
-    * md5(doc_id) mod N — stable under retries, replays and engines;
-    * docs land WHOLE (a doc never splits across shards), and expected
-    * shard skew is O(√(n/N)) by uniformity of the hash.
-    *
-    * Scale shape: one projection + partitioned write (the shuffle is
-    * the partitionBy exchange on N keys); the manifest is one hash
-    * aggregation. Returns the manifest READ-BACK (the table consumers
-    * scan), like [[curationRun]]'s artifacts. */
-  def writeTrainingShards(spark: SparkSession, docs: DataFrame,
-      outDir: String, shards: Int): DataFrame = {
-    require(shards >= 1, "need at least one shard")
-    val fpLong = expr(
-      "cast(conv(substring(md5(cast(doc_id as string)), 1, 15), 16, 10) as bigint)")
-    val sharded = docs
-      .withColumn("shard", pmod(fpLong, lit(shards.toLong)))
-      .withColumn("doc_fp", fpLong)
-    sharded.write.mode("overwrite").partitionBy("shard")
-      .parquet(s"$outDir/docs")
-    sharded
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextOps.tokEst(col("text"))).as("n_tokens_est"),
-        expr("bit_xor(doc_fp)").as("content_fp"))
-      .write.mode("overwrite").parquet(s"$outDir/manifest")
-    spark.read.parquet(s"$outDir/manifest")
-  }
-
-  /** Recompute a [[writeTrainingShards]] manifest from the shard
-    * read-back — the auditor's side of the contract: equal frames ⇔
-    * every doc arrived intact in its assigned shard. */
-  def auditTrainingShards(spark: SparkSession, outDir: String): DataFrame =
-    spark.read.parquet(s"$outDir/docs")
-      // hive-partition columns read back with INFERRED types (int, not
-      // the written long) — normalize so audit ≡ manifest is a frame
-      // equality, not a type accident
-      .withColumn("shard", col("shard").cast("long"))
-      .groupBy(col("shard"))
-      .agg(count(lit(1)).as("n_docs"),
-        sum(TextOps.tokEst(col("text"))).as("n_tokens_est"),
-        expr("bit_xor(doc_fp)").as("content_fp"))
-
   /** PER-LANGUAGE budget floor — [[qualityBudgetFloor]] partitioned by
     * stratum: each language keeps ITS top [[QualityKeep10k]]/10⁴ (the
     * per-stratum budget a mixture pipeline actually runs, since a
@@ -633,7 +581,7 @@ object CurationOps {
     * tuple (the columns released ALONGSIDE the text: lang, source,
     * length bucket) and flag every equivalence class smaller than
     * [[KAnonK]] — a document alone (or nearly alone) in its class is
-    * re-identifiable from metadata even after [[TextOps.redactedDocs]]
+    * re-identifiable from metadata even after [[TextOps.redactText]]
     * scrubs the content (Sweeney 2002, public model). One hash
     * aggregate with map-side combine; class count bounded by
     * |langs|·|sources|·|buckets|, never corpus-sized. */
@@ -1175,14 +1123,12 @@ object CurationOps {
   }
 
   /** Quality floor for the funnel's final stage — the shared
-    * [[TextOps.QualityFloor10k]] (same constant as the streaming gate). */
+    * [[TextOps.QualityFloor10k]] (same constant as the NB weak labels). */
   val FunnelMinQuality10k: Long = TextOps.QualityFloor10k
 
   /** Curation FUNNEL — the drop-reason breakdown a data team reads
     * after a pipeline run: every document lands in exactly ONE stage,
-    * the first filter that would drop it (precedence mirrors
-    * [[graft.streaming.StreamingAnalytics.admitBatch]] and extends it
-    * with the corpus-level passes): URL-dup dropped (crawl-level
+    * the first filter that would drop it: URL-dup dropped (crawl-level
     * [[urlDupDrops]] — runs FIRST because it needs only the key, never
     * the text; a real pipeline drops these before paying any content
     * pass) → near-dup dropped (non-canonical
@@ -1337,9 +1283,9 @@ object CurationOps {
       .select(col("doc_id"), col("lang"))
       .write.mode("overwrite").parquet(s"$outDir/admitted")
     // the learned-filter model: trained ONCE here on the heuristic
-    // labels, stored as two tables — the streaming admission gate
-    // (StreamingAnalytics.nbGate) and any batch rescoring read the
-    // stored model instead of re-training (refresh on the run cadence)
+    // labels, stored as two tables — a batch rescoring
+    // (TextOps.nbScoreFrom) reads the stored model instead of
+    // re-training (refresh on the run cadence)
     val (nbW, nbPrior) = TextOps.nbTrain(Tables.documents(spark, dir))
     nbW.write.mode("overwrite").parquet(s"$outDir/nb_weights")
     nbPrior.write.mode("overwrite").parquet(s"$outDir/nb_prior")

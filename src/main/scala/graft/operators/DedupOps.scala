@@ -125,42 +125,6 @@ object DedupOps {
         expr(s"stack($nBands, $stackArgs) as (band, band_key)"))
   }
 
-  /** Per-ROW minhash band keys — the projection form of [[bandKeys]] for
-    * STREAMING inputs: one document's signature only needs its own
-    * shingles, so it is computed with array expressions (`transform` +
-    * `array_min`) instead of explode + groupBy — which would be a
-    * stateful streaming aggregation. Semantics are identical (min over an
-    * array of md5 slices is the same order statistic as the aggregated
-    * min; parity is spec-pinned via the gate-vs-batch-chain test), and
-    * docs with no shingles emit no rows, as the aggregated form drops
-    * them. The three family digests are materialized as named array
-    * columns FIRST — Catalyst does not CSE into higher-order-function
-    * lambdas, so the md5s must not live inside the per-seed transform.
-    * Emits (doc_id, band, band_key). */
-  private[graft] def bandKeysPerRow(docs: DataFrame): DataFrame = {
-    val withT = docs
-      .select(col("doc_id"), TextOps.shingles3(col("text")).as("tset"))
-      .where(size(col("tset")) > 0)
-    val withH = HashPrefixes.zipWithIndex.foldLeft(withT) { case (df, (p, i)) =>
-      df.withColumn(s"ha$i",
-        transform(col("tset"), t => md5(concat(lit(p), t).cast("binary"))))
-    }
-    val minCols = (0 until NumHashes).map { s =>
-      array_min(transform(col(s"ha${s / SeedsPerDigest}"),
-        h => substring(h, (s % SeedsPerDigest) * 8 + 1, 8))).as(s"m$s")
-    }
-    val mh = withH.select(col("doc_id") +: minCols: _*)
-    val nBands = NumHashes / BandSize
-    val bandCols = (0 until nBands).map { b =>
-      val slice = (0 until BandSize).map(i => col(s"m${b * BandSize + i}"))
-      struct(lit(b).as("band"),
-        md5(concat_ws(",", slice: _*).cast("binary")).as("band_key"))
-    }
-    mh.select(col("doc_id"), explode(array(bandCols: _*)).as("bk"))
-      .select(col("doc_id"), col("bk.band").as("band"),
-        col("bk.band_key").as("band_key"))
-  }
-
   /** MinHash-LSH near-dup: candidate pairs from shared band keys, verified
     * with exact Jaccard; summarized per lang (candidate count, verified
     * duplicate count at j >= 0.85). */
@@ -907,23 +871,6 @@ object DedupOps {
       ivfCells(n), trainIters = 2)
   }
 
-  /** [[semDedup]] against a PERSISTED coarse quantizer — the
-    * build-once/search-many posture: the stored `assignments` relation
-    * of a [[VectorOps.writeAnnIndex]] directory replaces the in-plan
-    * Lloyd training, so a dedup run is just the within-cluster verify.
-    * On an index full-trained on the same corpus at the same
-    * (cells, iters) the stored assignment IS the relation
-    * [[VectorOps.kmeansCoreOf]] would produce, so the verdicts are
-    * bit-identical to [[semDedup]] (spec-pinned); a sampled-trained or
-    * appended-to index shifts cluster boundaries only — every drop
-    * still clears the exact cosine bar against its canonical. */
-  def semDedupFromIndex(spark: SparkSession, dir: String, indexDir: String,
-      threshold: Double = CosineDupThreshold): DataFrame = {
-    val (_, assignments, _, _) = VectorOps.loadAnnIndex(spark, indexDir)
-    semDedupVerdicts(spark, assignments,
-      quantizedAll(spark, Tables.embeddings(spark, dir)), threshold)
-  }
-
   /** vec_id packing for chunk-level vectors: doc_id · span + chunk_id.
     * 1024 covers ~49k-token documents at the [[CurationOps.ChunkStride]]
     * stride; widen for longer documents (the id stays long-exact to
@@ -1184,11 +1131,10 @@ object DedupOps {
   }
 
   /** Incremental dup-group maintenance — the batch chain
-    * ([[textDedupGroups]]) recomputes components from scratch, but a
-    * streaming ingest already knows exactly which edges are NEW (the
-    * admission gate emits (doc_id, dup_of) per flagged arrival —
-    * [[graft.streaming.StreamingAnalytics.gateAgainstCorpus]]), so group
-    * state can be maintained by merging just those. `existing` is a
+    * ([[textDedupGroups]]) recomputes components from scratch, but an
+    * incremental ingest already knows exactly which edges are NEW (the
+    * (doc_id, dup_of) pairs of its arrivals), so group state can be
+    * maintained by merging just those. `existing` is a
     * fixpoint (doc_id, rep_id) labeling (a [[connectedComponents]]
     * output); `newEdges` is (id_a, id_b). Returns the labeling the full
     * chain would produce over (original edges ∪ newEdges) — the
@@ -1887,6 +1833,20 @@ object DedupOps {
     * document. */
   val ContamNgram = 13
 
+  /** (doc_id, gram) — each document's DISTINCT n-word grams, the unit
+    * of exact decontamination ([[TextOps.grams]]). One relation feeds
+    * both sides of [[ngramContamination]], the corpus and the benchmark
+    * split, so "a benchmark n-gram" means the same string on both. */
+  private[graft] def ngramsRel(docs: DataFrame,
+      n: Int = ContamNgram): DataFrame =
+    // explodeNN, not plain explode: the gram array CAN be empty (docs
+    // under n tokens), and plain explode would plant a pruning Filter
+    // that re-evaluates the whole gram tree per row below any exchange
+    // (see [[explodedDocs]])
+    TextOps.explodeNN(graft.functions.ScaleUtils.fanOutScan(docs, col("doc_id")),
+      array_distinct(TextOps.grams(TextOps.toks(col("text")), n)), "gram",
+      col("doc_id"))
+
   /** EXACT n-gram decontamination — the third detector in the
     * contamination family and the industry-standard one: a corpus
     * document is flagged if ANY [[ContamNgram]]-word n-gram also occurs
@@ -1904,33 +1864,6 @@ object DedupOps {
     * the corpus side is one scan, no shuffle of the big side. The gram
     * explode is ~len rows per doc — same volume class as the shingle
     * paths the LSH chain already runs. */
-  /** (doc_id, gram) — each document's DISTINCT n-word grams, the unit
-    * of exact decontamination ([[TextOps.grams]]). Shared by
-    * [[ngramContamination]], [[benchmarkGrams]] and the streaming
-    * gate's contamination verdict, so "a benchmark n-gram" means the
-    * same string everywhere. */
-  private[graft] def ngramsRel(docs: DataFrame,
-      n: Int = ContamNgram): DataFrame =
-    // explodeNN, not plain explode: the gram array CAN be empty (docs
-    // under n tokens), and plain explode would plant a pruning Filter
-    // that re-evaluates the whole gram tree per row below any exchange
-    // (see [[explodedDocs]])
-    TextOps.explodeNN(graft.functions.ScaleUtils.fanOutScan(docs, col("doc_id")),
-      array_distinct(TextOps.grams(TextOps.toks(col("text")), n)), "gram",
-      col("doc_id"))
-
-  /** The distinct benchmark-split n-gram set — the (small, broadcast)
-    * reference relation every decontamination pass joins against; a
-    * deployment builds it from its eval suites and refreshes it when
-    * benchmarks change, not per batch. Width is pinned to
-    * [[ContamNgram]] (no parameter) so this set can never be built at a
-    * width the gate side doesn't use — a mismatched pair hits nothing
-    * and contaminated docs would pass silently. */
-  def benchmarkGrams(spark: SparkSession, dir: String): DataFrame =
-    ngramsRel(Tables.documents(spark, dir)
-      .where(col("doc_id") < BenchmarkMaxId), ContamNgram)
-      .select(col("gram")).distinct()
-
   def ngramContamination(spark: SparkSession, dir: String,
       n: Int = ContamNgram): DataFrame = {
     val grams = ngramsRel(Tables.documents(spark, dir), n)
@@ -1976,9 +1909,8 @@ object DedupOps {
 
   /** Bloom false-positive rate. Sizing rule (Bloom 1970):
     * bits = -n·ln p/(ln 2)², so 1% over 10⁹ fingerprints is ~1.2 GB —
-    * broadcastable; beyond ~10¹⁰ keys switch to the table-backed index
-    * join the streaming admission gate already uses (the bloom is the
-    * CHEAP pre-gate, not the only gate). */
+    * broadcastable; beyond ~10¹⁰ keys switch to a table-backed index
+    * join (the bloom is the CHEAP pre-gate, not the only gate). */
   val BloomFpp = 0.01
 
   /** Bag-of-words fingerprint — [[TextOps.fingerprint]]'s bag_fp

@@ -18,7 +18,7 @@ import graft.sources.Tables
   * their own independent parsers (Spark's Jackson vs DuckDB's yyjson)
   * and must agree on every typed extraction, null, and validity verdict
   * — the [[graft.plans.UnicodeNormalize]] two-independent-
-  * implementations discipline. The fixture ([[jsonDocs]]) builds each
+  * implementations discipline. The fixture ([[jsonDocsOf]]) builds each
   * document's payload from planted token arithmetic (corpus is ASCII
   * with no `"` or `\` — probed by the [[TextOps.htmlDocs]] fixture —
   * so no escaping ambiguity), with three planted fault/drift axes:

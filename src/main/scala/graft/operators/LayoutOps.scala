@@ -210,8 +210,8 @@ object LayoutOps {
     * true iff the appended layout touches more files for the
     * recent-window predicate than the projected rewrite would — the
     * bar an OPTIMIZE scheduler checks on the registry compaction
-    * cadence ([[graft.streaming.StreamingAnalytics]]'s
-    * `compactEveryBatches` discipline; both sides are emitted so the
+    * cadence ([[graft.streaming.IngestPipeline.maybeCompact]]; both
+    * sides are emitted so the
     * decision itself is oracle-checked, the production writer gates
     * the rewrite on the flag).
     *

@@ -502,9 +502,8 @@ object ReconOps {
     * gap to the previous same-user event exceeds [[SessionGapHours]]
     * (strict >; first row always opens session 1), running-sum the
     * flags into session numbers, then aggregate per session. The
-    * partition key's cardinality grows with the corpus, so this is the
-    * scalable batch twin of the streaming sessionizer
-    * (StreamingAnalytics) — and the groupBy reuses the window's
+    * partition key's cardinality grows with the corpus, so this is a
+    * scalable batch sessionizer — and the groupBy reuses the window's
     * hashpartitioning(user_id), so the whole thing is ONE shuffle
     * (user_id is a prefix of the grouping key — plan-guarded). */
   def sessionize(spark: SparkSession, dir: String): DataFrame =
@@ -1060,9 +1059,8 @@ object ReconOps {
           .as("p99_within_bounds"))
   }
 
-  /** Hourly tumbling-window rollup in batch mode — the `window()` grouping
-    * the streaming path uses (StreamingAnalytics.windowedCounts), oracled
-    * against DuckDB's time_bucket. */
+  /** Hourly tumbling-window rollup in batch mode — Spark's `window()`
+    * grouping, oracled against DuckDB's time_bucket. */
   def hourlyWindow(spark: SparkSession, dir: String): DataFrame =
     Tables.events(spark, dir)
       .groupBy(window(col("ts"), "1 hour"), col("event_type"))

@@ -1003,8 +1003,8 @@ object TextOps {
   }
 
   /** Quality floor (1e-4 units) below which a curation pass drops a
-    * document — THE shared constant: the streaming admission gate and
-    * the batch curation funnel both reference it, so the two can never
+    * document — THE shared constant: the NB weak labels ([[nbTrain]])
+    * and the curation funnel both reference it, so the two can never
     * silently classify the same document differently. Lenient (well
     * below the "low" bucket bar at 5000): admission screens garbage,
     * the curation pass decides mixtures.
@@ -1029,8 +1029,8 @@ object TextOps {
     ((a - pmod(a, b)) / b).cast("long")
 
   /** 1e-4-unit quality score of a text column as ONE per-row expression
-    * — [[qualityScore]] and the streaming admission gate share it, so
-    * the two can never drift.
+    * — [[qualityScore]] and the curation funnel share it, so the two
+    * can never drift.
     *
     * INTEGER-exact: the score is rational with denominator 1000*nTok
     * (weights 0.3/0.4/0.2/0.2 over count ratios), so compute the exact
@@ -1148,8 +1148,9 @@ object TextOps {
       greatest(size(g2).cast("long"), lit(1L)))
   }
 
-  /** The repetition admission flag as one boolean expression — shared by
-    * [[repetitionCore]] and the streaming admission gate. */
+  /** The repetition admission flag as one boolean expression — the
+    * curation funnel's repetitive stage, on the same bars as
+    * [[repetitionCore]]'s `repetitive` column. */
   private[graft] def repetitiveFlag(text: Column): Column =
     topWord10k(text) > TopWordBar10k || dup2gram10k(text) > Dup2gramBar10k
 
@@ -1276,8 +1277,7 @@ object TextOps {
 
   /** One-pass NB TRAINING — the MATERIALIZABLE model: (weights(tok, w),
     * prior(prior_w)). A production run writes both tables once (the
-    * curationRun discipline) and every scorer — batch rescoring,
-    * [[graft.streaming.StreamingAnalytics.nbGate]] on the ingest path —
+    * curationRun discipline) and every rescoring ([[nbScoreFrom]])
     * derives from the stored model instead of re-training per use. */
   def nbTrain(docs: DataFrame): (DataFrame, DataFrame) = {
     val labeled = nbLabeled(docs)
@@ -1301,10 +1301,8 @@ object TextOps {
   /** Scoring against a (possibly stored) model — the apply side of
     * [[nbTrain]]. INNER join on the weight table: scoring the training
     * corpus itself, every token is in-vocabulary by construction (this
-    * is what the oracle pins); out-of-vocabulary-tolerant scoring for
-    * NEW data is the gate's variant
-    * ([[graft.streaming.StreamingAnalytics.nbGate]] left-joins with
-    * weight 0 for unseen tokens). */
+    * is what the oracle pins). On NEW data the inner join drops
+    * out-of-vocabulary tokens: they add no weight and no `n_tok`. */
   def nbScoreFrom(docs: DataFrame, weights: DataFrame,
       prior: DataFrame): DataFrame =
     explodeNN(nbLabeled(docs), toks(col("text")), "tok",
@@ -2838,27 +2836,6 @@ object TextOps {
         expr(s"(n_added + n_removed) * $LmPpmUnit div greatest(n_union, 1)"))
   }
 
-  /** Hashed token-bucket counts of a corpus — (bucket, cnt), the
-    * 256-row distribution summary [[vocabDrift]] compares and the
-    * streaming drift monitor persists per batch. */
-  private[graft] def tokenBuckets(docs: DataFrame): DataFrame =
-    explodeNN(docs, toks(col("text")), "tok")
-      .select(substring(md5(col("tok").cast("binary")), 1, 2).as("bucket"))
-      .groupBy(col("bucket")).agg(count(lit(1)).as("cnt"))
-
-  /** TV distance over two PRECOMPUTED bucket-count tables — the
-    * streaming entry ([[graft.streaming.StreamingAnalytics]] compares
-    * each micro-batch against the maintained corpus distribution);
-    * arithmetic shared with [[vocabDriftCore]] so the two monitors can
-    * never disagree. */
-  private[graft] def tvDistanceOf(p: DataFrame, q: DataFrame): DataFrame =
-    tvOfBucketCounts(
-      p.select(col("bucket"), col("cnt").as("p_cnt"))
-        .join(q.select(col("bucket"), col("cnt").as("q_cnt")),
-          Seq("bucket"), "full_outer")
-        .select(col("bucket"), coalesce(col("p_cnt"), lit(0L)).as("p_cnt"),
-          coalesce(col("q_cnt"), lit(0L)).as("q_cnt")))
-
   /** Shared TV tail: (bucket, p_cnt, q_cnt) → one row (n_buckets,
     * p_total, q_total, tv_ppm), integer-exact half-L1 over bucket
     * ppms. A GLOBAL aggregate, so an empty corpus yields the one
@@ -2901,22 +2878,12 @@ object TextOps {
       Tables.documents(spark, dir), col("doc_id")))
 
   /** The redaction projection itself — typed placeholders, longest
-    * pattern first; shared by [[piiScanCore]]'s fingerprint and
-    * [[redactedDocs]] (the exportable corpus), so the audit fp and the
-    * exported text can never disagree. */
+    * pattern first; [[piiScanCore]] fingerprints the text it leaves. */
   private[graft] def redactText(c: Column): Column =
     regexp_replace(regexp_replace(regexp_replace(c,
       lit(PiiEmailRe), lit("<EMAIL>")),
       lit(PiiPhoneRe), lit("<PHONE>")),
       lit(PiiIpRe), lit("<IP>"))
-
-  /** A corpus with its `text` column REDACTED — the frame the last-mile
-    * export ([[graft.operators.CurationOps.writeTrainingShards]])
-    * consumes when the release policy requires scrubbed identifiers:
-    * `writeTrainingShards(spark, redactedDocs(admitted), …)`. Same
-    * schema in, same schema out; every other column passes through. */
-  def redactedDocs(docs: DataFrame): DataFrame =
-    docs.withColumn("text", redactText(col("text")))
 
   /** [[piiScan]] over any (doc_id, text) relation — split out so specs
     * can plant documents carrying each PII kind. */

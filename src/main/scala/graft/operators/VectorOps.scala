@@ -470,8 +470,7 @@ object VectorOps {
 
   /** [[writeAnnIndex]] over an already-quantized (vec_id, qe, nrm)
     * corpus frame — the entry a maintained pipeline calls when its
-    * vector corpus is a TABLE (e.g. the curated-ingest `sem_vectors`),
-    * not a parquet dir of raw embeddings. */
+    * vector corpus is a TABLE, not a parquet dir of raw embeddings. */
   def writeAnnIndexFrom(spark: SparkSession, emb: DataFrame,
       indexDir: String, cells: Int = 8, trainFrac: Double = 1.0,
       trainIters: Int = PqTrainIters): Unit = {
@@ -491,8 +490,7 @@ object VectorOps {
   }
 
   // explicit index schemas: reads never infer (footer scan per search,
-  // and inference cannot read a zero-row table) — the corpus-index
-  // convention (StreamingAnalytics.loadCorpusIndex)
+  // and inference cannot read a zero-row table)
   import org.apache.spark.sql.types._
   private val CoarseSchema = StructType(Seq(
     StructField("cluster", IntegerType), StructField("centroid",
@@ -1098,7 +1096,7 @@ object VectorOps {
     * target corpus ([[knnBruteForce]]'s shape) with the two-phase top-k
     * tail — here the declared exact baseline over a sampled probe set;
     * the full-corpus production pass serves candidates from the
-    * persisted ANN index ([[annPqSearchFrom]]) and scores margins on the refined
+    * persisted ANN index ([[annPqFrom]]) and scores margins on the refined
     * top-2, the same build-once/search-many split as q_ann_pq_search. */
   def bitextMine(spark: SparkSession, dir: String, srcLang: String = "en",
       tgtLang: String = "fr"): DataFrame =

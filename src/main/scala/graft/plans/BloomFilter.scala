@@ -35,9 +35,9 @@ import org.apache.spark.unsafe.types.UTF8String
   * size. Standard sizing (Bloom 1970): bits ≈ −n·ln p/(ln 2)²,
   * hashes ≈ (bits/n)·ln 2 — [[BloomFilter.sizeFor]]. A 10⁹-key / 1%
   * filter is ~1.2 GB: still one buffer per partition through the
-  * aggregate, but past ~10¹⁰ keys the table-backed index join (the
-  * streaming admission gate) replaces the in-memory filter — the bloom
-  * is the cheap pre-gate, not the only gate. */
+  * aggregate, but past ~10¹⁰ keys a table-backed index join replaces
+  * the in-memory filter — the bloom is the cheap pre-gate, not the
+  * only gate. */
 case class BloomFilterAgg(
     child: Expression,
     bits: Int,

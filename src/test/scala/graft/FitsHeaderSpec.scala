@@ -10,7 +10,7 @@ class FitsHeaderSpec extends AnyFunSuite {
       "FILTER" -> "g DECam SDSS c0001", "RA" -> "54.21", "EXPTIME" -> "90")
     val bytes = FitsHeader.render(kv)
     assert(bytes.length % 2880 == 0)
-    val parsed = FitsHeader.parse(bytes)
+    val Seq(parsed) = FitsHeader.parseAll(bytes)
     assert(parsed("DATE-OBS") == "2024-01-15T03:21:00")
     assert(parsed("FILTER") == "g DECam SDSS c0001")
     assert(parsed("RA") == "54.21")
@@ -18,22 +18,22 @@ class FitsHeaderSpec extends AnyFunSuite {
   }
 
   test("stops at END and ignores trailing bytes") {
-    val bytes = FitsHeader.render(Seq("A" -> "1")) ++ Array.fill(160)('X'.toByte)
-    assert(FitsHeader.parse(bytes) == Map("A" -> "1"))
+    val bytes = FitsHeader.render(Seq("SIMPLE" -> "T", "A" -> "1")) ++
+      Array.fill(160)('X'.toByte)
+    assert(FitsHeader.parseAll(bytes) == Seq(Map("SIMPLE" -> "T", "A" -> "1")))
   }
 
   test("quoted value with escaped quote and comment stripping") {
-    val card = ("NAME    = 'O''Brien'           / observer".padTo(80, ' ') +
-      "END".padTo(80, ' ')).getBytes("US-ASCII")
-    assert(FitsHeader.parse(card)("NAME") == "O'Brien")
-    val num = ("EXPTIME =                   90 / seconds".padTo(80, ' ') +
-      "END".padTo(80, ' ')).getBytes("US-ASCII")
-    assert(FitsHeader.parse(num)("EXPTIME") == "90")
+    def primary(card: String) = FitsHeader.parseAll(
+      (Seq("SIMPLE  =                    T", card, "END")
+        .map(_.padTo(80, ' ')).mkString).getBytes("US-ASCII")).head
+    assert(primary("NAME    = 'O''Brien'           / observer")("NAME") == "O'Brien")
+    assert(primary("EXPTIME =                   90 / seconds")("EXPTIME") == "90")
   }
 
   test("empty and truncated input") {
-    assert(FitsHeader.parse(Array.emptyByteArray).isEmpty)
-    assert(FitsHeader.parse("SHORT".getBytes).isEmpty)
+    assert(FitsHeader.parseAll(Array.emptyByteArray).isEmpty)
+    assert(FitsHeader.parseAll("SHORT".getBytes).isEmpty)
   }
 
   test("parseAll walks primary + extension HDUs") {

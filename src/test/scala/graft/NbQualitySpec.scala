@@ -101,21 +101,6 @@ class NbQualitySpec extends SparkSpec {
     assert(s.getAs[Long]("nb_score") > 0L, s"$s")
   }
 
-  test("streaming nbGate flags low scorers, tolerates OOV tokens") {
-    val (w, prior) = TextOps.nbTrain(corpus)
-    val batch = Seq(
-      (1000L, "the quick fox runs over the green field and sings into " +
-        "a quiet bay of calm water while birds drift near tall trees"),
-      (1001L, "xqzt blarg vrump zzkt fnord wibble snark gruft plonk " +
-        "NEVERSEENTOKEN kwyjibo skree vworp blort kwyjibo zort"))
-      .toDF("doc_id", "text")
-    val flagged = graft.streaming.StreamingAnalytics
-      .nbGate(batch, w, prior).collect()
-    assert(flagged.map(_.getLong(0)).toSet == Set(1001L),
-      s"only the negative-vocabulary doc flags: ${flagged.toSeq}")
-    assert(flagged.head.getAs[Long]("nb_score") < 0L)
-  }
-
   test("calibration binning floors negatives into their own octave bins") {
     // the q_nb_calibration binning: a - pmod(a, 16) is FLOOR division
     // ×16 for negatives too — plain integer division truncates toward
@@ -125,23 +110,6 @@ class NbQualitySpec extends SparkSpec {
     val got = df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     assert(got(-17L) == -32L && got(-16L) == -16L && got(-1L) == -16L)
     assert(got(0L) == 0L && got(15L) == 0L && got(16L) == 16L)
-  }
-
-  test("gate/batch parity on the training corpus") {
-    // on the corpus the model trained on, every token is in-vocabulary,
-    // so the OOV-tolerant gate and the inner-join batch query must flag
-    // exactly the same documents — the cross-module drift tripwire
-    // between TextOps scoring and the streaming admission stage
-    val docs = graft.sources.Tables.documents(spark, sfDir)
-    val (w, p) = TextOps.nbTrain(docs)
-    val gateFlagged = graft.streaming.StreamingAnalytics
-      .nbGate(docs.select(col("doc_id"), col("text")), w, p)
-      .collect().map(_.getLong(0)).toSet
-    val batchNeg = TextOps.nbQuality(spark, sfDir)
-      .where(col("nb_pos") === 0L)
-      .collect().map(_.getLong(0)).toSet
-    assert(gateFlagged == batchNeg,
-      s"gate flags ${gateFlagged.size}, batch negatives ${batchNeg.size}")
   }
 
   test("eval confusion sums to the corpus") {

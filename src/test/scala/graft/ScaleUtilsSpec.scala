@@ -1,40 +1,8 @@
 package graft
 
 import graft.functions.ScaleUtils
-import org.apache.spark.sql.functions._
 
 class ScaleUtilsSpec extends SparkSpec {
-
-  test("bucketed tables join without a shuffle exchange") {
-    val orders = graft.sources.Tables.orders(spark, sfDir)
-    val li = graft.sources.Tables.lineitem(spark, sfDir)
-    ScaleUtils.writeBucketed(orders, "orders_b", "o_orderkey", 8)
-    ScaleUtils.writeBucketed(
-      li.withColumnRenamed("l_orderkey", "o_orderkey"), "lineitem_b",
-      "o_orderkey", 8)
-    val joined = spark.table("orders_b")
-      .join(spark.table("lineitem_b"), Seq("o_orderkey"))
-    val plan = joined.queryExecution.executedPlan.toString
-    assert(!plan.contains("Exchange hashpartitioning"),
-      s"bucketed join must not shuffle:\n$plan")
-    // and it is still correct
-    val expected = orders.join(
-      li.withColumnRenamed("l_orderkey", "o_orderkey"), Seq("o_orderkey")).count()
-    assert(joined.count() == expected)
-  }
-
-  test("salted join result identical to plain join") {
-    val li = graft.sources.Tables.lineitem(spark, sfDir)
-    val orders = graft.sources.Tables.orders(spark, sfDir)
-      .select(col("o_orderkey").as("l_orderkey"), col("o_orderpriority"))
-    val plain = li.join(orders, Seq("l_orderkey"))
-      .groupBy("o_orderpriority").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val salted = ScaleUtils.saltedJoin(li, orders, "l_orderkey", 8)
-      .groupBy("o_orderpriority").count().collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    assert(plain == salted)
-  }
 
   test("projectOnto: intersect, cast, null-fill, target column order") {
     import spark.implicits._

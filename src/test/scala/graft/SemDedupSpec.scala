@@ -75,21 +75,6 @@ class SemDedupSpec extends SparkSpec {
     }
   }
 
-  test("from-index verdicts are bit-identical on a full-trained index") {
-    // writeAnnIndex's defaults (cells=8, iters=PqTrainIters=2) match
-    // semDedup's declared parameters, so the stored assignment is the
-    // same relation the in-plan Lloyd training produces
-    val idx = java.nio.file.Files.createTempDirectory("semidx").toString
-    graft.operators.VectorOps.writeAnnIndex(spark, sfDir, idx)
-    val fromIdx = DedupOps.semDedupFromIndex(spark, sfDir, idx)
-      .collect().map(_.toSeq).toSet
-    val inPlan = DedupOps.semDedup(spark, sfDir)
-      .collect().map(_.toSeq).toSet
-    assert(fromIdx == inPlan,
-      s"index-backed SemDeDup must equal train-in-plan:\n" +
-        s"only-idx=${fromIdx.diff(inPlan)}\nonly-plan=${inPlan.diff(fromIdx)}")
-  }
-
   test("cluster-balanced sample: thinning bounds and determinism") {
     val a = graft.operators.VectorOps.clusterBalancedSample(spark, sfDir)
       .collect().map(r => r.getInt(0) -> r).toMap

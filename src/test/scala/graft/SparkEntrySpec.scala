@@ -7,6 +7,7 @@ package graft
   * by [[LocalSession]], and no library member outlives its last caller. */
 class SparkEntrySpec extends SparkSpec {
   import scala.jdk.CollectionConverters._
+  import scala.collection.Searching.{Found, InsertionPoint}
   import java.nio.file.{Files, Path, Paths}
 
   private def scalaFiles(root: String): List[Path] = {
@@ -20,8 +21,13 @@ class SparkEntrySpec extends SparkSpec {
   /** `src` with every `//` and (nested) block comment blanked; string and
     * char literals are kept verbatim and line breaks are preserved, so a
     * name that only a scaladoc `[[link]]` mentions is not a use. */
-  private def stripComments(src: String): String = {
+  private def stripComments(src: String): String = splitComments(src)._1
+
+  /** (code, comment text) of `src`: `stripComments`' output, and the text
+    * of every comment it blanked, each kept on its own lines. */
+  private def splitComments(src: String): (String, String) = {
     val out = new StringBuilder(src.length)
+    val notes = new StringBuilder
     val n = src.length
     var i = 0
     def at(s: String) = src.startsWith(s, i)
@@ -47,13 +53,15 @@ class SparkEntrySpec extends SparkSpec {
     }
     while (i < n) {
       if (at("//")) {
-        while (i < n && src(i) != '\n') i += 1
+        while (i < n && src(i) != '\n') { notes += src(i); i += 1 }
+        notes += '\n'
       } else if (at("/*")) {
         var depth = 0
         while (i < n && { if (at("/*")) { depth += 1; i += 2 }
             else if (at("*/")) { depth -= 1; i += 2 }
-            else { if (src(i) == '\n') out += '\n'; i += 1 }
+            else { if (src(i) == '\n') out += '\n'; notes += src(i); i += 1 }
             depth > 0 }) ()
+        notes += '\n'
       } else if (at("\"\"\"")) {
         val close = src.indexOf("\"\"\"", i + 3)
         var j = if (close < 0) n else close + 3
@@ -69,19 +77,21 @@ class SparkEntrySpec extends SparkSpec {
         out ++= src.substring(i, i + 3); i += 3
       } else { out += src(i); i += 1 }
     }
-    out.result()
+    (out.result(), notes.result())
   }
 
-  /** Kept reference surface: entry points of the reference's own programs
-    * that only specs call today (the `.cfg` reader, the cron-driven
-    * stream and its compaction, provenance tasks, the S10/S12 disk-walk
-    * and log-tail readers, the P11–P14 derived columns) and the readers
-    * of tables the curated-ingest loop writes. */
+  /** Kept reference surface, as `Object.member`: entry points of the
+    * reference's own programs that only specs call today (the `.cfg`
+    * reader, the cron-driven stream and its compaction, provenance tasks,
+    * the S10/S12 disk-walk and log-tail readers, the P11–P14 derived
+    * columns, and the S14 nightsum fetch seam, whose deployment passes
+    * its own HTTP client). */
   private val ReferenceSurface = Set(
-    "configFromFile", "runStream", "maybeCompact", "createTask",
-    "loadTasks", "diskWalkExposures", "latestLogFile", "bandOf", "fieldOf",
-    "isSne", "manifestNameOf", "loadIngestMetrics", "loadTokenSketch",
-    "tokenSketchEst")
+    "IngestPipeline.configFromFile", "IngestPipeline.runStream",
+    "IngestPipeline.maybeCompact", "Provenance.createTask",
+    "Provenance.loadTasks", "MonitorOps.diskWalkExposures",
+    "MonitorOps.latestLogFile", "Derived.bandOf", "Derived.fieldOf",
+    "Derived.isSne", "Derived.manifestNameOf", "NightsumIndex.load")
 
   private val LintedDirs =
     Seq("operators", "streaming", "functions", "sources", "plans")
@@ -110,22 +120,25 @@ class SparkEntrySpec extends SparkSpec {
   }
 
   private val Top =
-    """^(?:(?:case|sealed|abstract|final|private(?:\[\w+\])?)\s+)*(object|class|trait)\s.*""".r
+    """^(?:(?:case|sealed|abstract|final|private(?:\[\w+\])?)\s+)*(object|class|trait)\s+(\w+).*""".r
   private val Member =
     """^( {2}| {4})((?:(?:private|protected)(?:\[\w+\])?\s+|override\s+|final\s+|implicit\s+|lazy\s+)*)(def|val|var|object|class|trait|case\s+class)\s+([A-Za-z_]\w*).*""".r
 
-  /** (name, first line, end line exclusive) of every `def`/`val`/`var`
-    * member of a top-level object, or of an object nested one level in
-    * one, in comment-stripped `lines`. A definition ends before the next
-    * line indented no deeper that is not a closing bracket. */
-  private def objectMembers(lines: Array[String]): Seq[(String, Int, Int)] = {
+  /** (owner, name, first line, end line exclusive) of every `def`/`val`/
+    * `var` member of a top-level object, or of an object nested one level
+    * in one, in comment-stripped `lines`; the owner is the innermost
+    * object. A definition ends before the next line indented no deeper
+    * that is not a closing bracket. */
+  private def objectMembers(lines: Array[String]): Seq[(String, String, Int, Int)] = {
     var top = ""    // kind of the enclosing top-level definition
+    var topName = ""
     var nested = "" // kind of the enclosing indent-2 definition
+    var nestedName = ""
     lines.indices.flatMap { i =>
       lines(i) match {
-        case Top(kind) => top = kind; nested = ""; Nil
+        case Top(kind, name) => top = kind; topName = name; nested = ""; Nil
         case Member(ind, mods, kind, name) if top == "object" =>
-          if (ind.length == 2) nested = kind
+          if (ind.length == 2) { nested = kind; nestedName = name }
           val inObject = ind.length == 2 || nested == "object"
           val exempt = mods.contains("override") ||
             mods.contains("implicit") || name == "apply" || name == "unapply"
@@ -136,40 +149,80 @@ class SparkEntrySpec extends SparkSpec {
               body.nonEmpty && lines(k).length - body.length <= ind.length &&
                 !"})].".contains(body.head)
             }.getOrElse(lines.length)
-            List((name, i, end))
+            List((if (ind.length == 2) topName else nestedName, name, i, end))
           }
         case _ => Nil
       }
     }
   }
 
+  /** A linted member: its file, innermost object, name and line span. */
+  private case class Def(file: Path, owner: String, name: String, from: Int, to: Int) {
+    def key = s"$owner.$name"
+  }
+
+  private val Word = """\b\w+\b""".r
+  /** `Owner.member` written out, across a line break too; the lookahead
+    * lets `a.b.c` yield both `a.b` and `b.c`. */
+  private val Qualified = """(\w+)(?=\s*\.\s*(\w+))""".r
+
   test("every library object member is reachable from a production root") {
+    // the usage examples under tools/*Demo.scala are no roots: a member
+    // only a demo prints is not production code
+    val demos = Paths.get("src/main/scala/graft/tools")
     val code = (scalaFiles("src/main/scala") ++
         scalaFiles("perfbench/src/main/scala"))
+      .filterNot(f => f.startsWith(demos) && f.toString.endsWith("Demo.scala"))
       .map(f => f -> stripComments(Files.readString(f)).split("\n", -1))
       .toMap
     val members = code.toSeq.collect {
       case (f, lines) if LintedDirs.exists(d =>
           f.startsWith(Paths.get("src/main/scala/graft", d))) =>
-        objectMembers(lines).map { case (n, from, to) => (f, n, from, to) }
+        objectMembers(lines).map { case (o, n, from, to) => Def(f, o, n, from, to) }
     }.flatten
     assert(members.size > 500, s"lint saw only ${members.size} members")
-    val names = members.map(_._2).toSet
-    def named(lines: Iterable[String]): Set[String] =
-      lines.flatMap(l => """\b\w+\b""".r.findAllIn(l).filter(names)).toSet
+    // name -> (owner, owner's file) of every object defining it
+    val owners: Map[String, Seq[(String, Path)]] =
+      members.groupMap(_.name)(m => (m.owner, m.file)).view.mapValues(_.distinct).toMap
+    // per file: the objects it imports members from, and the (line,
+    // Owner.member) pairs it writes out
+    val importsFrom: Map[Path, Set[String]] = code.map { case (f, lines) =>
+      f -> lines.iterator.map(_.trim).filter(_.startsWith("import "))
+        .flatMap(l => "(\\w+)\\s*\\.".r.findAllMatchIn(l).map(_.group(1))).toSet
+    }
+    val qualified: Map[Path, Set[(Int, String)]] = code.map { case (f, lines) =>
+      val starts = lines.scanLeft(0)(_ + _.length + 1).toIndexedSeq
+      f -> Qualified.findAllMatchIn(lines.mkString("\n")).map { m =>
+        val line = starts.search(m.start(2)) match {
+          case Found(k) => k
+          case InsertionPoint(k) => k - 1
+        }
+        (line, s"${m.group(1)}.${m.group(2)}")
+      }.toSet
+    }
+    // a name defined in one object names that member wherever it appears;
+    // a name several objects share names object O's member only in O's
+    // file, written as `O.name`, or in a file importing from O
+    def named(f: Path, idx: Iterable[Int]): Set[String] = idx.flatMap { i =>
+      Word.findAllIn(code(f)(i)).flatMap { n =>
+        val defs = owners.getOrElse(n, Nil)
+        defs.collect { case (o, of) if defs.size == 1 || of == f ||
+            importsFrom(f)(o) || qualified(f)((i, s"$o.$n")) => s"$o.$n" }
+      }
+    }.toSet
     // roots: every line outside a linted member's definition (the
     // catalog maps' owners, the mains, the report code, perfbench) plus
     // the kept reference surface
-    val inMember: Map[Path, Set[Int]] = members.groupMapReduce(_._1) {
-      case (_, _, from, to) => (from until to).toSet }(_ ++ _)
+    val inMember: Map[Path, Set[Int]] =
+      members.groupMapReduce(_.file)(m => (m.from until m.to).toSet)(_ ++ _)
     val roots = code.flatMap { case (f, lines) =>
       val skip = inMember.getOrElse(f, Set.empty[Int])
-      named(lines.indices.filterNot(skip).map(lines))
+      named(f, lines.indices.filterNot(skip))
     }.toSet ++ ReferenceSurface
     // to a fixpoint: a member is used when a root or a used member names
     // it — a member naming itself (recursion) does not count
-    val bodies = members.groupMapReduce(_._2) { case (f, name, from, to) =>
-      named(code(f).slice(from, to)) - name }(_ ++ _)
+    val bodies = members.groupMapReduce(_.key) { m =>
+      named(m.file, m.from until m.to) - m.key }(_ ++ _)
     var used = roots
     var frontier = roots
     while (frontier.nonEmpty) {
@@ -177,13 +230,40 @@ class SparkEntrySpec extends SparkSpec {
       used ++= next
       frontier = next
     }
-    val unused = members.filterNot(m => used(m._2))
-      .map { case (f, name, from, _) => s"${f.getFileName}:${from + 1} $name" }
+    val unused = members.filterNot(m => used(m.key))
+      .map(m => s"${m.file.getFileName}:${m.from + 1} ${m.key}")
     if (unused.nonEmpty)
       fail(s"${unused.size} members are unreachable from every production " +
         s"root (delete them, or name the caller):\n${unused.sorted.mkString("\n")}")
-    val missing = ReferenceSurface -- names
+    val missing = ReferenceSurface -- members.map(_.key)
     assert(missing.isEmpty, s"reference surface no longer defined: $missing")
+  }
+
+  test("every scaladoc [[link]] under src/main names a definition") {
+    val files = scalaFiles("src/main/scala")
+      .map(f => f -> splitComments(Files.readString(f)))
+    val defined = files.flatMap { case (_, (code, _)) =>
+      """\b(?:def|val|var|object|class|trait|type)\s+(\w+)""".r
+        .findAllMatchIn(code).map(_.group(1))
+    }.toSet
+    val stale = files.flatMap { case (f, (code, notes)) =>
+      // external names the file imports by their fully qualified name
+      val imported = """(?m)^\s*import\s+[\w.]+\.(?:(\w+)|\{([^}]*)\})""".r
+        .findAllMatchIn(code).flatMap { m =>
+          Option(m.group(1)).toSeq ++ Option(m.group(2)).toSeq
+            .flatMap(_.split(",").map(_.split("=>").head.trim))
+        }.toSet
+      """\[\[([^\]]*)\]\]""".r.findAllMatchIn(notes).map(_.group(1)).filterNot { link =>
+        val segs = link.replaceAll("""[\s*$]""", "").replaceAll("""\(.*""", "")
+          .replace('#', '.').split('.').toSeq
+        val pkg = segs.init.takeWhile(_.headOption.exists(_.isLower))
+        // a fully qualified name outside graft is external
+        (pkg.nonEmpty && pkg.head != "graft") ||
+          segs.drop(pkg.size).forall(s => defined(s) || imported(s))
+      }.map(link => s"${f.getFileName} [[$link]]")
+    }
+    assert(stale.isEmpty, "scaladoc links that name no definition in " +
+      s"src/main:\n${stale.mkString("\n")}")
   }
 
   /** `split(<x>, " ")` with up to two levels of nested parens in `<x>`. */
@@ -209,7 +289,7 @@ class SparkEntrySpec extends SparkSpec {
       val owner: Map[String, Range] =
         if (f != textOps) Map.empty
         else objectMembers(lines).collect {
-          case (n @ ("toks" | "grams"), from, to) => n -> (from until to)
+          case (_, n @ ("toks" | "grams"), from, to) => n -> (from until to)
         }.toMap
       def lineOf(at: Int) = code.substring(0, at).count(_ == '\n')
       def report(at: Int, what: String, allowedIn: String) = {
