@@ -72,12 +72,10 @@ object MonitorOps {
     * union of per-nite key sets from two different filters (repairing the
     * reference's discarded-union bug, SURVEY §2.4 A10). */
   def unionAccumulate(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).withColumn("nite", Derived.niteOf(col("ts")))
-    val errors = ev.where(col("event_type") === "error")
-      .select(col("nite"), col("user_id"))
-    val purchases = ev.where(col("event_type") === "purchase")
-      .select(col("nite"), col("user_id"))
-    errors.union(purchases).distinct()
+    val ev = ReconOps.eventsByNite(spark, dir)
+    ReconOps.FlaggedTypes
+      .map(t => ev.where(col("event_type") === t).select(col("nite"), col("user_id")))
+      .reduce(_ union _).distinct()
       .groupBy(col("nite")).agg(count(lit(1)).as("n_flagged_users"))
   }
 
@@ -100,7 +98,7 @@ object MonitorOps {
     * (nite, event_type) averages joined back on both keys; rows get
     * mismatch-style flag columns, aggregated per nite. */
   def multikeyRecon(spark: SparkSession, dir: String): DataFrame = {
-    val ev = Tables.events(spark, dir).withColumn("nite", Derived.niteOf(col("ts")))
+    val ev = ReconOps.eventsByNite(spark, dir)
     val dim = ev.groupBy(col("nite"), col("event_type"))
       .agg(avg(col("value")).as("avg_value"), count(lit(1)).as("n_in_group"))
     ev.join(dim, Seq("nite", "event_type"), "left_outer")

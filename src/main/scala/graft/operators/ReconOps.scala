@@ -24,25 +24,54 @@ object ReconOps {
 
   private def dec(cn: String) = col(cn).cast("decimal(12,4)")
 
-  /** Per-nite rollup — P10 + A2: the 15:00-cutoff calendar key as a derived
-    * column, then a hash aggregate. At scale the registry would be
-    * partitioned by this key (SURVEY §4 partition pruning). */
+  /** Events with their P10 nite: the 15:00-cutoff calendar key as a
+    * derived column, the key every per-nite operator groups by. At scale
+    * the registry would be partitioned by it (SURVEY §4 partition
+    * pruning). */
+  private[graft] def eventsByNite(spark: SparkSession, dir: String): DataFrame =
+    Tables.events(spark, dir).withColumn("nite", Derived.niteOf(col("ts")))
+
+  private def isError: Column = col("event_type") === "error"
+
+  /** The event types whose users A10 flags: [[MonitorOps.unionAccumulate]]
+    * unions one filter per type, [[niteSummary]] counts them in one pass. */
+  private[graft] val FlaggedTypes: Seq[String] = Seq("error", "purchase")
+
+  // string-route decimal->double: BigDecimal.doubleValue() measured
+  // 1 ulp off DuckDB (q1Pricing war story); the string parse is
+  // correctly rounded on both engines
+  private def sumValue: Column =
+    sum(dec("value")).cast("string").cast("double").as("sum_value")
+
+  /** Per-nite rollup — P10 + A2: a hash aggregate on the nite key. */
   def niteRollup(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .withColumn("nite", Derived.niteOf(col("ts")))
-      .groupBy(col("nite"))
-      .agg(count(lit(1)).as("n_events"),
-        // string-route decimal->double: BigDecimal.doubleValue() measured
-        // 1 ulp off DuckDB (q1Pricing war story); the string parse is
-        // correctly rounded on both engines
-        sum(dec("value")).cast("string").cast("double").as("sum_value"))
+    eventsByNite(spark, dir).groupBy(col("nite"))
+      .agg(count(lit(1)).as("n_events"), sumValue)
 
   /** Error counts per nite — A4 (monitor:848-853): filtered group count. */
   def errorsPerNite(spark: SparkSession, dir: String): DataFrame =
-    Tables.events(spark, dir)
-      .where(col("event_type") === "error")
-      .withColumn("nite", Derived.niteOf(col("ts")))
+    eventsByNite(spark, dir).where(isError)
       .groupBy(col("nite")).agg(count(lit(1)).as("n_errors"))
+
+  /** The monitor's per-nite summary in ONE aggregate over one events
+    * scan: [[niteRollup]]'s `n_events` and `sum_value`, [[errorsPerNite]]'s
+    * `n_errors` and [[MonitorOps.unionAccumulate]]'s `n_flagged_users`,
+    * one row per nite of [[niteRollup]]. A nite without errors or flagged
+    * users reads 0 where the three-way left join read null. The distinct
+    * count adds 1 when a flagged event has a null `user_id`, which
+    * `unionAccumulate`'s `distinct()` keeps as a row of its own. A null
+    * nite (null `ts`) is one group here and carries its own counts; the
+    * join could not match it and read 0 for both. */
+  def niteSummary(spark: SparkSession, dir: String): DataFrame = {
+    val flagged = col("event_type").isin(FlaggedTypes: _*)
+    eventsByNite(spark, dir).groupBy(col("nite"))
+      .agg(count(lit(1)).as("n_events"),
+        sum(when(isError, 1L).otherwise(0L)).as("n_errors"),
+        (count_distinct(when(flagged, col("user_id"))) +
+          max(when(flagged && col("user_id").isNull, 1L).otherwise(0L)))
+          .as("n_flagged_users"),
+        sumValue)
+  }
 
   /** Duplicate-skip marking — W1 (monitor:922-942): within each
     * (user_id, event_type) group every occurrence except the latest is

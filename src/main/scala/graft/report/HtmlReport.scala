@@ -4,7 +4,7 @@ import java.util.UUID
 import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
   Executors, TimeUnit}
 
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 
 /** HTML report rendering — reference S19 (`monitor_DBB_stagein.py`
   * print_summary_html / print_exposure_html / print_sne_html,
@@ -32,12 +32,22 @@ object HtmlReport {
       Frame(df.columns.toIndexedSeq, df.collect().toIndexedSeq)
   }
 
+  /** `df` sorted by `cols` inside ONE partition. A global `orderBy`
+    * plans a range exchange, and preparing that exchange starts a
+    * sampling job of its own; a report-sized aggregate (a row per nite,
+    * state or event type) fits one task, so the sort needs neither.
+    * `coalesce(1)` adds no exchange: only the frame's last stage runs as
+    * one task. Unbounded frames keep `orderBy` + `limit`
+    * (TakeOrderedAndProject), never this. */
+  def sortSmall(df: DataFrame, cols: Column*): DataFrame =
+    df.coalesce(1).sortWithinPartitions(cols: _*)
+
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
   /** Build and collect every frame concurrently; results come back in
     * input order. Each frame is built inside its task (`() => DataFrame`),
-    * so driver-side planning and schema-inference jobs overlap too.
+    * so driver-side analysis and planning overlap too.
     *
     * The pool is created per call and sized `min(#frames,
     * defaultParallelism)`; its threads are created from the calling thread,

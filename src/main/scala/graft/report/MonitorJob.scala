@@ -21,10 +21,12 @@ import graft.operators.{MonitorOps, ReconOps, RelationalOps}
   *  - `dtsmonitor_sne.html` (print_sne_html, monitor:423-516): the SNe
   *    reconciliation with duplicate-skip marking
   *
-  * Every section is one of the individually-oracled operators (J5-J7,
-  * J12, W1, A2-A7, T3, S11/W2) — this job only CHAINS them and renders;
-  * no new dataflow semantics live here. All heavy work stays distributed;
-  * only report-sized final frames are collected (HtmlReport's contract).
+  * Every section is built from the individually-oracled operators
+  * (J5-J7, J12, W1, A2-A7, T3, S11/W2) — the per-nite summary is
+  * [[ReconOps.niteSummary]], the A2/A4/A10 column rules in one aggregate
+  * over one events scan — this job only CHAINS them and renders; no new
+  * dataflow semantics live here. All heavy work stays distributed; only
+  * report-sized final frames are collected (HtmlReport's contract).
   *
   * Concurrency: the section frames of all four pages are built and
   * collected at the same time ([[HtmlReport.collectAll]]) — each is a
@@ -33,9 +35,16 @@ import graft.operators.{MonitorOps, ReconOps, RelationalOps}
   * section order, and the shared exposure-states cache is released only
   * after every section task has finished, on success and on failure.
   *
-  * Determinism: each frame gets an explicit total ORDER BY before render,
-  * and the caller passes the timestamp/took values — so a fixed-input run
-  * is byte-stable (golden-file tested in MonitorJobSpec).
+  * Jobs: every table schema comes from the session's resolved set
+  * (`Tables.load`), so building a section starts no job; the report-sized
+  * sections sort inside one partition ([[HtmlReport.sortSmall]]), so none
+  * starts a range-sampling job. A warm render over the sf0.01 tables runs
+  * 22 jobs; with per-call schema inference, a three-aggregate summary and
+  * global sorts it ran 45.
+  *
+  * Determinism: each frame gets an explicit total order on a unique key
+  * before render, and the caller passes the timestamp/took values — so a
+  * fixed-input run is byte-stable (golden-file tested in MonitorJobSpec).
   */
 object MonitorJob {
 
@@ -98,36 +107,35 @@ object MonitorJob {
     def detailRows(selected: DataFrame): DataFrame =
       selected.orderBy(col("o_orderkey")).limit(DetailRowCap)
 
+    // report-sized aggregates sort in one partition (no range exchange,
+    // so no sampling job); the capped row listings keep orderBy + limit
+    import HtmlReport.sortSmall
     val sections: Seq[() => DataFrame] = Seq(
       // ---- summary page (print_summary_html): per-nite counts
-      // A2/A4/A10, the "lasts" block (S11/W2 log tails), and the T3
-      // top-20 failures
-      () => ReconOps.niteRollup(spark, dataDir)
-        .join(ReconOps.errorsPerNite(spark, dataDir), Seq("nite"), "left_outer")
-        .join(MonitorOps.unionAccumulate(spark, dataDir), Seq("nite"), "left_outer")
-        .select(col("nite"), col("n_events"),
-          coalesce(col("n_errors"), lit(0L)).as("n_errors"),
-          coalesce(col("n_flagged_users"), lit(0L)).as("n_flagged_users"),
-          round(col("sum_value"), 4).as("sum_value"))
-        .orderBy(col("nite")),
-      () => MonitorOps.logTail(spark, dataDir).orderBy(col("event_type")),
+      // A2/A4/A10 in one aggregate, the "lasts" block (S11/W2 log tails),
+      // and the T3 top-20 failures
+      () => sortSmall(ReconOps.niteSummary(spark, dataDir)
+        .select(col("nite"), col("n_events"), col("n_errors"),
+          col("n_flagged_users"), round(col("sum_value"), 4).as("sum_value")),
+        col("nite")),
+      () => sortSmall(MonitorOps.logTail(spark, dataDir), col("event_type")),
       () => RelationalOps.topkErrors(spark, dataDir)
         .orderBy(col("ts_sec").desc, col("event_id").desc),
       // the per-state counts of the full page; the short page's counts
       // are the same rows without `ok`, derived below without a job
-      () => states.groupBy(col("expstate"))
-        .agg(count(lit(1)).as("n_orders")).orderBy(col("expstate")),
+      () => sortSmall(states.groupBy(col("expstate"))
+        .agg(count(lit(1)).as("n_orders")), col("expstate")),
       () => detailRows(states.where(col("expstate") =!= "ok")),
       () => detailRows(states),
       // ---- SNe page (print_sne_html): J5→J7 multi-key reconciliation
       // plus the W1 duplicate-skip marking summary (mark_sne_skip,
       // monitor:922-942 — skipped rows are counted, not listed)
-      () => MonitorOps.multikeyRecon(spark, dataDir).orderBy(col("nite")),
-      () => ReconOps.skipDuplicates(spark, dataDir)
+      () => sortSmall(MonitorOps.multikeyRecon(spark, dataDir), col("nite")),
+      () => sortSmall(ReconOps.skipDuplicates(spark, dataDir)
         .groupBy(col("event_type"))
         .agg(count(lit(1)).as("n_rows"),
-          sum(when(col("skip"), 1L).otherwise(0L)).as("n_skipped"))
-        .orderBy(col("event_type")))
+          sum(when(col("skip"), 1L).otherwise(0L)).as("n_skipped")),
+        col("event_type")))
 
     val Seq(niteSummary, lasts, topFailures, fullStates, shortRows, fullRows,
         sneRecon, skipSummary) =

@@ -1,6 +1,11 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
+import org.apache.spark.sql.types.{LongType, StructType}
 
 /** Loaders for the driver-generated testdata tables (TESTDATA.md).
   *
@@ -10,14 +15,54 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * are controlled in one place. Column pruning and predicate pushdown are
   * left to Catalyst: callers `.select`/`.where` and the parquet scan only
   * reads what survives.
+  *
+  * Schemas are resolved once per session and file state: a parquet read
+  * without a schema starts one footer-reading Spark job (60–90 ms warm),
+  * one with a known schema starts none, and a monitor render alone loads
+  * nine tables. [[load]] keys each resolved schema by the path plus the
+  * (name, length, modification time) of every file under it, so a
+  * rewritten table gets a new key and is resolved again.
   */
 object Tables {
   val names: Seq[String] = Seq(
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    spark.read.parquet(s"$dir/$name.parquet")
+  private type FileState = (String, Seq[(String, Long, Long)])
+
+  /** Resolved schemas per session (weakly held: a stopped session's
+    * entries go with it); a table's schema depends on session settings
+    * such as `nanosAsLong`, so sessions never share an entry. */
+  private val schemas = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession,
+      ConcurrentHashMap[FileState, StructType]]())
+
+  /** `name`'s table read under its known schema. A miss runs the one
+    * schema-inferring read of the session and file state; concurrent
+    * first loads of one file wait for that single read. A missing path
+    * keys as empty, so the inferring read raises the reader's own
+    * path-not-found error and nothing is cached. */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
+    val files =
+      if (!fs.exists(p)) Nil
+      else {
+        val it = fs.listFiles(p, true)
+        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
+          .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+          .toSeq.sorted
+      }
+    val schema = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
+      .computeIfAbsent((path, files), _ => {
+        // the flag must be in place before the first read of events
+        if (name == "events")
+          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        spark.read.parquet(path).schema
+      })
+    spark.read.schema(schema).parquet(path)
+  }
 
   /** events.parquet carries TIMESTAMP(NANOS). Depending on the Spark
     * build this reads back one of two ways, and we normalize BOTH to a
@@ -32,18 +77,16 @@ object Tables {
     *     session zone; Verify/Bench pin UTC, matching the oracle's
     *     naive-timestamp formatting).
     * Branching on the READ-BACK type (not the Spark version string)
-    * keeps this correct under either reader. */
+    * keeps this correct under either reader; the type comes from the
+    * resolved schema, so the branch starts no job. [[load]] sets the legacy
+    * flag once per session, when the session first resolves the file. */
   def events(s: SparkSession, d: String): DataFrame = {
-    s.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
     val raw = load(s, d, "events")
     raw.schema("ts").dataType match {
-      case org.apache.spark.sql.types.LongType =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.timestamp_micros(
-            org.apache.spark.sql.functions.expr("ts div 1000")))
+      case LongType =>
+        raw.withColumn("ts", timestamp_micros(expr("ts div 1000")))
       case _ =>
-        raw.withColumn("ts",
-          org.apache.spark.sql.functions.col("ts").cast("timestamp"))
+        raw.withColumn("ts", col("ts").cast("timestamp"))
     }
   }
 

@@ -629,11 +629,30 @@ object IngestPipeline {
   private def hasParquetFiles(spark: SparkSession, dir: String): Boolean =
     graft.functions.ScaleUtils.hasParquetData(spark, dir)
 
-  /** Schema of an existing non-empty parquet dir, None when absent. */
+  /** Schema of an existing non-empty parquet dir, None when absent: the
+    * footer of its newest data file (by modification time, then name),
+    * read on the driver — no Spark job. Spark stores its own schema in
+    * the footer metadata; a file from another writer converts from its
+    * parquet schema, as the reader's own inference does. */
   private def existingSchema(spark: SparkSession, dir: String)
-      : Option[StructType] =
-    if (hasParquetFiles(spark, dir)) Some(spark.read.parquet(dir).schema)
-    else None
+      : Option[StructType] = {
+    val root = new Path(dir)
+    val conf = spark.sparkContext.hadoopConfiguration
+    val files = graft.functions.ScaleUtils
+      .parquetDataFiles(root.getFileSystem(conf), root)
+    files.maxByOption(st => (st.getModificationTime, st.getPath.getName))
+      .map { st =>
+        val r = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        val meta = try r.getFooter.getFileMetaData finally r.close()
+        Option(meta.getKeyValueMetaData
+            .get("org.apache.spark.sql.parquet.row.metadata"))
+          .map(json => org.apache.spark.sql.types.DataType.fromJson(json)
+            .asInstanceOf[StructType])
+          .getOrElse(new org.apache.spark.sql.execution.datasources.parquet
+            .ParquetToSparkSchemaConverter(conf).convert(meta.getSchema))
+      }
+  }
 
   private def loadRegistry(spark: SparkSession, cfg: Config): DataFrame = {
     // Duplicate check reads the LOCATION table (ref save:155

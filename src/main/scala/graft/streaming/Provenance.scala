@@ -104,8 +104,12 @@ object Provenance {
     // brick task creation. Shared rule with every other append-target
     // table (ScaleUtils.hasParquetData); Hadoop FS probe, so the tasks
     // table may live on HDFS/S3 (java.nio only sees local paths).
+    // createTask writes every row, so the table is read under its known
+    // schema (no schema-inference job)
     if (graft.functions.ScaleUtils.hasParquetData(spark, tasksDir))
-      spark.read.parquet(tasksDir)
+      spark.read
+        .schema("task_id BIGINT, name STRING, prov_msg STRING, created_at TIMESTAMP")
+        .parquet(tasksDir)
     else {
       import spark.implicits._
       Seq.empty[(Long, String, String)].toDF("task_id", "name", "prov_msg")

@@ -114,6 +114,50 @@ class MonitorJobSpec extends SparkSpec {
     }
   }
 
+  test("a warm render starts no job from Tables and no range-sampling sort") {
+    // every job's stage names its call site: a schema-inference read in
+    // Tables would carry Tables' frame there. Every section's executed
+    // plan, AQE stages included, must hold no range-partitioned exchange:
+    // preparing one starts a sampling job
+    import org.apache.spark.sql.catalyst.plans.physical.RangePartitioning
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    val sc = spark.sparkContext
+    renderAll
+    val sites = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val jobs = new SparkListener {
+      override def onJobStart(job: SparkListenerJobStart): Unit =
+        job.stageInfos.foreach(st => sites.add(st.details))
+    }
+    val plans = new java.util.concurrent.ConcurrentLinkedQueue[SparkPlan]()
+    val queries = new org.apache.spark.sql.util.QueryExecutionListener {
+      def onSuccess(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          ns: Long): Unit = plans.add(qe.executedPlan)
+      def onFailure(f: String, qe: org.apache.spark.sql.execution.QueryExecution,
+          e: Exception): Unit = ()
+    }
+    ListenerBusAccess.drain(sc)
+    sc.addSparkListener(jobs)
+    spark.listenerManager.register(queries)
+    try {
+      renderAll
+      ListenerBusAccess.drain(sc)
+    } finally {
+      spark.listenerManager.unregister(queries)
+      sc.removeSparkListener(jobs)
+    }
+    import scala.jdk.CollectionConverters._
+    assert(!sites.isEmpty && plans.size == 8, s"${plans.size} section plans")
+    val fromTables = sites.asScala.filter(_.contains("graft.sources.Tables"))
+    assert(fromTables.isEmpty, s"jobs started by Tables:\n${fromTables.mkString("\n")}")
+    val helper = new AdaptiveSparkPlanHelper {}
+    val ranged = plans.asScala.toSeq.flatMap(p => helper.collect(p) {
+      case e: ShuffleExchangeExec if e.outputPartitioning.isInstanceOf[RangePartitioning] => e
+    })
+    assert(ranged.isEmpty, s"range exchanges:\n${ranged.mkString("\n")}")
+  }
+
   test("the caller's local properties reach every job render starts; " +
       "no cache outlives the render") {
     val sc = spark.sparkContext

@@ -1,6 +1,6 @@
 package graft
 
-import graft.operators.{ReconOps, RelationalOps, TextOps, VectorOps}
+import graft.operators.{MonitorOps, ReconOps, RelationalOps, TextOps, VectorOps}
 import org.apache.spark.sql.functions._
 
 /** Reference invariants (SURVEY §5.2): the monitor's documented contract
@@ -27,6 +27,60 @@ class ReconInvariantsSpec extends SparkSpec {
     // total conservation
     assert(df.count() ==
       spark.read.parquet(s"$sfDir/events.parquet").count())
+  }
+
+  /** The per-nite summary as three aggregates left-joined on nite. */
+  private def joinedSummary(dir: String) =
+    ReconOps.niteRollup(spark, dir)
+      .join(ReconOps.errorsPerNite(spark, dir), Seq("nite"), "left_outer")
+      .join(MonitorOps.unionAccumulate(spark, dir), Seq("nite"), "left_outer")
+      .select(col("nite"), col("n_events"),
+        coalesce(col("n_errors"), lit(0L)).as("n_errors"),
+        coalesce(col("n_flagged_users"), lit(0L)).as("n_flagged_users"),
+        col("sum_value"))
+
+  private def summaryRows(df: org.apache.spark.sql.DataFrame) =
+    df.select("nite", "n_events", "n_errors", "n_flagged_users", "sum_value")
+      .collect().map(_.toSeq).sortBy(r => Option(r.head).map(_.toString))
+      .toSeq
+
+  test("niteSummary equals the joined A2/A4/A10 summary row for row") {
+    import spark.implicits._
+    assert(summaryRows(ReconOps.niteSummary(spark, sfDir)) ==
+      summaryRows(joinedSummary(sfDir)))
+    // nite 20240501: a flagged event with a null user (a distinct row of
+    // its own), a repeated flagged user; 20240502: no error or purchase;
+    // 20240503: purchases but no error; a null ts forms a null nite
+    val dir = java.nio.file.Files.createTempDirectory("nite-summary")
+    Seq[(Long, String, java.lang.Long, String, Double)](
+      (1L, "2024-05-01 16:00:00", 1L, "error", 1.25),
+      (2L, "2024-05-01 17:00:00", null, "error", 2.0),
+      (3L, "2024-05-02 09:00:00", 1L, "purchase", 0.5),
+      (4L, "2024-05-01 18:00:00", 2L, "purchase", 3.0),
+      (5L, "2024-05-01 19:00:00", 3L, "click", 4.0),
+      (6L, "2024-05-02 16:00:00", 3L, "click", 1.0),
+      (7L, "2024-05-02 17:00:00", 4L, "view", 1.0),
+      (8L, "2024-05-03 16:00:00", 5L, "purchase", 2.5),
+      (9L, "2024-05-03 17:00:00", 5L, "purchase", 2.5),
+      (10L, null, 7L, "error", 9.0))
+      .toDF("event_id", "ts", "user_id", "event_type", "value")
+      .withColumn("ts", col("ts").cast("timestamp"))
+      .write.parquet(dir.resolve("events.parquet").toString)
+    val d = dir.toString
+    val summary = summaryRows(ReconOps.niteSummary(spark, d))
+    val (nullNite, dated) = summary.partition(_.head == null)
+    assert(dated == summaryRows(joinedSummary(d)).filter(_.head != null))
+    assert(dated.map(_.take(4)) == Seq(
+      Seq("20240501", 5L, 2L, 3L),
+      Seq("20240502", 2L, 0L, 0L),
+      Seq("20240503", 2L, 0L, 1L)))
+    // the join cannot match a null nite; the one aggregate counts it,
+    // as errorsPerNite and unionAccumulate do on their own
+    def nullCount(df: org.apache.spark.sql.DataFrame) =
+      df.where(col("nite").isNull).collect().map(_.getLong(1)).toSeq
+    assert(nullNite.map(_.take(4)) == Seq(Seq(null, 1L, 1L, 1L)))
+    assert(nullCount(ReconOps.errorsPerNite(spark, d)) == Seq(1L))
+    assert(nullCount(MonitorOps.unionAccumulate(spark, d)) == Seq(1L))
   }
 
   test("top-k is a subset of the filtered set, ordered desc (T3)") {

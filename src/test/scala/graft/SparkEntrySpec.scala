@@ -315,4 +315,30 @@ class SparkEntrySpec extends SparkSpec {
     assert(hits.isEmpty, "build tokens with TextOps.toks and n-grams with " +
       s"TextOps.grams (Int.MaxValue - 8 overflows a slice from 10 on):\n${hits.mkString("\n")}")
   }
+
+  /** A reader chain (`.read`, then calls other than `.schema(...)`) that
+    * ends in `.parquet(`: the read infers its schema with a Spark job. */
+  private val SchemalessParquet =
+    """\.read(?:\s*\.(?!schema\b)\w+\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))*\s*\.parquet\(""".r
+
+  test("sources, report and streaming read parquet under a known schema, " +
+      "except the one resolver in Tables.load") {
+    val tables = Paths.get("src/main/scala/graft/sources/Tables.scala")
+    val (inResolver, elsewhere) = Seq("sources", "report", "streaming")
+      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d")).flatMap { f =>
+        val code = stripComments(Files.readString(f))
+        val resolver =
+          if (f != tables) 0 until 0
+          else objectMembers(code.split("\n", -1)).collectFirst {
+            case ("Tables", "load", from, to) => from until to
+          }.getOrElse(0 until 0)
+        SchemalessParquet.findAllMatchIn(code).map { m =>
+          val line = code.substring(0, m.start).count(_ == '\n')
+          resolver.contains(line) -> s"${f.getFileName}:${line + 1}"
+        }
+      }.partition(_._1)
+    assert(elsewhere.isEmpty, "read these under a known schema " +
+      s"(`.read.schema(...)`) or through Tables.load:\n${elsewhere.map(_._2).mkString("\n")}")
+    assert(inResolver.size == 1, s"Tables.load resolves once: ${inResolver.map(_._2)}")
+  }
 }
