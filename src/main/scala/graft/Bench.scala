@@ -240,10 +240,12 @@ object Bench {
     import graft.sources.Tables
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_prod_bench").toString
-    val mat = timedReps(spark, 1)(CurationOps.curationRun(spark, sfDir, outDir))
-    def groups = spark.read.parquet(s"$outDir/groups")
-    def keep = spark.read.parquet(s"$outDir/canonical")
-    def chunks = spark.read.parquet(s"$outDir/chunks")
+    var run = Map.empty[String, DataFrame]
+    val mat = timedReps(spark, 1) {
+      run = CurationOps.curationRun(spark, sfDir, outDir) }
+    def groups = run("groups")
+    def keep = run("canonical")
+    def chunks = run("chunks")
     def quality = TextOps.qualityScore(spark, sfDir)
       .select(col("doc_id"), col("quality"))
     def prov = Tables.documents(spark, sfDir)

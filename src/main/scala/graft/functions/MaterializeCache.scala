@@ -3,27 +3,32 @@ package graft.functions
 import java.nio.file.{Files, Path, Paths}
 import java.util.concurrent.ConcurrentHashMap
 
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.types.StructType
+
 /** Per-JVM materialize-once cache for the `q_prod_*` twins (ADVICE r12):
   * the prod queries serve derivative reports from a STORED parquet table
   * written once per corpus dir, and this object owns the once-ness.
-  *
-  * Three properties the earlier per-file `ConcurrentHashMap[dir, path]`
-  * caches lacked:
   *
   *  1. **Content-keyed**: the cache key includes a fingerprint of the
   *     corpus dir (relative path + size + mtime of every data file), so
   *     a dir whose contents change within a JVM re-materializes instead
   *     of silently serving stale tables.
-  *  2. **Cleaned up**: every temp dir this cache creates is removed by a
-  *     shutdown hook — repeated JVMs no longer leak
-  *     `graft_prod_*` directories into the system temp.
+  *  2. **Cleaned up**: a shutdown hook removes every temp dir this cache
+  *     creates, so repeated JVMs leak no `graft_*` directories.
   *  3. **Scoped**: the local-temp-path design is a LOCAL-MODE harness
   *     convenience — the declared-query gate requires each query to be
   *     self-contained, so the "stored table" must be synthesized inside
-  *     the JVM. A real cluster deployment never uses this path: it runs
-  *     [[graft.operators.CurationOps.curationRun]] (or the streaming
-  *     maintainers) against an EXPLICIT shared `outDir` on distributed
-  *     storage and serves the `*From` entry points from there.
+  *     the JVM. A real cluster deployment runs
+  *     [[graft.operators.CurationOps.curationRun]] against an EXPLICIT
+  *     shared `outDir` on distributed storage and serves the `*From`
+  *     entry points from there.
+  *
+  * A table you wrote comes back from the call that wrote it: [[table]]
+  * writes through [[ScaleUtils.stored]] and keeps the written schema
+  * with the path, so its callers neither write nor read parquet, and a
+  * warm hit starts no Spark job. [[getOrWrite]] is the primitive under
+  * it, for a build that writes several tables into one directory.
   */
 object MaterializeCache {
   // CompletableFuture memoization, NOT computeIfAbsent(write): the write
@@ -38,6 +43,8 @@ object MaterializeCache {
   private val cache =
     new ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
   private val created = ConcurrentHashMap.newKeySet[Path]()
+  /** The schema each [[table]] was written with, by its path. */
+  private val schemas = new ConcurrentHashMap[String, StructType]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     created.forEach(p => deleteRecursively(p))
@@ -108,5 +115,17 @@ object MaterializeCache {
       }
     }
     throw new IllegalStateException("unreachable")
+  }
+
+  /** The table `build` produces for (`tag`, `dir`, current contents),
+    * written once through [[getOrWrite]] and read back under the schema
+    * it was written with. `build` runs only on the first call per key,
+    * and may itself read other tables of this cache; a warm hit reads
+    * the stored table and starts no Spark job. */
+  def table(tag: String, dir: String)(build: => DataFrame): DataFrame = {
+    val path = getOrWrite(tag, dir) { out =>
+      schemas.put(out, ScaleUtils.stored(build, out).schema)
+    }
+    SparkSession.active.read.schema(schemas.get(path)).parquet(path)
   }
 }

@@ -25,6 +25,34 @@ object ScaleUtils {
     }: _*)
   }
 
+  /** `df` written over `dir`, handed back as the read of what was
+    * written, under the schema it was written with: a table you wrote
+    * comes back from the call that wrote it, and reading it back starts
+    * no schema-inference job. */
+  def stored(df: DataFrame, dir: String): DataFrame = {
+    df.write.mode("overwrite").parquet(dir)
+    df.sparkSession.read.schema(df.schema).parquet(dir)
+  }
+
+  /** The blocks an eager `localCheckpoint` left as `df`'s plan: the
+    * checkpointed RDDs, captured from the frame's own plan, never from a
+    * context-global `getPersistentRDDs` diff, which can catch a
+    * concurrent query's blocks. Local-checkpoint blocks are invisible to
+    * CacheManager, so whoever checkpoints frees them with these. */
+  def checkpointRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
+    df.queryExecution.logical.collect {
+      case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+
+  /** The checkpoint blocks of the last call of one operator: `replace`
+    * keeps `df`'s and frees the previous call's, so repeated calls in
+    * one JVM leave at most one resident copy. */
+  final class CheckpointSlot {
+    private val held = new java.util.concurrent.atomic.AtomicReference[
+      Seq[org.apache.spark.rdd.RDD[_]]](Nil)
+    def replace(df: DataFrame): Unit =
+      held.getAndSet(checkpointRdds(df)).foreach(_.unpersist(false))
+  }
+
   /** THE shared definition of "table data file" — compaction, footer row
     * counts, and every read-back gate use this one predicate so the rule
     * cannot drift between call sites: a `*.parquet` part file with no
@@ -113,7 +141,7 @@ object ScaleUtils {
     // every batch so far quarantined) — and spark.read.parquet would
     // throw on a parquet-less dir, killing the calling stream
     if (before.isEmpty) return (0, 0)
-    val df = spark.read.parquet(dir)
+    val df = graft.sources.Tables.parquet(spark, dir)
     // partition columns = hive dirs on disk; they come back as data
     // columns and partitionBy rebuilds the same layout. Relativization
     // shares [[qualRootPrefix]] with the hidden-segment filter.

@@ -1237,10 +1237,13 @@ object CurationOps {
     * of the 74-query suite (VERDICT r5 perf note); a production run
     * pays the chain once here.
     *
-    * Every returned frame is the READ-BACK of its parquet output
-    * (groups, canonical, dup_rates, funnel), so downstream consumers
-    * scan a table instead of re-deriving the plan. Spec-pinned: each
-    * output equals its declared query's result row-for-row.
+    * A table you wrote comes back from the call that wrote it: each of
+    * the nine tables is written through
+    * [[graft.functions.ScaleUtils.stored]], and the returned map holds
+    * those read-backs, each under the schema it was written with.
+    * Downstream consumers scan a table, with no schema-inference job,
+    * instead of re-deriving the plan. Spec-pinned: each output equals
+    * its declared query's result row-for-row.
     *
     * Deliberate non-goal: the funnel's chunk signals are EXACT
     * (fingerprint dedup + benchmark containment); chunk-level SEMANTIC
@@ -1252,53 +1255,44 @@ object CurationOps {
     * chunks of the admitted set. */
   def curationRun(spark: SparkSession, dir: String, outDir: String)
       : Map[String, DataFrame] = {
-    DedupOps.textDedupGroups(spark, dir)
-      .write.mode("overwrite").parquet(s"$outDir/groups")
-    val groups = spark.read.parquet(s"$outDir/groups")
+    import graft.functions.ScaleUtils.stored
+    val groups = stored(DedupOps.textDedupGroups(spark, dir), s"$outDir/groups")
     val quality = TextOps.qualityScore(spark, dir)
       .select(col("doc_id"), col("quality"))
-    DedupOps.canonicalDocsFrom(groups, quality)
-      .write.mode("overwrite").parquet(s"$outDir/canonical")
-    val keep = spark.read.parquet(s"$outDir/canonical")
-    DedupOps.dupRateBySourceFrom(groups, keep,
-        Tables.documents(spark, dir).select(col("doc_id"), col("source")))
-      .write.mode("overwrite").parquet(s"$outDir/dup_rates")
+    val keep = stored(DedupOps.canonicalDocsFrom(groups, quality),
+      s"$outDir/canonical")
+    val dupRates = stored(DedupOps.dupRateBySourceFrom(groups, keep,
+        Tables.documents(spark, dir).select(col("doc_id"), col("source"))),
+      s"$outDir/dup_rates")
     // the chunk grid is the other corpus-sized derivation — materialize
     // it once and feed the funnel's two chunk signals from the table
-    chunkDocs(spark, dir).write.mode("overwrite").parquet(s"$outDir/chunks")
-    val chunks = spark.read.parquet(s"$outDir/chunks")
+    val chunks = stored(chunkDocs(spark, dir), s"$outDir/chunks")
     // ONE staged pass feeds both artifacts: the per-doc verdicts land as
     // a table, the funnel report is its aggregation, and the ADMITTED
     // corpus — the doc set a training run actually reads — is the
     // stage-8 slice of the same materialized relation (no second
     // evaluation that could classify a doc differently)
-    curationStagesFrom(spark, dir, DedupOps.dropList(groups, keep),
-        Some(chunks))
-      .write.mode("overwrite").parquet(s"$outDir/stages")
-    val stages = spark.read.parquet(s"$outDir/stages")
-    stages.groupBy(col("lang"), col("stage"))
-      .agg(count(lit(1)).as("n_docs"))
-      .write.mode("overwrite").parquet(s"$outDir/funnel")
-    stages.where(col("stage") === "8_admitted")
-      .select(col("doc_id"), col("lang"))
-      .write.mode("overwrite").parquet(s"$outDir/admitted")
+    val stages = stored(curationStagesFrom(spark, dir,
+      DedupOps.dropList(groups, keep), Some(chunks)), s"$outDir/stages")
+    val funnel = stored(stages.groupBy(col("lang"), col("stage"))
+      .agg(count(lit(1)).as("n_docs")), s"$outDir/funnel")
+    val admitted = stored(stages.where(col("stage") === "8_admitted")
+      .select(col("doc_id"), col("lang")), s"$outDir/admitted")
     // the learned-filter model: trained ONCE here on the heuristic
     // labels, stored as two tables — a batch rescoring
     // (TextOps.nbScoreFrom) reads the stored model instead of
     // re-training (refresh on the run cadence)
     val (nbW, nbPrior) = TextOps.nbTrain(Tables.documents(spark, dir))
-    nbW.write.mode("overwrite").parquet(s"$outDir/nb_weights")
-    nbPrior.write.mode("overwrite").parquet(s"$outDir/nb_prior")
     Map(
       "groups"     -> groups,
       "canonical"  -> keep,
+      "dup_rates"  -> dupRates,
       "chunks"     -> chunks,
       "stages"     -> stages,
-      "admitted"   -> spark.read.parquet(s"$outDir/admitted"),
-      "dup_rates"  -> spark.read.parquet(s"$outDir/dup_rates"),
-      "funnel"     -> spark.read.parquet(s"$outDir/funnel"),
-      "nb_weights" -> spark.read.parquet(s"$outDir/nb_weights"),
-      "nb_prior"   -> spark.read.parquet(s"$outDir/nb_prior"))
+      "funnel"     -> funnel,
+      "admitted"   -> admitted,
+      "nb_weights" -> stored(nbW, s"$outDir/nb_weights"),
+      "nb_prior"   -> stored(nbPrior, s"$outDir/nb_prior"))
   }
 
   /** Rows each retrieval arm contributes to [[rrfFusion]]. */
@@ -2510,22 +2504,21 @@ object CurationOps {
     * pure function of the same inputs), so it reuses that query's
     * oracle — the green row grades the production plan itself. */
   /** Materialize-once home of the prod stages table — shared by the
-    * prod funnel and the prod release audit, whichever runs first. */
-  private def prodStagesPath(spark: SparkSession, dir: String): String =
-    graft.functions.MaterializeCache.getOrWrite("prod_stages", dir) { out =>
+    * prod funnel and the prod release audit, whichever runs first. It
+    * nests on the stored chunk grid and the stored group table. */
+  private def prodStages(spark: SparkSession, dir: String): DataFrame =
+    graft.functions.MaterializeCache.table("prod_stages", dir) {
       val groups = DedupOps.materializedGroups(spark, dir)
       val keep = DedupOps.canonicalDocsFrom(groups,
         TextOps.qualityScore(spark, dir)
           .select(col("doc_id"), col("quality")))
-      chunkDocs(spark, dir).write.mode("overwrite")
-        .parquet(s"$out/chunks")
       curationStagesFrom(spark, dir, DedupOps.dropList(groups, keep),
-          Some(spark.read.parquet(s"$out/chunks")))
-        .write.mode("overwrite").parquet(s"$out/stages")
+        Some(graft.functions.MaterializeCache.table("prod_chunks", dir)(
+          chunkDocs(spark, dir))))
     }
 
   def prodCurationFunnel(spark: SparkSession, dir: String): DataFrame =
-    spark.read.parquet(s"${prodStagesPath(spark, dir)}/stages")
+    prodStages(spark, dir)
       .groupBy(col("lang"), col("stage"))
       .agg(count(lit(1)).as("n_docs"))
 
@@ -2533,8 +2526,7 @@ object CurationOps {
     * funnel reads — the release review runs against the run's artifact,
     * never a recompute that could drift from what actually shipped. */
   def prodReleaseRisk(spark: SparkSession, dir: String): DataFrame =
-    releaseRiskFrom(spark, dir,
-      spark.read.parquet(s"${prodStagesPath(spark, dir)}/stages"))
+    releaseRiskFrom(spark, dir, prodStages(spark, dir))
 
   val prodQueries: Map[String, (SparkSession, String) => DataFrame] =
     Map("q_prod_curation_funnel" -> prodCurationFunnel _,

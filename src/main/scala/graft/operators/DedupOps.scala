@@ -1058,16 +1058,12 @@ object DedupOps {
       driverMaxEdges: Int = CcDriverMaxEdges): DataFrame = {
     // eager localCheckpoint persists an internal RDD that CacheManager
     // does not track — without explicit cleanup, every superseded
-    // iteration's blocks sit in executor storage until driver GC. The
-    // checkpointed RDD is exactly the LogicalRDD the eager checkpoint
-    // leaves as the frame's plan — capture THAT and free it when
-    // superseded (a context-global getPersistentRDDs diff, the earlier
-    // form, could catch a CONCURRENT query's blocks).
+    // iteration's blocks sit in executor storage until driver GC, so
+    // each checkpoint's blocks are freed once superseded
     def checkpointed(df: DataFrame)
         : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
       val out = df.localCheckpoint(true)
-      (out, out.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd })
+      (out, graft.functions.ScaleUtils.checkpointRdds(out))
     }
     val (e, eRdds) = checkpointed(edges.select(col("id_a"), col("id_b")))
     try {
@@ -1220,9 +1216,7 @@ object DedupOps {
     * blocks and unpersists the PREVIOUS invocation's — at most one
     * resident copy per JVM, regardless of rep count. (The final frame of
     * the current call must stay resident: it is the returned plan.) */
-  private val demoCheckpointRdds =
-    new java.util.concurrent.atomic.AtomicReference[
-      Seq[org.apache.spark.rdd.RDD[_]]](Nil)
+  private val demoCheckpoint = new graft.functions.ScaleUtils.CheckpointSlot
 
   def mergeGroupsDemo(spark: SparkSession, dir: String): DataFrame = {
     val pairs = textDupPairs(spark, dir)
@@ -1231,16 +1225,13 @@ object DedupOps {
       val isDelta = col("id_b") % MergeDeltaMod === 0
       val existing = connectedComponents(pairs.where(!isDelta))
         .select(col("id").as("doc_id"), col("comp").as("rep_id"))
-      val existingRdds = existing.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
+      val existingRdds = graft.functions.ScaleUtils.checkpointRdds(existing)
       val out = mergeGroups(existing, pairs.where(isDelta)).localCheckpoint(true)
       // out is materialized (eager): existing's final-iteration blocks
       // are no longer reachable from any live frame — free them now, and
       // free the PREVIOUS invocation's sealed result (superseded by out)
       existingRdds.foreach(_.unpersist(false))
-      val rdds = out.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
-      demoCheckpointRdds.getAndSet(rdds).foreach(_.unpersist(false))
+      demoCheckpoint.replace(out)
       out
     } finally pairs.unpersist(blocking = false)
   }
@@ -1255,10 +1246,8 @@ object DedupOps {
       .select(col("id").as("vec_id"), col("comp").as("rep_id"))
 
   /** Previous [[dupTriangles]] checkpoint blocks (the
-    * [[demoCheckpointRdds]] superseded-blocks discipline). */
-  private val triCheckpointRdds =
-    new java.util.concurrent.atomic.AtomicReference[
-      Seq[org.apache.spark.rdd.RDD[_]]](Nil)
+    * [[demoCheckpoint]] superseded-blocks discipline). */
+  private val triCheckpoint = new graft.functions.ScaleUtils.CheckpointSlot
 
   /** TRIANGLE / TRANSITIVITY CENSUS over the verified dup-pair graph —
     * the structural diagnostic beside [[groupPurity]]: a duplicate
@@ -1282,9 +1271,7 @@ object DedupOps {
       .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
     try {
       val out = triangleCensusOf(e).localCheckpoint(true)
-      val rdds = out.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
-      triCheckpointRdds.getAndSet(rdds).foreach(_.unpersist(false))
+      triCheckpoint.replace(out)
       out
     } finally e.unpersist(blocking = false)
   }
@@ -1684,15 +1671,10 @@ object DedupOps {
     * the corpus never re-read for estimates. Shares
     * [[sketchShingleOverlap]]'s oracle (the exact contract arm grades
     * the stored-sketch estimates). */
-  def prodSketchOverlap(spark: SparkSession, dir: String): DataFrame = {
-    val path =
-      graft.functions.MaterializeCache.getOrWrite("prod_srcsk", dir) {
-        out => sourceShingleSketches(Tables.documents(spark, dir))
-          .write.mode("overwrite").parquet(out)
-      }
-    sketchShingleOverlapWith(spark, dir,
-      sketchOverlapOf(spark.read.parquet(path)))
-  }
+  def prodSketchOverlap(spark: SparkSession, dir: String): DataFrame =
+    sketchShingleOverlapWith(spark, dir, sketchOverlapOf(
+      graft.functions.MaterializeCache.table("prod_srcsk", dir)(
+        sourceShingleSketches(Tables.documents(spark, dir)))))
 
   /** The contract harness shared by [[sketchShingleOverlap]] and
     * [[prodSketchOverlap]] — recomputes the exact intersection (the
@@ -2886,11 +2868,8 @@ object DedupOps {
     * ([[CurationOps.curationRun]]'s discipline). */
   private[operators] def materializedGroups(spark: SparkSession,
       dir: String): DataFrame =
-    spark.read.parquet(
-      graft.functions.MaterializeCache.getOrWrite("prod_groups", dir) {
-        out => textDedupGroups(spark, dir)
-          .write.mode("overwrite").parquet(out)
-      })
+    graft.functions.MaterializeCache.table("prod_groups", dir)(
+      textDedupGroups(spark, dir))
 
   private def prodQuality(spark: SparkSession, dir: String): DataFrame =
     TextOps.qualityScore(spark, dir).select(col("doc_id"), col("quality"))

@@ -222,9 +222,6 @@ object GraphOps {
     * r'(v) = tel(v) + (17 · Σ contrib) div 20. */
   private def rankLoop(e: DataFrame, nodesIn: DataFrame,
       driverMaxRows: Int = RankDriverMaxRows): DataFrame = {
-    def ckptRdds(df: DataFrame): Seq[org.apache.spark.rdd.RDD[_]] =
-      df.queryExecution.logical.collect {
-        case lr: org.apache.spark.sql.execution.LogicalRDD => lr.rdd }
     val ew = e.join(
         e.groupBy(col("s")).agg(sum(col("w")).as("ow")), "s")
       .localCheckpoint(true)
@@ -248,7 +245,8 @@ object GraphOps {
       } yield rankLoopDriver(e.sparkSession, eRows, nRows)
       local match {
         case Some(out) =>
-          (ckptRdds(ew) ++ ckptRdds(nodes)).foreach(_.unpersist(false))
+          Seq(ew, nodes).flatMap(graft.functions.ScaleUtils.checkpointRdds)
+            .foreach(_.unpersist(false))
           return out
         case None =>
       }

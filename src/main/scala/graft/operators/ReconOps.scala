@@ -984,14 +984,10 @@ object ReconOps {
     * executes — |days| stored rows in, no event re-scan for the
     * estimate arm. Shares [[slidingWau]]'s oracle (the exact contract
     * arm grades the stored-sketch estimates). */
-  def prodSlidingWau(spark: SparkSession, dir: String): DataFrame = {
-    val path =
-      graft.functions.MaterializeCache.getOrWrite("prod_daysk", dir) {
-        out => dailyUserSketches(spark, dir)
-          .write.mode("overwrite").parquet(out)
-      }
-    slidingWauOf(spark, dir, spark.read.parquet(path))
-  }
+  def prodSlidingWau(spark: SparkSession, dir: String): DataFrame =
+    slidingWauOf(spark, dir,
+      graft.functions.MaterializeCache.table("prod_daysk", dir)(
+        dailyUserSketches(spark, dir)))
 
   /** Trailing-baseline length for [[rateAnomaly]] (calendar days). */
   val AnomalyPriorDays = 7

@@ -344,9 +344,11 @@ object TextOps {
     * approximation — conflicting pairs are skipped, not stopped at —
     * which keeps batches at the cap and stays fully deterministic
     * (same total order, same disjointness rule) at the cost of exact
-    * greedy-order equivalence. Production vocabularies (50k merges
-    * over a large symbol space) run `strict = false`; the declared
-    * 8-merge query keeps the strict default.
+    * greedy-order equivalence. Every caller in the engine, the declared
+    * 8-merge query among them, keeps the strict default; the
+    * skip-conflicts mode is the one a large vocabulary (50k merges over
+    * a large symbol space) would pass, and BpeBatchedSpec trains a
+    * 1000-merge vocabulary with it.
     *
     * Scale shape: rounds ≈ nMerges / achieved batch, each one pair-count
     * job over the cached vocabulary plus a (batchCap+1)-row collect —
@@ -882,16 +884,14 @@ object TextOps {
     * discipline): a production pipeline trains ONCE, ships the
     * (piece, uses, cost8) table, and every shard encodes from the
     * stored artifact without retraining. */
-  private def prodUnigramPath(spark: SparkSession, dir: String): String =
-    graft.functions.MaterializeCache.getOrWrite("prod_unigram", dir) {
-      out =>
-        val (vocab, _, _) = uniTrain(spark, Tables.documents(spark, dir))
-        val tot = vocab.agg(sum(col("n") + 1).as("tot"))
-        vocab.crossJoin(broadcast(tot))
-          .select(col("piece"), col("n").as("n_uses"),
-            (log2x8(col("tot")) - log2x8(col("n") + 1)).as("cost8"))
-          .coalesce(1)
-          .write.mode("overwrite").parquet(s"$out/unigram_vocab")
+  private def prodUnigramVocab(spark: SparkSession, dir: String): DataFrame =
+    graft.functions.MaterializeCache.table("prod_unigram", dir) {
+      val (vocab, _, _) = uniTrain(spark, Tables.documents(spark, dir))
+      val tot = vocab.agg(sum(col("n") + 1).as("tot"))
+      vocab.crossJoin(broadcast(tot))
+        .select(col("piece"), col("n").as("n_uses"),
+          (log2x8(col("tot")) - log2x8(col("n") + 1)).as("cost8"))
+        .coalesce(1)
     }
 
   /** PRODUCTION unigram encode — the frozen-tokenizer apply a real run
@@ -905,8 +905,7 @@ object TextOps {
     * bounded, broadcast by every consumer. */
   private[graft] def prodUnigramCosts(spark: SparkSession,
       dir: String): Map[String, Long] =
-    spark.read
-      .parquet(s"${prodUnigramPath(spark, dir)}/unigram_vocab")
+    prodUnigramVocab(spark, dir)
       .select(col("piece"), col("cost8"))
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
 
@@ -1946,7 +1945,7 @@ object TextOps {
   /** Every document with its integer BM25 score against `terms` —
     * [[bm25TopK]] without the top-k tail, reused by the RRF fusion.
     * Statistics (N, S, every df) come from one aggregation pass over
-    * the same scan; [[bm25TopKFrom]] serves them from a stored index
+    * the same scan; [[prodBm25TopK]] serves them from a stored index
     * instead. */
   private[graft] def bm25Scored(docs: DataFrame,
       terms: Seq[String]): DataFrame = {
@@ -2009,7 +2008,7 @@ object TextOps {
   /** Score a tokenized corpus against a 1-row stats relation
     * (n_docs, s_tok, df_0..df_k) — the stats row broadcasts onto the
     * scan regardless of where it came from (inline aggregate or the
-    * stored [[bm25Index]]). */
+    * stored index of [[prodBm25TopK]]). */
   private def bm25ScoredWith(tk: DataFrame, stats: DataFrame,
       terms: Seq[String]): DataFrame = {
     val withTf = terms.zipWithIndex.foldLeft(
@@ -2079,58 +2078,40 @@ object TextOps {
 
   // --- persisted BM25 statistics (the lexical index) -----------------
 
-  /** Materialize the corpus's lexical index once per corpus content per
-    * JVM ([[graft.functions.MaterializeCache]]): the
-    * FULL-VOCABULARY document-frequency table (`df/`: tok, df — any
-    * future query serves from it, not just today's terms) and the 1-row
-    * corpus stats (`stats/`: n_docs, s_tok). One corpus scan at build;
-    * [[bm25TopKFrom]] then serves any query with ONE scan (scoring)
-    * instead of two — the same build/serve split the ANN index family
-    * uses ([[VectorOps.writeAnnIndex]]). At 100 TB the df table is
-    * vocabulary-sized (millions of rows, kilobyte-scale per-term) and
-    * the per-query slice of it broadcasts. */
-  private[graft] def bm25Index(spark: SparkSession, dir: String): String =
-    graft.functions.MaterializeCache.getOrWrite("bm25_index", dir) { out =>
-      val tk = bm25Tokenized(Tables.documents(spark, dir))
+  /** [[bm25TopK]] served from a STORED lexical index — the production
+    * plan. The index is two tables, each built by one corpus scan once
+    * per corpus content per JVM ([[graft.functions.MaterializeCache]]):
+    * the FULL-VOCABULARY document-frequency table (`vocab`: tok, df) and
+    * the 1-row corpus stats (n_docs, s_tok). A query is then ONE scan
+    * (scoring) instead of two, the build/serve split of the ANN index
+    * ([[VectorOps.writeAnnIndex]]). Its df slice is a tiny filtered read
+    * of the vocabulary table (a term the index never saw scores df = 0,
+    * so a stale index fails toward high idf, never toward silence),
+    * pivoted to the stats row and broadcast onto the scoring scan.
+    * Result-identical to the self-contained form (same stats values,
+    * same scoring expression), so it reuses q_bm25_topk's oracle. */
+  def prodBm25TopK(spark: SparkSession, dir: String): DataFrame = {
+    def tk = bm25Tokenized(Tables.documents(spark, dir))
+    val vocab = graft.functions.MaterializeCache.table("bm25_df", dir)(
       tk.select(col("doc_id"), explode(array_distinct(col("tk"))).as("tok"))
-        .groupBy(col("tok")).agg(count(lit(1)).as("df"))
-        .write.mode("overwrite").parquet(s"$out/df")
+        .groupBy(col("tok")).agg(count(lit(1)).as("df")))
+    val corpus = graft.functions.MaterializeCache.table("bm25_stats", dir)(
       tk.agg(count(lit(1)).cast("long").as("n_docs"),
-          sum(col("dl")).as("s_tok"))
-        .write.mode("overwrite").parquet(s"$out/stats")
-    }
-
-  /** [[bm25TopK]] served from a STORED index — the production plan: the
-    * query's df slice is a tiny filtered read of the vocabulary table
-    * (a term the index never saw scores df = 0, so a stale index fails
-    * toward high idf, never toward silence), pivoted to the 1-row stats
-    * shape and broadcast onto the single scoring scan. Result-identical
-    * to the self-contained form by construction (same stats values,
-    * same scoring expression), so the declared query reuses
-    * q_bm25_topk's oracle — the green row grades the serve plan. */
-  def bm25TopKFrom(spark: SparkSession, dir: String,
-      indexDir: String): DataFrame = {
+        sum(col("dl")).as("s_tok")))
     val terms = Bm25Query
-    val dfSlice = spark.read.parquet(s"$indexDir/df")
-      .where(col("tok").isin(terms: _*))
-    val dfRow = dfSlice.agg(
+    val dfRow = vocab.where(col("tok").isin(terms: _*)).agg(
       coalesce(max(when(col("tok") === terms.head, col("df"))), lit(0L))
         .as("df_0"),
       terms.zipWithIndex.drop(1).map { case (t, i) =>
         coalesce(max(when(col("tok") === t, col("df"))), lit(0L))
           .as(s"df_$i")
       }: _*)
-    val stats = spark.read.parquet(s"$indexDir/stats").crossJoin(dfRow)
-    bm25ScoredWith(bm25Tokenized(Tables.documents(spark, dir)), stats, terms)
+    bm25ScoredWith(bm25Tokenized(Tables.documents(spark, dir)),
+        corpus.crossJoin(dfRow), terms)
       .orderBy(col("bm25_x8").desc, col("doc_id").asc)
       .limit(Bm25TopK)
       .select(col("doc_id"), col("lang"), col("bm25_x8"))
   }
-
-  /** The index-served form as a declared query ([[bm25Index]] built
-    * lazily per dir per JVM — the prodCurationFunnel discipline). */
-  def prodBm25TopK(spark: SparkSession, dir: String): DataFrame =
-    bm25TopKFrom(spark, dir, bm25Index(spark, dir))
 
   /** Gopher-style rule bars (word-level subset — this corpus has no
     * line structure or non-word symbols, so the line/symbol/ellipsis

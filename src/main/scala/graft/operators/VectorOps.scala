@@ -526,40 +526,19 @@ object VectorOps {
   }
 
   /** Search-only PQ entry for the declared-query/bench surface: builds
-    * the index ONCE per corpus STATE into a deterministic scratch
-    * location, then every invocation is pure [[annPqFrom]] search — so
-    * bench reps measure SEARCH latency (the first cold rep pays the
-    * build; min is the search-only signal). Staleness and identity are
-    * both carried by the cache key: an md5 of the RAW corpus path (no
-    * lossy sanitizing — distinct dirs can never collide) plus the
-    * (name, length, mtime) of every embeddings data file, so a
-    * regenerated corpus at the same path AND size still rebuilds. The
-    * key also names the index layout (`layout=flat`: no partition level
-    * under the per-vector tables), so an index cached in an older layout
-    * is rebuilt, never read under the wrong schema.
-    * Build completion is a `_COMPLETE` sentinel written after all four
-    * tables commit — a killed half-built index is rebuilt, never
-    * silently served as empty tables (the explicit read schemas would
-    * otherwise mask it). Full-corpus training → bit-identical to
+    * the index ONCE per corpus content per JVM
+    * ([[graft.functions.MaterializeCache.getOrWrite]]: keyed by the
+    * corpus dir and the path, size and mtime of every file under it,
+    * shutdown-swept), then every invocation is pure [[annPqFrom]]
+    * search — so bench reps measure SEARCH latency (the first cold rep
+    * pays the build; min is the search-only signal). The cache hands
+    * out the directory only after all four tables are written, and a
+    * failed build is retried by the next caller, so a half-built index
+    * is never served. Full-corpus training → bit-identical to
     * [[annPq]], same oracle. */
-  def annPqSearchCached(spark: SparkSession, dir: String): DataFrame = {
-    val hconf = spark.sparkContext.hadoopConfiguration
-    val src = new org.apache.hadoop.fs.Path(s"$dir/embeddings.parquet")
-    val stamp = src.getFileSystem(hconf).listStatus(src)
-      .map(st => s"${st.getPath.getName}:${st.getLen}:${st.getModificationTime}")
-      .sorted.mkString(",")
-    val key = java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$dir|$stamp|layout=flat".getBytes("UTF-8"))
-      .map("%02x".format(_)).mkString
-    val idx = System.getProperty("java.io.tmpdir") + s"/graft_ann_index/$key"
-    val done = new org.apache.hadoop.fs.Path(s"$idx/_COMPLETE")
-    val fs = done.getFileSystem(hconf)
-    if (!fs.exists(done)) {
-      writeAnnIndex(spark, dir, idx)
-      fs.create(done, true).close()
-    }
-    annPqFrom(spark, dir, idx)
-  }
+  def annPqSearchCached(spark: SparkSession, dir: String): DataFrame =
+    annPqFrom(spark, dir, graft.functions.MaterializeCache.getOrWrite(
+      "ann_index", dir)(writeAnnIndex(spark, dir, _)))
 
   /** Nearest neighbor within a blocking key (label) — the "embedding
     * near-dup" shape: per-label self-join instead of a global cross

@@ -19,9 +19,14 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * Schemas are resolved once per session and file state: a parquet read
   * without a schema starts one footer-reading Spark job (60–90 ms warm),
   * one with a known schema starts none, and a monitor render alone loads
-  * nine tables. [[load]] keys each resolved schema by the path plus the
-  * (name, length, modification time) of every file under it, so a
-  * rewritten table gets a new key and is resolved again.
+  * nine tables. The one resolver behind [[load]] and [[parquet]] keys
+  * each resolved schema by the path plus the (name, length, modification
+  * time) of every file under it, so a rewritten table gets a new key and
+  * is resolved again. It is the only schema-inferring parquet read in
+  * the engine: a table you wrote comes back from the call that wrote it
+  * ([[graft.functions.ScaleUtils.stored]],
+  * [[graft.functions.MaterializeCache.table]]), and every other table
+  * whose schema the caller does not hold is read through here.
   */
 object Tables {
   val names: Seq[String] = Seq(
@@ -37,13 +42,29 @@ object Tables {
     new java.util.WeakHashMap[SparkSession,
       ConcurrentHashMap[FileState, StructType]]())
 
-  /** `name`'s table read under its known schema. A miss runs the one
+  /** `name`'s testdata table read under its known schema ([[parquet]]). */
+  def load(spark: SparkSession, dir: String, name: String): DataFrame =
+    resolved(spark, s"$dir/$name.parquet") {
+      // the flag must be in place before the first read of events
+      if (name == "events")
+        spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+    }
+
+  /** The parquet table at `path` — one file, or a directory, hive
+    * partitions (`nite=…`) included — read under its known schema. For
+    * a table whose schema the caller does not hold; a table the caller
+    * just wrote comes back from the call that wrote it
+    * ([[graft.functions.ScaleUtils.stored]]). */
+  def parquet(spark: SparkSession, path: String): DataFrame =
+    resolved(spark, path)(())
+
+  /** The one resolver. A miss runs `beforeFirstRead`, then the one
     * schema-inferring read of the session and file state; concurrent
-    * first loads of one file wait for that single read. A missing path
+    * first loads of one path wait for that single read. A missing path
     * keys as empty, so the inferring read raises the reader's own
     * path-not-found error and nothing is cached. */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
-    val path = s"$dir/$name.parquet"
+  private def resolved(spark: SparkSession, path: String)
+      (beforeFirstRead: => Unit): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
     val files =
@@ -56,9 +77,7 @@ object Tables {
       }
     val schema = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
       .computeIfAbsent((path, files), _ => {
-        // the flag must be in place before the first read of events
-        if (name == "events")
-          spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
+        beforeFirstRead
         spark.read.parquet(path).schema
       })
     spark.read.schema(schema).parquet(path)

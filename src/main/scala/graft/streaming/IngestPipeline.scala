@@ -362,10 +362,8 @@ object IngestPipeline {
     // legally appear in two subdirectories — the duplicate case).
     val files = spark.read.format("binaryFile")
       .option("recursiveFileLookup", "true").load(cfg.stageDir)
-    val manifest = plan(spark, files, loadRegistry(spark, cfg), cfg)
-    val dir = cfg.registryDir + "_batch"
-    manifest.write.mode(SaveMode.Overwrite).parquet(dir)
-    spark.read.schema(manifest.schema).parquet(dir)
+    graft.functions.ScaleUtils.stored(
+      plan(spark, files, loadRegistry(spark, cfg), cfg), cfg.registryDir + "_batch")
   }
 
   /** Distributed move with the per-file outcome folded into the manifest
@@ -398,7 +396,7 @@ object IngestPipeline {
     val sleepMs = cfg.copyRetrySleepMs
     val fault = cfg.copyFault
     val movesDir = cfg.registryDir + "_batch_moves"
-    manifest.mapPartitions { rows =>
+    graft.functions.ScaleUtils.stored(manifest.mapPartitions { rows =>
       val conf = hadoopConf.value
       rows.map { r =>
         val (outcome, attempts) = Option(r.getString(iPayload)) match {
@@ -433,8 +431,7 @@ object IngestPipeline {
         Row.fromSeq(r.toSeq.updated(iMsg, msg) ++ Seq(outcome, attempts,
           if (outcome == "archive_ok") "archive" else "quarantine"))
       }
-    }(Encoders.row(out)).write.mode(SaveMode.Overwrite).parquet(movesDir)
-    spark.read.schema(out).parquet(movesDir)
+    }(Encoders.row(out)), movesDir)
   }
 
   /** Archive one payload that exists at `src`: a guarded rename when
@@ -623,12 +620,6 @@ object IngestPipeline {
       FileUtil.copy(fs, src, dstFs, dst, true, true, conf)
   }
 
-  /** Read-back gate for append-target tables — the shared rule lives in
-    * [[graft.functions.ScaleUtils.hasParquetData]] (a zero-row append or
-    * killed write leaves a dir `spark.read.parquet` throws on). */
-  private def hasParquetFiles(spark: SparkSession, dir: String): Boolean =
-    graft.functions.ScaleUtils.hasParquetData(spark, dir)
-
   /** Schema of an existing non-empty parquet dir, None when absent: the
     * footer of its newest data file (by modification time, then name),
     * read on the driver — no Spark job. Spark stores its own schema in
@@ -668,7 +659,7 @@ object IngestPipeline {
     // so they are read under the one column needed (no schema-inference
     // job per batch).
     def filenames(dir: String): Option[DataFrame] =
-      if (hasParquetFiles(spark, dir))
+      if (graft.functions.ScaleUtils.hasParquetData(spark, dir))
         Some(spark.read.schema("filename STRING").parquet(dir)
           .select(col("filename")))
       else None

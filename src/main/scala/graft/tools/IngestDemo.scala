@@ -3,6 +3,7 @@ package graft.tools
 import java.nio.file.{Files, Path}
 import java.security.MessageDigest
 import graft.functions.FitsHeader
+import graft.sources.Tables
 import graft.streaming.IngestPipeline
 import graft.streaming.IngestPipeline.Config
 
@@ -47,13 +48,13 @@ object IngestDemo {
     val report = IngestPipeline.runBatch(spark, cfg)
     println(s"[demo] archived=${report.archived} quarantined=${report.quarantined}")
     println("[demo] registry (file metadata):")
-    spark.read.parquet(cfg.registryDir)
+    Tables.parquet(spark, cfg.registryDir)
       .select("filename", "filetype", "md5sum", "filesize").show(false)
     println("[demo] file locations:")
-    spark.read.parquet(cfg.locationTableDir)
+    Tables.parquet(spark, cfg.locationTableDir)
       .select("filename", "archive_name", "archive_path").show(false)
     println("[demo] bad_file:")
-    spark.read.parquet(cfg.badFileDir)
+    Tables.parquet(spark, cfg.badFileDir)
       .select("orig_filename", "rejected_msg", "uniq_fullname").show(false)
     spark.stop()
   }

@@ -100,7 +100,7 @@ class BpeBatchedSpec extends SparkSpec {
     val docs = docsOf(words)
     // skip-conflicts scale mode: strictness caps batches near
     // sqrt(|alphabet|) on this deliberately small 52-letter alphabet
-    // (the exact-equivalence price); production trains strict = false
+    // (the exact-equivalence price); a large vocabulary trains strict = false
     val t0 = System.nanoTime()
     val rounds = scala.collection.mutable.ArrayBuffer.empty[Int]
     val merges = TextOps.bpeLoopBatchedOver(docs, 1000, 256,

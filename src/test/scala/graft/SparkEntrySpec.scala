@@ -321,24 +321,34 @@ class SparkEntrySpec extends SparkSpec {
   private val SchemalessParquet =
     """\.read(?:\s*\.(?!schema\b)\w+\((?:[^()]|\((?:[^()]|\([^()]*\))*\))*\))*\s*\.parquet\(""".r
 
-  test("sources, report and streaming read parquet under a known schema, " +
-      "except the one resolver in Tables.load") {
+  test("src/main infers parquet schemas only in the Tables resolver") {
     val tables = Paths.get("src/main/scala/graft/sources/Tables.scala")
-    val (inResolver, elsewhere) = Seq("sources", "report", "streaming")
-      .flatMap(d => scalaFiles(s"src/main/scala/graft/$d")).flatMap { f =>
+    val (inResolver, elsewhere) = scalaFiles("src/main/scala").flatMap { f =>
         val code = stripComments(Files.readString(f))
         val resolver =
           if (f != tables) 0 until 0
           else objectMembers(code.split("\n", -1)).collectFirst {
-            case ("Tables", "load", from, to) => from until to
+            case ("Tables", "resolved", from, to) => from until to
           }.getOrElse(0 until 0)
         SchemalessParquet.findAllMatchIn(code).map { m =>
           val line = code.substring(0, m.start).count(_ == '\n')
           resolver.contains(line) -> s"${f.getFileName}:${line + 1}"
         }
       }.partition(_._1)
-    assert(elsewhere.isEmpty, "read these under a known schema " +
-      s"(`.read.schema(...)`) or through Tables.load:\n${elsewhere.map(_._2).mkString("\n")}")
-    assert(inResolver.size == 1, s"Tables.load resolves once: ${inResolver.map(_._2)}")
+    assert(elsewhere.isEmpty, "read these under a known schema: a table " +
+      "you wrote through ScaleUtils.stored or MaterializeCache.table, any " +
+      s"other through Tables.parquet:\n${elsewhere.map(_._2).mkString("\n")}")
+    assert(inResolver.size == 1, s"Tables resolves once: ${inResolver.map(_._2)}")
+  }
+
+  test("checkpoint blocks are captured only in ScaleUtils.checkpointRdds") {
+    val scaleUtils = Paths.get("src/main/scala/graft/functions/ScaleUtils.scala")
+    val hits = scalaFiles("src/main/scala").filter(_ != scaleUtils).flatMap { f =>
+      val lines = stripComments(Files.readString(f)).split("\n", -1)
+      lines.indices.filter(i => lines(i).contains("LogicalRDD"))
+        .map(i => s"${f.getFileName}:${i + 1}")
+    }
+    assert(hits.isEmpty, "free local-checkpoint blocks through " +
+      s"ScaleUtils.checkpointRdds or ScaleUtils.CheckpointSlot:\n${hits.mkString("\n")}")
   }
 }

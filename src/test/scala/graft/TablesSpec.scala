@@ -1,11 +1,9 @@
 package graft
 
 import java.nio.file.{Files, Path, StandardCopyOption}
-import java.util.concurrent.atomic.AtomicInteger
 
-import org.apache.spark.ListenerBusAccess
-import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
 import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.types.IntegerType
 import graft.sources.Tables
 
 /** `Tables.load` resolves each table file's schema once per session and
@@ -13,20 +11,6 @@ import graft.sources.Tables
   * Spark job, and a rewritten file is resolved again. */
 class TablesSpec extends SparkSpec {
   import spark.implicits._
-
-  /** Jobs started while `body` runs. */
-  private def jobsDuring(body: => Unit): Int = {
-    val sc = spark.sparkContext
-    val n = new AtomicInteger
-    val listener = new SparkListener {
-      override def onJobStart(job: SparkListenerJobStart): Unit = n.incrementAndGet()
-    }
-    ListenerBusAccess.drain(sc)
-    sc.addSparkListener(listener)
-    try { body; ListenerBusAccess.drain(sc) }
-    finally sc.removeSparkListener(listener)
-    n.get
-  }
 
   /** `df` as the single parquet file `dir/t.parquet`, replacing it. */
   private def put(dir: Path, df: DataFrame): Unit = {
@@ -53,5 +37,21 @@ class TablesSpec extends SparkSpec {
     Tables.events(spark, sfDir)
     assert(jobsDuring(Tables.events(spark, sfDir).schema) == 0)
     assert(spark.conf.get("spark.sql.legacy.parquet.nanosAsLong") == "true")
+  }
+
+  test("a hive-partitioned directory resolves its partition column as a " +
+      "schema-less read types it") {
+    val dir = Files.createTempDirectory("tables-hive").resolve("registry").toString
+    Seq(("a.fits", 20260812), ("b.fits", 20260812), ("c.fits", 20260813))
+      .toDF("filename", "nite").write.partitionBy("nite").parquet(dir)
+    val inferred = spark.read.parquet(dir)
+    val resolved = Tables.parquet(spark, dir)
+    assert(resolved.schema == inferred.schema)
+    assert(resolved.schema("nite").dataType == IntegerType,
+      "the registry's nite partition reads back as an inferred int")
+    assert(jobsDuring(Tables.parquet(spark, dir).schema) == 0,
+      "the second read of an unchanged directory must reuse its schema")
+    assert(resolved.as[(String, Int)].collect().sorted.toSeq ==
+      Seq(("a.fits", 20260812), ("b.fits", 20260812), ("c.fits", 20260813)))
   }
 }
