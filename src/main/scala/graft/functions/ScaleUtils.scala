@@ -53,44 +53,53 @@ object ScaleUtils {
       held.getAndSet(checkpointRdds(df)).foreach(_.unpersist(false))
   }
 
+  /** Every file under `root` — `root` itself when it is a file, nothing
+    * when it is absent — by a recursive `listStatus` walk that descends
+    * only into the directories `keep` accepts and yields only the files
+    * it accepts (`keep` sees the entries below `root`, never `root`).
+    *
+    * Plain `FileStatus`es only, never a `LocatedFileStatus`: building one
+    * reads the entry's permission, owner and group, and Hadoop's local
+    * FileSystem without its native library forks an `ls -ld` per entry
+    * for those — a listing of a few hundred files then costs a few
+    * hundred process forks. A directory that vanishes mid-walk (a writer
+    * committing its `_temporary` tree) lists as empty. */
+  private[graft] def filesUnder(fs: org.apache.hadoop.fs.FileSystem,
+      root: org.apache.hadoop.fs.Path,
+      keep: org.apache.hadoop.fs.FileStatus => Boolean = _ => true)
+      : Iterator[org.apache.hadoop.fs.FileStatus] = {
+    def status(f: => Array[org.apache.hadoop.fs.FileStatus])
+        : Array[org.apache.hadoop.fs.FileStatus] =
+      try f catch {
+        case _: java.io.FileNotFoundException =>
+          Array.empty[org.apache.hadoop.fs.FileStatus]
+      }
+    def below(dir: org.apache.hadoop.fs.Path)
+        : Iterator[org.apache.hadoop.fs.FileStatus] =
+      status(fs.listStatus(dir)).iterator.filter(keep).flatMap { st =>
+        if (st.isDirectory) below(st.getPath) else Iterator.single(st)
+      }
+    status(Array(fs.getFileStatus(root))).iterator.flatMap { st =>
+      if (st.isDirectory) below(st.getPath) else Iterator.single(st)
+    }
+  }
+
   /** THE shared definition of "table data file" — compaction, footer row
     * counts, and every read-back gate use this one predicate so the rule
-    * cannot drift between call sites: a `*.parquet` part file with no
-    * hidden (`_`/`.`-prefixed) path segment under the table root.
-    * _SUCCESS markers and in-flight `_temporary` trees are NOT data
-    * (Spark's reader skips hidden paths, and `spark.read.parquet` THROWS
-    * on a dir containing nothing else). */
-  /** Prefix for relativizing listed file URIs against a table root —
-    * `listFiles` returns FS-QUALIFIED URIs, so stripping must use the
-    * qualified root too, or ancestor segments survive the strip (and any
-    * `=` in one would read as a partition column downstream). One
-    * definition, shared by the hidden-segment filter and the
-    * partition-column parse, so the two can never diverge. */
-  private def qualRootPrefix(fs: org.apache.hadoop.fs.FileSystem,
-      root: org.apache.hadoop.fs.Path): String =
-    fs.makeQualified(root).toString.stripSuffix("/") + "/"
-
-  /** Path segments of `st` below `root` (qualified-relativized). */
-  private def segmentsBelow(st: org.apache.hadoop.fs.FileStatus,
-      qualRoot: String): Array[String] =
-    st.getPath.toString.stripPrefix(qualRoot).split("/")
-
+    * cannot drift between call sites: a `*.parquet` file with no hidden
+    * (`_`/`.`-prefixed) path segment under the table root, or the root
+    * itself when it is a `*.parquet` file (judged by its own name alone,
+    * so a hidden ancestor never hides it). _SUCCESS markers and in-flight
+    * `_temporary` trees are NOT data (Spark's reader skips hidden paths,
+    * and `spark.read.parquet` THROWS on a dir containing nothing else);
+    * hidden directories are not even listed. */
   private def dataFileIter(fs: org.apache.hadoop.fs.FileSystem,
       root: org.apache.hadoop.fs.Path)
       : Iterator[org.apache.hadoop.fs.FileStatus] =
-    if (!fs.exists(root)) Iterator.empty
-    else {
-      val qualRoot = qualRootPrefix(fs, root)
-      val it = fs.listFiles(root, true)
-      new Iterator[org.apache.hadoop.fs.FileStatus] {
-        def hasNext: Boolean = it.hasNext
-        def next(): org.apache.hadoop.fs.FileStatus = it.next()
-      }.filter { st =>
-          st.getPath.getName.endsWith(".parquet") &&
-            segmentsBelow(st, qualRoot)
-              .forall(s => !s.startsWith("_") && !s.startsWith("."))
-        }
-    }
+    filesUnder(fs, root, st => {
+      val name = st.getPath.getName
+      !name.startsWith("_") && !name.startsWith(".")
+    }).filter(_.getPath.getName.endsWith(".parquet"))
 
   /** All parquet data files under a table root (recursive, hidden trees
     * excluded) — see [[dataFileIter]] for the shared predicate. */
@@ -143,12 +152,14 @@ object ScaleUtils {
     if (before.isEmpty) return (0, 0)
     val df = graft.sources.Tables.parquet(spark, dir)
     // partition columns = hive dirs on disk; they come back as data
-    // columns and partitionBy rebuilds the same layout. Relativization
-    // shares [[qualRootPrefix]] with the hidden-segment filter.
-    val qualRoot = qualRootPrefix(fs, root)
+    // columns and partitionBy rebuilds the same layout. Listed statuses
+    // carry FS-QUALIFIED URIs, so they are relativized against the
+    // qualified root: an unqualified strip would leave ancestor segments,
+    // and an `=` in one would read as a partition column.
+    val qualRoot = fs.makeQualified(root).toString.stripSuffix("/") + "/"
     val partCols = before.headOption.toSeq.flatMap { st =>
-      segmentsBelow(st, qualRoot).filter(_.contains("="))
-        .map(_.split("=")(0))
+      st.getPath.toString.stripPrefix(qualRoot).split("/")
+        .filter(_.contains("=")).map(_.split("=")(0))
     }.distinct
     val files = math.max(1, math.ceil(
       before.map(_.getLen).sum.toDouble / targetFileBytes).toInt)

@@ -1,10 +1,7 @@
 package graft.report
 
-import java.util.UUID
-import java.util.concurrent.{ExecutionException, ExecutorCompletionService,
-  Executors, TimeUnit}
-
 import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
+import graft.functions.Concurrently
 
 /** HTML report rendering — reference S19 (`monitor_DBB_stagein.py`
   * print_summary_html / print_exposure_html / print_sne_html,
@@ -45,48 +42,11 @@ object HtmlReport {
   private def esc(s: String): String =
     s.replace("&", "&amp;").replace("<", "&lt;").replace(">", "&gt;")
 
-  /** Build and collect every frame concurrently; results come back in
-    * input order. Each frame is built inside its task (`() => DataFrame`),
-    * so driver-side analysis and planning overlap too.
-    *
-    * The pool is created per call and sized `min(#frames,
-    * defaultParallelism)`; its threads are created from the calling thread,
-    * so every job inherits the caller's Spark local properties (job group,
-    * job tags, custom properties). On the first failure the queued frames
-    * are dropped, the jobs still running are cancelled through a per-call
-    * job tag, every started task is awaited, and that failure is rethrown.
-    * The call returns or throws only after all of its tasks have finished.
-    */
-  def collectAll(spark: SparkSession, frames: Seq[() => DataFrame]): IndexedSeq[Frame] = {
-    val sc = spark.sparkContext
-    val tag = s"graft-report-${UUID.randomUUID()}"
-    sc.addJobTag(tag)
-    val pool = Executors.newFixedThreadPool(
-      math.max(1, math.min(frames.size, sc.defaultParallelism)))
-    try {
-      val done = new ExecutorCompletionService[(Int, Frame)](pool)
-      val tasks = frames.zipWithIndex.map { case (f, i) =>
-        done.submit(() => i -> Frame.of(f()))
-      }
-      val out = new Array[Frame](frames.size)
-      try tasks.foreach { _ =>
-        val (i, frame) = done.take().get()
-        out(i) = frame
-      } catch { case e: Throwable =>
-        tasks.foreach(_.cancel(false))
-        sc.cancelJobsWithTag(tag)
-        throw (e match {
-          case ee: ExecutionException => ee.getCause
-          case other => other
-        })
-      }
-      out.toIndexedSeq
-    } finally {
-      pool.shutdown()
-      pool.awaitTermination(Long.MaxValue, TimeUnit.NANOSECONDS)
-      sc.removeJobTag(tag)
-    }
-  }
+  /** Build and collect every frame concurrently
+    * ([[graft.functions.Concurrently.all]]); results come back in input
+    * order, and the first failure cancels the rest and is rethrown. */
+  def collectAll(spark: SparkSession, frames: Seq[() => DataFrame]): IndexedSeq[Frame] =
+    Concurrently.all(spark, frames.map(f => () => Frame.of(f())))
 
   /** Render one collected frame as an HTML table. Cells are rendered by
     * column index, so duplicated column names keep their own values.

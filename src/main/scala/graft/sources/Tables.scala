@@ -67,14 +67,9 @@ object Tables {
       (beforeFirstRead: => Unit): DataFrame = {
     val p = new Path(path)
     val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files =
-      if (!fs.exists(p)) Nil
-      else {
-        val it = fs.listFiles(p, true)
-        Iterator.continually(it).takeWhile(_.hasNext).map(_.next())
-          .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-          .toSeq.sorted
-      }
+    val files = graft.functions.ScaleUtils.filesUnder(fs, p)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .toSeq.sorted
     val schema = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
       .computeIfAbsent((path, files), _ => {
         beforeFirstRead

@@ -5,8 +5,8 @@ import org.apache.spark.sql.{Column, DataFrame, Encoders, Row, SaveMode, SparkSe
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.Trigger
-import org.apache.spark.sql.types.{IntegerType, StringType, StructType}
-import graft.functions.{Derived, FitsHeader}
+import org.apache.spark.sql.types.{IntegerType, LongType, StringType, StructType}
+import graft.functions.{Concurrently, Derived, FitsHeader}
 
 /** The ingest pipeline — reference E1 (`save_DBB_stagein_to_DBB.py`,
   * SURVEY.md §3.E1) re-expressed as a set-oriented Spark program.
@@ -378,16 +378,16 @@ object IngestPipeline {
     * bad-file table. Every path resolves its own FileSystem (scheme kept),
     * so a stage, archive or quarantine dir on a non-default scheme is
     * moved on the right one. The routed rows (manifest columns plus
-    * `outcome`, `attempts`, `final_status`, folded `reject_msg`) are
-    * materialized to parquet so this side-effecting stage executes
-    * exactly once; every later step reads that one table. */
+    * `outcome`, `attempts`, `final_status`, `rejected_at_ms`, folded
+    * `reject_msg`) are materialized to parquet so this side-effecting
+    * stage executes exactly once; every later step reads that one table. */
   private[graft] def moveFiles(spark: SparkSession, cfg: Config,
       manifest: DataFrame): DataFrame = {
     val hadoopConf = new org.apache.spark.util.SerializableConfiguration(
       spark.sparkContext.hadoopConfiguration)
     val in = manifest.schema
     val out = in.add("outcome", StringType).add("attempts", IntegerType)
-      .add("final_status", StringType)
+      .add("final_status", StringType).add("rejected_at_ms", LongType)
     val Seq(iStatus, iPayload, iMtime, iMd5, iSize, iArchive, iQuar, iMsg) =
       Seq("status", "payload_path", "payload_mtime_ms", "actual_md5",
         "actual_size", "archive_path", "quarantine_path", "reject_msg")
@@ -428,8 +428,13 @@ object IngestPipeline {
           case "src_missing" => "payload file missing at move time"
           case _ => null
         })
+        // a reject is stamped when its file is handled, as the reference
+        // inserts each bad-file row while it handles that file
+        // (save:280-289)
+        val archived = outcome == "archive_ok"
         Row.fromSeq(r.toSeq.updated(iMsg, msg) ++ Seq(outcome, attempts,
-          if (outcome == "archive_ok") "archive" else "quarantine"))
+          if (archived) "archive" else "quarantine",
+          if (archived) null else System.currentTimeMillis()))
       }
     }(Encoders.row(out)), movesDir)
   }
@@ -496,30 +501,23 @@ object IngestPipeline {
     * check is NOT nite-pruned on purpose: a duplicate may arrive any
     * number of nites after the original, so it must see the whole table.
     * Rejects append to the bad-file table. All three read `routed`, the
-    * one table the move stage wrote. */
+    * one table the move stage wrote, and append to three different
+    * directories, so they run as one concurrent wave
+    * ([[graft.functions.Concurrently.all]]): the call returns once all
+    * three are durable, or rethrows the first failure after every append
+    * has stopped. */
   private[graft] def register(spark: SparkSession, cfg: Config,
       routed: DataFrame): Unit = {
     val archived = routed.where(col("final_status") === "archive")
-    archived
+    val metadata = archived
       .select(col("delivery_name").as("filename"), col("filetype"),
         col("actual_md5").as("md5sum"), col("actual_size").as("filesize"),
         col("delivered_at"), col("task_id"),
         Derived.niteOf(col("delivered_at")).as("nite"))
-      .write.mode(SaveMode.Append).partitionBy("nite")
-      .parquet(cfg.registryDir)
-    // location LAST among registrations, mirroring the reference's order
-    // (save:160 register_file_data before the move, save:193
-    // register_file_in_archive after). Crash-retry between the two
-    // appends is safe either way: the dup check reads BOTH tables'
-    // filenames (any registration trace ⇒ never re-archive), so the
-    // retry quarantines the half-registered file as a duplicate — an
-    // audit row, never a silent drop or a double archive.
-    archived
+    val location = archived
       .select(col("delivery_name").as("filename"),
         lit(cfg.archiveName).as("archive_name"), col("archive_path"),
         Derived.niteOf(col("delivered_at")).as("nite"))
-      .write.mode(SaveMode.Append).partitionBy("nite")
-      .parquet(cfg.locationTableDir)
     val badRows = routed.where(col("final_status") === "quarantine")
       .select(col("task_id"), col("delivered_at").as("delivery_date"),
         col("delivery_name").as("orig_filename"),
@@ -531,19 +529,28 @@ object IngestPipeline {
           lit(null).cast("string"))
           .otherwise(Derived.basenameOf(col("quarantine_path")))
           .as("uniq_fullname"),
-        current_timestamp().as("rejected_date"), col("reject_msg").as("rejected_msg"),
+        timestamp_millis(col("rejected_at_ms")).as("rejected_date"),
+        col("reject_msg").as("rejected_msg"),
         col("actual_size").as("filesize"), col("filetype"))
-    // P9/J4 (save:274-278): the bad-file table's schema may drift over
-    // time (columns added or retired operationally); append whatever
-    // intersects the table's CURRENT columns instead of failing — the one
-    // table whose schema is read, not known
-    existingSchema(spark, cfg.badFileDir) match {
-      case Some(schema) =>
-        graft.functions.ScaleUtils.projectOnto(badRows, schema)
-          .write.mode(SaveMode.Append).parquet(cfg.badFileDir)
-      case None =>
-        badRows.write.mode(SaveMode.Append).parquet(cfg.badFileDir)
-    }
+    // The reference registers metadata before the move (save:160) and the
+    // location after it (save:193); here the three appends run at once,
+    // so a crash can leave either registration without the other.
+    // Crash-retry is safe in both cases: the dup check reads BOTH tables'
+    // filenames (any registration trace ⇒ never re-archive), so the retry
+    // quarantines the half-registered file as a duplicate — an audit row,
+    // never a silent drop or a double archive.
+    Concurrently.all(spark, Seq(
+      () => metadata.write.mode(SaveMode.Append).partitionBy("nite")
+        .parquet(cfg.registryDir),
+      () => location.write.mode(SaveMode.Append).partitionBy("nite")
+        .parquet(cfg.locationTableDir),
+      // P9/J4 (save:274-278): the bad-file table's schema may drift over
+      // time (columns added or retired operationally); append whatever
+      // intersects the table's CURRENT columns instead of failing — the
+      // one table whose schema is read, not known
+      () => existingSchema(spark, cfg.badFileDir)
+        .fold(badRows)(graft.functions.ScaleUtils.projectOnto(badRows, _))
+        .write.mode(SaveMode.Append).parquet(cfg.badFileDir)))
   }
 
   /** Offset commit: notify files are removed only after the tables are
@@ -650,10 +657,11 @@ object IngestPipeline {
     // is_file_in_archive — "in the archive" is the duplicate criterion),
     // UNIONED with the metadata table's filenames: pre-split deployments
     // have only the metadata table (upgrade must not forget the entire
-    // dup history), and a crash between the two appends leaves metadata
-    // without location — conservative rule: any registration trace means
-    // never re-archive. A name in both tables appears twice; the dup flag
-    // is a per-name max, so that multiplies nothing. Hadoop FS probe (not
+    // dup history), and a crash during the concurrent appends can leave
+    // either registration without the other — conservative rule: any
+    // registration trace means never re-archive. A name in both tables
+    // appears twice; the dup flag is a per-name max, so that multiplies
+    // nothing. Hadoop FS probe (not
     // java.io.File): the tables may live on HDFS/S3; only the
     // scheme-resolved FS knows. Both tables are written by this pipeline,
     // so they are read under the one column needed (no schema-inference

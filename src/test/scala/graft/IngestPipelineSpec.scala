@@ -815,6 +815,67 @@ class IngestPipelineSpec extends SparkSpec {
       "no bad-file row may name a quarantine file that was never created")
   }
 
+  test("a failed registration append fails the batch, cancels the wave, " +
+      "keeps every notify; the rerun registers nothing twice") {
+    val (stage, cfg) = mkConfig()
+    writeFixtures(stage)
+    val notifies = stage.toFile.list().filter(_.endsWith(".dbb")).toSet
+    // the location table's dir is a regular file: its append cannot start
+    val loc = Paths.get(cfg.locationTableDir)
+    Files.write(loc, "not a directory".getBytes)
+    intercept[Exception](IngestPipeline.runBatch(spark, cfg))
+    val sc = spark.sparkContext
+    org.apache.spark.ListenerBusAccess.drain(sc)
+    assert(sc.statusTracker.getActiveJobIds.isEmpty,
+      "the wave must not return while a job of it still runs")
+    assert(notifies.forall(n => Files.exists(stage.resolve(n))),
+      "no notify may be deleted before every registration is durable")
+
+    Files.delete(loc)
+    val rerun = IngestPipeline.runBatch(spark, cfg)
+    assert(rerun.archived + rerun.quarantined == notifies.size)
+    assert(!stage.toFile.list().exists(_.endsWith(".dbb")), "stage dir drained")
+    def names(dir: String): Seq[String] =
+      spark.read.schema("filename STRING").parquet(dir)
+        .collect().map(_.getString(0)).toSeq
+    Seq(cfg.registryDir, cfg.locationTableDir).foreach { dir =>
+      val n = names(dir)
+      assert(n.size == n.distinct.size, s"a name registered twice in $dir: $n")
+    }
+  }
+
+  test("a warm batch's registration compiles no new classes") {
+    import org.apache.spark.metrics.source.CodegenMetrics
+    val (stage, cfg) = mkConfig()
+    def deliver(i: Int): Unit = {
+      val good = FitsHeader.render(Seq("SIMPLE" -> "T") ++ primaryCards)
+      Files.write(stage.resolve(f"DECam_000007$i%02d.fits.fz"), good)
+      Files.write(stage.resolve(f"DECam_000007$i%02d.fits.fz.dbb"),
+        notifyBytesFor(good))
+      Files.write(stage.resolve(s"junk$i.txt"), "x".getBytes)
+      Files.write(stage.resolve(s"junk$i.txt.dbb"), "md5sum = 0\n".getBytes)
+    }
+    def registerTimed(): (IngestPipeline.IngestReport, Long) = {
+      val routed = IngestPipeline.moveFiles(spark, cfg,
+        IngestPipeline.writeManifest(spark, cfg))
+      val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+      IngestPipeline.register(spark, cfg, routed)
+      val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+      (IngestPipeline.commitNotifies(spark, routed), compiled)
+    }
+    val t0 = System.currentTimeMillis()
+    (1 to 2).foreach { i => deliver(i); registerTimed() }
+    deliver(3)
+    val (report, compiled) = registerTimed()
+    assert(report.archived == 1 && report.quarantined == 1)
+    assert(compiled == 0, s"a warm registration compiled $compiled classes")
+    // each reject carries the time its file was handled
+    val stamps = spark.read.parquet(cfg.badFileDir)
+      .select(col("rejected_date").cast("long")).collect().map(_.getLong(0))
+    assert(stamps.length == 3 &&
+      stamps.forall(s => s >= t0 / 1000 && s <= System.currentTimeMillis() / 1000))
+  }
+
   test("streaming wrapper drains the stage dir via AvailableNow") {
     val (stage, cfg0) = mkConfig()
     // compaction hook wired through the stream path (fires after batch 1)

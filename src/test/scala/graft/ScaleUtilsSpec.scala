@@ -139,6 +139,60 @@ class ScaleUtilsSpec extends SparkSpec {
       "compaction must not absorb rows from the in-flight tree")
   }
 
+  test("the listStatus walk finds the files listFiles found, and a file root by its own name") {
+    import spark.implicits._
+    import org.apache.hadoop.fs.{FileStatus, Path}
+    import java.nio.file.{Files, Paths}
+    val conf = spark.sparkContext.hadoopConfiguration
+    // a hidden ancestor and an ancestor holding '=' above the table root
+    val anc = Files.createTempDirectory("lister").resolve(".work").resolve("run=7")
+    val tbl = anc.resolve("tbl")
+    (1 to 2).foreach { b =>
+      Seq((b.toLong, "20240101"), (b.toLong, "20240102")).toDF("id", "nite")
+        .write.mode("append").partitionBy("nite").parquet(tbl.toString)
+    }
+    val part = Files.walk(tbl).filter(_.toString.endsWith(".parquet")).findFirst().get
+    Files.createDirectories(tbl.resolve("_temporary/0/nite=20240103"))
+    Files.copy(part, tbl.resolve("_temporary/0/nite=20240103/part-inflight.parquet"))
+    Files.copy(part, tbl.resolve("nite=20240101/.hidden.parquet"))
+    Files.write(tbl.resolve("notes.txt"), "x".getBytes)
+    val single = anc.resolve("one.parquet")
+    Files.copy(part, single)
+
+    val fs = new Path(tbl.toString).getFileSystem(conf)
+    def listed(root: java.nio.file.Path): Seq[FileStatus] = {
+      val it = fs.listFiles(new Path(root.toString), true)
+      Iterator.continually(it).takeWhile(_.hasNext).map(_.next()).toSeq
+    }
+    // the data-file rule as it read over listFiles: no hidden segment
+    // below the qualified root
+    def oldRule(root: java.nio.file.Path): Set[String] = {
+      val qualRoot = fs.makeQualified(new Path(root.toString)).toString
+        .stripSuffix("/") + "/"
+      listed(root).map(_.getPath.toString).filter { p =>
+        p.endsWith(".parquet") && p.stripPrefix(qualRoot).split("/")
+          .forall(s => !s.startsWith("_") && !s.startsWith("."))
+      }.toSet
+    }
+    def walked(root: java.nio.file.Path): Set[String] =
+      ScaleUtils.parquetDataFiles(fs, new Path(root.toString))
+        .map(_.getPath.toString).toSet
+
+    val data = walked(tbl)
+    assert(data.size == 4 && data.forall(_.contains("/nite=2024010")), data)
+    assert(data == oldRule(tbl))
+    // a single-file root is judged by its own name: the hidden ancestor,
+    // which the old rule's strip left in place, no longer hides it
+    assert(oldRule(single).isEmpty)
+    assert(walked(single) == Set(fs.makeQualified(new Path(single.toString)).toString))
+    assert(ScaleUtils.footerRowCount(spark, single.toString) == 1L)
+    assert(walked(anc.resolve("absent")).isEmpty)
+    // unfiltered, the walk keys Tables' resolver: every file listFiles saw
+    def key(sts: Seq[FileStatus]) =
+      sts.map(st => (st.getPath.toString, st.getLen, st.getModificationTime)).toSet
+    assert(key(ScaleUtils.filesUnder(fs, new Path(tbl.toString)).toSeq) == key(listed(tbl)))
+  }
+
   test("footerRowCount matches count() without running a job") {
     val dir = s"$sfDir/orders.parquet"
     val expected = graft.sources.Tables.orders(spark, sfDir).count()

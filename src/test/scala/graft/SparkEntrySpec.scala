@@ -341,6 +341,20 @@ class SparkEntrySpec extends SparkSpec {
     assert(inResolver.size == 1, s"Tables resolves once: ${inResolver.map(_._2)}")
   }
 
+  test("src/main lists files only through ScaleUtils.filesUnder") {
+    // listFiles and listLocatedStatus build a LocatedFileStatus per entry,
+    // and Hadoop's local FileSystem without its native library forks an
+    // `ls -ld` for each one's permission
+    val hits = scalaFiles("src/main/scala").flatMap { f =>
+      val lines = Files.readString(f).split("\n", -1)
+      lines.indices.filter(i =>
+          Seq("listFiles(", "listLocatedStatus(").exists(lines(i).contains))
+        .map(i => s"${f.getFileName}:${i + 1}")
+    }
+    assert(hits.isEmpty, "list through ScaleUtils.filesUnder, which builds " +
+      s"no LocatedFileStatus:\n${hits.mkString("\n")}")
+  }
+
   test("checkpoint blocks are captured only in ScaleUtils.checkpointRdds") {
     val scaleUtils = Paths.get("src/main/scala/graft/functions/ScaleUtils.scala")
     val hits = scalaFiles("src/main/scala").filter(_ != scaleUtils).flatMap { f =>
