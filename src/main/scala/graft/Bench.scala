@@ -228,50 +228,26 @@ object Bench {
   /** The production-path group (VERDICT r10 item 3): the declared
     * dedup-derivative queries re-derive the LSH chain per query because
     * the oracle gate requires self-contained SQL; a 100 TB run pays the
-    * chain ONCE (curationRun materializes the group table + canonical
-    * picks + chunk grid) and derives everything else from the stored
-    * tables via the *From entry points. This group measures exactly that
-    * execution: one timed materialize, then each *From form over the
-    * parquet tables it wrote. */
-  private def prodGroup(spark: SparkSession, sfDir: String, reps: Int)
+    * chain ONCE ([[graft.operators.CurationOps.curationRun]] stores the
+    * group table, canonical picks, chunk grid and per-doc stages) and
+    * derives everything else from the stored tables. This group measures
+    * exactly that execution: one timed `prod_materialize` into a fresh
+    * dir, then each entry of
+    * [[graft.operators.CurationOps.derivations]] over the tables it
+    * wrote, as `prod_<name>` — the list the oracled `q_prod_*` twins
+    * run. */
+  private[graft] def prodGroup(spark: SparkSession, sfDir: String, reps: Int)
       : Seq[(String, Either[String, Seq[Double]])] = {
-    import org.apache.spark.sql.functions.col
-    import graft.operators.{CurationOps, DedupOps, TextOps}
-    import graft.sources.Tables
+    import graft.operators.CurationOps
     val outDir = java.nio.file.Files
       .createTempDirectory("graft_prod_bench").toString
     var run = Map.empty[String, DataFrame]
     val mat = timedReps(spark, 1) {
       run = CurationOps.curationRun(spark, sfDir, outDir) }
-    def groups = run("groups")
-    def keep = run("canonical")
-    def chunks = run("chunks")
-    def quality = TextOps.qualityScore(spark, sfDir)
-      .select(col("doc_id"), col("quality"))
-    def prov = Tables.documents(spark, sfDir)
-      .select(col("doc_id"), col("source"))
-    val prods: Seq[(String, () => DataFrame)] = Seq(
-      "prod_canonical_docs" ->
-        (() => DedupOps.canonicalDocsFrom(groups, quality)),
-      "prod_dup_rate_by_source" ->
-        (() => DedupOps.dupRateBySourceFrom(groups, keep, prov)),
-      "prod_dup_token_share" ->
-        (() => DedupOps.dupTokenShareFromGroups(spark, sfDir, groups)),
-      "prod_source_overlap" ->
-        (() => DedupOps.sourceOverlapFrom(groups, prov)),
-      "prod_group_purity" ->
-        (() => DedupOps.groupPurityFrom(groups,
-          Tables.documents(spark, sfDir))),
-      "prod_leakfree_split" ->
-        (() => DedupOps.leakFreeSplitFrom(
-          Tables.documents(spark, sfDir)
-            .select(col("doc_id"), col("lang")), groups)),
-      "prod_curation_funnel" ->
-        (() => CurationOps.curationFunnelFrom(spark, sfDir,
-          DedupOps.dropList(groups, keep), Some(chunks))))
-    val out = ("prod_materialize" -> mat) +: prods.map { case (name, mk) =>
-      name -> timedReps(spark, reps)(sink(mk()))
+    val derived = CurationOps.derivations(spark, sfDir, run).toSeq.map {
+      case (name, mk) => s"prod_$name" -> timedReps(spark, reps)(sink(mk()))
     }
+    val out = ("prod_materialize" -> mat) +: derived
     out.foreach { case (name, r) =>
       r.left.foreach(e => System.err.println(s"[bench] $name failed: $e")) }
     out

@@ -1,19 +1,22 @@
 package graft.functions
 
-import java.nio.file.{Files, Path, Paths}
+import java.nio.file.{Files, Path}
 import java.util.concurrent.ConcurrentHashMap
+
+import scala.collection.MapView
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.types.StructType
 
-/** Per-JVM materialize-once cache for the `q_prod_*` twins (ADVICE r12):
-  * the prod queries serve derivative reports from a STORED parquet table
-  * written once per corpus dir, and this object owns the once-ness.
+/** Per-JVM materialize-once cache: the `q_prod_*` twins serve their
+  * reports from STORED parquet tables written once per corpus state, and
+  * this object owns the once-ness.
   *
-  *  1. **Content-keyed**: the cache key includes a fingerprint of the
-  *     corpus dir (relative path + size + mtime of every data file), so
-  *     a dir whose contents change within a JVM re-materializes instead
-  *     of silently serving stale tables.
+  *  1. **Content-keyed**: the cache key includes the corpus's file state
+  *     ([[ScaleUtils.fileState]], the same (path, length, mtime) walk
+  *     [[graft.sources.Tables]] keys its schemas by, on any filesystem
+  *     scheme), so a dir whose contents change within a JVM
+  *     re-materializes instead of silently serving stale tables.
   *  2. **Cleaned up**: a shutdown hook removes every temp dir this cache
   *     creates, so repeated JVMs leak no `graft_*` directories.
   *  3. **Scoped**: the local-temp-path design is a LOCAL-MODE harness
@@ -24,27 +27,29 @@ import org.apache.spark.sql.types.StructType
   *     shared `outDir` on distributed storage and serves the `*From`
   *     entry points from there.
   *
-  * A table you wrote comes back from the call that wrote it: [[table]]
-  * writes through [[ScaleUtils.stored]] and keeps the written schema
-  * with the path, so its callers neither write nor read parquet, and a
-  * warm hit starts no Spark job. [[getOrWrite]] is the primitive under
-  * it, for a build that writes several tables into one directory.
+  * Tables you wrote come back from the call that wrote them: [[tables]]
+  * keeps the schema of every table a build wrote with its dir, so its
+  * callers neither write nor read parquet, and a warm hit starts no
+  * Spark job; [[table]] is its one-table case. [[getOrWrite]] is the
+  * primitive under both.
   */
 object MaterializeCache {
-  // CompletableFuture memoization, NOT computeIfAbsent(write): the write
-  // callbacks nest (prodCurationFunnel's stage lambda calls
-  // materializedGroups, which is itself a getOrWrite on "prod_groups"),
-  // and computeIfAbsent's contract forbids touching other mappings of the
-  // same map from inside the mapping function — two keys landing in one
-  // bin would throw IllegalStateException("Recursive update") (ADVICE
-  // r13). putIfAbsent reserves the key without holding any bin lock, so
-  // the write runs unlocked and may freely getOrWrite OTHER keys; a
-  // concurrent caller of the same key blocks on the future instead.
-  private val cache =
-    new ConcurrentHashMap[String, java.util.concurrent.CompletableFuture[String]]()
+  // CompletableFuture memoization, NOT computeIfAbsent(write): a write
+  // callback may itself getOrWrite another key, and computeIfAbsent's
+  // contract forbids touching other mappings of the same map from inside
+  // the mapping function — two keys landing in one bin would throw
+  // IllegalStateException("Recursive update") (ADVICE r13). putIfAbsent
+  // reserves the key without holding any bin lock, so the write runs
+  // unlocked and may freely getOrWrite OTHER keys; a concurrent caller of
+  // the same key blocks on the future instead.
+  private val cache = new ConcurrentHashMap[
+    (String, String, Seq[(String, Long, Long)]),
+    java.util.concurrent.CompletableFuture[String]]()
   private val created = ConcurrentHashMap.newKeySet[Path]()
-  /** The schema each [[table]] was written with, by its path. */
-  private val schemas = new ConcurrentHashMap[String, StructType]()
+  /** The path and schema of each table a [[tables]] build wrote, by
+    * table name, per materialized dir. */
+  private val written =
+    new ConcurrentHashMap[String, Map[String, (String, StructType)]]()
 
   Runtime.getRuntime.addShutdownHook(new Thread(() => {
     created.forEach(p => deleteRecursively(p))
@@ -57,25 +62,12 @@ object MaterializeCache {
       Files.deleteIfExists(p)
     } catch { case _: Throwable => () }
 
-  /** Cheap content fingerprint of a local corpus dir: md5 over the
-    * sorted (relative-path, size, mtime) triples of every regular file.
-    * Never reads file bytes — at any corpus size this is one directory
-    * walk of metadata, and parquet writers always bump size/mtime. */
-  private[graft] def fingerprint(dir: String): String = {
-    val root = Paths.get(dir)
-    if (!Files.exists(root)) return "absent"
-    val md = java.security.MessageDigest.getInstance("MD5")
-    val files = {
-      val s = Files.walk(root)
-      try s.filter(Files.isRegularFile(_)).toArray.map(_.asInstanceOf[Path])
-      finally s.close()
-    }
-    files.map { p =>
-      s"${root.relativize(p)}|${Files.size(p)}|" +
-        s"${Files.getLastModifiedTime(p).toMillis}"
-    }.sorted.foreach(line => md.update((line + "\n").getBytes("UTF-8")))
-    md.digest().map("%02x".format(_)).mkString
-  }
+  /** The session's Hadoop configuration, or the default one outside a
+    * session. */
+  private def hadoopConf: org.apache.hadoop.conf.Configuration =
+    SparkSession.getActiveSession.orElse(SparkSession.getDefaultSession)
+      .fold(new org.apache.hadoop.conf.Configuration())(
+        _.sparkContext.hadoopConfiguration)
 
   /** The materialized-table dir for (`tag`, `dir`, current contents):
     * on first call per key, creates a temp dir, runs `write` into it,
@@ -83,7 +75,7 @@ object MaterializeCache {
     * unchanged corpus return the same path instantly. `write` runs at
     * most once per key (computeIfAbsent's contract). */
   def getOrWrite(tag: String, dir: String)(write: String => Unit): String = {
-    val key = s"$tag|$dir|${fingerprint(dir)}"
+    val key = (tag, dir, ScaleUtils.fileState(dir, hadoopConf))
     // Retry loop (ADVICE r14): a waiter blocked on a future whose write
     // FAILS must loop back to putIfAbsent and attempt the write itself —
     // computeIfAbsent semantics, where a failed mapping is discarded and
@@ -117,15 +109,27 @@ object MaterializeCache {
     throw new IllegalStateException("unreachable")
   }
 
-  /** The table `build` produces for (`tag`, `dir`, current contents),
-    * written once through [[getOrWrite]] and read back under the schema
-    * it was written with. `build` runs only on the first call per key,
-    * and may itself read other tables of this cache; a warm hit reads
-    * the stored table and starts no Spark job. */
-  def table(tag: String, dir: String)(build: => DataFrame): DataFrame = {
-    val path = getOrWrite(tag, dir) { out =>
-      schemas.put(out, ScaleUtils.stored(build, out).schema)
+  /** The tables `build` writes for (`tag`, `dir`, current contents),
+    * written once through [[getOrWrite]] and read back under the schemas
+    * they were written with. `build` gets the materialized dir, writes
+    * each table `name` of the map it returns at `<dir>/<name>`, and runs
+    * only on the first call per key; it may itself read other tables of
+    * this cache. A warm hit starts no Spark job, and each table is read
+    * back only when looked up, so a caller of one table pays for one. */
+  def tables(tag: String, dir: String)(build: String => Map[String, DataFrame])
+      : MapView[String, DataFrame] = {
+    val out = getOrWrite(tag, dir) { out =>
+      written.put(out, build(out).map { case (name, df) =>
+        name -> (s"$out/$name", df.schema) })
     }
-    SparkSession.active.read.schema(schemas.get(path)).parquet(path)
+    written.get(out).view.mapValues { case (path, schema) =>
+      SparkSession.active.read.schema(schema).parquet(path)
+    }
   }
+
+  /** The one table `build` produces for (`tag`, `dir`, current
+    * contents): [[tables]] with a single table, written through
+    * [[ScaleUtils.stored]]. */
+  def table(tag: String, dir: String)(build: => DataFrame): DataFrame =
+    tables(tag, dir)(out => Map(tag -> ScaleUtils.stored(build, s"$out/$tag")))(tag)
 }

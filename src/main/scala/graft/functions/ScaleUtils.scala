@@ -84,6 +84,19 @@ object ScaleUtils {
     }
   }
 
+  /** The state of every file under `path` ([[filesUnder]]), any scheme:
+    * its sorted (path, length, modification time) triples, empty when
+    * the path is absent. A rewritten file changes it, and no file is
+    * read. The one definition of a table's or a corpus's state, for
+    * every cache keyed by what is on disk. */
+  private[graft] def fileState(path: String,
+      conf: org.apache.hadoop.conf.Configuration): Seq[(String, Long, Long)] = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    filesUnder(p.getFileSystem(conf), p)
+      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
+      .toSeq.sorted
+  }
+
   /** THE shared definition of "table data file" — compaction, footer row
     * counts, and every read-back gate use this one predicate so the rule
     * cannot drift between call sites: a `*.parquet` file with no hidden

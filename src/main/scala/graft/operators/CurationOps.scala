@@ -1,5 +1,7 @@
 package graft.operators
 
+import scala.collection.immutable.ListMap
+
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
@@ -1164,9 +1166,12 @@ object CurationOps {
     * way (they are not the expensive pass). */
   def curationFunnelFrom(spark: SparkSession, dir: String,
       dropped: DataFrame, chunksOpt: Option[DataFrame] = None): DataFrame =
-    curationStagesFrom(spark, dir, dropped, chunksOpt)
-      .groupBy(col("lang"), col("stage"))
-      .agg(count(lit(1)).as("n_docs"))
+    funnelOf(curationStagesFrom(spark, dir, dropped, chunksOpt))
+
+  /** The funnel report: docs per (lang, stage) of a per-doc stages
+    * relation ([[curationStagesFrom]]'s shape). */
+  private def funnelOf(stages: DataFrame): DataFrame =
+    stages.groupBy(col("lang"), col("stage")).agg(count(lit(1)).as("n_docs"))
 
   /** Per-DOCUMENT funnel verdict (doc_id, lang, stage) — the relation
     * the aggregate funnel summarizes, split out so [[curationRun]] can
@@ -1239,11 +1244,13 @@ object CurationOps {
     *
     * A table you wrote comes back from the call that wrote it: each of
     * the nine tables is written through
-    * [[graft.functions.ScaleUtils.stored]], and the returned map holds
-    * those read-backs, each under the schema it was written with.
-    * Downstream consumers scan a table, with no schema-inference job,
-    * instead of re-deriving the plan. Spec-pinned: each output equals
-    * its declared query's result row-for-row.
+    * [[graft.functions.ScaleUtils.stored]] at `outDir/<name>`, and the
+    * returned map holds those read-backs by name, each under the schema
+    * it was written with. Downstream consumers scan a table, with no
+    * schema-inference job, instead of re-deriving the plan
+    * ([[derivations]]; [[materialized]] is the run once per corpus
+    * state). Spec-pinned: each output equals its declared query's result
+    * row-for-row.
     *
     * Deliberate non-goal: the funnel's chunk signals are EXACT
     * (fingerprint dedup + benchmark containment); chunk-level SEMANTIC
@@ -1274,8 +1281,7 @@ object CurationOps {
     // evaluation that could classify a doc differently)
     val stages = stored(curationStagesFrom(spark, dir,
       DedupOps.dropList(groups, keep), Some(chunks)), s"$outDir/stages")
-    val funnel = stored(stages.groupBy(col("lang"), col("stage"))
-      .agg(count(lit(1)).as("n_docs")), s"$outDir/funnel")
+    val funnel = stored(funnelOf(stages), s"$outDir/funnel")
     val admitted = stored(stages.where(col("stage") === "8_admitted")
       .select(col("doc_id"), col("lang")), s"$outDir/admitted")
     // the learned-filter model: trained ONCE here on the heuristic
@@ -2492,45 +2498,56 @@ object CurationOps {
          |GROUP BY 1""".stripMargin,
   )
 
-  // --- materialize-once PRODUCTION twin (VERDICT r11 item 2) ----------
+  // --- materialize-once PRODUCTION twins (VERDICT r11 item 2) ---------
 
-  /** The funnel plan a 100 TB run executes ([[curationRun]]'s shape):
-    * the group table comes from parquet
-    * ([[DedupOps.materializedGroups]]), the chunk grid and the per-doc
-    * stage verdicts are materialized once per corpus content per JVM
-    * ([[graft.functions.MaterializeCache]]), and
-    * the report is one aggregation over the STORED stages table.
-    * Result-identical to [[curationFunnel]] (each stage verdict is a
-    * pure function of the same inputs), so it reuses that query's
-    * oracle — the green row grades the production plan itself. */
-  /** Materialize-once home of the prod stages table — shared by the
-    * prod funnel and the prod release audit, whichever runs first. It
-    * nests on the stored chunk grid and the stored group table. */
-  private def prodStages(spark: SparkSession, dir: String): DataFrame =
-    graft.functions.MaterializeCache.table("prod_stages", dir) {
-      val groups = DedupOps.materializedGroups(spark, dir)
-      val keep = DedupOps.canonicalDocsFrom(groups,
-        TextOps.qualityScore(spark, dir)
-          .select(col("doc_id"), col("quality")))
-      curationStagesFrom(spark, dir, DedupOps.dropList(groups, keep),
-        Some(graft.functions.MaterializeCache.table("prod_chunks", dir)(
-          chunkDocs(spark, dir))))
-    }
+  /** [[curationRun]]'s tables for `dir`: the run is written once per
+    * corpus state per JVM ([[graft.functions.MaterializeCache.tables]]),
+    * and each table is read back under the schema it was written with
+    * when looked up. */
+  def materialized(spark: SparkSession, dir: String)
+      : scala.collection.MapView[String, DataFrame] =
+    graft.functions.MaterializeCache.tables("curation_run", dir)(
+      curationRun(spark, dir, _))
 
-  def prodCurationFunnel(spark: SparkSession, dir: String): DataFrame =
-    prodStages(spark, dir)
-      .groupBy(col("lang"), col("stage"))
-      .agg(count(lit(1)).as("n_docs"))
+  /** The reports a production run derives from `run`'s stored tables
+    * ([[curationRun]]'s map, or [[materialized]]), by name: the
+    * group-table reports through their `*From` entries, and the funnel
+    * and the release audit over the stored per-doc stages, so they grade
+    * the verdicts the run shipped, never a recompute that could drift
+    * from them. The `q_prod_*` twins and Bench's prod group both run
+    * this one list. */
+  def derivations(spark: SparkSession, dir: String,
+      run: String => DataFrame): ListMap[String, () => DataFrame] = {
+    def groups = run("groups")
+    def docs = Tables.documents(spark, dir)
+    def prov = docs.select(col("doc_id"), col("source"))
+    def canonical = DedupOps.canonicalDocsFrom(groups,
+      TextOps.qualityScore(spark, dir).select(col("doc_id"), col("quality")))
+    ListMap(
+      "canonical_docs" -> (() => canonical),
+      "dup_rate_by_source" ->
+        (() => DedupOps.dupRateBySourceFrom(groups, canonical, prov)),
+      "dup_token_share" ->
+        (() => DedupOps.dupTokenShareFromGroups(spark, dir, groups)),
+      "source_overlap" -> (() => DedupOps.sourceOverlapFrom(groups, prov)),
+      "group_purity" -> (() => DedupOps.groupPurityFrom(groups, docs)),
+      "leakfree_split" -> (() => DedupOps.leakFreeSplitFrom(
+        docs.select(col("doc_id"), col("lang")), groups)),
+      "curation_funnel" -> (() => funnelOf(run("stages"))),
+      "release_risk" -> (() => releaseRiskFrom(spark, dir, run("stages"))))
+  }
 
-  /** [[releaseRisk]] from the SAME materialized stages table the prod
-    * funnel reads — the release review runs against the run's artifact,
-    * never a recompute that could drift from what actually shipped. */
-  def prodReleaseRisk(spark: SparkSession, dir: String): DataFrame =
-    releaseRiskFrom(spark, dir, prodStages(spark, dir))
+  /** The `q_prod_<name>` twin: derivation `name` over [[materialized]].
+    * Result-identical to its self-contained sibling, so it reuses that
+    * query's oracle — the green row grades the tables [[curationRun]]
+    * wrote. */
+  private[operators] def prod(name: String)(spark: SparkSession,
+      dir: String): DataFrame =
+    derivations(spark, dir, materialized(spark, dir))(name)()
 
   val prodQueries: Map[String, (SparkSession, String) => DataFrame] =
-    Map("q_prod_curation_funnel" -> prodCurationFunnel _,
-      "q_prod_release_risk" -> prodReleaseRisk _)
+    Map("q_prod_curation_funnel" -> prod("curation_funnel") _,
+      "q_prod_release_risk" -> prod("release_risk") _)
 
   val prodOracles: Map[String, String] =
     Map("q_prod_curation_funnel" -> oracles("q_curation_funnel"),

@@ -2853,48 +2853,19 @@ object DedupOps {
   // (CurationOps.curationRun materializes the group table) and derives
   // every report from the STORED table via the *From entries. The
   // declared q_* forms re-derive the chain per query only because the
-  // oracle gate requires self-contained SQL — so until now CORRECTNESS
-  // never graded the plan production actually executes. These twins
-  // close that: each query materializes the group table to parquet
-  // INSIDE the query (once per corpus dir per JVM — exactly the
-  // production cadence) and runs the *From path over the stored table.
-  // Result-identical to the self-contained forms by construction, so
-  // each reuses its twin's DuckDB oracle verbatim.
+  // oracle gate requires self-contained SQL. These twins grade the
+  // production plan itself: each runs its CurationOps.derivations entry
+  // over the tables curationRun wrote for the corpus (once per corpus
+  // state per JVM — CurationOps.materialized). Result-identical to the
+  // self-contained forms by construction, so each reuses its twin's
+  // DuckDB oracle verbatim.
 
-  /** The stored (doc_id, rep_id) group table for `dir` — written once
-    * per JVM per corpus CONTENT (content-fingerprinted, shutdown-swept:
-    * [[graft.functions.MaterializeCache]]), then every prod query scans
-    * the parquet instead of re-running the chain
-    * ([[CurationOps.curationRun]]'s discipline). */
-  private[operators] def materializedGroups(spark: SparkSession,
-      dir: String): DataFrame =
-    graft.functions.MaterializeCache.table("prod_groups", dir)(
-      textDedupGroups(spark, dir))
-
-  private def prodQuality(spark: SparkSession, dir: String): DataFrame =
-    TextOps.qualityScore(spark, dir).select(col("doc_id"), col("quality"))
-
-  val prodQueries: Map[String, (SparkSession, String) => DataFrame] = Map(
-    "q_prod_canonical_docs" -> ((s: SparkSession, d: String) =>
-      canonicalDocsFrom(materializedGroups(s, d), prodQuality(s, d))),
-    "q_prod_dup_rate_by_source" -> ((s: SparkSession, d: String) => {
-      val g = materializedGroups(s, d)
-      dupRateBySourceFrom(g, canonicalDocsFrom(g, prodQuality(s, d)),
-        Tables.documents(s, d).select(col("doc_id"), col("source")))
-    }),
-    "q_prod_dup_token_share" -> ((s: SparkSession, d: String) =>
-      dupTokenShareFromGroups(s, d, materializedGroups(s, d))),
-    "q_prod_leakfree_split" -> ((s: SparkSession, d: String) =>
-      leakFreeSplitFrom(
-        Tables.documents(s, d).select(col("doc_id"), col("lang")),
-        materializedGroups(s, d))),
-    "q_prod_source_overlap" -> ((s: SparkSession, d: String) =>
-      sourceOverlapFrom(materializedGroups(s, d),
-        Tables.documents(s, d).select(col("doc_id"), col("source")))),
-    "q_prod_group_purity" -> ((s: SparkSession, d: String) =>
-      groupPurityFrom(materializedGroups(s, d), Tables.documents(s, d))),
-    "q_prod_sketch_overlap" -> prodSketchOverlap _,
-  )
+  val prodQueries: Map[String, (SparkSession, String) => DataFrame] =
+    Seq("canonical_docs", "dup_rate_by_source", "dup_token_share",
+      "leakfree_split", "source_overlap", "group_purity").map { name =>
+      s"q_prod_$name" -> ((s: SparkSession, d: String) =>
+        CurationOps.prod(name)(s, d))
+    }.toMap + ("q_prod_sketch_overlap" -> prodSketchOverlap _)
 
   /** Each prod twin shares its self-contained sibling's oracle — the
     * materialized table holds the same rows the CTE chain derives. */

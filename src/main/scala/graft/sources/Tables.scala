@@ -2,7 +2,6 @@ package graft.sources
 
 import java.util.concurrent.ConcurrentHashMap
 
-import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, expr, timestamp_micros}
 import org.apache.spark.sql.types.{LongType, StructType}
@@ -21,10 +20,11 @@ import org.apache.spark.sql.types.{LongType, StructType}
   * one with a known schema starts none, and a monitor render alone loads
   * nine tables. The one resolver behind [[load]] and [[parquet]] keys
   * each resolved schema by the path plus the (name, length, modification
-  * time) of every file under it, so a rewritten table gets a new key and
-  * is resolved again. It is the only schema-inferring parquet read in
-  * the engine: a table you wrote comes back from the call that wrote it
-  * ([[graft.functions.ScaleUtils.stored]],
+  * time) of every file under it
+  * ([[graft.functions.ScaleUtils.fileState]]), so a rewritten table gets
+  * a new key and is resolved again. It is the only schema-inferring
+  * parquet read in the engine: a table you wrote comes back from the
+  * call that wrote it ([[graft.functions.ScaleUtils.stored]],
   * [[graft.functions.MaterializeCache.table]]), and every other table
   * whose schema the caller does not hold is read through here.
   */
@@ -65,11 +65,8 @@ object Tables {
     * path-not-found error and nothing is cached. */
   private def resolved(spark: SparkSession, path: String)
       (beforeFirstRead: => Unit): DataFrame = {
-    val p = new Path(path)
-    val fs = p.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    val files = graft.functions.ScaleUtils.filesUnder(fs, p)
-      .map(st => (st.getPath.toString, st.getLen, st.getModificationTime))
-      .toSeq.sorted
+    val files = graft.functions.ScaleUtils.fileState(path,
+      spark.sparkContext.hadoopConfiguration)
     val schema = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap())
       .computeIfAbsent((path, files), _ => {
         beforeFirstRead

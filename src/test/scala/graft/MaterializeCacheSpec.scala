@@ -2,17 +2,20 @@ package graft
 
 import java.nio.file.Files
 import org.scalatest.funsuite.AnyFunSuite
-import graft.functions.MaterializeCache
+import org.apache.hadoop.conf.Configuration
+import graft.functions.{MaterializeCache, ScaleUtils}
 
-/** [[graft.functions.MaterializeCache]] — the once-per-(tag, corpus)
-  * materialize registry behind every `q_prod_*` twin. Pins the ADVICE
-  * r13 fix: a write callback may NEST another getOrWrite on a different
-  * key (prodCurationFunnel's stage lambda calls materializedGroups),
-  * which the earlier computeIfAbsent form forbade — CHM's contract
-  * disallows updating other mappings from inside the mapping function
-  * and throws IllegalStateException("Recursive update") when the two
-  * keys share a bin. The CompletableFuture reservation pattern runs the
-  * write unlocked, so nesting is always legal. */
+/** [[graft.functions.MaterializeCache]] — the once-per-(tag, corpus
+  * state) materialize registry behind every `q_prod_*` twin. Pins the
+  * ADVICE r13 fix: a write callback may NEST another getOrWrite on a
+  * different key (a build that reads another cached table from inside
+  * its own write), which the earlier computeIfAbsent form forbade —
+  * CHM's contract disallows updating other mappings from inside the
+  * mapping function and throws IllegalStateException("Recursive update")
+  * when the two keys share a bin. The CompletableFuture reservation
+  * pattern runs the write unlocked, so nesting is always legal. The key's
+  * corpus state is [[graft.functions.ScaleUtils.fileState]], on any
+  * filesystem scheme. */
 class MaterializeCacheSpec extends AnyFunSuite {
 
   private def tmpCorpus(): String = {
@@ -36,8 +39,8 @@ class MaterializeCacheSpec extends AnyFunSuite {
     var innerWrites = 0
     var innerPath: String = null
     val outer = MaterializeCache.getOrWrite("spec_outer", dir) { out =>
-      // the prodCurationFunnel shape: the outer materialize depends on
-      // another cached table and resolves it from inside its own write
+      // the outer materialize depends on another cached table and
+      // resolves it from inside its own write
       innerPath = MaterializeCache.getOrWrite("spec_inner", dir) { _ =>
         innerWrites += 1
       }
@@ -104,11 +107,25 @@ class MaterializeCacheSpec extends AnyFunSuite {
 
   test("content fingerprint changes when the corpus dir changes") {
     val dir = tmpCorpus()
-    val f1 = MaterializeCache.fingerprint(dir)
+    val conf = new Configuration()
+    val f1 = ScaleUtils.fileState(dir, conf)
     Files.write(java.nio.file.Paths.get(dir, "part-1.parquet"),
       Array[Byte](9))
-    val f2 = MaterializeCache.fingerprint(dir)
+    val f2 = ScaleUtils.fileState(dir, conf)
     assert(f1 != f2)
-    assert(MaterializeCache.fingerprint(dir + "-absent") == "absent")
+    assert(ScaleUtils.fileState(dir + "-absent", conf).isEmpty)
+  }
+
+  test("a corpus given as a file: URI that is rewritten is written again") {
+    val dir = tmpCorpus()
+    val uri = java.nio.file.Paths.get(dir).toUri.toString
+    var writes = 0
+    MaterializeCache.getOrWrite("spec_uri", uri) { _ => writes += 1 }
+    MaterializeCache.getOrWrite("spec_uri", uri) { _ => writes += 1 }
+    assert(writes == 1)
+    Files.write(java.nio.file.Paths.get(dir, "part-0.parquet"),
+      Array[Byte](4, 5, 6, 7))
+    MaterializeCache.getOrWrite("spec_uri", uri) { _ => writes += 1 }
+    assert(writes == 2, "a rewritten corpus must not be served stale tables")
   }
 }

@@ -47,9 +47,11 @@ class ReadBackSpec extends SparkSpec {
     assert(jobsDuring { warm = table } == 0, "a warm hit must start no job")
     assert(builds == 1)
     assert(rows(warm) == rows(written) && rows(cold) == rows(written))
-    val path = MaterializeCache.getOrWrite("spec_readback", corpus) { _ =>
+    val dir = MaterializeCache.getOrWrite("spec_readback", corpus) { _ =>
       fail("the key is already written") }
     var inferred: DataFrame = null
+    // a table's home is `<dir>/<name>`, and table names it by its tag
+    val path = s"$dir/spec_readback"
     assert(jobsDuring { inferred = spark.read.parquet(path) } == 1,
       "the same table read without its schema starts one job")
     assert(warm.schema == inferred.schema)
