@@ -221,6 +221,15 @@ object ScaleUtils {
     }.sum
   }
 
+  /** Row bound under which a driver cutover ([[collectAtMost]]) collects
+    * its checkpointed input and runs the identical loop locally instead
+    * of a distributed loop paying a few jobs per round for input that
+    * fits one task: DedupOps.connectedComponents' edges, GraphOps
+    * rankLoop's edges and nodes, TextOps.uniTrain's distinct words.
+    * 2²⁰ rows of a few longs or a short string are ~16–32 MB, a routine
+    * broadcast build side. Larger inputs take the distributed loops. */
+  val DriverMaxRows: Int = 1 << 20
+
   /** The driver-cutover probe: `df`'s rows when there are at most `max`
     * of them, else None. One bounded `limit(max + 1)` job — a frame far
     * above the bound costs its first partitions' rows, never a count. */

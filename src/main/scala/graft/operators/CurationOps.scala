@@ -2510,8 +2510,9 @@ object CurationOps {
       curationRun(spark, dir, _))
 
   /** The reports a production run derives from `run`'s stored tables
-    * ([[curationRun]]'s map, or [[materialized]]), by name: the
-    * group-table reports through their `*From` entries, and the funnel
+    * ([[curationRun]]'s map, or [[materialized]]), by name: the stored
+    * canonical picks and dup rates as they are, the other group-table
+    * reports through their `*From` entries, and the funnel
     * and the release audit over the stored per-doc stages, so they grade
     * the verdicts the run shipped, never a recompute that could drift
     * from them. The `q_prod_*` twins and Bench's prod group both run
@@ -2521,12 +2522,9 @@ object CurationOps {
     def groups = run("groups")
     def docs = Tables.documents(spark, dir)
     def prov = docs.select(col("doc_id"), col("source"))
-    def canonical = DedupOps.canonicalDocsFrom(groups,
-      TextOps.qualityScore(spark, dir).select(col("doc_id"), col("quality")))
     ListMap(
-      "canonical_docs" -> (() => canonical),
-      "dup_rate_by_source" ->
-        (() => DedupOps.dupRateBySourceFrom(groups, canonical, prov)),
+      "canonical_docs" -> (() => run("canonical")),
+      "dup_rate_by_source" -> (() => run("dup_rates")),
       "dup_token_share" ->
         (() => DedupOps.dupTokenShareFromGroups(spark, dir, groups)),
       "source_overlap" -> (() => DedupOps.sourceOverlapFrom(groups, prov)),

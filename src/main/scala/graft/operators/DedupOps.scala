@@ -412,12 +412,12 @@ object DedupOps {
     * so the cap is a scan-cost ceiling, not a hash-scheme one).
     * Integer-exact bit-length arithmetic, same as [[annSignDims]], so
     * Spark and the SQL oracle can never disagree on an FP boundary. */
-  def simhashBandLen(n: Long, floor: Int = 8): Int = {
+  def simhashBandLen(n: Long): Int = {
     val valuesNeeded = (n + SimhashTargetPerBand - 1) / SimhashTargetPerBand
     val bits =
       if (valuesNeeded <= 1L) 0
       else 64 - java.lang.Long.numberOfLeadingZeros(valuesNeeded - 1)
-    math.max(floor, math.min(SimhashMaxBandLen, bits))
+    math.max(8, math.min(SimhashMaxBandLen, bits))
   }
 
   /** SimHash near-dup via bit-banding — [[simhash]]'s exact-collision
@@ -434,14 +434,11 @@ object DedupOps {
     * the band-value space grows with n and per-value occupancy stays at
     * the target: the banded self-join's candidate work is
     * O(n · [[SimhashTargetPerBand]]) at any corpus size, the same
-    * buckets-∝-n policy as [[annSignDims]]. `bandLenOverride` pins the
-    * width for tests. */
+    * buckets-∝-n policy as [[annSignDims]]. */
   def simhashNearDup(spark: SparkSession, dir: String,
-      bands: Int = SimhashBands, maxHamming: Int = 3,
-      bandLenOverride: Option[Int] = None): DataFrame = {
-    val bandLen = bandLenOverride.getOrElse(simhashBandLen(
-      graft.functions.ScaleUtils.footerRowCount(
-        spark, s"$dir/documents.parquet")))
+      bands: Int = SimhashBands, maxHamming: Int = 3): DataFrame = {
+    val bandLen = simhashBandLen(graft.functions.ScaleUtils.footerRowCount(
+      spark, s"$dir/documents.parquet"))
     simhashNearDupCore(Tables.documents(spark, dir), bandLen, bands,
       maxHamming)
   }
@@ -569,12 +566,12 @@ object DedupOps {
     * buckets). */
   val AnnMaxBuckets: Long = 1L << 16
 
-  /** True once the corpus needs more than `maxBuckets` buckets at the
+  /** True once the corpus needs more than [[AnnMaxBuckets]] buckets at the
     * occupancy target — the cutover signal for [[annAuto]]. Integer-exact
     * (same ceil-divide as [[annSignDims]]), so the boundary can never
     * sit on an FP edge. */
-  def annBucketSaturated(n: Long, maxBuckets: Long = AnnMaxBuckets): Boolean =
-    (n + AnnTargetPerBucket - 1) / AnnTargetPerBucket > maxBuckets
+  def annBucketSaturated(n: Long): Boolean =
+    (n + AnnTargetPerBucket - 1) / AnnTargetPerBucket > AnnMaxBuckets
 
   /** n→IVF-cell-count policy for [[annAuto]]'s trained branch: the
     * classic ~√n balance (training cost n·cells per Lloyd pass vs
@@ -585,14 +582,14 @@ object DedupOps {
     * Only the auto dispatch uses this — the declared q_ann_ivf_kmeans /
     * q_ann_pq keep their fixed 8-cell geometry so their oracles stay
     * self-contained. */
-  def ivfCells(n: Long, cap: Int = 1 << 16): Int = {
+  def ivfCells(n: Long): Int = {
     // fix-up compares via DIVISION (c > n/c ⇔ c² > n for positive
     // longs), so no square can overflow near Long.MaxValue — the earlier
     // (c+1)² form went negative there and the `<= n` check kept passing
     var c = math.sqrt(n.toDouble).toLong
     while (c > 0 && c > n / c) c -= 1
     while (c + 1 <= n / (c + 1)) c += 1
-    math.max(8L, math.min(cap.toLong, c)).toInt
+    math.max(8L, math.min(1L << 16, c)).toInt
   }
 
   /** Product entry point for GLOBAL vector search with the ENFORCED
@@ -610,11 +607,10 @@ object DedupOps {
     * below-saturation branch, the regime every test SF sits in). The
     * corpus size comes from parquet footers on the driver (no Spark
     * job per invocation). */
-  def annAuto(spark: SparkSession, dir: String,
-      maxBuckets: Long = AnnMaxBuckets): DataFrame = {
+  def annAuto(spark: SparkSession, dir: String): DataFrame = {
     val n = graft.functions.ScaleUtils.footerRowCount(
       spark, s"$dir/embeddings.parquet")
-    if (!annBucketSaturated(n, maxBuckets)) annBucketed(spark, dir)
+    if (!annBucketSaturated(n)) annBucketed(spark, dir)
     // the trained index sizes its cell count to the corpus (~√n): a
     // fixed 8-cell IVF at 10^9 vectors would put 10^8 vectors per cell
     else VectorOps.annIvfKmeans(spark, dir, cells = ivfCells(n))
@@ -796,11 +792,10 @@ object DedupOps {
     * branches differ only in candidate recall. Corpus size from parquet
     * footers (driver-side, no job). */
   def cosineNearDupAuto(spark: SparkSession, dir: String,
-      threshold: Double = CosineDupThreshold,
-      maxBuckets: Long = AnnMaxBuckets): DataFrame = {
+      threshold: Double = CosineDupThreshold): DataFrame = {
     val n = graft.functions.ScaleUtils.footerRowCount(
       spark, s"$dir/embeddings.parquet")
-    if (!annBucketSaturated(n, maxBuckets)) cosineNearDup(spark, dir, threshold)
+    if (!annBucketSaturated(n)) cosineNearDup(spark, dir, threshold)
     else cosineNearDupIvfCore(spark, Tables.embeddings(spark, dir),
       ivfCells(n), NearDupNProbe, threshold)
   }
@@ -981,23 +976,58 @@ object DedupOps {
       .withColumn("kept", col("sem_dup_of").isNull)
   }
 
-  /** Connected components over an undirected (id_a, id_b) edge list via
-    * min-label propagation — the duplicate-CLUSTER resolution step between
-    * pair detection ([[minhashLsh]]/[[simhashNearDup]]/[[cosineNearDup]])
-    * and the actual drop list: every member of a transitively-connected
+  /** Connected components over an undirected (id_a, id_b) edge list:
+    * the duplicate-CLUSTER resolution step between pair detection
+    * ([[minhashLsh]]/[[simhashNearDup]]/[[cosineNearDup]]) and the
+    * actual drop list — every member of a transitively-connected
     * duplicate group maps to the group's minimum id (the canonical
     * representative), so "drop all but the representative" is
-    * `WHERE vec_id <> rep_id`.
+    * `WHERE vec_id <> rep_id`. Emits (id, comp) for every node that
+    * appears in an edge.
     *
-    * Scale shape: the edge list is `localCheckpoint`ed ONCE up front (the
-    * detector's LSH pipeline must not re-run per iteration), then each
-    * iteration is one aggregate + one join on (id, comp) pairs — shuffle
-    * volume O(|edges|), lineage CONSTANT via per-iteration checkpoints
-    * (the [[VectorOps]] Lloyd-loop treatment). Iterations needed = graph
-    * diameter; duplicate clusters are shallow (pairs/triples, diameter
-    * ≤ ~3) so convergence is fast — `maxIters` is a loud upper bound, not
-    * a truncation: non-convergence throws rather than returning a wrong
-    * fixpoint. Emits (id, rep) for every node that appears in an edge.
+    * The edge list is `localCheckpoint`ed ONCE up front (the detector's
+    * LSH pipeline must not re-run per iteration). SMALL-GRAPH CUTOVER
+    * (r19): a (long, long) edge list within
+    * [[graft.functions.ScaleUtils.DriverMaxRows]] is collected from the
+    * checkpoint (the limit probe reads its LOCAL blocks, never the
+    * upstream chain) and resolved by [[ccDriver]]'s union-find — the
+    * loop's ~2 jobs and a checkpoint per diameter step dominate CC cost
+    * whenever the graph is small (OPTIMIZATION_r19.md §4). Past it,
+    * [[connectedComponentsDistributed]] iterates over the checkpoint,
+    * which is freed once the labels no longer read it. */
+  def connectedComponents(edges: DataFrame, maxIters: Int = 50): DataFrame = {
+    val (e, eRdds) = ccCheckpointed(edges.select(col("id_a"), col("id_b")))
+    try {
+      val allLong = e.schema.fields.forall(
+        _.dataType == org.apache.spark.sql.types.LongType)
+      (if (allLong) graft.functions.ScaleUtils.collectAtMost(e,
+          graft.functions.ScaleUtils.DriverMaxRows) else None) match {
+        case Some(rows) => ccDriver(e.sparkSession, rows)
+        case None => connectedComponentsDistributed(e, maxIters)
+      }
+    } finally eRdds.foreach(_.unpersist(false))
+  }
+
+  /** An eager localCheckpoint of `df` and its blocks, which CacheManager
+    * does not track: the owner frees them once superseded, or they sit
+    * in executor storage until driver GC. */
+  private def ccCheckpointed(df: DataFrame)
+      : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
+    val out = df.localCheckpoint(true)
+    (out, graft.functions.ScaleUtils.checkpointRdds(out))
+  }
+
+  /** The distributed min-label propagation over (id_a, id_b) edges — the
+    * at-scale arm of [[connectedComponents]], and the parity reference
+    * for its driver union-find. Each iteration is one aggregate + one
+    * join on (id, comp) pairs — shuffle volume O(|edges|), lineage
+    * CONSTANT via per-iteration checkpoints (the [[VectorOps]] Lloyd-loop
+    * treatment), and each superseded iteration's checkpoint is freed as
+    * the loop advances: only the returned labels' checkpoint outlives
+    * the call. Iterations needed = graph diameter; duplicate clusters
+    * are shallow (pairs/triples, diameter ≤ ~3) so convergence is fast —
+    * `maxIters` is a loud upper bound, not a truncation: non-convergence
+    * throws rather than returning a wrong fixpoint.
     *
     * Kept as the two-join step (r18, measured): folding the node's own
     * label into the neighbor aggregation as a tagged union row (one
@@ -1007,25 +1037,58 @@ object DedupOps {
     * the planner broadcasts the tiny label/nbrMin sides here, so the
     * "extra" join is exchange-free while the union form pays a second
     * shuffle leg into the aggregation. */
-  /** Edge-count bound under which [[connectedComponents]] resolves the
-    * labeling on the DRIVER with union-find instead of the distributed
-    * min-label loop. 2²⁰ edges ≈ 16 MB collected — the same order as a
-    * routine broadcast-join build side (well under the 8 GB broadcast
-    * cap and trivially inside driver memory), while the distributed
-    * loop below it costs `diameter × (join + agg + join + materialize)`
-    * Spark jobs for a graph that fits in one task's memory. A 100 TB
-    * corpus' dup graph exceeds the bound and takes the loop unchanged;
-    * the probe that decides is a bounded `limit(n+1)` read of the
-    * already-checkpointed edge list, not a second chain pass. */
-  val CcDriverMaxEdges: Int = 1 << 20
+  private[graft] def connectedComponentsDistributed(e: DataFrame,
+      maxIters: Int): DataFrame = {
+    val adj = e.select(col("id_a").as("src"), col("id_b").as("dst"))
+      .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
+    var labels = adj.select(col("src").as("id")).distinct()
+      .withColumn("comp", col("id"))
+    var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
+    var converged = false
+    var it = 0
+    while (!converged && it < maxIters) {
+      val nbrMin = adj
+        .join(labels.select(col("id").as("src"), col("comp").as("src_comp")),
+          Seq("src"))
+        .groupBy(col("dst").as("id")).agg(min(col("src_comp")).as("nbr_min"))
+      val (stepped, newRdds) = ccCheckpointed(labels
+        .join(nbrMin, Seq("id"), "left_outer")
+        .select(col("id"), col("comp").as("old_comp"),
+          least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp")))
+      // isEmpty KEPT over a one-job max-aggregate check (r19,
+      // measured): take(1) finds a changed row in its first
+      // 1-partition wave on every NON-converged iteration (nearly
+      // free), and only the terminal pass pays the limit scale-up
+      // waves — while the aggregate pays a full 2-stage job every
+      // iteration. Interleaved A/B (OPTIMIZATION_r19.md §3, 9 reps over
+      // the same checkpointed dup edges): isEmpty min 0.781 / med
+      // 0.995 s vs max-agg 0.937 / 1.092 s.
+      converged = stepped.where(col("comp") =!= col("old_comp")).isEmpty
+      labels = stepped.select(col("id"), col("comp"))
+      // stepped is materialized (eager): the previous iteration's
+      // blocks are no longer reachable from any live frame — free now
+      prevRdds.foreach(_.unpersist(false))
+      prevRdds = newRdds
+      it += 1
+    }
+    if (!converged) {
+      prevRdds.foreach(_.unpersist(false))
+      throw new IllegalStateException(
+        s"connectedComponents did not converge in $maxIters iterations " +
+          "(diameter exceeds the bound — raise maxIters)")
+    }
+    // the returned frame reads ONLY the final iteration's checkpoint
+    // (kept); the caller owns the edge list's
+    labels
+  }
 
   /** Driver-side union-find over a collected (id_a, id_b) edge array —
     * union by MIN root with path compression, so a component's root IS
     * its minimum id (the invariant the min-label fixpoint converges
     * to). Emits (id, comp) for every node appearing in an edge —
-    * row-identical to the distributed loop (parity spec-pinned on
-    * planted + randomized graphs, and cross-checked against the salted
-    * variant's randomized parity suite). */
+    * row-identical to [[connectedComponentsDistributed]] (parity
+    * spec-pinned on planted + randomized graphs, and cross-checked
+    * against the salted variant's randomized parity suite). */
   private def ccDriver(spark: SparkSession,
       edgeRows: Array[org.apache.spark.sql.Row]): DataFrame = {
     val parent = scala.collection.mutable.LongMap.empty[Long]
@@ -1052,78 +1115,6 @@ object DedupOps {
     val out = ids.map(id => (id, find(id))).toSeq
     import spark.implicits._
     out.toDF("id", "comp")
-  }
-
-  def connectedComponents(edges: DataFrame, maxIters: Int = 50,
-      driverMaxEdges: Int = CcDriverMaxEdges): DataFrame = {
-    // eager localCheckpoint persists an internal RDD that CacheManager
-    // does not track — without explicit cleanup, every superseded
-    // iteration's blocks sit in executor storage until driver GC, so
-    // each checkpoint's blocks are freed once superseded
-    def checkpointed(df: DataFrame)
-        : (DataFrame, Seq[org.apache.spark.rdd.RDD[_]]) = {
-      val out = df.localCheckpoint(true)
-      (out, graft.functions.ScaleUtils.checkpointRdds(out))
-    }
-    val (e, eRdds) = checkpointed(edges.select(col("id_a"), col("id_b")))
-    try {
-      // SMALL-GRAPH CUTOVER (r19, guide §3.1's broadcast reasoning
-      // applied to the iterative loop): when the (long, long) edge list
-      // fits the driver bound, collect it from the checkpoint and
-      // union-find locally — the distributed loop pays ~2 jobs per
-      // diameter step plus a checkpoint materialization each, which
-      // dominates CC cost whenever the graph is small (interleaved A/B
-      // in OPTIMIZATION_r19.md §4). The limit probe reads the LOCAL
-      // checkpoint blocks (first wave almost always decides), never the
-      // upstream chain.
-      if (driverMaxEdges > 0 && e.schema.fields.forall(
-          _.dataType == org.apache.spark.sql.types.LongType))
-        graft.functions.ScaleUtils.collectAtMost(e, driverMaxEdges) match {
-          case Some(rows) => return ccDriver(e.sparkSession, rows)
-          case None =>
-        }
-      val adj = e.select(col("id_a").as("src"), col("id_b").as("dst"))
-        .union(e.select(col("id_b").as("src"), col("id_a").as("dst")))
-      var labels = adj.select(col("src").as("id")).distinct()
-        .withColumn("comp", col("id"))
-      var prevRdds: Seq[org.apache.spark.rdd.RDD[_]] = Nil
-      var converged = false
-      var it = 0
-      while (!converged && it < maxIters) {
-        val nbrMin = adj
-          .join(labels.select(col("id").as("src"), col("comp").as("src_comp")),
-            Seq("src"))
-          .groupBy(col("dst").as("id")).agg(min(col("src_comp")).as("nbr_min"))
-        val (stepped, newRdds) = checkpointed(labels
-          .join(nbrMin, Seq("id"), "left_outer")
-          .select(col("id"), col("comp").as("old_comp"),
-            least(col("comp"), coalesce(col("nbr_min"), col("comp"))).as("comp")))
-        // isEmpty KEPT over a one-job max-aggregate check (r19,
-        // measured): take(1) finds a changed row in its first
-        // 1-partition wave on every NON-converged iteration (nearly
-        // free), and only the terminal pass pays the limit scale-up
-        // waves — while the aggregate pays a full 2-stage job every
-        // iteration. Interleaved A/B (OPTIMIZATION_r19.md §3, 9 reps over
-        // the same checkpointed dup edges): isEmpty min 0.781 / med
-        // 0.995 s vs max-agg 0.937 / 1.092 s.
-        converged = stepped.where(col("comp") =!= col("old_comp")).isEmpty
-        labels = stepped.select(col("id"), col("comp"))
-        // stepped is materialized (eager): the previous iteration's
-        // blocks are no longer reachable from any live frame — free now
-        prevRdds.foreach(_.unpersist(false))
-        prevRdds = newRdds
-        it += 1
-      }
-      if (!converged) {
-        prevRdds.foreach(_.unpersist(false))
-        throw new IllegalStateException(
-          s"connectedComponents did not converge in $maxIters iterations " +
-            "(diameter exceeds the bound — raise maxIters)")
-      }
-      // the returned frame reads ONLY the final iteration's checkpoint
-      // (kept); the edge list is freed by the finally below
-      labels
-    } finally eRdds.foreach(_.unpersist(false))
   }
 
   /** Incremental dup-group maintenance — the batch chain
@@ -1240,9 +1231,8 @@ object DedupOps {
     * pairs (banded below saturation, probed-IVF-cell candidates past it)
     * resolved to components. (vec_id, rep_id) per involved vector; the
     * dedup drop list is every row with vec_id <> rep_id. */
-  def dedupGroups(spark: SparkSession, dir: String,
-      maxBuckets: Long = AnnMaxBuckets): DataFrame =
-    connectedComponents(cosineNearDupAuto(spark, dir, maxBuckets = maxBuckets))
+  def dedupGroups(spark: SparkSession, dir: String): DataFrame =
+    connectedComponents(cosineNearDupAuto(spark, dir))
       .select(col("id").as("vec_id"), col("comp").as("rep_id"))
 
   /** Previous [[dupTriangles]] checkpoint blocks (the
@@ -1872,10 +1862,9 @@ object DedupOps {
     * beyond. The two oracled queries pin each formulation's semantics at
     * any scale; this chooses between them by corpus size, read from
     * parquet footers on the driver (no Spark job per invocation). */
-  def jaccardBestAuto(spark: SparkSession, dir: String,
-      exactLimit: Long = ExactPairsLimit): DataFrame =
+  def jaccardBestAuto(spark: SparkSession, dir: String): DataFrame =
     if (graft.functions.ScaleUtils.footerRowCount(
-        spark, s"$dir/documents.parquet") <= exactLimit)
+        spark, s"$dir/documents.parquet") <= ExactPairsLimit)
       TextOps.jaccardBestMatch(spark, dir)
     else jaccardLshBest(spark, dir)
 

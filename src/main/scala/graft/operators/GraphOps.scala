@@ -166,22 +166,20 @@ object GraphOps {
     * (17 · Σ_u (r(u)·w(u,v)) div out(u)) div 20 — all truncating
     * integer ops, bit-identical in both engines. */
   private[graft] def rankItersFrom(e: DataFrame,
-      registry: DataFrame,
-      driverMaxRows: Int = RankDriverMaxRows): DataFrame =
-    rankLoop(e, registry.select(col("rk").as("node"))
+      registry: DataFrame): DataFrame =
+    rankLoop(e, uniformNodes(registry))
+
+  /** The uniform teleport vector over a registry: (node, r0, tel) with
+    * r0 = S div n and tel = (3·S) div (20·n). */
+  private[graft] def uniformNodes(registry: DataFrame): DataFrame =
+    registry.select(col("rk").as("node"))
       .crossJoin(broadcast(registry.agg(count(lit(1)).as("n"))))
       .select(col("node"), expr(s"$Scale div n").as("r0"),
-        expr(s"(3 * $Scale) div (20 * n)").as("tel")), driverMaxRows)
+        expr(s"(3 * $Scale) div (20 * n)").as("tel"))
 
-  /** Graph bound under which [[rankLoop]] iterates on the DRIVER — the
-    * [[graft.operators.DedupOps.CcDriverMaxEdges]] reasoning applied to
-    * the damped-rank recurrence: 2²⁰ collected (s, t, w, ow) rows
-    * ≈ 32 MB, broadcast-scale, while the distributed loop pays
-    * [[Iters]] join+agg rounds for a graph that fits in one task. A
-    * domain graph is ≤ |domains|² by construction, so real corpora sit
-    * far below this at any corpus size; the distributed loop remains
-    * for registries past ~1k domains with dense linkage. */
-  val RankDriverMaxRows: Int = 1 << 20
+  /** (s, t, w) edges with each source's total out-weight `ow`. */
+  private[graft] def withOutWeight(e: DataFrame): DataFrame =
+    e.join(e.groupBy(col("s")).agg(sum(col("w")).as("ow")), "s")
 
   /** Driver-side [[rankLoop]] over collected (s, t, w, ow) edges and
     * (node, r0, tel) rows — the IDENTICAL integer recurrence
@@ -220,37 +218,41 @@ object GraphOps {
     * (node, r0, tel) — uniform for [[pageRank]], seed-restricted for
     * [[pageRankSeeded]] — and each round is
     * r'(v) = tel(v) + (17 · Σ contrib) div 20. */
-  private def rankLoop(e: DataFrame, nodesIn: DataFrame,
-      driverMaxRows: Int = RankDriverMaxRows): DataFrame = {
-    val ew = e.join(
-        e.groupBy(col("s")).agg(sum(col("w")).as("ow")), "s")
-      .localCheckpoint(true)
+  private def rankLoop(e: DataFrame, nodesIn: DataFrame): DataFrame = {
+    val ew = withOutWeight(e).localCheckpoint(true)
     val nodes = nodesIn.localCheckpoint(true)
     // SMALL-GRAPH CUTOVER (r19): when the checkpointed edge and node
-    // relations fit the driver bound (and are the all-Long shape every
-    // caller passes), collect them and run the identical integer
+    // relations fit ScaleUtils.DriverMaxRows (and are the all-Long shape
+    // every caller passes), collect them and run the identical integer
     // recurrence locally — the bounded limit probes read the LOCAL
-    // checkpoint blocks, never the upstream chain. Interleaved A/B in
-    // OPTIMIZATION_r19.md §5; the checkpoints are freed here since the
-    // returned local frame no longer reads them.
+    // checkpoint blocks, never the upstream chain. A domain graph is
+    // ≤ |domains|² rows, so real corpora sit far below the bound.
+    // Interleaved A/B in OPTIMIZATION_r19.md §5; the checkpoints are
+    // freed here since the returned local frame no longer reads them.
     val allLong = (ew.select(col("s"), col("t"), col("w"), col("ow"))
         .schema.fields ++ nodes.schema.fields)
       .forall(_.dataType == org.apache.spark.sql.types.LongType)
-    if (allLong && driverMaxRows > 0) {
-      def probe(df: DataFrame) =
-        graft.functions.ScaleUtils.collectAtMost(df, driverMaxRows)
-      val local = for {
-        eRows <- probe(ew.select(col("s"), col("t"), col("w"), col("ow")))
-        nRows <- probe(nodes.select(col("node"), col("r0"), col("tel")))
-      } yield rankLoopDriver(e.sparkSession, eRows, nRows)
-      local match {
-        case Some(out) =>
-          Seq(ew, nodes).flatMap(graft.functions.ScaleUtils.checkpointRdds)
-            .foreach(_.unpersist(false))
-          return out
-        case None =>
-      }
+    def probe(df: DataFrame) = graft.functions.ScaleUtils.collectAtMost(
+      df, graft.functions.ScaleUtils.DriverMaxRows)
+    val local = if (!allLong) None else for {
+      eRows <- probe(ew.select(col("s"), col("t"), col("w"), col("ow")))
+      nRows <- probe(nodes.select(col("node"), col("r0"), col("tel")))
+    } yield rankLoopDriver(e.sparkSession, eRows, nRows)
+    local match {
+      case Some(out) =>
+        Seq(ew, nodes).flatMap(graft.functions.ScaleUtils.checkpointRdds)
+          .foreach(_.unpersist(false))
+        out
+      case None => rankLoopDistributed(ew, nodes)
     }
+  }
+
+  /** The distributed damped iteration: [[Iters]] join + partial-agg
+    * rounds over (s, t, w, ow) edges ([[withOutWeight]]) and
+    * (node, r0, tel) nodes — the at-scale arm of [[rankLoop]], and the
+    * parity reference for its driver recurrence. */
+  private[graft] def rankLoopDistributed(ew: DataFrame,
+      nodes: DataFrame): DataFrame = {
     var r = nodes.select(col("node"), col("r0").as("r"))
     for (_ <- 1 to Iters) {
       // name-resolved join condition: `node` exists only on the rank

@@ -649,10 +649,7 @@ object ReconOps {
     * the non-null keys — the exact `skew_x100` statistic
     * [[RelationalOps.skewProfile]] publishes, computed on the relation
     * the operator is ABOUT to shuffle. One partial-aggregated pass (the
-    * exchange carries ~distinct keys; 1-row result to the driver). At
-    * 100 TB a deployment stores the census beside the table and passes
-    * the stored figure through the `cutoverX100`-parameterized cores;
-    * the inline census keeps the declared queries self-contained and
+    * exchange carries ~distinct keys; 1-row result to the driver) that
     * costs far less than the windowed operator it steers. Empty or
     * all-null input → 0 (plain branch). */
   private[graft] def keySkewX100(df: DataFrame, key: String): Long = {
@@ -669,9 +666,8 @@ object ReconOps {
     * above it. Result-identical on both branches (the salted scan
     * decomposition is equality-pinned by spec + shared oracle), so the
     * dispatch can never change an answer, only a plan. */
-  private[graft] def sessionizeAutoOf(ev: DataFrame,
-      cutoverX100: Long = SkewAutoCutoverX100): DataFrame =
-    if (keySkewX100(ev, "user_id") >= cutoverX100)
+  private[graft] def sessionizeAutoOf(ev: DataFrame): DataFrame =
+    if (keySkewX100(ev, "user_id") >= SkewAutoCutoverX100)
       sessionizeSaltedOf(ev, AsofSaltBucketUs)
     else sessionizeOf(ev)
 
@@ -707,10 +703,9 @@ object ReconOps {
     * above it. */
   private[graft] def asofJoinAutoCore(left: DataFrame, right: DataFrame,
       key: String, t: String, tie: String,
-      cutoverX100: Long = SkewAutoCutoverX100,
       forward: Boolean = false): DataFrame =
     if (keySkewX100(left.select(col(key))
-          .unionAll(right.select(col(key))), key) >= cutoverX100)
+          .unionAll(right.select(col(key))), key) >= SkewAutoCutoverX100)
       asofJoinSaltedCore(left, right, key, t, tie,
         forward = forward)
     else asofJoinCore(left, right, key, t, tie, forward)

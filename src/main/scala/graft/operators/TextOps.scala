@@ -731,28 +731,24 @@ object TextOps {
       : (DataFrame, Map[String, Long], DataFrame) = {
     import spark.implicits._
     val words = uniWords(docs).localCheckpoint(true)
-    // SMALL-VOCABULARY CUTOVER (r19, the CcDriverMaxEdges reasoning):
-    // every trainer relation after uniWords is VOCABULARY-sized (the
-    // corpus was already collapsed to distinct truncated words), yet
-    // the distributed rounds pay ~6 checkpoint/collect jobs. Below the
-    // bound, collect the word table once from its checkpoint and run
-    // the identical integer EM locally — same substring enumeration,
-    // same uniViterbi kernel, same (n desc, piece asc) total orders
-    // (piece compared as unsigned UTF-8 bytes, Spark's string order).
-    // Parity spec-pinned (UnigramSpec); driverMaxWords = 0 forces the
-    // distributed rounds. A 100 TB corpus's distinct-word relation
-    // exceeds the bound and trains distributed, unchanged.
-    graft.functions.ScaleUtils.collectAtMost(words, UniDriverMaxWords) match {
+    // SMALL-VOCABULARY CUTOVER (r19): every trainer relation after
+    // uniWords is VOCABULARY-sized (the corpus was already collapsed to
+    // distinct truncated words), yet the distributed rounds pay ~6
+    // checkpoint/collect jobs. Below ScaleUtils.DriverMaxRows, collect
+    // the word table once from its checkpoint and run the identical
+    // integer EM locally — same substring enumeration, same uniViterbi
+    // kernel, same (n desc, piece asc) total orders (piece compared as
+    // unsigned UTF-8 bytes, Spark's string order). Parity spec-pinned
+    // against uniTrainDistributed (UnigramSpec). A 100 TB corpus's
+    // distinct-word relation exceeds the bound and trains distributed,
+    // unchanged.
+    graft.functions.ScaleUtils.collectAtMost(words,
+        graft.functions.ScaleUtils.DriverMaxRows) match {
       case Some(rows) => uniTrainDriver(spark,
         rows.map(r => (r.getString(0), r.getLong(1))), words)
       case None => uniTrainDistributed(spark, words)
     }
   }
-
-  /** Word-table bound for [[uniTrain]]'s driver cutover: 2²⁰ distinct
-    * truncated words ≈ 24 MB collected — broadcast-build-side scale
-    * (the cost table derived from it is broadcast anyway). */
-  private[graft] val UniDriverMaxWords: Int = 1 << 20
 
   /** The distributed EM rounds over a checkpointed word relation — the
     * at-scale path, and the parity reference for the driver cutover. */

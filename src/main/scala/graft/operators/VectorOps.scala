@@ -1179,28 +1179,28 @@ object VectorOps {
     * exact→bucketed cutover, decided by the LARGEST label block (the
     * unit the quadratic cost actually grows on — total corpus size is
     * the wrong signal when labels are skewed). */
-  def nnPerLabelAuto(spark: SparkSession, dir: String,
-      exactLimit: Long = ExactBlockLimit): DataFrame =
-    if (maxLabelBlock(spark, dir) <= exactLimit) nnWithinLabel(spark, dir)
+  def nnPerLabelAuto(spark: SparkSession, dir: String): DataFrame =
+    if (maxLabelBlock(spark, dir) <= ExactBlockLimit) nnWithinLabel(spark, dir)
     else nnLabelBucketed(spark, dir)
 
   /** Driver-side cache of the max per-label block size: the cutover
     * signal is consulted on EVERY auto invocation, and the underlying
     * groupBy is a real scan at 100 TB — run it once per table STATE (it
     * needs per-group counts, which parquet footers cannot supply). The
-    * cache key includes the footer row count (a cheap driver metadata
-    * read), so appends/compactions invalidate the entry instead of the
-    * cutover decision going stale as the corpus grows. */
-  private val maxBlockCache =
-    new java.util.concurrent.ConcurrentHashMap[String, (Long, Long)]()
+    * entry is keyed by the table's [[graft.functions.ScaleUtils.fileState]]
+    * (a listing, no read), so any rewrite — an append, a compaction, or
+    * new labels at the same row count — recomputes it instead of the
+    * cutover (and the bucketed arm's sign dims) going stale. */
+  private val maxBlockCache = new java.util.concurrent.ConcurrentHashMap[
+    String, (Seq[(String, Long, Long)], Long)]()
   private[graft] def maxLabelBlock(spark: SparkSession, dir: String): Long = {
-    val rows = graft.functions.ScaleUtils.footerRowCount(
-      spark, s"$dir/embeddings.parquet")
-    // one entry per dir, REPLACED when the row count moves — stale table
+    val state = graft.functions.ScaleUtils.fileState(
+      s"$dir/embeddings.parquet", spark.sparkContext.hadoopConfiguration)
+    // one entry per dir, REPLACED when the table state moves — stale
     // states never pile up in a long-lived session
     maxBlockCache.compute(dir, (_, prev) =>
-      if (prev != null && prev._1 == rows) prev
-      else (rows, Tables.embeddings(spark, dir)
+      if (prev != null && prev._1 == state) prev
+      else (state, Tables.embeddings(spark, dir)
         .groupBy(col("label")).count()
         .agg(max(col("count"))).head().getLong(0)))._2
   }

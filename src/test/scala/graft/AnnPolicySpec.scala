@@ -1,5 +1,6 @@
 package graft
 
+import graft.functions.ScaleUtils
 import graft.operators.{DedupOps, TextOps, VectorOps}
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -31,13 +32,22 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     val exactNn = VectorOps.nnWithinLabel(spark, dir).collect().toSet
     val autoNn = VectorOps.nnPerLabelAuto(spark, dir).collect().toSet
     assert(autoNn == exactNn, "small blocks must take the exact path")
-    // above the limits the LSH/bucketed siblings take over
-    val lshJac = DedupOps.jaccardBestAuto(spark, dir, exactLimit = 1L)
-      .collect().toSet
-    assert(lshJac == DedupOps.jaccardLshBest(spark, dir).collect().toSet)
-    val bucketedNn = VectorOps.nnPerLabelAuto(spark, dir, exactLimit = 1L)
-    assert(bucketedNn.columns.contains("bucket"),
-      "past the limit the sign-bucketed plan must be chosen")
+    // the gates' own inputs put this corpus below both limits
+    assert(ScaleUtils.footerRowCount(spark, s"$dir/documents.parquet")
+      <= DedupOps.ExactPairsLimit)
+    val block = VectorOps.maxLabelBlock(spark, dir)
+    assert(block <= VectorOps.ExactBlockLimit)
+    // the arms past the limits, called by name (each has its own oracle
+    // row, q_jaccard_lsh and q_nn_label_ann): the LSH arm answers in the
+    // exact arm's schema, and a largest block under the occupancy
+    // target keeps one sign bucket, so the bucketed arm is exact here
+    assert(DedupOps.jaccardLshBest(spark, dir).columns.toSeq ==
+      TextOps.jaccardBestMatch(spark, dir).columns.toSeq)
+    assert(DedupOps.annSignDims(block, floor = 0) == 0)
+    val bucketedNn = VectorOps.nnLabelBucketed(spark, dir)
+    assert(bucketedNn.columns.contains("bucket"))
+    assert(bucketedNn.drop("bucket").collect().toSet == exactNn,
+      "one bucket per label must reproduce the exact within-label search")
   }
 
   test("global ANN: bucketed→IVF cutover flips at the bucket-space cap") {
@@ -45,7 +55,7 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     // carries at the occupancy target, and the first one past it
     val boundary = DedupOps.AnnTargetPerBucket * DedupOps.AnnMaxBuckets
     assert(!DedupOps.annBucketSaturated(boundary),
-      "at exactly target×maxBuckets the bucketed plan still holds occupancy")
+      "at exactly target×AnnMaxBuckets the bucketed plan still holds occupancy")
     assert(DedupOps.annBucketSaturated(boundary + 1),
       "one vector past the cap the bucket space saturates")
     // below saturation annAuto IS annBucketed, bit-identical
@@ -53,10 +63,11 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     val bucketed = DedupOps.annBucketed(spark, sfDir).collect().toSet
     assert(auto == bucketed, "below the cutover the auto must take the " +
       "sign-bucket plan unchanged")
-    // forced saturation: the trained-IVF query plan takes over
-    val ivf = DedupOps.annAuto(spark, sfDir, maxBuckets = 1L)
-    assert(ivf.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "sim"),
-      "past the cutover the auto must dispatch to annIvfKmeans")
+    // the arm past saturation, called by name with the cell count the
+    // auto would size: the trained-IVF query plan
+    val n = ScaleUtils.footerRowCount(spark, s"$sfDir/embeddings.parquet")
+    val ivf = VectorOps.annIvfKmeans(spark, sfDir, cells = DedupOps.ivfCells(n))
+    assert(ivf.columns.toSeq == Seq("query_id", "rank", "neighbor_id", "sim"))
     assert(ivf.count() > 0)
     // the trained branch sizes its cells to the corpus: exact-integer √n
     // (floor), floored at the declared query's 8 cells, capped at 2^16
@@ -144,6 +155,21 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     assert(i10 <= i2, s"more iterations must not increase inertia: $i2 -> $i10")
   }
 
+  test("maxLabelBlock follows a rewrite that keeps the row count") {
+    import spark.implicits._
+    val dir = java.nio.file.Files.createTempDirectory("blockspec").toString
+    def write(labels: Seq[String]): Unit =
+      labels.zipWithIndex.map { case (l, i) =>
+        (i.toLong, l, Seq.fill(64)(i.toFloat + 1f)) }
+        .toDF("vec_id", "label", "embedding")
+        .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
+    write(Seq("a", "a", "a", "b"))
+    assert(VectorOps.maxLabelBlock(spark, dir) == 3)
+    // same 4 rows, new labels: the gate must see the new largest block
+    write(Seq("a", "a", "a", "a"))
+    assert(VectorOps.maxLabelBlock(spark, dir) == 4)
+  }
+
   test("vector near-dup: banded→IVF cutover flips at the bucket-space cap") {
     import spark.implicits._
     // below saturation the auto IS the banded plan, bit-identical — the
@@ -152,8 +178,9 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     val auto = DedupOps.cosineNearDupAuto(spark, sfDir).collect().toSet
     assert(auto == banded, "below the cutover the near-dup auto must take " +
       "the banded sign-LSH plan unchanged")
-    // forced saturation on a planted clustered fixture: candidates must
-    // come from probed IVF cells and still recover the planted near-dup
+    // the arm past saturation, called by name on a planted clustered
+    // fixture at the auto's √n cell count: candidates must come from
+    // probed IVF cells and still recover the planted near-dup
     val rnd = new scala.util.Random(17)
     val base = Array.tabulate(4, 64)((c, d) => if (d % 4 == c) 1.0f else 0.05f)
     val rows = (0 until 80).map { i =>
@@ -164,8 +191,10 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     val dir = java.nio.file.Files.createTempDirectory("ndspec").toString
     rows.toDF("vec_id", "label", "embedding")
       .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    val ivf = DedupOps.cosineNearDupAuto(spark, dir, threshold = 0.9,
-      maxBuckets = 1L).collect()
+    val pairs = DedupOps.cosineNearDupIvfCore(spark,
+      graft.sources.Tables.embeddings(spark, dir),
+      DedupOps.ivfCells(rows.size.toLong), DedupOps.NearDupNProbe, 0.9)
+    val ivf = pairs.collect()
     assert(ivf.exists(r => r.getAs[Long]("id_a") == 80L
         && r.getAs[Long]("id_b") == 81L),
       s"the planted near-identical pair (80,81) must be recovered, " +
@@ -188,10 +217,10 @@ class AnnPolicySpec extends AnyFunSuite with SparkSpec {
     assert(got.subsetOf(truth),
       s"IVF pairs must all clear the exact threshold: ${got.diff(truth)}")
     assert(got.nonEmpty && truth.nonEmpty)
-    // dedup groups ride the same dispatch: forced saturation must still
+    // dedup groups resolve these pairs: the IVF arm's pairs must still
     // put the planted pair in one component
-    val groups = DedupOps.dedupGroups(spark, dir, maxBuckets = 1L)
-      .collect().map(r => r.getAs[Long]("vec_id") -> r.getAs[Long]("rep_id"))
+    val groups = DedupOps.connectedComponents(pairs)
+      .collect().map(r => r.getAs[Long]("id") -> r.getAs[Long]("comp"))
       .toMap
     assert(groups.contains(80L) && groups(80L) == groups(81L),
       "planted pair must share a component under the IVF branch")

@@ -25,14 +25,15 @@ class GraphOpsSpec extends SparkSpec {
   test("rank loop: driver cutover equals the distributed iteration") {
     // the r19 small-graph cutover (GraphOps.rankLoopDriver) must produce
     // the bit-identical integer ranks the distributed loop computes —
-    // driverMaxRows = 0 forces the loop on the same inputs
+    // the loop arm is called by name on the same inputs
     val rk = GraphOps.srcRanks(spark, sfDir)
     val e = GraphOps.domainEdgesOf(GraphOps.docsWithDomain(spark, sfDir), rk)
-    def ranks(driverMaxRows: Int) =
-      GraphOps.rankItersFrom(e, rk, driverMaxRows)
-        .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val driver = ranks(GraphOps.RankDriverMaxRows)
-    val dist = ranks(0)
+    def ranks(df: org.apache.spark.sql.DataFrame) =
+      df.collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val driver = ranks(GraphOps.rankItersFrom(e, rk))
+    val dist = ranks(GraphOps.rankLoopDistributed(
+      GraphOps.withOutWeight(e), GraphOps.uniformNodes(rk)))
+    assert(driver.nonEmpty)
     assert(driver == dist,
       s"driver union of ${driver.size} ranks must equal distributed")
   }

@@ -64,6 +64,14 @@ class ProdTwinsSpec extends SparkSpec {
     assert(leafPaths(funnel).forall(_.contains(runDir)))
     assert(rows(funnel) == rows(run("funnel")),
       "the prod funnel is the run's funnel table")
+    // the canonical picks are the table the run stored, not a second
+    // quality pass over the corpus
+    val canonical =
+      SparkEntry.queries("q_prod_canonical_docs")(spark, corpus.toString)
+    assert(!leafPaths(canonical).exists(_.contains("documents.parquet")),
+      s"q_prod_canonical_docs must not scan the corpus: ${leafPaths(canonical)}")
+    assert(rows(canonical) == rows(run("canonical")),
+      "the prod canonical picks are the run's canonical table")
   }
 
   test("Bench's prod group times curationRun and the twins' derivations") {

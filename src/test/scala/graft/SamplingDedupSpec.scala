@@ -19,6 +19,16 @@ class SamplingDedupSpec extends SparkSpec {
       .drop("rk")
   }
 
+  /** An id below every RDD created after this call. */
+  private def rddMark(): Int = spark.sparkContext.emptyRDD[Int].id
+
+  /** Persistent RDDs created after `mark`: a call's own blocks, whatever
+    * an earlier test's blocks do meanwhile (the context cleaner frees
+    * those on GC, which a global before/after count would mistake for
+    * this call freeing its own). */
+  private def persistedSince(mark: Int): Int =
+    spark.sparkContext.getPersistentRDDs.keys.count(_ > mark)
+
   test("stratified sample: deterministic, rate-accurate, stratum-sensitive") {
     val docs = graft.sources.Tables.documents(spark, sfDir)
     val total = docs.groupBy(col("lang")).count().collect()
@@ -129,25 +139,27 @@ class SamplingDedupSpec extends SparkSpec {
     // plus the disjoint pair (10, 11)
     val edges = Seq((2L, 1L), (2L, 3L), (3L, 4L), (5L, 4L), (10L, 11L))
       .toDF("id_a", "id_b")
-    // ~5 iterations run here; each eagerly localCheckpoints — superseded
-    // checkpoints must be FREED as the loop advances (only the final
-    // labels checkpoint may remain pinned), or executor storage grows
-    // with iteration count in a long-lived session
-    val persistedBefore = spark.sparkContext.getPersistentRDDs.size
-    val got = DedupOps.connectedComponents(edges).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    val persistedAfter = spark.sparkContext.getPersistentRDDs.size
-    assert(persistedAfter - persistedBefore <= 1,
-      s"superseded iteration checkpoints must be unpersisted " +
-        s"($persistedBefore -> $persistedAfter persistent RDDs)")
-    assert(got == Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
-      10L -> 10L, 11L -> 10L))
+    // ~5 iterations of the distributed loop run here; each eagerly
+    // localCheckpoints — superseded checkpoints must be FREED as the
+    // loop advances (only the final labels checkpoint may remain
+    // pinned), or executor storage grows with iteration count in a
+    // long-lived session
+    val mark = rddMark()
+    val got = DedupOps.connectedComponentsDistributed(edges, maxIters = 50)
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val kept = persistedSince(mark)
+    assert(kept <= 1, s"superseded iteration checkpoints must be " +
+      s"unpersisted ($kept persistent RDDs remain)")
+    val want = Map(1L -> 1L, 2L -> 1L, 3L -> 1L, 4L -> 1L, 5L -> 1L,
+      10L -> 10L, 11L -> 10L)
+    assert(got == want)
+    assert(DedupOps.connectedComponents(edges).collect()
+      .map(r => r.getLong(0) -> r.getLong(1)).toMap == want)
     // an iteration bound below the diameter must throw, never return a
-    // half-propagated labeling
+    // half-propagated labeling — the loop's contract (the driver
+    // union-find always converges)
     intercept[IllegalStateException] {
-      // driverMaxEdges = 0 forces the distributed loop — the iteration
-      // bound is its contract (driver union-find always converges)
-      DedupOps.connectedComponents(edges, maxIters = 2, driverMaxEdges = 0)
+      DedupOps.connectedComponentsDistributed(edges, maxIters = 2)
     }
     // real-table groups: every rep is a member of its own group and the
     // minimum of the members mapped to it
@@ -209,8 +221,9 @@ class SamplingDedupSpec extends SparkSpec {
     val planted = Seq((2L, 1L), (2L, 3L), (3L, 4L), (5L, 4L),
       (10L, 11L), (21L, 22L), (22L, 20L), (20L, 21L))
       .toDF("id_a", "id_b")
-    assert(labeling(DedupOps.connectedComponents(planted)) ==
-      labeling(DedupOps.connectedComponents(planted, driverMaxEdges = 0)),
+    def loop(df: org.apache.spark.sql.DataFrame) =
+      labeling(DedupOps.connectedComponentsDistributed(df, maxIters = 50))
+    assert(labeling(DedupOps.connectedComponents(planted)) == loop(planted),
       "driver path must equal the distributed loop on the planted graph")
     for (seed <- 11 to 14) {
       val rnd = new scala.util.Random(seed)
@@ -220,32 +233,31 @@ class SamplingDedupSpec extends SparkSpec {
         .filter(e => e._1 != e._2)
       if (edges.nonEmpty) {
         val df = edges.toDF("id_a", "id_b")
-        assert(labeling(DedupOps.connectedComponents(df)) ==
-          labeling(DedupOps.connectedComponents(df, driverMaxEdges = 0)),
+        assert(labeling(DedupOps.connectedComponents(df)) == loop(df),
           s"seed $seed")
       }
     }
-    // a just-over-the-bound edge list takes the distributed loop (the
-    // probe reads bound+1 rows): exercise the dispatch edge itself
-    val three = Seq((1L, 2L), (3L, 4L), (5L, 6L)).toDF("id_a", "id_b")
-    assert(labeling(DedupOps.connectedComponents(three, driverMaxEdges = 2))
-      == labeling(DedupOps.connectedComponents(three)),
-      "bound+1 edges must dispatch to the loop and still agree")
   }
 
   test("connectedComponents: checkpoint blocks freed (no storage leak)") {
     import spark.implicits._
-    val before = spark.sparkContext.getPersistentRDDs.size
-    DedupOps.connectedComponents(
-      Seq((1L, 2L), (3L, 4L), (2L, 3L)).toDF("id_a", "id_b")).collect()
-    // the loop checkpoints the edge list plus one frame per iteration;
+    val edges = Seq((1L, 2L), (3L, 4L), (2L, 3L)).toDF("id_a", "id_b")
+    // the loop checkpoints one frame per iteration (4 here: the path
+    // 1-2-3-4 propagates in three steps, plus the converged pass);
     // everything superseded must be freed as the loop advances. Only the
     // FINAL labels' checkpoint may outlive the call (the returned frame
     // reads it) — if the LogicalRDD capture ever stopped matching, every
     // iteration would leak and this count would jump.
-    val after = spark.sparkContext.getPersistentRDDs.size
-    assert(after <= before + 1,
-      s"at most the final labels' checkpoint may remain: $before -> $after")
+    val mark = rddMark()
+    DedupOps.connectedComponentsDistributed(edges, maxIters = 50).collect()
+    val kept = persistedSince(mark)
+    assert(kept <= 1, s"at most the final labels' checkpoint may remain: $kept")
+    // the entry point frees its edge-list checkpoint; the driver arm's
+    // labels are a local frame
+    val entryMark = rddMark()
+    DedupOps.connectedComponents(edges).collect()
+    assert(persistedSince(entryMark) == 0,
+      "the edge-list checkpoint must be freed")
   }
 
   test("mergeGroups: incremental merge equals the full-chain recompute") {

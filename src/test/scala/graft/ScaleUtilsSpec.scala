@@ -198,4 +198,13 @@ class ScaleUtilsSpec extends SparkSpec {
     val expected = graft.sources.Tables.orders(spark, sfDir).count()
     assert(ScaleUtils.footerRowCount(spark, dir) == expected)
   }
+
+  test("collectAtMost: the bound's rows come back, bound+1 rows go to the loop") {
+    import spark.implicits._
+    // the driver cutovers' dispatch edge: the probe reads bound+1 rows
+    val two = Seq(1L, 2L).toDF("id")
+    assert(ScaleUtils.collectAtMost(two, 2).map(_.map(_.getLong(0)).toSet)
+      .contains(Set(1L, 2L)))
+    assert(ScaleUtils.collectAtMost(Seq(1L, 2L, 3L).toDF("id"), 2).isEmpty)
+  }
 }
